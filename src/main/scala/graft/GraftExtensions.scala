@@ -12,11 +12,14 @@ import graft.functions.{BoundedLevenshteinExpr, CosineF32Expr, LangIdExpr, Media
   * spark.sql.extensions=graft.GraftExtensions` (or `.withExtensions` in
   * code) registers graft's native expressions on the SQL surface of every
   * session — the deployment path for a cluster where users write
-  * `SELECT simhash64(tokens) ...` without touching the Scala API.
+  * `SELECT simhash64(tokens) ...` without touching the Scala API — and the
+  * [[SortOnce]] query-stage prep rule. [[Sessions.local]] installs it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectQueryStagePrepRule(_ => SortOnce)
+
     def inject(name: String, builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((
         FunctionIdentifier(name),

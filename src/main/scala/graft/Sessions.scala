@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * runnable on local[N]: AQE handles runtime re-planning (partition
   * coalescing, skew-join splitting), shuffle partitions default to the
   * local core count instead of 200, and the session timezone is pinned
-  * to UTC so timestamp semantics are machine-independent.
+  * to UTC so timestamp semantics are machine-independent. Sessions carry
+  * [[GraftExtensions]]: the SQL-surface kernels and the [[SortOnce]] rule.
   */
 object Sessions {
   def local(appName: String = "graft", cores: String = defaultCores): SparkSession = {
@@ -16,6 +17,7 @@ object Sessions {
       .builder()
       .master(s"local[$cores]")
       .appName(appName)
+      .withExtensions(new GraftExtensions())
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

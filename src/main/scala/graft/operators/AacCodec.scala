@@ -636,9 +636,6 @@ object AacCodec {
 
   final case class AacPcm(nFrames: Int, pcm: Array[Long], channels: Int = 1)
 
-  def isAdts(b: Array[Byte]): Boolean =
-    b != null && b.length >= 7 && (b(0) & 0xff) == 0xff && (b(1) & 0xf0) == 0xf0
-
   /** Parsed ics_info: window sequence, max_sfb, window groups. */
   private final case class IcsInfo(wseq: Int, maxSfb: Int, groups: Seq[Seq[Int]]) {
     def isShort: Boolean = wseq == 2

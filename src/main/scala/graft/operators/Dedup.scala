@@ -238,17 +238,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_docs"))
   }
 
-  /** MinHash signature: k independent hash slots, each the min of
-    * xxhash64(shingle, slot) over the document's shingles. Computed entirely
-    * in-row (transform + array_min) — stays inside whole-stage codegen.
-    */
-  def minhashSignature(shinglesCol: Column, numHashes: Int): Column =
-    transform(
-      sequence(lit(0), lit(numHashes - 1)),
-      slot =>
-        when(size(shinglesCol) === 0, lit(Long.MaxValue))
-          .otherwise(array_min(transform(shinglesCol, s => xxhash64(s, slot)))))
-
   /** MinHash + LSH banding near-dup candidates, exact-verified.
     *
     * bands×rows = numHashes; two docs collide if any band of their

@@ -92,15 +92,6 @@ object Retrieval {
       .saveAsTable(table + "__stats")
   }
 
-  /** Compact multi-generation postings buckets to one file each (restores
-    * the sorted-scan property appends lose — see
-    * [[graft.sources.Bucketed.compact]]). Stats generations are left as-is:
-    * the sidecar is O(ingests) metadata the reader sums.
-    */
-  def compactPostingsIndex(spark: SparkSession, table: String): Unit =
-    graft.sources.Bucketed.compact(spark, table, "term",
-      graft.sources.Bucketed.bucketCount(spark, table))
-
   /** BM25 top-`k` docs per query. `queries` is (query_id, query-text);
     * duplicate terms within one query count once (distinct-term BM25 — the
     * common retrieval simplification, replayed identically by the oracle).

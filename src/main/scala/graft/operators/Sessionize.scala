@@ -108,7 +108,8 @@ object Sessionize {
     * the replayed trajectory would interleave wrongly. That contract is
     * ENFORCED, not assumed: one map-side-combinable pass computes each
     * (key, chunk)'s time bounds and any overlap between consecutive
-    * chunks fails loudly with the violation count.
+    * chunks fails loudly with the violation count. A null chunk id fails
+    * the same way.
     */
   def ewmaChunked(events: DataFrame, userCol: String, tsCol: String,
                   tieBreak: String, valueCol: String,
@@ -142,8 +143,15 @@ object Sessionize {
         // where the old count() read 0
         coalesce(sum(when(col("prev_hi").isNotNull && col("prev_hi") >= col("lo"), 1L)
           .otherwise(0L)), lit(0L)).as("violations"),
+        // collect_set drops a null chunk id, and no per-chunk filter would
+        // ever select those events — count them to fail instead
+        count(when(col("_c").isNull, 1L)).as("null_chunks"),
         collect_set(col("_c")).as("chunks"))
       .collect()(0)
+    val nullChunks = gate.getAs[Long]("null_chunks")
+    require(nullChunks == 0,
+      s"ewmaChunked: chunkExpr is null for $nullChunks (key, chunk) groups — " +
+      "every event needs a chunk id")
     val violations = gate.getAs[Long]("violations")
     require(violations == 0,
       s"ewmaChunked: chunk order disagrees with ($tsCol, $tieBreak) order " +

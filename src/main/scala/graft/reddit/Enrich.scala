@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
 
-/** The extraction-side transform chain (P2-P8, P12-P14 —
+/** The extraction-side transform chain (P2-P8, P11, P14 —
   * extract-from-reddit.py:128-179), column-presence-guarded exactly like the
   * reference's `if 'col' in df.columns` defensive style, so partial payloads
   * flow through instead of failing.
@@ -56,19 +56,6 @@ object Enrich {
   /** P11 (†): date parts off created_utc (:143-149). */
   def dateParts(df: DataFrame): DataFrame =
     ifPresent(df, "created_utc")(Relational.dateParts(_, "created_utc"))
-
-  /** P12 (†): engagement_score = score + 2*num_comments (:155). */
-  def engagementScore(df: DataFrame): DataFrame =
-    ifPresent(df, "score")(ifPresent(_, "num_comments")(
-      _.withColumn("engagement_score", col("score") + col("num_comments") * 2)))
-
-  /** P13 (†): pd.cut(engagement, [0,10,50,100,inf], [Low,Medium,High,Viral])
-    * (:158-162) — pd.cut semantics: NULL and ≤0 → NULL.
-    */
-  def engagementBucket(df: DataFrame): DataFrame =
-    ifPresent(df, "engagement_score")(_.withColumn("engagement_level",
-      Relational.bucketize(col("engagement_score"),
-        Seq(10d, 50d, 100d), Seq("Low", "Medium", "High", "Viral"), lower = Some(0d))))
 
   /** P14: yyyyMMdd run id (:259, upload_to_s3.py:41). */
   def runId(ts: Column): Column = date_format(ts, "yyyyMMdd")

@@ -29,14 +29,6 @@ object Streams {
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
-  /** Streaming dedup by key within the watermark horizon — the streaming
-    * analog of exact dedup; state expires with the watermark.
-    */
-  def dedupByKey(stream: DataFrame, key: String, tsCol: String,
-                 watermark: String = "24 hours"): DataFrame =
-    stream.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(key)
-
   final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp)
   final case class SessionState(startMs: Long, endMs: Long, n: Long)
   final case class UserSession(user_id: Long, session_start: java.sql.Timestamp,

@@ -14,19 +14,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Apply a `SparkSessionExtensions => Unit` (e.g. [[graft.GraftExtensions]])
-    * to an ALREADY-RUNNING session's function registry — the test seam for
-    * the `spark.sql.extensions` deployment path, which a builder can only
-    * wire at session construction. `registerFunctions` is `private[sql]`,
-    * hence this lives in the bridge.
-    */
-  def applyFunctionExtensions(spark: org.apache.spark.sql.SparkSession,
-                              f: org.apache.spark.sql.SparkSessionExtensions => Unit): Unit = {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    f(ext)
-    ext.registerFunctions(
-      spark.sessionState.functionRegistry.asInstanceOf[
-        org.apache.spark.sql.catalyst.analysis.FunctionRegistry])
-  }
 }

@@ -1,16 +1,12 @@
 package graft
 
-import org.apache.spark.sql.graftbridge.ColumnBridge
-
 /** End-to-end of the `spark.sql.extensions=graft.GraftExtensions`
-  * deployment path: the extension's function builders are applied to the
-  * live session registry (via the bridge seam — a builder can only wire
-  * extensions at construction) and every injected kernel must answer SQL.
+  * deployment path: the shared test session is built with the extensions
+  * installed, and every injected kernel must answer SQL.
   */
 class GraftExtensionsSpec extends SparkTestBase {
 
   test("every extension-injected kernel answers on the SQL surface") {
-    ColumnBridge.applyFunctionExtensions(spark, new GraftExtensions())
     val row = spark.sql(
       """SELECT
         |  simhash64(array('a', 'b')) AS sh,

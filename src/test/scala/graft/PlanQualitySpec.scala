@@ -429,6 +429,54 @@ class PlanQualitySpec extends SparkTestBase {
       s"offsets window is not over the aggregated partition counts:\n$p")
   }
 
+  // SortOnce keys off the broadcast threshold; set it for one block and
+  // restore the PRIOR value, as the AQE toggles above do
+  private def withBroadcastThreshold[T](v: String)(f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, v)
+    try f finally spark.conf.set(key, prev)
+  }
+
+  private def rootSort = Tables(spark, sfDir, "orders")
+    .select("o_orderkey", "o_totalprice")
+    .orderBy(col("o_totalprice").desc, col("o_orderkey"))
+
+  test("SortOnce: a small root ORDER BY gathers to one partition — no range sampling, same order") {
+    val p = plan(rootSort)
+    assert("Exchange SinglePartition".r.findAllIn(p).size == 1 && "Exchange".r.findAllIn(p).size == 1,
+      s"root sort did not gather to one partition:\n$p")
+    assert(!p.contains("rangepartitioning"), s"root sort still range-partitions:\n$p")
+    val ranged = withBroadcastThreshold("-1") {
+      val q = rootSort
+      assert(plan(q).contains("rangepartitioning"), s"rule fired with broadcast off:\n${plan(q)}")
+      q.collect().toSeq
+    }
+    assert(rootSort.collect().toSeq == ranged)
+  }
+
+  test("SortOnce: an input above the broadcast threshold keeps range partitioning") {
+    withBroadcastThreshold("1") {
+      val p = plan(rootSort)
+      assert(p.contains("Exchange rangepartitioning"), s"large root sort lost its range sort:\n$p")
+    }
+  }
+
+  test("SortOnce: orderBy + limit still plans TakeOrderedAndProject") {
+    val p = plan(rootSort.limit(5))
+    assert(p.contains("TakeOrderedAndProject"), s"top-k fell back to a full sort:\n$p")
+    assert(!p.contains("SinglePartition"), s"top-k gathered to one partition:\n$p")
+  }
+
+  test("SortOnce: a mid-plan global sort feeding mapPartitions keeps range partitioning") {
+    import spark.implicits._
+    val sizes = rootSort.select("o_orderkey").as[Long]
+      .mapPartitions(it => Iterator.single(it.size.toLong))
+    val p = plan(sizes.toDF())
+    assert(p.contains("Exchange rangepartitioning"), s"mid-plan sort lost its range sort:\n$p")
+    assert(!p.contains("SinglePartition"), s"mid-plan sort gathered to one partition:\n$p")
+  }
+
   test("maxsim scores in-row against broadcast queries — no shuffle of the corpus, no window") {
     val emb = Tables(spark, sfDir, "embeddings")
     val p = plan(Similarity.maxSimTopK(emb, emb.filter(col("vec_id") < 4),

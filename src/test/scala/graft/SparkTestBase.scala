@@ -3,12 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM under `Test / fork`). */
+/** Shared local session for all suites (one JVM under `Test / fork`),
+  * with the production [[GraftExtensions]] installed. */
 object SparkTestBase {
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[2]")
       .appName("graft-test")
+      .withExtensions(new GraftExtensions())
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -82,6 +82,20 @@ class SessionizeSpec extends SparkTestBase {
     assert(ex.getMessage.contains("monotone"), ex.getMessage)
   }
 
+  test("ewmaChunked: a null chunk id fails loudly instead of dropping its events") {
+    import org.apache.spark.sql.functions.{col, dayofmonth}
+    val ev = Seq(
+      (1L, ts("2024-01-01 10:00:00"), 1L, 100L),
+      (1L, null, 2L, 20L),
+      (2L, ts("2024-01-02 08:00:00"), 3L, 7L))
+      .toDF("user_id", "ts", "event_id", "cents")
+    val ex = intercept[IllegalArgumentException] {
+      Sessionize.ewmaChunked(ev, "user_id", "ts", "event_id", "cents",
+        1L, 4L, dayofmonth(col("ts")))
+    }
+    assert(ex.getMessage.contains("null for 1"), ex.getMessage)
+  }
+
   test("funnel: order matters, greedy earliest-match, strict-after on ties, repartition-stable") {
     val ev = Seq(
       // user 1: full ordered funnel
