@@ -70,14 +70,13 @@ object Relational {
 
   /** P15 varchar truncation (Redshift TRUNCATECOLUMNS, s3_to_redshift.py:217). */
   def truncateVarchar(df: DataFrame, widths: Map[String, Int]): DataFrame =
-    widths.foldLeft(df) { case (d, (c, w)) =>
-      if (d.columns.contains(c)) d.withColumn(c, substring(col(c), 1, w)) else d
-    }
+    df.withColumns(widths.collect {
+      case (c, w) if df.columns.contains(c) => c -> substring(col(c), 1, w)
+    })
 
   /** P16 invalid-char scrub (ACCEPTINVCHARS AS ' ', s3_to_redshift.py:215). */
   def scrubInvalidChars(df: DataFrame, cols: Seq[String]): DataFrame =
-    cols.foldLeft(df)((d, c) =>
-      d.withColumn(c, regexp_replace(col(c), "�", " ")))
+    df.withColumns(cols.map(c => c -> regexp_replace(col(c), "�", " ")).toMap)
 
   // --- §2.3 joins ------------------------------------------------------------
 

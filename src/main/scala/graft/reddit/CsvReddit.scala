@@ -25,8 +25,11 @@ import graft.operators.Relational
   */
 object CsvReddit {
 
-  final case class ErrorBudgetExceeded(bad: Long, budget: Long)
-    extends RuntimeException(s"CSV load: $bad corrupt records > MAXERROR $budget")
+  /** More than `budget` corrupt records: the check reads at most
+    * `budget + 1` of them, so it knows only that the budget is exceeded.
+    */
+  final case class ErrorBudgetExceeded(budget: Long)
+    extends RuntimeException(s"CSV load: more than MAXERROR $budget corrupt records")
 
   /** A tolerated load plus its error diagnostics — the
     * `sys_load_error_detail` surface (check_load_errors,
@@ -51,39 +54,41 @@ object CsvReddit {
     readChecked(spark, path, maxError).data
 
   /** [[read]] plus MAXERROR diagnostics: count and a bounded sample of the
-    * rejected raw records (`take` stops scanning once it has the sample —
-    * no second full pass over a big load).
+    * rejected raw records. One bounded action reads at most `maxError + 1`
+    * rejects, which serve as both the budget check and the sample.
+    *
+    * Both sides judge a row on the full raw schema, so a row counts as
+    * corrupt exactly when the good-row filter drops it: the reject read
+    * projects nothing away, and the parsed good rows are a lazy local
+    * checkpoint, which computes every column once, on the first action
+    * over them. (A column-pruned CSV scan misses malformed fields in the
+    * columns it skips, and one that keeps only `_corrupt_record` is an
+    * error.) The checkpoint also spares every later action a re-parse of
+    * the file.
     */
   def readChecked(spark: SparkSession, path: String, maxError: Long = 100L,
                   sampleRows: Int = 5): Load = {
     val raw = rawRead(spark, path)
-      .cache() // one pass for the budget count, one for the parse
+    val corrupt = col("_corrupt_record")
+    // saturating +1: a budget of Int.MaxValue or more reads every reject
+    val cap = if (maxError >= Int.MaxValue) Int.MaxValue else maxError.toInt + 1
+    val rejects = raw.filter(corrupt.isNotNull).limit(cap).collect()
+    if (rejects.length > maxError) throw ErrorBudgetExceeded(maxError)
+    val sample = rejects.take(sampleRows).map(_.getAs[String]("_corrupt_record")).toSeq
 
-    val bad = raw.filter(col("_corrupt_record").isNotNull).count()
-    if (bad > maxError) throw ErrorBudgetExceeded(bad, maxError)
-    val sample =
-      if (bad == 0 || sampleRows == 0) Seq.empty
-      else badRecords(spark, path).take(sampleRows).map(_.getString(0)).toSeq
-
-    val good = raw.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
-    Load(parse(good), bad, sample)
+    val good = raw.filter(corrupt.isNull).drop("_corrupt_record")
+    Load(parse(good).localCheckpoint(eager = false), rejects.length.toLong, sample)
   }
-
-  /** The rejected raw records of a load — what the reference reads back from
-    * `sys_load_error_detail` after a COPY (s3_to_redshift.py:312-331).
-    */
-  def badRecords(spark: SparkSession, path: String): DataFrame =
-    rawRead(spark, path)
-      .filter(col("_corrupt_record").isNotNull)
-      .select(col("_corrupt_record").as("raw_record"))
 
   /** String-typed raw rows → typed schema with COPY null/truncation rules. */
   def parse(raw: DataFrame): DataFrame = {
     // EMPTYASNULL + BLANKSASNULL: whitespace-only → NULL (content otherwise
     // untouched — TRIMBLANKS trailing-blank removal would corrupt the
-    // selftext_length parity and is not observable in any fixture)
-    val nulled = RedditSchema.columns.foldLeft(raw)((d, c) =>
-      d.withColumn(c, when(trim(col(c)) === "", lit(null)).otherwise(col(c))))
+    // selftext_length parity and is not observable in any fixture). Each
+    // step is one projection: a fold of withColumn re-analyses a growing
+    // plan once per column.
+    val nulled = raw.withColumns(RedditSchema.columns.map(c =>
+      c -> when(trim(col(c)) === "", lit(null)).otherwise(col(c))).toMap)
     // ACCEPTINVCHARS AS ' ': invalid UTF-8 arrives as U+FFFD from the reader
     val scrubbed = Relational.scrubInvalidChars(nulled, Seq("title", "selftext", "author", "url"))
     // TRUNCATECOLUMNS

@@ -5,8 +5,10 @@ import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.Relational
 
@@ -30,10 +32,19 @@ import graft.operators.Relational
   * 100 TB table touches one or two date directories instead of copying the
   * world. Hard links (not symlinks) keep vacuumed versions from pulling data
   * out from under newer ones.
+  *
+  * Each version also carries its schema as `_schema.json` (the `StructType`
+  * JSON of what its writer wrote, partition column last), and every read
+  * passes it to `spark.read.schema`: Spark runs a job to infer the schema of
+  * a parquet directory read without one, and the writer already knows it.
+  * Versions written before the schema file existed are read by inference.
   */
 object PostsTable {
 
   private val ManifestName = "_graft_manifest.tsv"
+  // not `_graft_*`: those names are carried forward into the next version,
+  // and each version's writer writes its own schema
+  private val SchemaName = "_schema.json"
   // serializes heal-takeovers within this JVM (java.nio FileLock is
   // per-process: overlapping same-JVM locks throw instead of blocking)
   private val healMutex = new Object
@@ -54,7 +65,29 @@ object PostsTable {
   def read(spark: SparkSession, root: String): DataFrame = {
     val v = currentVersion(root).getOrElse(
       throw new IllegalStateException(s"PostsTable at $root not initialized"))
-    spark.read.parquet(versionDir(root, v).toString)
+    readDir(spark, versionDir(root, v))
+  }
+
+  /** Read a version directory with its stored schema, or by inference when
+    * it has none.
+    */
+  private def readDir(spark: SparkSession, dir: Path): DataFrame = {
+    val p = dir.resolve(SchemaName)
+    val reader =
+      if (Files.exists(p))
+        spark.read.schema(DataType.fromJson(Files.readString(p)).asInstanceOf[StructType])
+      else spark.read
+    reader.parquet(dir.toString)
+  }
+
+  /** Store in `dir` the schema Spark reads back from a parquet directory
+    * written from `df` partitioned by `partitionCols`: the data columns,
+    * then the partition columns, all nullable.
+    */
+  private def writeSchema(dir: Path, df: DataFrame, partitionCols: Seq[String] = Nil): Unit = {
+    val (parts, data) = df.schema.fields.partition(f => partitionCols.contains(f.name))
+    Files.writeString(dir.resolve(SchemaName),
+      StructType((data ++ parts).map(_.copy(nullable = true))).json)
   }
 
   // --- per-partition key-bounds manifest ------------------------------------
@@ -65,6 +98,8 @@ object PostsTable {
   /** partition-dir-name -> (minKey, maxKey) as strings (ordering-consistent
     * for any key type as long as build and probe cast the same way).
     * Empty bound strings mark a partition with null keys → always affected.
+    * The bounds are Spark string `min`/`max`, so they are in UTF-8 byte
+    * order, and the probe in [[partitionMerge]] must compare in that order.
     */
   private def readManifest(dir: Path): Option[Map[String, (String, String)]] = {
     val p = dir.resolve(ManifestName)
@@ -113,7 +148,7 @@ object PostsTable {
       finally stream.close()
     if (!hasData) Map.empty
     else keyBounds(
-      spark.read.parquet(tmp.toString).select(col(key), col("extract_date")),
+      readDir(spark, tmp).select(col(key), col("extract_date")),
       key)
   }
 
@@ -128,8 +163,12 @@ object PostsTable {
     if (df.columns.contains("extraction_timestamp")) {
       val dated = withExtractDate(df)
       dated.write.partitionBy("extract_date").mode("overwrite").parquet(tmp.toString)
+      writeSchema(tmp, dated, Seq("extract_date"))
       writeManifest(tmp, writtenKeyBounds(df.sparkSession, tmp, key))
-    } else df.write.mode("overwrite").parquet(tmp.toString)
+    } else {
+      df.write.mode("overwrite").parquet(tmp.toString)
+      writeSchema(tmp, df)
+    }
     writeSidecar(tmp, sidecar)
     moveIntoVersion(tmp, root, v)
   }
@@ -349,12 +388,13 @@ object PostsTable {
     // `maxStagedKeys` makes the contract enforceable: the limit bounds the
     // collect itself, so a corpus-sized staging relation fails loudly here
     // instead of OOMing the driver
-    // ONE collect for both prune sets: (key, date) pairs — a daily batch
-    // stamps one extraction date, so pairs ≈ keys and the pair count is
-    // the enforceable bound on the collect (a second distinct-collect job
-    // per upsert was pure scheduler overhead on a bounded batch)
+    // ONE collect for both prune sets and the delete-matching keys:
+    // (key, key as string, date) — a daily batch stamps one extraction
+    // date, so rows ≈ keys and the row count is the enforceable bound on
+    // the collect (a second distinct-collect job per upsert was pure
+    // scheduler overhead on a bounded batch)
     val pairRows = withExtractDate(staging)
-      .select(col(key).cast("string"), col("extract_date").cast("string"))
+      .select(col(key), col(key).cast("string"), col("extract_date").cast("string"))
       .distinct()
       // saturating +1: Int.MaxValue means "unbounded" rather than a
       // wrapped negative limit
@@ -364,9 +404,10 @@ object PostsTable {
       s"upsert: staging batch carries more than maxStagedKeys=$maxStagedKeys distinct " +
         "(key, date) pairs — the set collects driver-side for partition pruning, so an " +
         "unbounded batch would exhaust driver memory. Split the batch or raise the budget.")
-    val stagedKeys = pairRows.map(_.getString(0)).filter(_ != null).distinct
+    val stagedKeys = pairRows.map(_.getString(1)).filter(_ != null).distinct
+      .map(UTF8String.fromString)
     val stagedDates = pairRows
-      .map(r => partDirName(Option(r.getString(1)))).toSet
+      .map(r => partDirName(Option(r.getString(2)))).toSet
 
     // self-heal versions that predate manifests with one key-column scan
     val manifest = readManifest(curDir).getOrElse(keyBounds(main, key))
@@ -374,7 +415,11 @@ object PostsTable {
     val existing = listPartitionDirs(curDir)
     val affected = existing.filter { p =>
       stagedDates.contains(p) || manifest.get(p).forall { case (lo, hi) =>
-        lo.isEmpty || hi.isEmpty || stagedKeys.exists(k => lo <= k && k <= hi)
+        lo.isEmpty || hi.isEmpty || {
+          // the bounds' own (UTF-8 byte) order, not Java's UTF-16 order
+          val (l, h) = (UTF8String.fromString(lo), UTF8String.fromString(hi))
+          stagedKeys.exists(k => l.compareTo(k) <= 0 && k.compareTo(h) <= 0)
+        }
       }
     }
     val unaffected = existing -- affected
@@ -388,11 +433,19 @@ object PostsTable {
       if (nullPart.nonEmpty) inDates || col("extract_date").isNull else inDates
     }
     val candidates = main.filter(prune).drop("extract_date")
-    val merged = withExtractDate(Relational.upsert(candidates, staging, key))
+    // delete-matching against the staged keys the collect above returned: a
+    // local relation on the broadcast side needs no distinct shuffle of
+    // the batch (null keys match nothing, as in the join itself)
+    val keyRows = pairRows.map(_.get(0)).filter(_ != null).distinct.map(Row(_))
+    val stagedKeySet = spark.createDataFrame(keyRows.toSeq.asJava,
+      StructType(Seq(staging.schema(key))))
+    val merged = withExtractDate(
+      candidates.join(broadcast(stagedKeySet), Seq(key), "left_anti").unionByName(staging))
 
     val tmp = Paths.get(root, s"_tmp_v_$v")
     deleteRecursively(tmp)
     merged.write.partitionBy("extract_date").mode("overwrite").parquet(tmp.toString)
+    writeSchema(tmp, merged, Seq("extract_date"))
     // bounds of the REWRITTEN partitions, read back from tmp now — before
     // the hard links land, so unaffected partitions are never rescanned
     // (their bounds carry forward from the old manifest)
@@ -434,7 +487,7 @@ object PostsTable {
     val dir = versionDir(root, v)
     require(Files.isDirectory(dir),
       s"PostsTable: version v_$v not retained at $root (vacuumed or never written)")
-    spark.read.parquet(dir.toString).drop("extract_date")
+    readDir(spark, dir).drop("extract_date")
   }
 
   /** Retained version numbers, ascending. */

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.StructType
   *  - malformed lines are CAPTURED, not dropped: PERMISSIVE mode routes
   *    the raw line into `_corrupt_record` so a curation pipeline can
   *    count/quarantine bad input instead of silently shrinking (same
-  *    diagnostics contract as CsvReddit.badRecords).
+  *    diagnostics contract as CsvReddit.readChecked).
   */
 object JsonLines {
 

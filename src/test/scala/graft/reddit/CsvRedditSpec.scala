@@ -63,31 +63,48 @@ class CsvRedditSpec extends SparkTestBase {
     assert(df.count() > 0)
   }
 
+  /** A reference-format CSV: one good row per id, then `corrupt` rows with
+    * too many fields (the classic COPY reject).
+    */
+  private def corruptCsv(ids: Seq[String], corrupt: Int): String = {
+    val p = java.nio.file.Files.createTempDirectory("csvbad").resolve("bad.csv")
+    val header = RedditSchema.columns.mkString(",")
+    val good = ids.map(id => Seq(id, "a title", "5", "2", "alice", "2025-03-20 10:00:00",
+      "http://x", "0.9", "False", "False", "False", "body", "stocks",
+      "2025-03-20 11:00:00.123456", "4", "False").mkString(","))
+    val tooMany = (1 to corrupt).map(i => (Seq(s"badid$i") ++ Seq.fill(20)("x")).mkString(","))
+    java.nio.file.Files.writeString(p, (header +: (good ++ tooMany)).mkString("", "\n", "\n"))
+    p.toString
+  }
+
   test("badRecords surfaces the rejected raw rows (sys_load_error_detail parity)") {
     // a deliberately corrupt fixture: one good row, one row with too many
-    // fields (the classic COPY reject), one unclosed quote
-    val dir = java.nio.file.Files.createTempDirectory("csvbad")
-    val p = dir.resolve("bad.csv")
-    val header = RedditSchema.columns.mkString(",")
-    val good = Seq("okid1", "a title", "5", "2", "alice", "2025-03-20 10:00:00",
-      "http://x", "0.9", "False", "False", "False", "body", "stocks",
-      "2025-03-20 11:00:00.123456", "4", "False").mkString(",")
-    val tooMany = (Seq("badid1") ++ Seq.fill(20)("x")).mkString(",")
-    java.nio.file.Files.writeString(p, s"$header\n$good\n$tooMany\n")
+    // fields
+    val p = corruptCsv(Seq("okid1"), corrupt = 1)
 
-    val load = CsvReddit.readChecked(spark, p.toString, maxError = 10)
+    val load = CsvReddit.readChecked(spark, p, maxError = 10)
     assert(load.data.count() == 1L)
     assert(load.badCount == 1L)
-    assert(load.badSample.nonEmpty && load.badSample.head.contains("badid1"))
-
-    val bad = CsvReddit.badRecords(spark, p.toString).collect().map(_.getString(0))
-    assert(bad.length == 1 && bad.head.startsWith("badid1"))
+    assert(load.badSample.length == 1 && load.badSample.head.startsWith("badid1"))
 
     // the pipeline surfaces the diagnostics in its Result
     val root = java.nio.file.Files.createTempDirectory("posts_bad").toString
-    val r = Pipeline.run(spark, p.toString, root)
+    val r = Pipeline.run(spark, p, root)
     assert(r.badRecords == 1L && r.loaded == 1L)
-    assert(r.badSample.head.contains("badid1"))
+    assert(r.badSample.length == 1 && r.badSample.head.startsWith("badid1"))
+  }
+
+  test("MAXERROR: more rejects than the budget's bounded read still fail the load") {
+    // the check reads at most maxError + 1 rejects; 5 rejects against a
+    // budget of 2 must fail, not stop at the cap and pass
+    val p = corruptCsv(Seq("okid1", "okid2"), corrupt = 5)
+    val e = intercept[CsvReddit.ErrorBudgetExceeded] {
+      CsvReddit.readChecked(spark, p, maxError = 2)
+    }
+    assert(e.budget == 2L && e.getMessage.contains("more than MAXERROR 2"))
+    // the budget is inclusive: exactly maxError rejects load
+    val ok = CsvReddit.readChecked(spark, p, maxError = 5, sampleRows = 3)
+    assert(ok.badCount == 5L && ok.badSample.length == 3 && ok.data.count() == 2L)
   }
 
   test("header probe reads column names without parsing the body") {

@@ -301,4 +301,103 @@ class PipelineSpec extends SparkTestBase {
     }
     assert(ex.getMessage.contains("not retained"))
   }
+
+  test("upsert pruning compares keys in the manifest's UTF-8 order") {
+    // manifest bounds are Spark string min/max (UTF-8 byte order); in Java
+    // String (UTF-16) order U+FFFF sorts above U+1F600, in UTF-8 below it
+    import spark.implicits._
+    val root = Files.createTempDirectory("posts_utf8").toString
+    def day(d: String, rows: (String, String)*) =
+      rows.map { case (id, v) => (id, v, java.sql.Timestamp.valueOf(s"$d 12:00:00")) }
+        .toDF("id", "v", "extraction_timestamp")
+    val (ffff, grin) = ("\uFFFF", "\uD83D\uDE00")
+    PostsTable.upsert(spark, root, day("2025-03-18", ffff -> "old", grin -> "x"))
+    PostsTable.upsert(spark, root, day("2025-03-18", "b" -> "y")) // bounds b..grin
+    PostsTable.upsert(spark, root, day("2025-03-19", ffff -> "new"))
+    val vs = PostsTable.read(spark, root).filter(col("id") === ffff)
+      .select("v").as[String].collect().toSeq
+    assert(vs == Seq("new"), "the 2025-03-18 partition kept a stale row")
+  }
+
+  test("a version's stored schema is the schema Spark infers from its directory") {
+    import spark.implicits._
+    import java.nio.file.Paths
+    def inferred(root: String) = spark.read
+      .parquet(Paths.get(root, s"v_${PostsTable.currentVersion(root).get}").toString).schema
+    def hasSchemaFile(root: String) =
+      Files.exists(Paths.get(root, s"v_${PostsTable.currentVersion(root).get}", "_schema.json"))
+
+    // partitioned: written by create, then by the partition merge
+    val dated = Files.createTempDirectory("schema_dated").toString
+    val ts = java.sql.Timestamp.valueOf("2025-03-18 12:00:00")
+    PostsTable.upsert(spark, dated, Seq(("a", 1, ts)).toDF("id", "n", "extraction_timestamp"))
+    assert(hasSchemaFile(dated) && PostsTable.read(spark, dated).schema == inferred(dated))
+    PostsTable.upsert(spark, dated, Seq(("b", 2, new java.sql.Timestamp(ts.getTime + 86400000L)))
+      .toDF("id", "n", "extraction_timestamp"))
+    assert(hasSchemaFile(dated) && PostsTable.read(spark, dated).schema == inferred(dated))
+    assert(PostsTable.read(spark, dated).schema.fieldNames.last == "extract_date")
+    assert(PostsTable.readVersion(spark, dated, 0L).schema.fieldNames.toSeq ==
+      Seq("id", "n", "extraction_timestamp"))
+
+    // unpartitioned with a sidecar, which is carried forward; the schema
+    // file is each version's own
+    val flat = Files.createTempDirectory("schema_flat").toString
+    PostsTable.create(Seq((1L, "a")).toDF("id", "v"), flat, sidecar = Map("_graft_note" -> "n1"))
+    PostsTable.upsert(spark, flat, Seq((2L, "b")).toDF("id", "v"))
+    assert(hasSchemaFile(flat) && PostsTable.read(spark, flat).schema == inferred(flat))
+    assert(PostsTable.readSidecar(flat, "_graft_note").contains("n1"))
+    assert(PostsTable.read(spark, flat).count() == 2L)
+  }
+
+  /** A reference-format daily CSV: one row per id stamped `date` (the
+    * first with an empty, so NULL, subreddit), plus one row with too many
+    * fields (a COPY reject).
+    */
+  private def dayCsv(dir: java.nio.file.Path, ids: Seq[String], date: String): String = {
+    val p = dir.resolve(s"$date.csv")
+    val rows = ids.zipWithIndex.map { case (id, i) =>
+      Seq(id, s"title $i", s"${i * 7 % 50}", s"${i % 9}", s"user$i", s"$date 08:00:00",
+        "http://x", "0.9", "False", "False", "False", "body", if (i == 0) "" else s"sub${i % 3}",
+        s"$date 11:00:00.123456", "4", "False").mkString(",")
+    }
+    val reject = (Seq("badid") ++ Seq.fill(20)("x")).mkString(",")
+    Files.writeString(p,
+      (RedditSchema.columns.mkString(",") +: rows :+ reject).mkString("", "\n", "\n"))
+    p.toString
+  }
+
+  test("a second-day Pipeline.run costs a pinned number of Spark jobs") {
+    val dir = Files.createTempDirectory("posts_jobs")
+    val root = dir.resolve("table").toString
+    Pipeline.run(spark, dayCsv(dir, (1 to 30).map(i => f"a$i%03d"), "2025-03-20"), root)
+    val day2 = dayCsv(dir, (21 to 50).map(i => f"a$i%03d"), "2025-03-21")
+
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(): Unit
+      }
+    }
+    spark.sparkContext.addSparkListener(counter)
+    val r = try {
+      val out = Pipeline.run(spark, day2, root)
+      // the listener bus is async: let queued job starts drain
+      var last = -1
+      while (counter.jobs.get() != last) {
+        last = counter.jobs.get(); Thread.sleep(200)
+      }
+      out
+    } finally spark.sparkContext.removeSparkListener(counter)
+    // tableRows sums the mart's counts, the NULL-subreddit group included
+    assert(r.loaded == 30L && r.tableRows == 50L && r.badRecords == 1L)
+    assert(r.summary.filter(col("subreddit").isNull).head().getAs[Long]("post_count") == 2L)
+    assert(PostsTable.read(spark, root).count() == r.tableRows)
+    val jobs = counter.jobs.get()
+    // reject check 1, key collect 2, version write 2 (the staged-key
+    // broadcast and the write), bounds read-back 2, mart 2, loaded count 2;
+    // no parquet schema inference, no distinct shuffle of the staged keys,
+    // no separate table count
+    assert(jobs == 11, s"second-day Pipeline.run ran $jobs Spark jobs")
+  }
 }
