@@ -29,6 +29,9 @@ class TestdataSmokeSpec extends SparkTestBase {
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs on real fixtures") {
       assume(dataPresent, s"$sfDir missing — driver fixtures not generated")
+      val refs = QueryCatalog.referenceFiles.getOrElse(name, Nil)
+      assume(refs.forall(f => java.nio.file.Files.isReadable(java.nio.file.Paths.get(f))),
+        s"${refs.mkString(", ")} not mounted — the reference extracts are not in the repository")
       val n = fn(spark, sfDir).count()
       assert(n >= 0)
     }

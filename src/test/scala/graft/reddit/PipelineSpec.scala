@@ -1,21 +1,28 @@
 package graft.reddit
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
-/** End-to-end golden test: the whole DAG on the reference's own fixtures,
-  * including the U3 idempotence / last-write-wins guarantees the reference
-  * documents (s3_to_redshift.py:9-15).
+/** End-to-end tests of the whole DAG, including the U3 idempotence /
+  * last-write-wins guarantees the reference documents
+  * (s3_to_redshift.py:9-15). The golden run reads the reference's own
+  * fixtures and runs only where they are mounted; the other cases that read
+  * daily extracts read two generated days of the same format
+  * ([[RefExtract]]: 10 then 30 ids, two shared).
   */
 class PipelineSpec extends SparkTestBase {
 
   private val fixA = "/root/reference/tmp/20250320.csv" // earlier batch
   private val fixB = "/root/reference/tmp/20250324.csv" // later batch, overlapping ids
+  private lazy val earlier = RefExtract.earlier()
+  private lazy val later = RefExtract.later()
 
   test("pipeline run: ingest → upsert → models, twice with overlap") {
+    assume(Seq(fixA, fixB).forall(f => Files.isReadable(Paths.get(f))),
+      s"$fixA and $fixB are not in the repository")
     val root = Files.createTempDirectory("posts_table").toString
 
     val r1 = Pipeline.run(spark, fixA, root)
@@ -50,18 +57,18 @@ class PipelineSpec extends SparkTestBase {
 
   test("upsert is idempotent: re-running the same batch changes nothing") {
     val root = Files.createTempDirectory("posts_table2").toString
-    Pipeline.run(spark, fixB, root)
+    Pipeline.run(spark, later, root)
     val before = PostsTable.read(spark, root).orderBy("id").collect().toSeq
-    Pipeline.run(spark, fixB, root)
+    Pipeline.run(spark, later, root)
     val after = PostsTable.read(spark, root).orderBy("id").collect().toSeq
     assert(before == after)
   }
 
   test("atomic versioning: CURRENT flips only after a full write; vacuum bounds versions") {
     val root = Files.createTempDirectory("posts_table3").toString
-    Pipeline.run(spark, fixA, root)
+    Pipeline.run(spark, earlier, root)
     val v1 = PostsTable.currentVersion(root)
-    Pipeline.run(spark, fixB, root)
+    Pipeline.run(spark, later, root)
     val v2 = PostsTable.currentVersion(root)
     assert(v2.get > v1.get)
     // no _tmp_ leftovers, old versions vacuumed to ≤2
@@ -177,13 +184,13 @@ class PipelineSpec extends SparkTestBase {
   test("partition-level upsert: unaffected date partitions hard-link, not copy") {
     import java.nio.file.{Files => F, Paths}
     val root = Files.createTempDirectory("posts_table5").toString
-    Pipeline.run(spark, fixA, root) // v0: fixA's extract_date partition(s)
+    Pipeline.run(spark, earlier, root) // v0: earlier's extract_date partition(s)
     val v1 = PostsTable.currentVersion(root).get
 
-    // staged batch: ids disjoint from fixA (prefixed) on a brand-new date →
+    // staged batch: ids disjoint from earlier (prefixed) on a brand-new date →
     // every existing partition's key range excludes them → all linked
     val staged = Enrich.stampExtraction(
-      CsvReddit.read(spark, fixB).withColumn("id", concat(lit("zz"), col("id"))),
+      CsvReddit.read(spark, later).withColumn("id", concat(lit("zz"), col("id"))),
       java.sql.Timestamp.valueOf("2025-03-25 00:00:00"))
     PostsTable.upsert(spark, root, staged)
     val v2 = PostsTable.currentVersion(root).get
@@ -211,15 +218,15 @@ class PipelineSpec extends SparkTestBase {
     // and the new date landed alongside
     assert(F.isDirectory(newV.resolve("extract_date=2025-03-25")))
     assert(PostsTable.read(spark, root).count() ==
-      CsvReddit.read(spark, fixA).count() + staged.count())
+      CsvReddit.read(spark, earlier).count() + staged.count())
   }
 
   test("upsert: a staging batch over the key budget fails fast, before any write") {
     val root = Files.createTempDirectory("posts_table6").toString
-    Pipeline.run(spark, fixA, root)
+    Pipeline.run(spark, earlier, root)
     val v1 = PostsTable.currentVersion(root).get
     val staged = Enrich.stampExtraction(
-      CsvReddit.read(spark, fixB), // 183 distinct ids > budget of 10
+      CsvReddit.read(spark, later), // 30 distinct ids > budget of 10
       java.sql.Timestamp.valueOf("2025-03-26 00:00:00"))
     val e = intercept[IllegalArgumentException] {
       PostsTable.upsert(spark, root, staged, maxStagedKeys = 10)
@@ -238,13 +245,13 @@ class PipelineSpec extends SparkTestBase {
         retries = 1, retryDelayMs = 50L)
     }
     assert((System.nanoTime() - t0) / 1e6 >= 50.0, "no retry delay observed")
-    val r = Pipeline.runWithRetry(spark, fixA, root, retries = 1, retryDelayMs = 0L)
+    val r = Pipeline.runWithRetry(spark, earlier, root, retries = 1, retryDelayMs = 0L)
     assert(r.loaded > 0)
   }
 
   test("acceptance queries (query-test.py) run on the registered views") {
     val root = Files.createTempDirectory("posts_table4").toString
-    Pipeline.run(spark, fixB, root)
+    Pipeline.run(spark, later, root)
     val reddit = PostsTable.read(spark, root).drop("extract_date")
     Models.registerViews(spark, reddit)
 
@@ -254,7 +261,7 @@ class PipelineSpec extends SparkTestBase {
     assert(top.map(_.getAs[String]("id")).toSeq == dfTop.map(_.getAs[String]("id")).toSeq)
 
     val stats = Analytics.sqlSubredditStats(spark).collect()
-    assert(stats.nonEmpty) // 183 posts of r/stocks > HAVING 5
+    assert(stats.nonEmpty) // 30 posts of r/stocks > HAVING 5
     val hours = Analytics.sqlScoreByHour(spark).collect()
     assert(hours.nonEmpty && hours.forall(r => r.getAs[Int]("hour_of_day") >= 0))
 
