@@ -1,32 +1,44 @@
 package graft.reddit
 
 import java.nio.file.{Files, Paths}
+import java.time.LocalDate
 
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
-/** S5 tolerant-ingest contract. The three cases that count the rows of the
-  * reference's own fixture file (read-only at /root/reference — real
-  * extracted data, heavy embedded newlines) run only where it is mounted;
-  * the rest read a generated extract of the same format ([[RefExtract]]).
+/** S5 tolerant-ingest contract, proven on the reference's own fixture files
+  * (read-only at /root/reference — real extracted data, heavy embedded
+  * newlines). Those files are not in the repository: a case that reads them
+  * is cancelled where they are not mounted. Each case whose assertions hold
+  * for any extract in the format runs a second time, named
+  * "... (generated extract)", on [[RefExtract.later]].
   */
 class CsvRedditSpec extends SparkTestBase {
 
   private val fix20250324 = "/root/reference/tmp/20250324.csv"
-  private lazy val extract = RefExtract.later()
+  private val fix20250318 = "/root/reference/tmp/20250318.csv"
 
-  private def assumeFixture(): Unit =
-    assume(Files.isReadable(Paths.get(fix20250324)), s"$fix20250324 is not in the repository")
+  private def assumeReadable(fix: String): Unit =
+    assume(Files.isReadable(Paths.get(fix)), s"$fix is not in the repository")
+
+  /** Registers `name` on the reference's `fix` and `name (generated
+    * extract)` on a generated extract, with the same body.
+    */
+  private def testOnFixtureAndExtract(name: String, fix: String)(body: String => Unit): Unit = {
+    test(name) { assumeReadable(fix); body(fix) }
+    test(s"$name (generated extract)") { body(RefExtract.later()) }
+  }
 
   test("multiline fixture: 2,840 physical lines parse to 183 logical rows") {
-    assumeFixture()
+    assumeReadable(fix20250324)
     val df = CsvReddit.read(spark, fix20250324)
     assert(df.count() == 183L)
   }
 
-  test("schema is the canonical 16 columns with parsed types") {
-    val df = CsvReddit.read(spark, extract)
+  testOnFixtureAndExtract(
+      "schema is the canonical 16 columns with parsed types", fix20250318) { fix =>
+    val df = CsvReddit.read(spark, fix)
     assert(df.columns.toSeq == RedditSchema.columns)
     val t = df.schema.fields.map(f => f.name -> f.dataType.typeName).toMap
     assert(t("score") == "integer")
@@ -36,7 +48,7 @@ class CsvRedditSpec extends SparkTestBase {
   }
 
   test("EMPTYASNULL/BLANKSASNULL: empty author (deleted account) is NULL after parse") {
-    assumeFixture()
+    assumeReadable(fix20250324)
     val df = CsvReddit.read(spark, fix20250324)
     // exactly one deleted-account row in the fixture has an empty author
     // field → NULL at ingest (P2-style fills are downstream transforms,
@@ -45,14 +57,15 @@ class CsvRedditSpec extends SparkTestBase {
   }
 
   test("booleans parse from True/False strings; no stray values") {
-    assumeFixture()
+    assumeReadable(fix20250324)
     val df = CsvReddit.read(spark, fix20250324)
     val nBool = df.filter(col("over_18").isNotNull).count()
     assert(nBool == 183L) // every fixture row carries a parseable flag
   }
 
-  test("timestamps parse at both precisions (seconds and microseconds)") {
-    val df = CsvReddit.read(spark, extract)
+  testOnFixtureAndExtract(
+      "timestamps parse at both precisions (seconds and microseconds)", fix20250324) { fix =>
+    val df = CsvReddit.read(spark, fix)
     assert(df.filter(col("created_utc").isNull).count() == 0)
     assert(df.filter(col("extraction_timestamp").isNull).count() == 0)
     // µs precision survives: extraction timestamps differ below the second
@@ -61,35 +74,30 @@ class CsvRedditSpec extends SparkTestBase {
     assert(micros > 0)
   }
 
-  test("TRUNCATECOLUMNS: declared widths are enforced") {
-    val df = CsvReddit.read(spark, extract)
+  testOnFixtureAndExtract("TRUNCATECOLUMNS: declared widths are enforced", fix20250324) { fix =>
+    val df = CsvReddit.read(spark, fix)
     val over = df.filter(length(col("title")) > 4000 || length(col("author")) > 100).count()
     assert(over == 0)
   }
 
-  test("MAXERROR: a budget of 0 still accepts a clean file") {
-    val df = CsvReddit.read(spark, extract, maxError = 0)
+  testOnFixtureAndExtract(
+      "MAXERROR: a budget of 0 still accepts a clean file", fix20250318) { fix =>
+    val df = CsvReddit.read(spark, fix, maxError = 0)
     assert(df.count() > 0)
   }
 
-  /** A reference-format CSV: one good row per id, then `corrupt` rows with
-    * too many fields (the classic COPY reject).
+  /** A reference-format CSV: `good` generated rows, then `corrupt` rows
+    * with too many fields (the classic COPY reject).
     */
-  private def corruptCsv(ids: Seq[String], corrupt: Int): String = {
-    val p = java.nio.file.Files.createTempDirectory("csvbad").resolve("bad.csv")
-    val header = RedditSchema.columns.mkString(",")
-    val good = ids.map(id => Seq(id, "a title", "5", "2", "alice", "2025-03-20 10:00:00",
-      "http://x", "0.9", "False", "False", "False", "body", "stocks",
-      "2025-03-20 11:00:00.123456", "4", "False").mkString(","))
+  private def corruptCsv(good: Int, corrupt: Int): String = {
     val tooMany = (1 to corrupt).map(i => (Seq(s"badid$i") ++ Seq.fill(20)("x")).mkString(","))
-    java.nio.file.Files.writeString(p, (header +: (good ++ tooMany)).mkString("", "\n", "\n"))
-    p.toString
+    RefExtract.write("bad.csv", RefExtract.rows(LocalDate.of(2025, 3, 20), 1 to good) ++ tooMany)
   }
 
   test("badRecords surfaces the rejected raw rows (sys_load_error_detail parity)") {
     // a deliberately corrupt fixture: one good row, one row with too many
     // fields
-    val p = corruptCsv(Seq("okid1"), corrupt = 1)
+    val p = corruptCsv(good = 1, corrupt = 1)
 
     val load = CsvReddit.readChecked(spark, p, maxError = 10)
     assert(load.data.count() == 1L)
@@ -106,7 +114,7 @@ class CsvRedditSpec extends SparkTestBase {
   test("MAXERROR: more rejects than the budget's bounded read still fail the load") {
     // the check reads at most maxError + 1 rejects; 5 rejects against a
     // budget of 2 must fail, not stop at the cap and pass
-    val p = corruptCsv(Seq("okid1", "okid2"), corrupt = 5)
+    val p = corruptCsv(good = 2, corrupt = 5)
     val e = intercept[CsvReddit.ErrorBudgetExceeded] {
       CsvReddit.readChecked(spark, p, maxError = 2)
     }
@@ -116,12 +124,14 @@ class CsvRedditSpec extends SparkTestBase {
     assert(ok.badCount == 5L && ok.badSample.length == 3 && ok.data.count() == 2L)
   }
 
-  test("header probe reads column names without parsing the body") {
-    assert(CsvReddit.headerProbe(spark, extract) == RedditSchema.columns)
+  testOnFixtureAndExtract(
+      "header probe reads column names without parsing the body", fix20250318) { fix =>
+    assert(CsvReddit.headerProbe(spark, fix) == RedditSchema.columns)
   }
 
-  test("CSV round-trip: write then read preserves rows and key values") {
-    val df = CsvReddit.read(spark, extract)
+  testOnFixtureAndExtract(
+      "CSV round-trip: write then read preserves rows and key values", fix20250318) { fix =>
+    val df = CsvReddit.read(spark, fix)
     val out = java.nio.file.Files.createTempDirectory("csvrt").toString + "/out"
     CsvReddit.write(df, out)
     val back = CsvReddit.read(spark, out)

@@ -7,9 +7,10 @@ import org.apache.spark.sql.Row
 
 import graft.SparkTestBase
 
-/** The source contract. The top-N case counts against the reference's own
-  * fixture file and runs only where it is mounted; the JSON round-trip
-  * reads a generated extract of the same format ([[RefExtract]]).
+/** The source contract, on the reference's own fixture file, which is not in
+  * the repository: a case that reads it is cancelled where it is not
+  * mounted. The JSON round-trip also runs, named "... (generated extract)",
+  * on a generated extract of the same format ([[RefExtract.later]]).
   */
 class RedditSourceSpec extends SparkTestBase {
 
@@ -17,8 +18,11 @@ class RedditSourceSpec extends SparkTestBase {
   // fixture extraction ran 2025-03-24; a "week" window ending then covers most rows
   private val now = Timestamp.valueOf("2025-03-24 23:59:59")
 
-  test("top(time_filter, limit): trailing window + ranked top-N") {
+  private def assumeFixture(): Unit =
     assume(Files.isReadable(Paths.get(fix)), s"$fix is not in the repository")
+
+  test("top(time_filter, limit): trailing window + ranked top-N") {
+    assumeFixture()
     val src = RedditSource.fixture(fix)
     val week = RedditSource.scan(spark, src, "stocks", "week", 10, now)
     val rows = week.collect()
@@ -36,8 +40,8 @@ class RedditSourceSpec extends SparkTestBase {
     assert(day.count() < 183)
   }
 
-  test("json fixture source round-trips the canonical schema") {
-    val df = CsvReddit.read(spark, RefExtract.later())
+  private def jsonRoundTrip(csv: String): Unit = {
+    val df = CsvReddit.read(spark, csv)
     val dir = java.nio.file.Files.createTempDirectory("jsonfix").toString + "/posts"
     df.coalesce(1).write.json(dir)
     val back = RedditSource.jsonFixture(dir).posts(spark, "stocks")
@@ -46,6 +50,15 @@ class RedditSourceSpec extends SparkTestBase {
       back.columns.toSeq == RedditSchema.columns)
     val top = RedditSource.top(back, "week", 5, now).collect()
     assert(top.length == 5)
+  }
+
+  test("json fixture source round-trips the canonical schema") {
+    assumeFixture()
+    jsonRoundTrip(fix)
+  }
+
+  test("json fixture source round-trips the canonical schema (generated extract)") {
+    jsonRoundTrip(RefExtract.later())
   }
 
   test("unknown time_filter is rejected") {

@@ -56,12 +56,10 @@ object RefExtract {
       s"Paragraph $p of post $n: holding ${n * 10} shares, " + "\"buy the dip\" they said.\n" +
         s"Target €${n + p}, stop at ${n - p}.").mkString("\n\n")
 
-  /** Writes `posts` fetched on `date` to a new temp directory and returns
-    * the file's path.
-    */
-  private def day(date: LocalDate, posts: Seq[Int]): String = {
+  /** The CSV rows, without the header, of `posts` fetched on `date`. */
+  def rows(date: LocalDate, posts: Seq[Int]): Seq[String] = {
     val extraction = date.atTime(14, 15, 26, 594521000)
-    val rows = posts.zipWithIndex.map { case (n, i) =>
+    posts.zipWithIndex.map { case (n, i) =>
       val id = f"1j$n%04d"
       val created = firstPost.plusMinutes(n * 247L)
       val stamp = extraction.plusNanos(i * 1013457000L)
@@ -74,9 +72,17 @@ object RefExtract {
         flag(nsfw), flag(n % 15 == 0), flag(n == 9), body, "stocks",
         stamp.format(micros), s"${body.length}", flag(nsfw)).map(cell).mkString(",")
     }
-    val p = Files.createTempDirectory("refextract")
-      .resolve(date.format(DateTimeFormatter.BASIC_ISO_DATE) + ".csv")
+  }
+
+  /** Writes the header row, then `rows`, to a file `name` in a new temp
+    * directory and returns the file's path.
+    */
+  def write(name: String, rows: Seq[String]): String = {
+    val p = Files.createTempDirectory("refextract").resolve(name)
     Files.writeString(p, (RedditSchema.columns.mkString(",") +: rows).mkString("", "\n", "\n"))
     p.toString
   }
+
+  private def day(date: LocalDate, posts: Seq[Int]): String =
+    write(date.format(DateTimeFormatter.BASIC_ISO_DATE) + ".csv", rows(date, posts))
 }
