@@ -1,10 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 
 /** Vector math kernels for `array<float>` embeddings.
   *
@@ -29,9 +31,13 @@ object VectorKernels {
   /** cosine(a,b) with the [[graft.operators.Similarity.cosine]] zero-vector
     * convention (denominator 0 → 0.0).
     */
-  def cosineF(a: ArrayData, b: ArrayData): Double = {
-    val denom = math.sqrt(dotF(a, a) * dotF(b, b))
-    if (denom == 0.0d) 0.0d else dotF(a, b) / denom
+  def cosineF(a: ArrayData, b: ArrayData): Double =
+    cosineOfDots(dotF(a, b), dotF(a, a), dotF(b, b))
+
+  /** [[cosineF]] from its three dot products, for callers that reuse norms. */
+  def cosineOfDots(ab: Double, aa: Double, bb: Double): Double = {
+    val denom = math.sqrt(aa * bb)
+    if (denom == 0.0d) 0.0d else ab / denom
   }
 
   /** L2-normalize (zero vector unchanged). Same arithmetic as the HOF
@@ -257,4 +263,143 @@ case class CosineF32Expr(left: Expression, right: Expression) extends BinaryExpr
       (a, b) => s"graft.functions.VectorKernels.cosineF($a, $b)")
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CosineF32Expr =
     copy(left = newLeft, right = newRight)
+}
+
+/** An IVF centroid table, as the IVF kernels hold it: cell ids in table
+  * order, each centroid as array data (a NULL element reads as 0.0, as in
+  * [[VectorKernels.cosineF]]) and its self dot product.
+  *
+  * Equality is structural: the ids, then every element's float bits and
+  * NULL-ness. `toString` is the shape and a content hash, so a plan that
+  * holds a table prints neither its floats nor an object identity.
+  */
+final class IvfCentroids(table: Seq[(Long, Seq[Float])]) extends Serializable {
+  private val cells: Array[Long] = table.map(_._1).toArray
+  private val vectors: Array[ArrayData] = table.map { case (_, v) =>
+    val boxed = v.asInstanceOf[Seq[Any]]
+    if (boxed.contains(null)) new GenericArrayData(boxed.toArray)
+    else UnsafeArrayData.fromPrimitiveArray(v.toArray): ArrayData
+  }.toArray
+  private val selfDots: Array[Double] = vectors.map(c => VectorKernels.dotF(c, c))
+  private val dims: Int = table.headOption.fold(0)(_._2.length)
+  // the centroid of "no cell": zeros of the first centroid's width
+  private val noCentroid: ArrayData = UnsafeArrayData.fromPrimitiveArray(new Array[Float](dims))
+  private val key: Array[Long] = table.flatMap { case (cell, v) =>
+    cell +: v.length.toLong +: v.asInstanceOf[Seq[Any]].map {
+      case null => -1L
+      case x: Float => java.lang.Float.floatToIntBits(x) & 0xffffffffL
+    }
+  }.toArray
+
+  /** cosine(v, centroid c), NULL (None) for a NULL vector. */
+  private def sims(v: ArrayData): Option[Array[Double]] =
+    Option(v).map { v =>
+      val vv = VectorKernels.dotF(v, v)
+      Array.tabulate(cells.length)(c =>
+        VectorKernels.cosineOfDots(VectorKernels.dotF(v, vectors(c)), vv, selfDots(c)))
+    }
+
+  private def cellRow(c: Int): InternalRow =
+    new GenericInternalRow(Array[Any](cells(c), vectors(c)))
+
+  /** struct(cell, centroid) of the highest cosine, ties to the lowest cell,
+    * compared as Catalyst compares doubles (NaN greatest, -0.0 = 0.0).
+    * A NULL vector or an empty table gives cell -1 with a zero centroid.
+    */
+  def nearest(v: ArrayData): InternalRow = {
+    var best = -1
+    var bestSim = -2.0d
+    var bestCell = -1L
+    sims(v).foreach { s =>
+      var c = 0
+      while (c < cells.length) {
+        val cmp = SQLOrderingUtil.compareDoubles(s(c), bestSim)
+        if (cmp > 0 || (cmp == 0 && cells(c) < bestCell)) {
+          best = c; bestSim = s(c); bestCell = cells(c)
+        }
+        c += 1
+      }
+    }
+    if (best < 0) new GenericInternalRow(Array[Any](-1L, noCentroid)) else cellRow(best)
+  }
+
+  /** The first `nprobe` struct(cell, centroid) in ascending (-cosine, cell)
+    * order, by Catalyst's double comparison; the sort is stable. A NULL
+    * vector's keys are all NULL, so its order is by cell alone.
+    */
+  def probe(v: ArrayData, nprobe: Int): ArrayData = {
+    val neg = sims(v).map(_.map(-_))
+    val order = Array.range(0, cells.length).sortWith { (a, b) =>
+      val cmp = neg.fold(0)(n => SQLOrderingUtil.compareDoubles(n(a), n(b)))
+      if (cmp != 0) cmp < 0 else cells(a) < cells(b)
+    }
+    new GenericArrayData(order.take(nprobe).map(c => cellRow(c): Any))
+  }
+
+  override def equals(o: Any): Boolean = o match {
+    case t: IvfCentroids => java.util.Arrays.equals(key, t.key)
+    case _ => false
+  }
+  override def hashCode: Int = scala.util.hashing.MurmurHash3.arrayHash(key)
+  override def toString: String = f"centroids(${cells.length}x$dims#$hashCode%08x)"
+}
+
+object IvfCentroids {
+  val CellType: StructType = StructType(Seq(
+    StructField("cell", LongType, nullable = false),
+    StructField("centroid", ArrayType(FloatType), nullable = false)))
+
+  private[functions] def checkVector(name: String, child: Expression): TypeCheckResult =
+    child.dataType match {
+      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"$name needs array<float>, got ${other.catalogString}")
+    }
+
+  /** Code for `value = ref.method(child or null, extra)`, never NULL. */
+  private[functions] def genCall(ctx: CodegenContext, ev: ExprCode, child: Expression,
+                                 cents: IvfCentroids, dataType: DataType,
+                                 call: (String, String) => String): ExprCode = {
+    val v = child.genCode(ctx)
+    val ref = ctx.addReferenceObj("ivfCentroids", cents, classOf[IvfCentroids].getName)
+    ev.copy(code = code"""
+      ${v.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        ${call(ref, s"(${v.isNull} ? null : ${v.value})")};""", isNull = FalseLiteral)
+  }
+}
+
+/** Codegen'd IVF assignment: struct(cell, centroid) of the nearest centroid
+  * of an array<float> column (see [[IvfCentroids.nearest]]).
+  */
+case class IvfNearestExpr(child: Expression, centroids: IvfCentroids) extends UnaryExpression {
+  override def prettyName: String = "ivf_nearest"
+  override def nullable: Boolean = false
+  override def dataType: DataType = IvfCentroids.CellType
+  override def checkInputDataTypes(): TypeCheckResult = IvfCentroids.checkVector(prettyName, child)
+  override def eval(input: InternalRow): Any =
+    centroids.nearest(child.eval(input).asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    IvfCentroids.genCall(ctx, ev, child, centroids, dataType, (ref, v) => s"$ref.nearest($v)")
+  override protected def withNewChildInternal(newChild: Expression): IvfNearestExpr =
+    copy(child = newChild)
+}
+
+/** Codegen'd IVF probe: the `nprobe` nearest struct(cell, centroid) of an
+  * array<float> column (see [[IvfCentroids.probe]]).
+  */
+case class IvfProbeExpr(child: Expression, centroids: IvfCentroids, nprobe: Int)
+  extends UnaryExpression {
+  require(nprobe >= 0, s"ivf_probe needs nprobe >= 0, got $nprobe")
+  override def prettyName: String = "ivf_probe"
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(IvfCentroids.CellType, containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult = IvfCentroids.checkVector(prettyName, child)
+  override def eval(input: InternalRow): Any =
+    centroids.probe(child.eval(input).asInstanceOf[ArrayData], nprobe)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    IvfCentroids.genCall(ctx, ev, child, centroids, dataType,
+      (ref, v) => s"$ref.probe($v, $nprobe)")
+  override protected def withNewChildInternal(newChild: Expression): IvfProbeExpr =
+    copy(child = newChild)
 }

@@ -50,6 +50,23 @@ package object functions {
     ColumnBridge.column(
       CosineF32Expr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
+  /** IVF assignment of an array<float> column against a centroid table:
+    * struct(cell, centroid) of the highest cosine, ties to the lowest cell;
+    * cell -1 for a NULL vector or an empty table (codegen'd kernel, see
+    * [[IvfCentroids]]; bit-identical to the in-row fold over the table).
+    * Not SQL-registered: the table is a driver-built object.
+    */
+  def ivf_nearest(vec: Column, cents: Seq[(Long, Seq[Float])]): Column =
+    ColumnBridge.column(IvfNearestExpr(ColumnBridge.expression(vec), new IvfCentroids(cents)))
+
+  /** IVF probe of an array<float> column: the `nprobe` cells of highest
+    * cosine as array<struct(cell, centroid)>, ties to the lowest cell
+    * (codegen'd kernel, see [[IvfCentroids]]).
+    */
+  def ivf_probe(vec: Column, cents: Seq[(Long, Seq[Float])], nprobe: Int): Column =
+    ColumnBridge.column(
+      IvfProbeExpr(ColumnBridge.expression(vec), new IvfCentroids(cents), nprobe))
+
   /** Late-interaction MaxSim of two array<float> columns read as `chunks`
     * sub-vectors (codegen'd kernel; bit-identical to the nested-HOF
     * max-of-chunk-cosines formulation).

@@ -264,7 +264,7 @@ object Similarity {
     * corpus shuffle), and the Lloyd loop is driver-side over ≤ `sampleCap`
     * vectors (cap × dims doubles, broadcast-class by construction — the
     * same bound as the centroid table itself). Everything downstream
-    * (in-row literal-centroid assign, probe pruning) is unchanged.
+    * (in-row kernel assign, probe pruning) is unchanged.
     * Deterministic: hash order fixes the sample and seed set, ties in
     * assignment break toward the lowest cell, empty cells keep their
     * previous centroid.
@@ -278,8 +278,8 @@ object Similarity {
       .orderBy(xxhash64(col("_id")), col("_id"))
       .limit(sampleCap)
       .collect()
-      .flatMap(r => Option(r.getSeq[Float](1))
-        .map(_.iterator.map(x => if (x == null) Double.NaN else x.toDouble).toArray))
+      .flatMap(r => Option(r.getSeq[java.lang.Float](1))
+        .map(_.iterator.map(x => if (x == null) Double.NaN else x.doubleValue).toArray))
     // corrupt rows (NULL vectors/elements, ragged lengths) are dropped from
     // the SEED sample — assignment still handles them downstream; and an
     // empty corpus seeds an empty centroid table (empty result, not a crash).
@@ -330,38 +330,12 @@ object Similarity {
     }.toSeq
   }
 
-  /** The centroid table as an in-row array literal: array<struct<cell, centroid>>. */
-  private def centroidArray(cents: Seq[(Long, Seq[Float])]): Column = {
-    val entries = cents.map { case (cell, v) =>
-      struct(lit(cell).as("cell"), array(v.map(lit): _*).as("centroid"))
-    }
-    array(entries: _*)
-  }
-
-  /** Best (highest-cosine, then lowest-cell) centroid for a vector — a pure
-    * in-row fold over the centroid array: zero shuffle, stays in codegen.
-    */
-  private def nearestCell(vecCol: Column, cents: Seq[(Long, Seq[Float])]): Column = {
-    // empty centroid table (empty corpus): no cell, not an un-analyzable
-    // fold over a VOID-typed empty array literal
-    if (cents.isEmpty) return lit(-1L)
-    val zero = struct(lit(-2.0d).as("sim"), lit(-1L).as("cell"))
-    val best = aggregate(
-      centroidArray(cents), zero,
-      (acc, ct) => {
-        val s = cosineF(vecCol, ct.getField("centroid"))
-        when(s > acc.getField("sim") ||
-             (s === acc.getField("sim") && ct.getField("cell") < acc.getField("cell")),
-          struct(s.as("sim"), ct.getField("cell").as("cell")))
-          .otherwise(acc)
-      })
-    best.getField("cell")
-  }
-
-  /** IVF index: assign every corpus vector to its nearest centroid cell,
-    * computed in-row against the broadcast-as-literal centroid table — the
-    * corpus is scanned once and never shuffled (at cluster scale, write the
-    * result partitioned by `cell` for probe-side partition pruning).
+  /** IVF index: assign every corpus vector to its nearest centroid cell
+    * (highest cosine, then lowest cell; -1 for a NULL vector or an empty
+    * table), computed in-row by the [[graft.functions.ivf_nearest]] kernel,
+    * which holds the centroid table — the corpus is scanned once and never
+    * shuffled (at cluster scale, write the result partitioned by `cell` for
+    * probe-side partition pruning).
     *
     * Seeds with [[ivfCentroidsKmeans]] — the production path (first-N-by-id
     * [[ivfCentroids]] degrades recall whenever id order correlates with
@@ -374,24 +348,18 @@ object Similarity {
 
   def assignCells(corpus: DataFrame, id: String, vec: String,
                   cents: Seq[(Long, Seq[Float])]): DataFrame =
-    corpus.select(col(id), col(vec)).withColumn("cell", nearestCell(col(vec), cents))
+    corpus.select(col(id), col(vec))
+      .withColumn("cell", graft.functions.ivf_nearest(col(vec), cents).getField("cell"))
 
-  /** The `nprobe` nearest cells for a vector, in-row: sort the (neg-sim,
-    * cell) pairs lexicographically and slice — no window, no shuffle.
+  /** (query_id, q_vec, cell) — one row per probed cell per query: the
+    * `nprobe` nearest cells from the in-row [[graft.functions.ivf_probe]]
+    * kernel — no window, no shuffle; an empty index probes nothing.
     */
-  private def probeCells(vecCol: Column, cents: Seq[(Long, Seq[Float])], nprobe: Int): Column =
-    if (cents.isEmpty) typedlit(Seq.empty[Long]) // empty index: probe nothing
-    else transform(
-      slice(array_sort(transform(centroidArray(cents), ct =>
-        struct((-cosineF(vecCol, ct.getField("centroid"))).as("negsim"),
-          ct.getField("cell").as("cell")))), 1, nprobe),
-      p => p.getField("cell"))
-
-  /** (query_id, q_vec, cell) — one row per probed cell per query. */
   private def probeQueries(queries: DataFrame, cents: Seq[(Long, Seq[Float])],
                            id: String, vec: String, nprobe: Int): DataFrame =
     queries.select(col(id).as("query_id"), col(vec).as("q_vec"),
-      explode(probeCells(col(vec), cents, nprobe)).as("cell"))
+        explode(graft.functions.ivf_probe(col(vec), cents, nprobe)).as("p"))
+      .select(col("query_id"), col("q_vec"), col("p").getField("cell").as("cell"))
 
   /** Score a probed corpus slice against broadcast queries; exact top-k
     * within the slice (bounded aggregate, no window).
@@ -651,8 +619,8 @@ object Similarity {
       .orderBy(xxhash64(col("_id")), col("_id"))
       .limit(sampleCap)
       .collect()
-      .flatMap(r => Option(r.getSeq[Float](1))
-        .map(_.iterator.map(x => if (x == null) Double.NaN else x.toDouble).toArray))
+      .flatMap(r => Option(r.getSeq[java.lang.Float](1))
+        .map(_.iterator.map(x => if (x == null) Double.NaN else x.doubleValue).toArray))
     val intact = raw.filter(v => v.nonEmpty && !v.exists(_.isNaN))
     val sample = intact.headOption.map(h =>
       intact.filter(_.length == h.length)).getOrElse(Array.empty)
@@ -1099,32 +1067,6 @@ object Similarity {
 
   // --- IVF × PQ (IVF-PQ — the canonical 100 TB ANN index layout) -----------
 
-  /** Best (highest-cosine, then lowest-cell) centroid for a vector, like
-    * [[nearestCell]] but carrying the winning CENTROID through the fold —
-    * the residual then needs no second lookup against the literal
-    * centroid table (each extra embedding of a cells×dims literal array
-    * in a plan costs real analysis/codegen time, a constant per action).
-    * Tie-break is identical to [[nearestCell]], so the assigned cell is
-    * exactly [[assignCells]]'s.
-    */
-  private def nearestCellWithCentroid(vecCol: Column,
-                                      cents: Seq[(Long, Seq[Float])]): Column = {
-    require(cents.nonEmpty, "nearestCellWithCentroid: empty centroid table")
-    val dims = cents.head._2.length
-    val zero = struct(lit(-2.0d).as("sim"), lit(-1L).as("cell"),
-      array_repeat(lit(0.0f), dims).as("centroid"))
-    aggregate(
-      centroidArray(cents), zero,
-      (acc, ct) => {
-        val s = cosineF(vecCol, ct.getField("centroid"))
-        when(s > acc.getField("sim") ||
-             (s === acc.getField("sim") && ct.getField("cell") < acc.getField("cell")),
-          struct(s.as("sim"), ct.getField("cell").as("cell"),
-            ct.getField("centroid").as("centroid")))
-          .otherwise(acc)
-      })
-  }
-
   /** Residual of a vector against a centroid, in-row f32 — what IVF-PQ
     * encodes: PQ codebooks trained on residuals are ~an order denser than
     * on raw vectors because the coarse quantizer has already removed the
@@ -1133,15 +1075,18 @@ object Similarity {
   def residualAgainst(vecCol: Column, centroidCol: Column): Column =
     zip_with(vecCol, centroidCol, (x, c) => (x - c).cast("float"))
 
-  /** (id, cell, residual) in ONE pass over the corpus — assignment and
-    * residual from the same fold.
+  /** (id, cell, residual) in ONE pass over the corpus — the assignment
+    * kernel returns the winning centroid with its cell (the same cell as
+    * [[assignCells]]), so the residual needs no second lookup.
     */
   private def assignedResiduals(corpus: DataFrame, id: String, vec: String,
-                                cents: Seq[(Long, Seq[Float])]): DataFrame =
+                                cents: Seq[(Long, Seq[Float])]): DataFrame = {
+    require(cents.nonEmpty, "assignedResiduals: empty centroid table")
     corpus.select(col(id), col(vec),
-        nearestCellWithCentroid(col(vec), cents).as("_best"))
+        graft.functions.ivf_nearest(col(vec), cents).as("_best"))
       .select(col(id), col("_best").getField("cell").as("cell"),
         residualAgainst(col(vec), col("_best").getField("centroid")).as("_res"))
+  }
 
   /** Assign cells and residual-encode: the stored IVF-PQ index row is
     * (id, cell, code) — m bytes per vector, NO f32 vector, NO scale.
@@ -1265,27 +1210,18 @@ object Similarity {
 
   /** (query_id, cell, lut) — one row per probed cell per query, with the
     * ADC lookup table built from the query's residual against THAT cell's
-    * centroid. The probed centroid rides the probe-sort struct, so the
-    * literal centroid table is embedded once in this plan, not twice.
+    * centroid, which the probe kernel returns with the cell.
     */
   private def probeQueriesPq(queries: DataFrame,
                              cents: Seq[(Long, Seq[Float])], cb: PqCodebook,
-                             id: String, vec: String, nprobe: Int): DataFrame = {
-    val probed = transform(
-      slice(array_sort(transform(centroidArray(cents), ct =>
-        struct((-cosineF(col(vec), ct.getField("centroid"))).as("negsim"),
-          ct.getField("cell").as("cell"),
-          ct.getField("centroid").as("centroid")))), 1, nprobe),
-      p => struct(p.getField("cell").as("cell"),
-        p.getField("centroid").as("centroid")))
+                             id: String, vec: String, nprobe: Int): DataFrame =
     queries
       .select(col(id).as("query_id"), col(vec).as("q_vec"),
-        explode(probed).as("p"))
+        explode(graft.functions.ivf_probe(col(vec), cents, nprobe)).as("p"))
       .select(col("query_id"), col("p").getField("cell").as("cell"),
         graft.functions.pq_lut(
           residualAgainst(col("q_vec"), col("p").getField("centroid")), cb)
           .as("lut"))
-  }
 
   /** Shared ADC-shortlist + exact-re-rank tail of both IVF-PQ searches. */
   private def ivfPqRank(codes: DataFrame, q: DataFrame,

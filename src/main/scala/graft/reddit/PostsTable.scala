@@ -5,12 +5,12 @@ import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.Relational
+import graft.sources.Tables
 
 /** S6/S7/U3/U4: the persistent `reddit` table as a directory-versioned
   * parquet table with an atomic-swap writer.
@@ -33,18 +33,15 @@ import graft.operators.Relational
   * world. Hard links (not symlinks) keep vacuumed versions from pulling data
   * out from under newer ones.
   *
-  * Each version also carries its schema as `_schema.json` (the `StructType`
-  * JSON of what its writer wrote, partition column last), and every read
-  * passes it to `spark.read.schema`: Spark runs a job to infer the schema of
-  * a parquet directory read without one, and the writer already knows it.
-  * Versions written before the schema file existed are read by inference.
+  * Every read takes the schema from one data file's footer
+  * ([[graft.sources.Tables.parquet]]), so no read runs Spark's
+  * schema-inference job. A version is written into `<root>/tmp_v_<n>` and
+  * moved into place; the name has no `_`/`.` prefix, because Spark treats
+  * such paths as hidden when the key bounds are read back from it.
   */
 object PostsTable {
 
   private val ManifestName = "_graft_manifest.tsv"
-  // not `_graft_*`: those names are carried forward into the next version,
-  // and each version's writer writes its own schema
-  private val SchemaName = "_schema.json"
   // serializes heal-takeovers within this JVM (java.nio FileLock is
   // per-process: overlapping same-JVM locks throw instead of blocking)
   private val healMutex = new Object
@@ -53,6 +50,9 @@ object PostsTable {
   private def currentFile(root: String): Path = Paths.get(root, "CURRENT")
 
   private def versionDir(root: String, v: Long): Path = Paths.get(root, s"v_$v")
+
+  // never `v_`-prefixed: `versions` and `vacuum` must not take it for a version
+  private def tmpDir(root: String, v: Long): Path = Paths.get(root, s"tmp_v_$v")
 
   def currentVersion(root: String): Option[Long] = {
     val f = currentFile(root)
@@ -68,27 +68,8 @@ object PostsTable {
     readDir(spark, versionDir(root, v))
   }
 
-  /** Read a version directory with its stored schema, or by inference when
-    * it has none.
-    */
-  private def readDir(spark: SparkSession, dir: Path): DataFrame = {
-    val p = dir.resolve(SchemaName)
-    val reader =
-      if (Files.exists(p))
-        spark.read.schema(DataType.fromJson(Files.readString(p)).asInstanceOf[StructType])
-      else spark.read
-    reader.parquet(dir.toString)
-  }
-
-  /** Store in `dir` the schema Spark reads back from a parquet directory
-    * written from `df` partitioned by `partitionCols`: the data columns,
-    * then the partition columns, all nullable.
-    */
-  private def writeSchema(dir: Path, df: DataFrame, partitionCols: Seq[String] = Nil): Unit = {
-    val (parts, data) = df.schema.fields.partition(f => partitionCols.contains(f.name))
-    Files.writeString(dir.resolve(SchemaName),
-      StructType((data ++ parts).map(_.copy(nullable = true))).json)
-  }
+  private def readDir(spark: SparkSession, dir: Path): DataFrame =
+    Tables.parquet(spark, dir.toString)
 
   // --- per-partition key-bounds manifest ------------------------------------
 
@@ -156,18 +137,16 @@ object PostsTable {
 
   private def writeVersion(df: DataFrame, root: String, v: Long, key: String,
                            sidecar: Map[String, String] = Map.empty): Unit = {
-    val tmp = Paths.get(root, s"_tmp_v_$v")
+    val tmp = tmpDir(root, v)
     deleteRecursively(tmp)
     // date-partitioned when the batch carries the extraction clock (one
     // daily micro-batch = one partition → partition pruning on date ranges)
     if (df.columns.contains("extraction_timestamp")) {
       val dated = withExtractDate(df)
       dated.write.partitionBy("extract_date").mode("overwrite").parquet(tmp.toString)
-      writeSchema(tmp, dated, Seq("extract_date"))
       writeManifest(tmp, writtenKeyBounds(df.sparkSession, tmp, key))
     } else {
       df.write.mode("overwrite").parquet(tmp.toString)
-      writeSchema(tmp, df)
     }
     writeSidecar(tmp, sidecar)
     moveIntoVersion(tmp, root, v)
@@ -432,20 +411,18 @@ object PostsTable {
       val inDates = col("extract_date").cast("string").isin(dateVals.toSeq: _*)
       if (nullPart.nonEmpty) inDates || col("extract_date").isNull else inDates
     }
+    // delete-matching against the staged keys the collect above returned,
+    // as an IN-list filter: no broadcast job and no distinct shuffle of the
+    // batch. A NULL key matches no staged key, as in an anti-join, so it is
+    // kept; a NULL in the list would make IN NULL for every other row
+    val stagedKeyValues = pairRows.map(_.get(0)).filter(_ != null).distinct.toSeq
     val candidates = main.filter(prune).drop("extract_date")
-    // delete-matching against the staged keys the collect above returned: a
-    // local relation on the broadcast side needs no distinct shuffle of
-    // the batch (null keys match nothing, as in the join itself)
-    val keyRows = pairRows.map(_.get(0)).filter(_ != null).distinct.map(Row(_))
-    val stagedKeySet = spark.createDataFrame(keyRows.toSeq.asJava,
-      StructType(Seq(staging.schema(key))))
-    val merged = withExtractDate(
-      candidates.join(broadcast(stagedKeySet), Seq(key), "left_anti").unionByName(staging))
+      .filter(col(key).isNull || !col(key).isInCollection(stagedKeyValues))
+    val merged = withExtractDate(candidates.unionByName(staging))
 
-    val tmp = Paths.get(root, s"_tmp_v_$v")
+    val tmp = tmpDir(root, v)
     deleteRecursively(tmp)
     merged.write.partitionBy("extract_date").mode("overwrite").parquet(tmp.toString)
-    writeSchema(tmp, merged, Seq("extract_date"))
     // bounds of the REWRITTEN partitions, read back from tmp now — before
     // the hard links land, so unaffected partitions are never rescanned
     // (their bounds carry forward from the old manifest)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -615,5 +616,133 @@ class SimilaritySpec extends SparkTestBase {
     val ex = intercept[IllegalArgumentException](
       Similarity.ivfPqReadCodebook(spark, path))
     assert(ex.getMessage.contains("_pq_codebook"), ex.getMessage)
+  }
+
+  // --- IVF kernels against the in-row folds they replaced ------------------
+
+  // The folds over a literal centroid table that `graft.functions.ivf_nearest`
+  // and `ivf_probe` replaced, kept here as their reference.
+  private def foldTable(cents: Seq[(Long, Seq[Float])]): Column =
+    array(cents.map { case (cell, v) =>
+      struct(lit(cell).as("cell"), array(v.map(lit): _*).as("centroid"))
+    }: _*)
+
+  private def foldNearest(v: Column, cents: Seq[(Long, Seq[Float])]): Column =
+    if (cents.isEmpty) struct(lit(-1L).as("cell"))
+    else aggregate(foldTable(cents),
+      struct(lit(-2.0d).as("sim"), lit(-1L).as("cell"),
+        array_repeat(lit(0.0f), cents.head._2.length).as("centroid")),
+      (acc, ct) => {
+        val s = Similarity.cosineF(v, ct.getField("centroid"))
+        when(s > acc.getField("sim") ||
+             (s === acc.getField("sim") && ct.getField("cell") < acc.getField("cell")),
+          struct(s.as("sim"), ct.getField("cell").as("cell"),
+            ct.getField("centroid").as("centroid")))
+          .otherwise(acc)
+      })
+
+  private def foldProbe(v: Column, cents: Seq[(Long, Seq[Float])], nprobe: Int): Column =
+    if (cents.isEmpty) typedlit(Seq.empty[(Long, Seq[Float])])
+    else transform(
+      slice(array_sort(transform(foldTable(cents), ct =>
+        struct((-Similarity.cosineF(v, ct.getField("centroid"))).as("negsim"),
+          ct.getField("cell").as("cell"),
+          ct.getField("centroid").as("centroid")))), 1, nprobe),
+      p => struct(p.getField("cell").as("cell"), p.getField("centroid").as("centroid")))
+
+  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach { case (k, old) => old.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("ivf kernels are bit-identical to the in-row folds: ties, NULL, zero, NaN, empty table") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val f = (x: Float) => java.lang.Float.valueOf(x)
+    val rows = Seq[Row](
+      Row(1L, Seq(f(1f), f(0f), f(0f))),         // cells 5 and 2 tie: 2 wins
+      Row(2L, Seq(f(1f), f(1f), f(0f))),         // 5, 2 and 7 tie on cosine
+      Row(3L, null),                             // NULL vector
+      Row(4L, Seq(f(0f), f(0f), f(0f))),         // zero vector: every cosine 0
+      Row(5L, Seq(f(Float.NaN), f(1f), f(0f))),  // NaN cosines sort greatest
+      Row(6L, Seq(null, f(1f), f(0f))),          // NULL element reads as 0
+      Row(7L, Seq(f(0.3f), f(-0.2f), f(0.9f))),
+      Row(8L, Seq(f(-1f), f(0.5f), f(0f))))
+    val vecs = spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("id", LongType), StructField("v", ArrayType(FloatType)))))
+    val cents = Seq(
+      5L -> Seq(1f, 0f, 0f),
+      2L -> Seq(2f, 0f, 0f), // same direction as cell 5
+      7L -> Seq(0f, 1f, 0f),
+      1L -> Seq(0f, 0f, 1f),
+      3L -> Seq(-1f, 1f, 0f))
+
+    def collected(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> (1 until r.length).map(r.get).mkString("|")).toMap
+    def kernelSide(table: Seq[(Long, Seq[Float])], nprobe: Int, withCentroid: Boolean) =
+      vecs.select(col("id"),
+        (if (withCentroid) graft.functions.ivf_nearest(col("v"), table)
+         else graft.functions.ivf_nearest(col("v"), table).getField("cell")).as("n"),
+        graft.functions.ivf_probe(col("v"), table, nprobe).as("p"))
+    def foldSide(table: Seq[(Long, Seq[Float])], nprobe: Int, withCentroid: Boolean) = {
+      val n = foldNearest(col("v"), table)
+      vecs.select(col("id"),
+        (if (withCentroid) struct(n.getField("cell").as("cell"),
+           n.getField("centroid").as("centroid"))
+         else n.getField("cell")).as("n"),
+        foldProbe(col("v"), table, nprobe).as("p"))
+    }
+
+    Seq(
+      Seq("spark.sql.codegen.wholeStage" -> "true", "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      Seq("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    ).foreach { confs =>
+      withConfs(confs: _*) {
+        for ((table, withCentroid) <- Seq(cents -> true, Seq.empty[(Long, Seq[Float])] -> false);
+             nprobe <- Seq(0, 3, 10)) {
+          val got = collected(kernelSide(table, nprobe, withCentroid))
+          val want = collected(foldSide(table, nprobe, withCentroid))
+          assert(got == want, s"$confs, ${table.size} cells, nprobe $nprobe")
+        }
+        val assigned = Similarity.assignCells(vecs, "id", "v", cents)
+          .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+        assert(assigned == Map(1L -> 2L, 2L -> 2L, 3L -> -1L, 4L -> 1L,
+          5L -> 1L, 6L -> 7L, 7L -> 1L, 8L -> 3L), confs.toString)
+      }
+    }
+  }
+
+  test("ivf kernels hold the centroid table structurally and print it short") {
+    import graft.functions.IvfCentroids
+    val t = Seq(0L -> Seq(1f, 0f), 1L -> Seq(0f, 1f))
+    val a = new IvfCentroids(t)
+    val b = new IvfCentroids(t.map { case (c, v) => c -> v.toVector })
+    assert(a == b && a.hashCode == b.hashCode && a.toString == b.toString)
+    assert(a != new IvfCentroids(Seq(0L -> Seq(1f, 0f), 1L -> Seq(0f, -0f))))
+    assert(a != new IvfCentroids(Seq(0L -> Seq(1f, 0f), 2L -> Seq(0f, 1f))))
+    assert(a.toString.matches("centroids\\(2x2#[0-9a-f]{8}\\)"), a.toString)
+    // equal tables give equal expressions, so equal plans
+    assert(Similarity.assignCells(emb, "vec_id", "embedding", t).queryExecution.analyzed
+      .sameResult(Similarity.assignCells(emb, "vec_id", "embedding", t).queryExecution.analyzed))
+
+    val q = graft.SparkEntry.queries("q_ivf_topk")(spark, sfDir)
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains("ivf_nearest") && plan.contains("ivf_probe"), plan)
+    assert(plan.contains("centroids(16x"), plan)
+    assert(!plan.contains("[F@") && !plan.contains("array_sort") && !plan.contains("aggregate("),
+      s"the IVF plan must not hold a literal centroid table:\n$plan")
+  }
+
+  test("a NULL vector element drops the row from the IVF and PQ seed samples") {
+    val corpus = spark.sql("""select * from values
+        (1L, array(cast(1 as float), cast(0 as float))),
+        (2L, array(cast(null as float), cast(1 as float))) as t(vec_id, vec)""")
+    val cents = Similarity.ivfCentroidsKmeans(corpus, "vec_id", "vec", cells = 2)
+    assert(cents.map(_._2) == Seq(Seq(1f, 0f)), s"seeded from a corrupt vector: $cents")
+    val cb = Similarity.pqTrain(corpus, "vec_id", "vec", m = 1, k = 2)
+    assert(cb.k == 1 && cb.flat.toSeq == Seq(1f, 0f),
+      s"trained on a corrupt vector: k=${cb.k} ${cb.flat.toSeq}")
   }
 }

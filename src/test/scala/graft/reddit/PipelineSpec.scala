@@ -346,32 +346,42 @@ class PipelineSpec extends SparkTestBase {
     assert(vs == Seq("new"), "the 2025-03-18 partition kept a stale row")
   }
 
+  test("the partition merge keeps rows whose key is NULL, as an anti-join does") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("posts_null_key").toString
+    val ts = java.sql.Timestamp.valueOf("2025-03-18 12:00:00")
+    def day(rows: (Option[String], String)*) =
+      rows.map { case (id, v) => (id, v, ts) }.toDF("id", "v", "extraction_timestamp")
+    PostsTable.upsert(spark, root, day(None -> "keep", Some("a") -> "old"))
+    PostsTable.upsert(spark, root, day(Some("a") -> "new"))
+    val rows = PostsTable.read(spark, root).select("id", "v")
+      .as[(Option[String], String)].collect().toSet
+    assert(rows == Set((None, "keep"), (Some("a"), "new")))
+  }
+
   test("a version's stored schema is the schema Spark infers from its directory") {
     import spark.implicits._
     import java.nio.file.Paths
     def inferred(root: String) = spark.read
       .parquet(Paths.get(root, s"v_${PostsTable.currentVersion(root).get}").toString).schema
-    def hasSchemaFile(root: String) =
-      Files.exists(Paths.get(root, s"v_${PostsTable.currentVersion(root).get}", "_schema.json"))
 
     // partitioned: written by create, then by the partition merge
     val dated = Files.createTempDirectory("schema_dated").toString
     val ts = java.sql.Timestamp.valueOf("2025-03-18 12:00:00")
     PostsTable.upsert(spark, dated, Seq(("a", 1, ts)).toDF("id", "n", "extraction_timestamp"))
-    assert(hasSchemaFile(dated) && PostsTable.read(spark, dated).schema == inferred(dated))
+    assert(PostsTable.read(spark, dated).schema == inferred(dated))
     PostsTable.upsert(spark, dated, Seq(("b", 2, new java.sql.Timestamp(ts.getTime + 86400000L)))
       .toDF("id", "n", "extraction_timestamp"))
-    assert(hasSchemaFile(dated) && PostsTable.read(spark, dated).schema == inferred(dated))
+    assert(PostsTable.read(spark, dated).schema == inferred(dated))
     assert(PostsTable.read(spark, dated).schema.fieldNames.last == "extract_date")
     assert(PostsTable.readVersion(spark, dated, 0L).schema.fieldNames.toSeq ==
       Seq("id", "n", "extraction_timestamp"))
 
-    // unpartitioned with a sidecar, which is carried forward; the schema
-    // file is each version's own
+    // unpartitioned with a sidecar, which is carried forward
     val flat = Files.createTempDirectory("schema_flat").toString
     PostsTable.create(Seq((1L, "a")).toDF("id", "v"), flat, sidecar = Map("_graft_note" -> "n1"))
     PostsTable.upsert(spark, flat, Seq((2L, "b")).toDF("id", "v"))
-    assert(hasSchemaFile(flat) && PostsTable.read(spark, flat).schema == inferred(flat))
+    assert(PostsTable.read(spark, flat).schema == inferred(flat))
     assert(PostsTable.readSidecar(flat, "_graft_note").contains("n1"))
     assert(PostsTable.read(spark, flat).count() == 2L)
   }
@@ -421,10 +431,11 @@ class PipelineSpec extends SparkTestBase {
     assert(r.summary.filter(col("subreddit").isNull).head().getAs[Long]("post_count") == 2L)
     assert(PostsTable.read(spark, root).count() == r.tableRows)
     val jobs = counter.jobs.get()
-    // reject check 1, key collect 2, version write 2 (the staged-key
-    // broadcast and the write), bounds read-back 2, mart 2, loaded count 2;
-    // no parquet schema inference, no distinct shuffle of the staged keys,
-    // no separate table count
-    assert(jobs == 11, s"second-day Pipeline.run ran $jobs Spark jobs")
+    // reject check 1, key collect 2, version write 1 (the staged keys are
+    // an IN-list filter, not a broadcast), bounds read-back 2, mart 2,
+    // loaded count 2; no parquet schema inference (schemas come from a
+    // footer), no distinct shuffle of the staged keys, no separate table
+    // count
+    assert(jobs == 10, s"second-day Pipeline.run ran $jobs Spark jobs")
   }
 }
