@@ -1,8 +1,5 @@
 package graft
 
-import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
-import scala.concurrent.duration._
-
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: run every registered query at SPARK_GRAFT_SF_DIR,
@@ -118,18 +115,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val perQuerySec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "120").toLong
     val runsPerQuery = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    implicit val ec: ExecutionContext = ExecutionContext.global
+    val selected = QueryRun.selected()
+    val spark = Sessions.local("graft-bench")
 
     // warm the JVM/codegen paths once so the first measured query isn't
     // charged ~5 s of JIT + classloading (the cluster-steady-state number
@@ -143,39 +131,20 @@ object Bench {
     def gcMs: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
 
-    /** One timed noop-sink execution with job-group timeout enforcement,
-      * followed by cache/persist cleanup so one allocation-heavy plan
-      * doesn't tax its successors' numbers (catalog.clearCache only drops
-      * SQL-cached relations — localCheckpoint blocks live as persisted
-      * RDDs and otherwise linger until the ContextCleaner happens to run).
+    /** One timed noop-sink execution (see [[QueryRun.timed]]), then the
+      * cleanup that keeps one allocation-heavy plan from taxing its
+      * successors' numbers.
       */
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): RunResult = {
-      spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
       val gc0 = gcMs
-      val t0 = System.nanoTime()
-      val fut = Future {
+      val r = QueryRun.timed(spark, name, "bench") {
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       }
-      val ok =
-        try { Await.result(fut, perQuerySec.seconds); true }
-        catch {
-          case _: TimeoutException =>
-            spark.sparkContext.cancelJobGroup(name)
-            System.err.println(s"[bench] $name TIMED OUT after ${perQuerySec}s")
-            false
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-        }
-      spark.sparkContext.clearJobGroup()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // GC read before the cleanup: the forced collection below runs
+      // GC read before the cleanup: the forced collection there runs
       // outside the timer and must not land in the run's gc_ms
       val gc = gcMs - gc0
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-      RunResult(sec, gc, ok)
+      QueryRun.cleanup(spark)
+      RunResult(r.sec, gc, r.ok)
     }
 
     /** min-of-N: report the fastest successful run (and ITS gc overlap —
@@ -203,12 +172,6 @@ object Bench {
       }
       best
     }
-
-    // dev-loop filter: SPARK_GRAFT_ONLY=q_a,q_simhash runs the matching
-    // prefixes only; unset (the driver's mode) runs everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').map(_.trim).filter(_.nonEmpty))
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
 
     // contention sentinel: one fixed query timed at session start, middle,
     // and end. It measures the HOST under this session, not the engine —
@@ -344,7 +307,7 @@ object Bench {
     // a flat {"queries": {name: {"sec": N}}} map; parsed with a regex so
     // the bench keeps zero JSON dependencies.
     val anchorDrift =
-      if (only.nonEmpty) 0
+      if (QueryRun.only.nonEmpty) 0
       else try {
         val txt = java.nio.file.Files.readString(
           java.nio.file.Paths.get("dev/baseline_per_query.json"))
@@ -390,7 +353,7 @@ object Bench {
     // SparkEntry.queries, and the full map is one file away).
     // full runs only: a SPARK_GRAFT_ONLY dev slice must never clobber the
     // committed round artifact with a partial query map
-    if (only.isEmpty) {
+    if (QueryRun.only.isEmpty) {
       val latest = java.nio.file.Paths.get("dev/bench_latest.json")
       val existing =
         try Some(java.nio.file.Files.readString(latest))

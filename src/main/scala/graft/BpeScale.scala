@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.expr
 
 /** One-shot scale probe for [[graft.operators.Bpe.trainBatched]] — the
@@ -18,20 +17,14 @@ object BpeScale {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "2048").toInt
     val window = sys.env.getOrElse("SPARK_GRAFT_BPE_WINDOW", "512").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bpe-scale")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); (): Unit
       }
     })
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs0 = sources.Tables(spark, sfDir, "documents")
     // The synthetic corpus has only ~31 distinct whitespace words — BPE
     // over word pre-tokens exhausts at ~89 merges (measured), far short
     // of a vocab-scale run. Re-pre-tokenize into 3-WORD CHUNKS (the

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility (not part of the graded surface): per-query job/stage/task
   * census for the fixed-cost investigation. For each named query, runs the
@@ -14,24 +13,16 @@ import org.apache.spark.sql.SparkSession
   * whose task_time_s is a small fraction of wall_s across many jobs is
   * paying per-job/per-stage fixed cost, not compute.
   *
-  * Usage: runMain graft.JobProfile <sfDir> <name...>   (or 'top' for the
-  * built-in heavy-lifecycle list).
+  * Usage: runMain graft.JobProfile <sfDir> <name...>
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val names: Seq[String] =
-      if (args.length > 1) args.drop(1).toSeq
-      else Seq.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: JobProfile <sfDir> <query...>")
+    val sfDir = args(0)
+    val names = args.drop(1).toSeq
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"JobProfile: unknown queries: ${unknown.mkString(", ")}")
+    val spark = Sessions.local("graft-jobprofile")
 
     val verbose = sys.env.get("SPARK_GRAFT_PROFILE_VERBOSE").contains("1")
     val jobs = new AtomicInteger(0)
@@ -69,8 +60,7 @@ object JobProfile {
       val fn = SparkEntry.queries(name)
       // warm run (uncounted)
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      QueryRun.cleanup(spark)
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L)
       stageMs.clear(); stageInfo.clear()
       val t0 = System.nanoTime()
@@ -86,9 +76,7 @@ object JobProfile {
             println(f"    stage $sid%5d ${ms / 1000.0}%8.2fs $nt%5d tasks  ${stageInfo.getOrDefault(sid, "?")}")
         }
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
+      QueryRun.cleanup(spark)
     }
     spark.stop()
   }

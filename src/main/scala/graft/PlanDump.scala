@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev utility: dump `.explain("formatted")` for named queries to files
   * (`args: sfDir outDir suffix name...`), e.g. plans/r19/q_x_before.txt.
   * Plans only — nothing executes, so this is safe to run on a loaded host.
-  * Mirrors the bench session's conf (local core count, AQE, shuffle
-  * partitions) so the dumped plan is the one the bench actually runs.
+  * The session is [[Sessions.local]], the one [[Bench]] runs, so at the
+  * same `SPARK_GRAFT_CPUS` the dumped plan is the plan the bench runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -17,15 +16,7 @@ object PlanDump {
     }
     val sfDir = args(0); val outDir = args(1); val suffix = args(2)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-plandump")
     new java.io.File(outDir).mkdirs()
     try names.foreach { n =>
       try {

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory: one place for the scale-aware defaults.
+/** Session factory: every session of the engine, its mains and its tests
+  * comes from [[local]], so they all run one engine.
   *
   * Tuned for the target deployment (many-executor cluster, ~100 TB) but
   * runnable on local[N]: AQE handles runtime re-planning (partition
@@ -13,8 +14,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
   def local(appName: String = "graft", cores: String = defaultCores): SparkSession = {
-    val spark = SparkSession
-      .builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .withExtensions(new GraftExtensions())
@@ -35,5 +35,7 @@ object Sessions {
     spark
   }
 
-  def defaultCores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** `SPARK_GRAFT_CPUS` if set, else this machine's processor count. */
+  def defaultCores: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 }

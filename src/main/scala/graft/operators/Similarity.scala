@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.topk_pairs
+import graft.sources.Tables
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -422,7 +423,7 @@ object Similarity {
         "written without ivfWriteIndexWithCentroids, so appends/searches " +
         "cannot prove they use the build's centroid table. Rebuild with " +
         "ivfWriteIndexWithCentroids (or write _centroids explicitly).")
-    spark.read.parquet(s"$path/_centroids")
+    Tables.parquet(spark, s"$path/_centroids")
       .select(col("cell").cast("long"), col("centroid"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1))
@@ -483,7 +484,7 @@ object Similarity {
     fs.delete(tmp, true)
     // hash-partition on cell before partitionBy: every cell's rows land in
     // exactly one task → exactly one file per cell directory
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .withColumn("cell", col("cell").cast("long"))
       .repartition(math.max(cents.size, 1), col("cell"))
       .write.partitionBy("cell").parquet(tmp.toString)
@@ -494,7 +495,7 @@ object Similarity {
     // the wrong codebook (garbage distances, silently)
     val cbDir = new org.apache.hadoop.fs.Path(s"$path/$CodebookDir")
     if (fs.exists(cbDir))
-      spark.read.parquet(cbDir.toString)
+      Tables.parquet(spark, cbDir.toString)
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/$CodebookDir")
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     require(fs.rename(tmp, new org.apache.hadoop.fs.Path(path)),
@@ -519,7 +520,7 @@ object Similarity {
     * downstream joins see the index build's long type.)
     */
   def ivfProbeRead(spark: SparkSession, path: String, cells: Seq[Long]): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .filter(col("cell").isin(cells: _*))
       .withColumn("cell", col("cell").cast("long"))
 
@@ -1135,7 +1136,7 @@ object Similarity {
     require(fs.exists(dir),
       s"ivfPqReadCodebook: no $CodebookDir table under $path — appends and " +
         "searches must use the build's codebook; rebuild with ivfPqWriteIndex.")
-    val r = spark.read.parquet(dir.toString)
+    val r = Tables.parquet(spark, dir.toString)
       .select(col("m").cast("int"), col("sub_dim").cast("int"),
         col("k").cast("int"), col("flat")).head()
     PqCodebook(r.getInt(0), r.getInt(1), r.getInt(2),

@@ -225,28 +225,10 @@ class BpeSpec extends SparkTestBase {
       (0 until len).map(_ => alpha(rnd.nextInt(alpha.length))).mkString
     }
     val df = words.grouped(10).map(_.mkString(" ")).toSeq.toDF("text")
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(counter)
-    val m = try {
-      // trainBatched is eager (per-round collects run inside the call),
-      // so the listener scope covers exactly the training jobs; the
-      // result is a local relation, counted after the snapshot
-      val out = Bpe.trainBatched(df, "text", 64, window = 64, maxRounds = 16)
-      // the listener bus is async: give queued job-start events a
-      // moment to drain before snapshotting (stable-count poll)
-      var last = -1
-      while (counter.jobs.get() != last) {
-        last = counter.jobs.get(); Thread.sleep(200)
-      }
-      out
-    } finally spark.sparkContext.removeSparkListener(counter)
-    val jobs = counter.jobs.get()
+    // trainBatched is eager (per-round collects run inside the call), so
+    // the count covers exactly the training jobs; the result is a local
+    // relation, counted afterwards
+    val (m, jobs) = jobsDuring(Bpe.trainBatched(df, "text", 64, window = 64, maxRounds = 16))
     assert(m.count() == 64, "diverse corpus must yield all 64 merges")
     assert(jobs <= 64 / 8,
       s"trainBatched(64) cost $jobs jobs — batching is not amortizing")

@@ -99,6 +99,20 @@ class SimilaritySpec extends SparkTestBase {
       "on-disk probe result differs from the in-memory path")
   }
 
+  test("building a probe read over a written index runs no Spark job") {
+    val real = spark.read.parquet(sfDir + "/embeddings.parquet")
+    val cents = Similarity.ivfCentroids(real, "vec_id", "embedding", cells = 4)
+    val dir = java.nio.file.Files.createTempDirectory("ivf_probe_jobs").toString
+    Similarity.ivfWriteIndexWithCentroids(
+      Similarity.assignCells(real, "vec_id", "embedding", cents), cents, dir)
+    val (probe, jobs) = jobsDuring(Similarity.ivfProbeRead(spark, dir, Seq(1L, 2L)))
+    assert(jobs == 0, s"building the probe read ran $jobs Spark jobs")
+    val inferred = spark.read.parquet(dir).filter(col("cell").isin(1L, 2L))
+      .withColumn("cell", col("cell").cast("long"))
+    assert(probe.schema == inferred.schema)
+    assert(probe.collect().toSet == inferred.collect().toSet)
+  }
+
   test("IVF append: persisted centroids drive the assign; appended vectors are found") {
     val real = spark.read.parquet(sfDir + "/embeddings.parquet")
     val half = real.count() / 2

@@ -409,28 +409,11 @@ class PipelineSpec extends SparkTestBase {
     Pipeline.run(spark, dayCsv(dir, (1 to 30).map(i => f"a$i%03d"), "2025-03-20"), root)
     val day2 = dayCsv(dir, (21 to 50).map(i => f"a$i%03d"), "2025-03-21")
 
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(counter)
-    val r = try {
-      val out = Pipeline.run(spark, day2, root)
-      // the listener bus is async: let queued job starts drain
-      var last = -1
-      while (counter.jobs.get() != last) {
-        last = counter.jobs.get(); Thread.sleep(200)
-      }
-      out
-    } finally spark.sparkContext.removeSparkListener(counter)
+    val (r, jobs) = jobsDuring(Pipeline.run(spark, day2, root))
     // tableRows sums the mart's counts, the NULL-subreddit group included
     assert(r.loaded == 30L && r.tableRows == 50L && r.badRecords == 1L)
     assert(r.summary.filter(col("subreddit").isNull).head().getAs[Long]("post_count") == 2L)
     assert(PostsTable.read(spark, root).count() == r.tableRows)
-    val jobs = counter.jobs.get()
     // reject check 1, key collect 2, version write 1 (the staged keys are
     // an IN-list filter, not a broadcast), bounds read-back 2, mart 2,
     // loaded count 2; no parquet schema inference (schemas come from a

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
 import graft.SparkTestBase
@@ -17,32 +16,6 @@ class TablesSpec extends SparkTestBase {
   // the sf0.01 tables, beside the suite's default data set
   private val sf = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
   private val dataPresent = new java.io.File(sf).isDirectory
-
-  /** `body`'s result and the Spark jobs started while it ran. The listener
-    * bus is asynchronous, so a marker job run afterwards closes the count:
-    * its start is delivered after every earlier one.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val marker = s"tables-spec-marker-${System.nanoTime()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        seen.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")): Unit
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains(marker), "the marker job never reached the listener")
-      (out, seen.asScala.takeWhile(_ != marker).size)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("every table reads with the schema inference gives, and building it runs no Spark job") {
     assume(dataPresent, s"$sf missing — driver fixtures not generated")
