@@ -265,7 +265,7 @@ object QueryCatalog {
         .start()
       q.awaitTermination()
     }
-    s.read.parquet(outDir)
+    Tables.parquet(s, outDir)
       .filter(col("imp_id") =!= -1L)
       .select(col("imp_id"), col("click_id"),
         col("imp_user").as("user_id"),
@@ -3519,7 +3519,7 @@ object QueryCatalog {
             .agg(count(lit(1)).cast("long").as("found")))
           .crossJoin(emb.filter(col("vec_id") % block === block / 2)
             .agg(count(lit(1)).cast("long").as("nq")))
-          .crossJoin(s.read.parquet(path)
+          .crossJoin(Tables.parquet(s, path)
             .agg(max(octet_length(col("code"))).cast("long").as("bmax"),
               min(octet_length(col("code"))).cast("long").as("bmin")))
           .crossJoin(corpus
@@ -3663,7 +3663,7 @@ object QueryCatalog {
           .select("l_orderkey", "l_quantity", "l_extendedprice")
         val path = scratchDir("verify_zorder")
         graft.sources.ZOrder.writeZOrdered(li, "l_quantity", "l_extendedprice", path, 16)
-        s.read.parquet(path)
+        Tables.parquet(s, path)
           .filter(col("l_quantity").between(10.0, 15.0)
             && col("l_extendedprice").between(20000.0, 30000.0))
           .agg(count(lit(1)).as("n"),
@@ -10420,7 +10420,7 @@ object QueryCatalog {
           }.start()
           q.awaitTermination()
         }
-        s.read.parquet(outDir).orderBy("doc_id")
+        Tables.parquet(s, outDir).orderBy("doc_id")
       },
       Some("""WITH inp AS (
              |  SELECT doc_id, text, CAST(doc_id % 3 AS INT) AS gen FROM documents
@@ -10575,7 +10575,7 @@ object QueryCatalog {
             b.write.mode("append").parquet(outDir)
           }
           .start().awaitTermination()
-        val got = s.read.parquet(outDir)
+        val got = Tables.parquet(s, outDir)
         val nRows = got.count()
         val nDistinct = got.select("event_id").distinct().count()
         val sliceCap = 3L * ((evCount + 7L) / 8L) // round-robin slices are ~even
@@ -10702,7 +10702,7 @@ object QueryCatalog {
             .start()
           q.awaitTermination()
         }
-        s.read.parquet(outDir)
+        Tables.parquet(s, outDir)
           .select(col("user_id"),
             date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
             date_format(col("session_end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
@@ -10796,7 +10796,7 @@ object QueryCatalog {
             .start()
           q.awaitTermination()
         }
-        s.read.parquet(outDir)
+        Tables.parquet(s, outDir)
           .filter(!col("event_type").startsWith("__"))
           .select(
             date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
@@ -10880,7 +10880,7 @@ object QueryCatalog {
             .start()
           q.awaitTermination()
         }
-        s.read.parquet(outDir)
+        Tables.parquet(s, outDir)
           .select(col("event_id"), col("key").as("user_id"),
             date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"),
             col("dim_value"))
@@ -12872,7 +12872,7 @@ object QueryCatalog {
             .start()
           q.awaitTermination()
         }
-        s.read.parquet(outDir).orderBy("event_id")
+        Tables.parquet(s, outDir).orderBy("event_id")
       },
       Some("""SELECT e.event_id, e.user_id, e.event_type,
              |  c.c_mktsegment AS segment,
@@ -13461,7 +13461,7 @@ object QueryCatalog {
             .start()
           q.awaitTermination()
         }
-        s.read.parquet(outDir)
+        Tables.parquet(s, outDir)
           .select(col("event_id"), col("user_id"),
             floor(col("value") * 100).cast("long").as("cents"))
           .orderBy("event_id")
@@ -13640,7 +13640,7 @@ object QueryCatalog {
           case Some(v) => s.conf.set(provKey, v)
           case None => s.conf.unset(provKey)
         }
-        s.read.parquet(outDir).orderBy("user_id", "n_events")
+        Tables.parquet(s, outDir).orderBy("user_id", "n_events")
       },
       Some("""WITH ev AS (SELECT event_id, user_id,
              |    CAST(floor(value * 100) AS BIGINT) AS cents FROM events),
@@ -13813,7 +13813,7 @@ object QueryCatalog {
         val path = scratchDir("verify_variant")
         ss.parseJson(docs, "payload").select("doc_id", "v")
           .write.mode("overwrite").parquet(path)
-        val back = s.read.parquet(path)
+        val back = Tables.parquet(s, path)
         ss.shred(back, "v", Seq(
             ("lang", "$.meta.lang", "string"),
             ("chars", "$.meta.chars", "long"),

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.operators.Bits.{MsbReader, MsbWriter}
+
 /** AAC-LC (ISO/IEC 13818-7 / 14496-3) decoder in pure JDK — the last
   * named rung of the perceptual-audio ladder. What is implemented is the
   * ADTS + AAC-LC DECODE STRUCTURE, end to end:
@@ -195,8 +197,8 @@ object AacCodec {
     }
     def write(put: (Long, Int) => Unit, sym: Int): Unit =
       put(codes(sym).toLong, lens(sym))
-    def read(get: Int => Int): Int =
-      reader.read(get, "aac: invalid spectral Huffman code")
+    def read(br: MsbReader): Int =
+      reader.read(br, "aac: invalid spectral Huffman code")
   }
 
   private lazy val specBooks: IndexedSeq[SpecBook] =
@@ -213,8 +215,8 @@ object AacCodec {
     val (lens, codes) = sfLensCodes
     put(codes(delta + 60).toLong, lens(delta + 60))
   }
-  private def sfRead(get: Int => Int): Int =
-    sfReader.read(get, "aac: invalid scalefactor code") - 60
+  private def sfRead(br: MsbReader): Int =
+    sfReader.read(br, "aac: invalid scalefactor code") - 60
   private lazy val sfReader: MpegAudio.CanonicalReader = {
     val (lens, codes) = sfLensCodes
     new MpegAudio.CanonicalReader(lens, codes)
@@ -257,7 +259,7 @@ object AacCodec {
   /** Write one section's coefficient run in tuples through a spectral
     * codebook, with the sign-bit and book-11 escape grammar.
     */
-  private def writeSpectralRun(bw: MpegAudio.BitWriter, cb: Int,
+  private def writeSpectralRun(bw: MsbWriter, cb: Int,
                                coefAt: Int => Int, n: Int): Unit = {
     val book = specBooks(cb - 1)
     val t = book.tuple
@@ -304,7 +306,7 @@ object AacCodec {
   /** The ics_info bits — shared by SCE streams and the CPE's
     * common_window (written once for both channels there).
     */
-  private def writeIcsInfo(bw: MpegAudio.BitWriter, fr: AacFrame): Unit =
+  private def writeIcsInfo(bw: MsbWriter, fr: AacFrame): Unit =
     if (fr.wseq != 2) {
       // ics_info (long-class: ONLY_LONG / LONG_START / LONG_STOP)
       bw.put(0, 1) // ics_reserved
@@ -326,7 +328,7 @@ object AacCodec {
     * CPE's common_window already carried it), sections, scalefactors,
     * the presence flags (+tns), spectral data.
     */
-  private def writeIcs(bw: MpegAudio.BitWriter, fr: AacFrame,
+  private def writeIcs(bw: MsbWriter, fr: AacFrame,
                        includeInfo: Boolean): Unit = {
       require(fr.globalGain >= 0 && fr.globalGain < 256)
       bw.put(fr.globalGain.toLong, 8)
@@ -455,7 +457,7 @@ object AacCodec {
     * through the scalefactor codebook (chain seeded at zero), and NO
     * spectral data — the decoder reconstructs it from the left channel.
     */
-  private def writeIcsIntensity(bw: MpegAudio.BitWriter, gg: Int,
+  private def writeIcsIntensity(bw: MsbWriter, gg: Int,
                                 band: Int, phase: Int, isPos: Int): Unit = {
     require(band >= 0 && band < NumSfb && isPos >= -60 && isPos <= 60)
     bw.put(gg.toLong, 8)
@@ -479,7 +481,7 @@ object AacCodec {
     val out = new java.io.ByteArrayOutputStream()
     frames.foreach { case (gg, band, nrg) =>
       require(band >= 0 && band < NumSfb && nrg >= -60 && nrg <= 60)
-      val bw = new MpegAudio.BitWriter
+      val bw = new MsbWriter
       bw.put(0, 3) // SCE
       bw.put(0, 4) // instance tag
       require(gg >= 0 && gg < 256)
@@ -499,7 +501,6 @@ object AacCodec {
       sfWrite(bw.put, nrg) // dpcm noise_nrg, chain seeded at 0
       bw.put(0, 1); bw.put(0, 1); bw.put(0, 1) // pulse / tns / gain flags
       bw.put(7, 3) // END
-      bw.padToByte()
       writeAdts(out, bw.bytes(), channels = 1)
     }
     out.toByteArray
@@ -513,7 +514,7 @@ object AacCodec {
     require(!crc || nRawBlocks == 1,
       "aac: CRC position tables for multi-block frames outside this profile")
     // ADTS header (protection_absent = 1 → 7 bytes; with CRC → 9)
-    val hw = new MpegAudio.BitWriter
+    val hw = new MsbWriter
     hw.put(0xfff, 12) // syncword
     hw.put(0, 1) // MPEG-4
     hw.put(0, 2) // layer
@@ -541,13 +542,12 @@ object AacCodec {
   def encode(frames: Seq[AacFrame], crc: Boolean = false): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     frames.foreach { fr =>
-      val bw = new MpegAudio.BitWriter
+      val bw = new MsbWriter
       // raw_data_block: SCE
       bw.put(0, 3) // id_syn_ele = SCE (0)
       bw.put(0, 4) // element_instance_tag
       writeIcs(bw, fr, includeInfo = true)
       bw.put(7, 3) // id_syn_ele = END
-      bw.padToByte()
       writeAdts(out, bw.bytes(), channels = 1, crc = crc)
     }
     out.toByteArray
@@ -564,12 +564,11 @@ object AacCodec {
       require(grp.nonEmpty && grp.size <= 4, "aac: 1..4 raw data blocks per frame")
       val body = new java.io.ByteArrayOutputStream()
       grp.foreach { fr =>
-        val bw = new MpegAudio.BitWriter
+        val bw = new MsbWriter
         bw.put(0, 3) // id_syn_ele = SCE (0)
         bw.put(0, 4) // element_instance_tag
         writeIcs(bw, fr, includeInfo = true)
         bw.put(7, 3) // id_syn_ele = END
-        bw.padToByte()
         val b = bw.bytes()
         body.write(b, 0, b.length)
       }
@@ -599,7 +598,7 @@ object AacCodec {
         cpe.left.grouping == cpe.right.grouping,
         "aac fixture: common_window needs matching window structure")
       require(cpe.msMaskPresent >= 0 && cpe.msMaskPresent <= 2)
-      val bw = new MpegAudio.BitWriter
+      val bw = new MsbWriter
       bw.put(1, 3) // id_syn_ele = CPE (1)
       bw.put(0, 4) // element_instance_tag
       bw.put(1, 1) // common_window
@@ -626,7 +625,6 @@ object AacCodec {
         case None => writeIcs(bw, cpe.right, includeInfo = false)
       }
       bw.put(7, 3) // id_syn_ele = END
-      bw.padToByte()
       writeAdts(out, bw.bytes(), channels = 2)
     }
     out.toByteArray
@@ -641,18 +639,18 @@ object AacCodec {
     def isShort: Boolean = wseq == 2
   }
 
-  private def readIcsInfo(br: MpegAudio.BitReader): IcsInfo = {
-    require(br.get(1) == 0, "aac: ics_reserved set")
-    val wseq = br.get(2)
+  private def readIcsInfo(br: MsbReader): IcsInfo = {
+    require(br.read(1) == 0, "aac: ics_reserved set")
+    val wseq = br.read(2)
     val isShort = wseq == 2
-    br.get(1) // window shape
-    val maxSfb = if (isShort) br.get(4) else br.get(6)
+    br.read(1) // window shape
+    val maxSfb = if (isShort) br.read(4) else br.read(6)
     require(maxSfb <= (if (isShort) NumSfbShort else NumSfb),
       "aac: max_sfb beyond the band table")
     val groups =
-      if (isShort) windowGroups(br.get(7))
+      if (isShort) windowGroups(br.read(7))
       else {
-        require(br.get(1) == 0, "aac: predictor data outside this profile")
+        require(br.read(1) == 0, "aac: predictor data outside this profile")
         Seq(Seq(0))
       }
     IcsInfo(wseq, maxSfb, groups)
@@ -729,11 +727,11 @@ object AacCodec {
     * flags (+TNS), spectral data; returns the requantized (and
     * TNS-filtered) spectrum with the info actually in force.
     */
-  private def readIcs(br: MpegAudio.BitReader,
+  private def readIcs(br: MsbReader,
                       common: Option[IcsInfo],
                       cpeSecond: Boolean = false)
       : (IcsInfo, Array[Long], Seq[(Int, Int, Int, Int)]) = {
-      val globalGain = br.get(8)
+      val globalGain = br.read(8)
       val info = common.getOrElse(readIcsInfo(br))
       val wseq = info.wseq
       val isShort = info.isShort
@@ -748,12 +746,12 @@ object AacCodec {
       while (g < nGroups) {
         var band = 0
         while (band < maxSfb) {
-          val cb = br.get(4)
+          val cb = br.read(4)
           require(cb <= 11 || cb == 13 || (cpeSecond && cb >= 14),
             "aac: reserved codebook 12 outside this profile (intensity is CPE-right only)")
           var len = 0
-          var chunk = br.get(sectBits)
-          while (chunk == sectEsc) { len += sectEsc; chunk = br.get(sectBits) }
+          var chunk = br.read(sectBits)
+          while (chunk == sectEsc) { len += sectEsc; chunk = br.read(sectBits) }
           len += chunk
           require(len > 0 && band + len <= maxSfb, "aac: section overruns max_sfb")
           var i = 0
@@ -778,15 +776,15 @@ object AacCodec {
           val cbHere = sfbCb(g)(band)
           if (cbHere == 13) {
             // PNS: noise_nrg rides its own dpcm chain (seeded at zero)
-            nrgLast += sfRead(br.get)
+            nrgLast += sfRead(br)
             require(nrgLast >= -60 && nrgLast <= 60, "aac: noise_nrg out of range")
             pnsBands += ((g, band, nrgLast))
           } else if (cbHere >= 14) {
-            isLast += sfRead(br.get)
+            isLast += sfRead(br)
             require(isLast >= -60 && isLast <= 60, "aac: is_position out of range")
             isBands += ((g, band, if (cbHere == 15) 1 else -1, isLast))
           } else if (cbHere != 0) {
-            last += sfRead(br.get)
+            last += sfRead(br)
             require(last >= 0 && last < 256, "aac: scalefactor out of range")
             sf(g)(band) = last
           }
@@ -797,24 +795,24 @@ object AacCodec {
       // pulse / tns / gain_control presence flags (4.4.2.1: they sit
       // between scale_factor_data and spectral_data)
       val pulses: Seq[(Int, Int)] =
-        if (br.get(1) == 1) {
+        if (br.read(1) == 1) {
           // pulse_data (4.4.2.7): long windows only; line positions chain
           // additively from the start band's first line; amplitudes apply
           // to the QUANTIZED values before requantization
           require(!isShort, "aac: pulse_data on an EIGHT_SHORT frame")
-          val nPulse = br.get(2) + 1
-          val startSfb = br.get(6)
+          val nPulse = br.read(2) + 1
+          val startSfb = br.read(6)
           require(startSfb < NumSfb, "aac: pulse_start_sfb out of range")
           var k = startSfb * 32
           (0 until nPulse).map { _ =>
-            k += br.get(5)
-            val amp = br.get(4)
+            k += br.read(5)
+            val amp = br.read(4)
             require(k < FrameLen, "aac: pulse beyond the spectrum")
             (k, amp)
           }
         } else Nil
       val tnsFilters: Seq[(Int, Int, Int, Array[Int])] =
-        if (br.get(1) == 1) {
+        if (br.read(1) == 1) {
           if (isShort) {
             // short-window TNS: one 1-bit n_filt per window, 4-bit
             // length in SHORT band units, 3-bit order (LC bound 7);
@@ -822,19 +820,19 @@ object AacCodec {
             val fs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, Array[Int])]
             var w = 0
             while (w < 8) {
-              if (br.get(1) == 1) {
-                val res = br.get(1)
-                val len = br.get(4)
-                val order = br.get(3)
+              if (br.read(1) == 1) {
+                val res = br.read(1)
+                val len = br.read(4)
+                val order = br.read(3)
                 require(order <= 7, "aac: short TNS order beyond the LC limit")
                 val top = math.min(maxSfb, NumSfbShort)
                 val bottom = math.max(0, top - len)
                 if (order > 0) {
-                  val dirDown = br.get(1)
-                  val compress = br.get(1)
+                  val dirDown = br.read(1)
+                  val compress = br.read(1)
                   val bits = res + 3 - compress
                   val coefs = Array.fill(order) {
-                    val raw = br.get(bits)
+                    val raw = br.read(bits)
                     if (raw >= (1 << (bits - 1))) raw - (1 << bits) else raw
                   }
                   fs += ((w * ShortLen + tnsShortLine(bottom),
@@ -845,25 +843,25 @@ object AacCodec {
             }
             fs.toSeq
           } else {
-          val nFilt = br.get(2)
-          val res = if (nFilt > 0) br.get(1) else 0
+          val nFilt = br.read(2)
+          val res = if (nFilt > 0) br.read(1) else 0
           var top = maxSfb
           val fs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, Array[Int])]
           var fi = 0
           while (fi < nFilt) {
-            val len = br.get(6)
-            val order = br.get(5)
+            val len = br.read(6)
+            val order = br.read(5)
             require(order <= 12, "aac: TNS order beyond the LC limit")
             val bottom = math.max(0, top - len)
             if (order > 0) {
-              val dirDown = br.get(1)
-              val compress = br.get(1)
+              val dirDown = br.read(1)
+              val compress = br.read(1)
               val bits = res + 3 - compress
               // two's-complement coefficients; the sin-table inverse
               // quantization + reflection->direct-form recursion is
               // collapsed into a PINNED identity map (object doc)
               val coefs = Array.fill(order) {
-                val raw = br.get(bits)
+                val raw = br.read(bits)
                 if (raw >= (1 << (bits - 1))) raw - (1 << bits) else raw
               }
               fs += ((bottom * 32, math.min(top, NumSfb) * 32, dirDown, coefs))
@@ -874,7 +872,7 @@ object AacCodec {
           fs.toSeq
           }
         } else Nil
-      require(br.get(1) == 0, "aac: gain_control_data outside this profile")
+      require(br.read(1) == 0, "aac: gain_control_data outside this profile")
       // spectral_data: spec layout is win*128 + line for short frames
       // (line within window), plain 0..1023 for long
       val spec = new Array[Long](FrameLen)
@@ -885,13 +883,13 @@ object AacCodec {
         val out = new Array[Int](n)
         var offC = 0
         while (offC < n) {
-          val vals = book.symVals(book.read(br.get))
+          val vals = book.symVals(book.read(br))
           val negs = new Array[Boolean](t)
           // spec order: codeword, then one sign bit per nonzero member,
           // then the escape sequences (book 11) in member order
           var i = 0
           while (i < t) {
-            if (!book.signed && vals(i) != 0) negs(i) = br.get(1) == 1
+            if (!book.signed && vals(i) != 0) negs(i) = br.read(1) == 1
             i += 1
           }
           i = 0
@@ -901,8 +899,8 @@ object AacCodec {
               var a = vals(i)
               if (cb == 11 && a == 16) {
                 var n2 = 0
-                while (br.get(1) == 1) { n2 += 1; require(n2 < 16, "aac: runaway escape") }
-                a = (1 << (n2 + 4)) + br.get(n2 + 4)
+                while (br.read(1) == 1) { n2 += 1; require(n2 < 16, "aac: runaway escape") }
+                a = (1 << (n2 + 4)) + br.read(n2 + 4)
               }
               out(offC + i) = if (negs(i)) -a else a
             }
@@ -1069,22 +1067,22 @@ object AacCodec {
     var overlaps: Array[Array[Long]] = null
     val pcmOut = scala.collection.mutable.ArrayBuffer.empty[Long]
     while (off < bytes.length) {
-      val br = new MpegAudio.BitReader(bytes, off)
-      require(br.get(12) == 0xfff, "aac: lost ADTS sync")
-      br.get(1) // version
-      require(br.get(2) == 0, "aac: nonzero layer bits")
-      val protAbsent = br.get(1) == 1 // 0 = crc_check present
-      require(br.get(2) == 1, "aac: profile must be LC")
-      br.get(4) // sampling frequency index
-      br.get(1) // private
-      val chCfg = br.get(3)
+      val br = new MsbReader(bytes, off, bytes.length, "aac", "bitstream truncated")
+      require(br.read(12) == 0xfff, "aac: lost ADTS sync")
+      br.read(1) // version
+      require(br.read(2) == 0, "aac: nonzero layer bits")
+      val protAbsent = br.read(1) == 1 // 0 = crc_check present
+      require(br.read(2) == 1, "aac: profile must be LC")
+      br.read(4) // sampling frequency index
+      br.read(1) // private
+      val chCfg = br.read(3)
       require(chCfg == 1 || chCfg == 2,
         "aac: channel configurations beyond mono/stereo outside this profile")
-      br.get(1); br.get(1); br.get(1); br.get(1)
-      val frameLen = br.get(13)
+      br.read(1); br.read(1); br.read(1); br.read(1)
+      val frameLen = br.read(13)
       require(off + frameLen <= bytes.length, "aac: ADTS frame runs past the stream")
-      br.get(11) // buffer fullness
-      val nRaw = br.get(2) // number_of_raw_data_blocks_in_frame - 1... + 1 below
+      br.read(11) // buffer fullness
+      val nRaw = br.read(2) // number_of_raw_data_blocks_in_frame - 1... + 1 below
       if (!protAbsent) {
         // adts_error_check: a 16-bit crc_check after the 7-byte header.
         // The CRC itself is the REAL ISO polynomial (x^16+x^15+x^2+1,
@@ -1094,7 +1092,7 @@ object AacCodec {
         // protected frames stay rejected below).
         require(nRaw == 0,
           "aac: CRC position tables for multi-block frames outside this profile")
-        val crcField = br.get(16)
+        val crcField = br.read(16)
         require(off + 9 <= off + frameLen, "aac: protected frame shorter than its CRC")
         val computed = MpegAudio.crc16(
           MpegAudio.byteBits(bytes, off, off + 7) ++
@@ -1112,19 +1110,19 @@ object AacCodec {
       var rawBlk = 0
       while (rawBlk <= nRaw) {
       // raw_data_block: SCE (mono) or CPE (stereo)
-      val id = br.get(3)
+      val id = br.read(3)
       val streams: Array[(IcsInfo, Array[Long])] =
         if (chCfg == 1) {
           require(id == 0, "aac: expected a single_channel_element")
-          br.get(4) // instance tag
+          br.read(4) // instance tag
           val (i1, s1, _) = readIcs(br, None)
           Array((i1, s1))
         } else {
           require(id == 1, "aac: expected a channel_pair_element")
-          br.get(4) // instance tag
-          if (br.get(1) == 1) { // common_window
+          br.read(4) // instance tag
+          if (br.read(1) == 1) { // common_window
             val info = readIcsInfo(br)
-            val msMask = br.get(2)
+            val msMask = br.read(2)
             require(msMask <= 2, "aac: reserved ms_mask_present value")
             val used: (Int, Int) => Boolean =
               if (msMask == 1) {
@@ -1133,7 +1131,7 @@ object AacCodec {
                 while (g < info.groups.size) {
                   var band = 0
                   while (band < info.maxSfb) {
-                    bits(g)(band) = br.get(1) == 1
+                    bits(g)(band) = br.read(1) == 1
                     band += 1
                   }
                   g += 1
@@ -1156,7 +1154,7 @@ object AacCodec {
             Array((iL, sL), (iR, sR))
           }
         }
-      require(br.get(3) == 7, "aac: missing END element")
+      require(br.read(3) == 7, "aac: missing END element")
       br.alignByte()
       // filterbank per channel, overlap-add, sample-major interleave
       val bufs = streams.map { case (info, spec) => filterbank(spec, info.wseq) }
@@ -1173,8 +1171,8 @@ object AacCodec {
       nFrames += 1
       rawBlk += 1
       }
-      require(br.pos == off + frameLen,
-        s"aac: frame content (${br.pos - off} bytes) disagrees with frame_length $frameLen")
+      require(br.bytePos == off + frameLen,
+        s"aac: frame content (${br.bytePos - off} bytes) disagrees with frame_length $frameLen")
       off += frameLen
     }
     require(nFrames > 0, "aac: empty stream")

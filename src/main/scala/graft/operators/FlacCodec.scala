@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.operators.Bits.{MsbReader, MsbWriter}
+
 import graft.operators.WavCodec.DecodedAudio
 
 /** REAL FLAC codec in pure JDK — no codec library.
@@ -78,66 +80,17 @@ object FlacCodec {
     c
   }
 
-  // ---- MSB-first bit IO ---------------------------------------------------
+  // ---- bit IO: the shared MSB-first core ----------------------------------
 
-  private final class BitReader(val b: Array[Byte]) {
-    var bitPos = 0
-    def bytePos: Int = bitPos >> 3
-    def aligned: Boolean = (bitPos & 7) == 0
-    def read(n: Int): Int = {
-      if (bitPos + n > b.length * 8) fail("truncated stream")
-      var v = 0; var i = 0
-      while (i < n) {
-        v = (v << 1) | ((b(bitPos >> 3) >> (7 - (bitPos & 7))) & 1)
-        bitPos += 1; i += 1
-      }
-      v
-    }
-    def readLong(n: Int): Long = {
-      if (bitPos + n > b.length * 8) fail("truncated stream")
-      var v = 0L; var i = 0
-      while (i < n) {
-        v = (v << 1) | ((b(bitPos >> 3) >> (7 - (bitPos & 7))) & 1)
-        bitPos += 1; i += 1
-      }
-      v
-    }
-    def readSigned(n: Int): Int = {
-      val v = read(n)
-      if (n > 0 && (v & (1 << (n - 1))) != 0) v - (1 << n) else v
-    }
-    /** FLAC unary: count of 0 bits before the terminating 1. */
-    def unary(): Int = {
-      var q = 0
-      while (read(1) == 0) {
-        q += 1
-        if (q > (1 << 20)) fail("runaway unary code")
-      }
-      q
-    }
-    def alignToByte(): Unit = {
-      while (!aligned) { if (read(1) != 0) fail("non-zero frame padding bit") }
-    }
+  private def readSigned(r: MsbReader, n: Int): Int = {
+    val v = r.read(n)
+    if (n > 0 && (v & (1 << (n - 1))) != 0) v - (1 << n) else v
   }
 
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var buf = 0; private var cnt = 0
-    def write(v: Int, n: Int): Unit = writeLong(v.toLong & ((1L << n) - 1), n)
-    def writeLong(v0: Long, n: Int): Unit = {
-      val v = if (n == 64) v0 else v0 & ((1L << n) - 1)
-      var i = n - 1
-      while (i >= 0) {
-        buf = (buf << 1) | ((v >> i) & 1L).toInt
-        cnt += 1
-        if (cnt == 8) { out.write(buf); buf = 0; cnt = 0 }
-        i -= 1
-      }
-    }
-    def writeUnary(q: Int): Unit = { var i = 0; while (i < q) { write(0, 1); i += 1 }; write(1, 1) }
-    def alignToByte(): Unit = while (cnt != 0) write(0, 1)
-    def toBytes: Array[Byte] = { require(cnt == 0); out.toByteArray }
-  }
+  /** Writes the low `n` bits of `v`: two's complement for the signed
+    * fields (samples, coefficients, residuals).
+    */
+  private def put(w: MsbWriter, v: Long, n: Int): Unit = w.put(v & ((1L << n) - 1), n)
 
   // ---- decode -------------------------------------------------------------
 
@@ -182,8 +135,7 @@ object FlacCodec {
     var written = 0L
     var frameIndex = 0L
     while (written < totalSamples) {
-      val r = new BitReader(bytes)
-      r.bitPos = pos * 8
+      val r = new MsbReader(bytes, pos, bytes.length, "flac", "truncated stream")
       val frameStart = pos
       if (r.read(14) != 0x3ffe) fail(f"bad frame sync at byte $pos")
       if (r.read(1) != 0) fail("reserved frame-header bit set")
@@ -255,7 +207,7 @@ object FlacCodec {
         chans(ch) = decodeSubframe(r, blockSize, chBps)
         ch += 1
       }
-      r.alignToByte()
+      if (r.alignByte() != 0) fail("non-zero frame padding bit")
       val crc16Calc = crc16(bytes, frameStart, r.bytePos)
       if (r.read(16) != crc16Calc) fail("frame CRC-16 mismatch")
       pos = r.bytePos
@@ -297,7 +249,7 @@ object FlacCodec {
     DecodedAudio(sampleRate, channels, outSamples)
   }
 
-  private def readUtf8Coded(r: BitReader): Long = {
+  private def readUtf8Coded(r: MsbReader): Long = {
     val b0 = r.read(8)
     val extra =
       if ((b0 & 0x80) == 0) return b0.toLong
@@ -319,25 +271,25 @@ object FlacCodec {
     v
   }
 
-  private def decodeSubframe(r: BitReader, blockSize: Int, bpsIn: Int): Array[Int] = {
+  private def decodeSubframe(r: MsbReader, blockSize: Int, bpsIn: Int): Array[Int] = {
     if (r.read(1) != 0) fail("subframe padding bit set")
     val ty = r.read(6)
     val wastedFlag = r.read(1)
-    val wasted = if (wastedFlag == 1) r.unary() + 1 else 0
+    val wasted = if (wastedFlag == 1) r.unary(1 << 20, "runaway unary code") + 1 else 0
     val bps = bpsIn - wasted
     if (bps <= 0) fail(s"wasted bits $wasted consume the whole $bpsIn-bit depth")
     val out: Array[Int] =
       if (ty == 0) { // constant
-        val v = r.readSigned(bps)
+        val v = readSigned(r, bps)
         Array.fill(blockSize)(v)
       } else if (ty == 1) { // verbatim
-        Array.fill(blockSize)(r.readSigned(bps))
+        Array.fill(blockSize)(readSigned(r, bps))
       } else if (ty >= 8 && ty <= 12) { // fixed order 0..4
         val order = ty - 8
         if (order > blockSize) fail(s"fixed order $order > block size $blockSize")
         val s = new Array[Int](blockSize)
         var i = 0
-        while (i < order) { s(i) = r.readSigned(bps); i += 1 }
+        while (i < order) { s(i) = readSigned(r, bps); i += 1 }
         decodeResidual(r, s, blockSize, order)
         while (i < blockSize) {
           val p = order match {
@@ -356,15 +308,15 @@ object FlacCodec {
         if (order > blockSize) fail(s"LPC order $order > block size $blockSize")
         val s = new Array[Int](blockSize)
         var i = 0
-        while (i < order) { s(i) = r.readSigned(bps); i += 1 }
+        while (i < order) { s(i) = readSigned(r, bps); i += 1 }
         val precM1 = r.read(4)
         if (precM1 == 15) fail("invalid LPC precision code 1111")
         val precision = precM1 + 1
-        val shift = r.readSigned(5)
+        val shift = readSigned(r, 5)
         if (shift < 0) fail(s"negative LPC shift $shift")
         val coeffs = new Array[Int](order)
         var j = 0
-        while (j < order) { coeffs(j) = r.readSigned(precision); j += 1 }
+        while (j < order) { coeffs(j) = readSigned(r, precision); j += 1 }
         decodeResidual(r, s, blockSize, order)
         while (i < blockSize) {
           var acc = 0L
@@ -383,7 +335,7 @@ object FlacCodec {
   }
 
   /** Partitioned-Rice residual decode into `s(order until blockSize)`. */
-  private def decodeResidual(r: BitReader, s: Array[Int], blockSize: Int,
+  private def decodeResidual(r: MsbReader, s: Array[Int], blockSize: Int,
                              order: Int): Unit = {
     val method = r.read(2)
     if (method > 1) fail(s"reserved residual coding method $method")
@@ -403,11 +355,11 @@ object FlacCodec {
       if (k == escape) {
         val raw = r.read(5)
         var i = 0
-        while (i < n) { s(idx) = if (raw == 0) 0 else r.readSigned(raw); idx += 1; i += 1 }
+        while (i < n) { s(idx) = if (raw == 0) 0 else readSigned(r, raw); idx += 1; i += 1 }
       } else {
         var i = 0
         while (i < n) {
-          val q = r.unary()
+          val q = r.unary(1 << 20, "runaway unary code")
           val u = (q.toLong << k) | r.read(k).toLong
           s(idx) = ((u >>> 1) ^ -(u & 1L)).toInt
           idx += 1; i += 1
@@ -451,36 +403,36 @@ object FlacCodec {
     val out = new java.io.ByteArrayOutputStream()
     out.write("fLaC".getBytes("US-ASCII"))
     // STREAMINFO as the single, last metadata block
-    val si = new BitWriter
-    si.write(1, 1); si.write(0, 7) // last-block flag, type 0
-    si.write(34, 24)
-    si.write(blockSize, 16); si.write(blockSize, 16)
-    si.write(0, 24); si.write(0, 24) // frame sizes unknown
-    si.write(sampleRate, 20)
-    si.write(channels - 1, 3)
-    si.write(15, 5) // bps-1 = 15 → 16-bit
-    si.writeLong(n.toLong, 36)
+    val si = new MsbWriter
+    put(si, 1, 1); put(si, 0, 7) // last-block flag, type 0
+    put(si, 34, 24)
+    put(si, blockSize, 16); put(si, blockSize, 16)
+    put(si, 0, 24); put(si, 0, 24) // frame sizes unknown
+    put(si, sampleRate, 20)
+    put(si, channels - 1, 3)
+    put(si, 15, 5) // bps-1 = 15 → 16-bit
+    put(si, n.toLong, 36)
     var i = 0
-    while (i < 16) { si.write(0, 8) ; i += 1 } // MD5 unknown
-    val siBytes = si.toBytes
+    while (i < 16) { put(si, 0, 8) ; i += 1 } // MD5 unknown
+    val siBytes = si.bytes()
     out.write(siBytes, 0, siBytes.length)
 
     var start = 0
     var frameIndex = 0L
     while (start < n) {
       val bs = math.min(blockSize, n - start)
-      val w = new BitWriter
-      w.write(0x3ffe, 14); w.write(0, 1); w.write(0, 1) // sync, reserved, fixed blocking
-      w.write(7, 4) // block size: 16-bit value at header end
-      w.write(0, 4) // sample rate: from STREAMINFO
+      val w = new MsbWriter
+      put(w, 0x3ffe, 14); put(w, 0, 1); put(w, 0, 1) // sync, reserved, fixed blocking
+      put(w, 7, 4) // block size: 16-bit value at header end
+      put(w, 0, 4) // sample rate: from STREAMINFO
       val asgn = if (channels == 1) 0 else if (stereo == 0) 1 else stereo
-      w.write(asgn, 4)
-      w.write(4, 3) // 16-bit samples
-      w.write(0, 1)
+      put(w, asgn, 4)
+      put(w, 4, 3) // 16-bit samples
+      put(w, 0, 1)
       writeUtf8Coded(w, frameIndex)
-      w.write(bs - 1, 16)
-      val headBytes = w.toBytes // byte-aligned here by construction
-      val w2 = new BitWriter
+      put(w, bs - 1, 16)
+      val headBytes = w.bytes() // byte-aligned here by construction
+      val w2 = new MsbWriter
       // channel extraction (+ decorrelation)
       val chans: Array[Array[Int]] =
         if (channels == 1) Array(Array.tabulate(bs)(i => samples(start + i).toInt))
@@ -501,8 +453,7 @@ object FlacCodec {
         encodeSubframe(w2, chans(c), chBps, mode, forceEscape)
         c += 1
       }
-      w2.alignToByte()
-      val bodyBytes = w2.toBytes
+      val bodyBytes = w2.bytes()
       val frame = new Array[Byte](headBytes.length + 1 + bodyBytes.length + 2)
       System.arraycopy(headBytes, 0, frame, 0, headBytes.length)
       frame(headBytes.length) = crc8(headBytes, 0, headBytes.length).toByte
@@ -517,20 +468,20 @@ object FlacCodec {
     out.toByteArray
   }
 
-  private def writeUtf8Coded(w: BitWriter, v: Long): Unit = {
-    if (v < 0x80) w.write(v.toInt, 8)
+  private def writeUtf8Coded(w: MsbWriter, v: Long): Unit = {
+    if (v < 0x80) put(w, v.toInt, 8)
     else {
       // count payload bits → byte length
       var bytes = 2
       while (bytes < 7 && v >= (1L << (bytes * 5 + 1))) bytes += 1
-      if (bytes == 7) { w.write(0xfe, 8) }
-      else w.write(((0xff << (8 - bytes)) & 0xff) | (v >> (6 * (bytes - 1))).toInt, 8)
+      if (bytes == 7) { put(w, 0xfe, 8) }
+      else put(w, ((0xff << (8 - bytes)) & 0xff) | (v >> (6 * (bytes - 1))).toInt, 8)
       var i = bytes - 2
-      while (i >= 0) { w.write(0x80 | ((v >> (6 * i)) & 0x3f).toInt, 8); i -= 1 }
+      while (i >= 0) { put(w, 0x80 | ((v >> (6 * i)) & 0x3f).toInt, 8); i -= 1 }
     }
   }
 
-  private def encodeSubframe(w: BitWriter, s: Array[Int], bps: Int,
+  private def encodeSubframe(w: MsbWriter, s: Array[Int], bps: Int,
                              mode: Mode, forceEscape: Boolean): Unit = {
     val bs = s.length
     var const = true
@@ -548,25 +499,25 @@ object FlacCodec {
     val eff = if (wasted > 0) s.map(_ >> wasted) else s
     val effBps = bps - wasted
     def writeWasted(): Unit =
-      if (wasted > 0) { w.write(1, 1); var k = 1; while (k < wasted) { w.write(0, 1); k += 1 }; w.write(1, 1) }
-      else w.write(0, 1)
+      if (wasted > 0) { put(w, 1, 1); var k = 1; while (k < wasted) { put(w, 0, 1); k += 1 }; put(w, 1, 1) }
+      else put(w, 0, 1)
 
     if (const) {
-      w.write(0, 1); w.write(0, 6); w.write(0, 1)
-      w.write(s(0), bps)
+      put(w, 0, 1); put(w, 0, 6); put(w, 0, 1)
+      put(w, s(0), bps)
       return
     }
     mode match {
       case Verbatim =>
-        w.write(0, 1); w.write(1, 6); writeWasted()
+        put(w, 0, 1); put(w, 1, 6); writeWasted()
         i = 0
-        while (i < bs) { w.write(eff(i), effBps); i += 1 }
+        while (i < bs) { put(w, eff(i), effBps); i += 1 }
       case Fixed(order0, po0) =>
         require(order0 >= 0 && order0 <= 4, s"flac encode: fixed order $order0 (0-4)")
         val order = math.min(order0, math.max(0, bs - 1))
-        w.write(0, 1); w.write(8 + order, 6); writeWasted()
+        put(w, 0, 1); put(w, 8 + order, 6); writeWasted()
         i = 0
-        while (i < order) { w.write(eff(i), effBps); i += 1 }
+        while (i < order) { put(w, eff(i), effBps); i += 1 }
         val res = new Array[Int](bs - order)
         while (i < bs) {
           val p = order match {
@@ -591,13 +542,13 @@ object FlacCodec {
           encodeSubframeFixedFallback(w, eff, effBps, wasted, bs)
           return
         }
-        w.write(0, 1); w.write(32 + order - 1, 6); writeWasted()
+        put(w, 0, 1); put(w, 32 + order - 1, 6); writeWasted()
         i = 0
-        while (i < order) { w.write(eff(i), effBps); i += 1 }
-        w.write(precision - 1, 4)
-        w.write(shift, 5)
+        while (i < order) { put(w, eff(i), effBps); i += 1 }
+        put(w, precision - 1, 4)
+        put(w, shift, 5)
         var j = 0
-        while (j < order) { w.write(coeffs(j), precision); j += 1 }
+        while (j < order) { put(w, coeffs(j), precision); j += 1 }
         val res = new Array[Int](bs - order)
         while (i < bs) {
           var acc = 0L
@@ -610,14 +561,14 @@ object FlacCodec {
     }
   }
 
-  private def encodeSubframeFixedFallback(w: BitWriter, eff: Array[Int],
+  private def encodeSubframeFixedFallback(w: MsbWriter, eff: Array[Int],
                                           effBps: Int, wasted: Int, bs: Int): Unit = {
     val order = math.min(4, math.max(0, bs - 1))
-    w.write(0, 1); w.write(8 + order, 6)
-    if (wasted > 0) { w.write(1, 1); var k = 1; while (k < wasted) { w.write(0, 1); k += 1 }; w.write(1, 1) }
-    else w.write(0, 1)
+    put(w, 0, 1); put(w, 8 + order, 6)
+    if (wasted > 0) { put(w, 1, 1); var k = 1; while (k < wasted) { put(w, 0, 1); k += 1 }; put(w, 1, 1) }
+    else put(w, 0, 1)
     var i = 0
-    while (i < order) { w.write(eff(i), effBps); i += 1 }
+    while (i < order) { put(w, eff(i), effBps); i += 1 }
     val res = new Array[Int](bs - order)
     while (i < bs) {
       val p = order match {
@@ -636,7 +587,7 @@ object FlacCodec {
   /** Partitioned Rice with the standard mean-based parameter estimator;
     * clamps the partition order to a spec-legal value for this frame.
     */
-  private def encodeResidual(w: BitWriter, res: Array[Int], blockSize: Int,
+  private def encodeResidual(w: MsbWriter, res: Array[Int], blockSize: Int,
                              order: Int, po0: Int, forceEscape: Boolean): Unit = {
     var po = math.max(0, math.min(po0, 4))
     while (po > 0 && (blockSize % (1 << po) != 0 || (blockSize >> po) <= order)) po -= 1
@@ -663,8 +614,8 @@ object FlacCodec {
     }
     val method = if (forceEscape || maxK <= 14) 0 else 1
     val paramBits = if (method == 0) 4 else 5
-    w.write(method, 2)
-    w.write(po, 4)
+    put(w, method, 2)
+    put(w, po, 4)
     idx = 0; p = 0
     while (p < partitions) {
       val n = count - (if (p == 0) order else 0)
@@ -679,19 +630,19 @@ object FlacCodec {
           i += 1
         }
         if (raw > 31) raw = 31
-        w.write((1 << paramBits) - 1, paramBits)
-        w.write(raw, 5)
+        put(w, (1 << paramBits) - 1, paramBits)
+        put(w, raw, 5)
         i = 0
-        while (i < n) { w.write(res(idx + i), raw); i += 1 }
+        while (i < n) { put(w, res(idx + i), raw); i += 1 }
       } else {
         val k = ks(p)
-        w.write(k, paramBits)
+        put(w, k, paramBits)
         var i = 0
         while (i < n) {
           val v = res(idx + i).toLong
           val u = (v << 1) ^ (v >> 63)
-          w.writeUnary((u >>> k).toInt)
-          if (k > 0) w.writeLong(u & ((1L << k) - 1), k)
+          w.unary((u >>> k).toInt)
+          if (k > 0) put(w, u & ((1L << k) - 1), k)
           i += 1
         }
       }

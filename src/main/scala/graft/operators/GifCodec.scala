@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Bits.{LsbReader, LsbWriter}
 import graft.operators.ImageCodec.DecodedImage
 
 /** REAL GIF87a/GIF89a codec in pure JDK — no codec library.
@@ -241,25 +242,15 @@ object GifCodec {
     val out = new Array[Byte](nPixels)
     var outPos = 0
 
-    var bitPos = 0
-    val nBits = data.length * 8
-    def read(width: Int): Int = {
-      if (bitPos + width > nBits) fail("LZW stream exhausted before all pixels decoded")
-      var v = 0; var i = 0
-      while (i < width) {
-        val bit = (data((bitPos >> 3)) >> (bitPos & 7)) & 1
-        v |= bit << i
-        bitPos += 1; i += 1
-      }
-      v
-    }
+    val br = new LsbReader(data, 0, data.length, "gif",
+      "LZW stream exhausted before all pixels decoded")
 
     var codeSize = minCodeSize + 1
     var next = eoi + 1
     var prev = -1
     var finished = false
     while (!finished) {
-      val code = read(codeSize)
+      val code = br.read(codeSize)
       if (code == clear) {
         codeSize = minCodeSize + 1; next = eoi + 1; prev = -1
       } else if (code == eoi) {
@@ -293,8 +284,8 @@ object GifCodec {
         }
         if (outPos == nPixels) {
           // next code must be EOI (tolerating a preceding Clear)
-          var t = read(codeSize)
-          if (t == clear) { codeSize = minCodeSize + 1; t = read(codeSize) }
+          var t = br.read(codeSize)
+          if (t == clear) { codeSize = minCodeSize + 1; t = br.read(codeSize) }
           if (t != eoi) fail(s"expected EOI after last pixel, got $t")
           finished = true
         }
@@ -435,8 +426,7 @@ object GifCodec {
     require(indices.nonEmpty, "gif lzw: empty pixel stream")
     val clear = 1 << minCodeSize
     val eoi = clear + 1
-    val out = new java.io.ByteArrayOutputStream()
-    var bitBuf = 0; var bitCnt = 0
+    val bw = new LsbWriter
     var codeSize = minCodeSize + 1
     // decoder-mirrored table counter: the decoder adds one entry after
     // every code it reads except the first after a Clear
@@ -444,9 +434,7 @@ object GifCodec {
     var firstAfterClear = true
     var emitted = 0
     def write(code: Int): Unit = {
-      bitBuf |= code << bitCnt
-      bitCnt += codeSize
-      while (bitCnt >= 8) { out.write(bitBuf & 0xff); bitBuf >>>= 8; bitCnt -= 8 }
+      bw.put(code, codeSize)
       if (firstAfterClear) firstAfterClear = false
       else if (decNext < 4096) {
         decNext += 1
@@ -455,9 +443,7 @@ object GifCodec {
       emitted += 1
     }
     def writeClear(): Unit = {
-      bitBuf |= clear << bitCnt
-      bitCnt += codeSize
-      while (bitCnt >= 8) { out.write(bitBuf & 0xff); bitBuf >>>= 8; bitCnt -= 8 }
+      bw.put(clear, codeSize)
       codeSize = minCodeSize + 1
       decNext = eoi + 1
       firstAfterClear = true
@@ -485,9 +471,7 @@ object GifCodec {
     }
     write(cur)
     // EOI: write at the current width without table-entry accounting
-    bitBuf |= eoi << bitCnt
-    bitCnt += codeSize
-    while (bitCnt > 0) { out.write(bitBuf & 0xff); bitBuf >>>= 8; bitCnt -= 8 }
-    out.toByteArray
+    bw.put(eoi, codeSize)
+    bw.bytes()
   }
 }

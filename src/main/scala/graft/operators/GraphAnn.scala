@@ -180,7 +180,7 @@ object GraphAnn {
     * refuses split shards rather than degrading silently.
     */
   def graphReadIndex(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.parquet(path)
+    val raw = graft.sources.Tables.parquet(spark, path)
       .withColumn("shard", col("shard").cast("int"))
     val nShards = math.max(
       raw.agg(countDistinct(col("shard"))).collect()(0).getLong(0).toInt, 1)

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.operators.Bits.{MsbReader, MsbWriter}
+
 /** H.264/AVC (ITU-T H.264 / ISO 14496-10) codec in pure JDK. The NAL/RBSP
   * TRANSPORT and PARAMETER-SET machinery is implemented for real (Annex B
   * start codes, emulation-prevention three-byte insertion/removal,
@@ -64,85 +66,25 @@ package graft.operators
   */
 object H264Codec {
 
-  // ---- bit I/O ---------------------------------------------------------------
+  // ---- bit I/O: the shared MSB-first core plus the RBSP-only checks -------
 
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var acc = 0
-    private var nAcc = 0
-    def put(v: Long, bits: Int): Unit = {
-      require(bits >= 0 && bits <= 32 && v >= 0 && (bits == 32 || v < (1L << bits)))
-      var i = bits - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1L).toInt
-        nAcc += 1
-        if (nAcc == 8) { out.write(acc); acc = 0; nAcc = 0 }
-        i -= 1
-      }
-    }
-    def ue(v: Int): Unit = {
-      require(v >= 0)
-      val code = v + 1
-      val n = 32 - Integer.numberOfLeadingZeros(code)
-      put(0, n - 1)
-      put(code.toLong, n)
-    }
-    def se(v: Int): Unit = ue(if (v <= 0) -2 * v else 2 * v - 1)
-    def alignZero(): Unit = if (nAcc > 0) put(0, 8 - nAcc)
-    def alignOnes(): Unit = while (nAcc > 0) put(1, 1)
-    /** rbsp_trailing_bits: stop bit + zero alignment. */
-    def trailing(): Unit = { put(1, 1); alignZero() }
-    def putByte(b: Int): Unit = { require(nAcc == 0); out.write(b & 0xff) }
-    def bytes(): Array[Byte] = { require(nAcc == 0, "h264: unterminated RBSP"); out.toByteArray }
+  private def rbspReader(rbsp: Array[Byte]): MsbReader =
+    new MsbReader(rbsp, "h264", "RBSP truncated")
+
+  /** rbsp_trailing_bits: stop bit + zero alignment. */
+  private def trailing(bw: MsbWriter): Unit = { bw.put(1, 1); bw.alignZero() }
+
+  /** rbsp_trailing_bits + cabac_zero_word-free tail. */
+  private def trailing(br: MsbReader): Unit = {
+    require(br.read(1) == 1, "h264: missing rbsp_stop_one_bit")
+    require(br.alignByte() == 0, "h264: nonzero rbsp alignment bit")
+    while (!br.atEnd) require(br.read(8) == 0, "h264: trailing garbage after RBSP stop")
   }
 
-  private final class BitReader(buf: Array[Byte]) {
-    private var pos = 0
-    private var bit = 0
-    def get(bits: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < bits) {
-        require(pos < buf.length, "h264: RBSP truncated")
-        v = (v << 1) | ((buf(pos) >> (7 - bit)) & 1)
-        bit += 1
-        if (bit == 8) { bit = 0; pos += 1 }
-        i += 1
-      }
-      v
-    }
-    def ue(): Int = {
-      var zeros = 0
-      while (get(1) == 0) {
-        zeros += 1
-        require(zeros <= 31, "h264: exp-Golomb code too long")
-      }
-      (1 << zeros) - 1 + (if (zeros == 0) 0 else get(zeros))
-    }
-    def se(): Int = {
-      val k = ue()
-      if (k % 2 == 0) -(k / 2) else (k + 1) / 2
-    }
-    def alignByte(): Unit = {
-      while (bit != 0) require(get(1) == 0, "h264: nonzero pcm alignment bit")
-    }
-    /** Discard to the byte boundary without checking the bits. */
-    def alignByte0(): Unit = while (bit != 0) { get(1); () }
-    /** CABAC alignment: the skipped bits must be ones. */
-    def alignOnesCheck(): Unit =
-      while (bit != 0) require(get(1) == 1, "h264: cabac alignment bit not one")
-    /** Bit read that returns zero past the end (the CABAC engine reads
-      * ahead of the true entropy content).
-      */
-    def bitOrZero(): Int = if (pos >= buf.length) 0 else get(1)
-    def readByte(): Int = { require(bit == 0); get(8) }
-    /** rbsp_trailing_bits + cabac_zero_word-free tail. */
-    def trailing(): Unit = {
-      require(get(1) == 1, "h264: missing rbsp_stop_one_bit")
-      while (bit != 0) require(get(1) == 0, "h264: nonzero rbsp alignment bit")
-      while (pos < buf.length) require(get(8) == 0, "h264: trailing garbage after RBSP stop")
-    }
-  }
+  /** Bit read that returns zero past the end (the CABAC engine reads
+    * ahead of the true entropy content).
+    */
+  private def bitOrZero(br: MsbReader): Int = if (br.atEnd) 0 else br.read(1)
 
   // ---- NAL transport (Annex B) -------------------------------------------------
 
@@ -229,7 +171,7 @@ object H264Codec {
                        weightedPred: Boolean = false)
 
   private def writeSps(w: Int, h: Int): Array[Byte] = {
-    val bw = new BitWriter
+    val bw = new MsbWriter
     bw.put(66, 8) // profile_idc: Baseline
     bw.put(0, 8) // constraint flags + reserved
     bw.put(30, 8) // level_idc 3.0
@@ -245,13 +187,13 @@ object H264Codec {
     bw.put(1, 1) // direct_8x8_inference
     bw.put(0, 1) // frame_cropping_flag
     bw.put(0, 1) // vui_parameters_present
-    bw.trailing()
+    trailing(bw)
     bw.bytes()
   }
 
   private def writePps(chromaQpOff: Int = 0, cabac: Boolean = false,
                        weighted: Boolean = false): Array[Byte] = {
-    val bw = new BitWriter
+    val bw = new MsbWriter
     bw.ue(0) // pps id
     bw.ue(0) // sps id
     bw.put(if (cabac) 1 else 0, 1) // entropy_coding_mode
@@ -267,47 +209,47 @@ object H264Codec {
     bw.put(1, 1) // deblocking_filter_control_present
     bw.put(0, 1) // constrained_intra_pred
     bw.put(0, 1) // redundant_pic_cnt_present
-    bw.trailing()
+    trailing(bw)
     bw.bytes()
   }
 
   private[operators] def parseSps(rbsp: Array[Byte]): Sps = {
-    val br = new BitReader(rbsp)
-    val profile = br.get(8)
-    br.get(8) // constraints
-    val level = br.get(8)
+    val br = rbspReader(rbsp)
+    val profile = br.read(8)
+    br.read(8) // constraints
+    val level = br.read(8)
     require(br.ue() == 0, "h264: multiple SPS ids outside this profile")
     val lmfn = br.ue() + 4
     val poct = br.ue()
     require(poct == 0, "h264: pic_order_cnt_type != 0 outside this profile")
     val lmpoc = br.ue() + 4
     br.ue() // max_num_ref_frames
-    br.get(1) // gaps allowed
+    br.read(1) // gaps allowed
     val wMbs = br.ue() + 1
     val hMbs = br.ue() + 1
-    require(br.get(1) == 1, "h264: interlaced (frame_mbs_only=0) outside this profile")
-    br.get(1) // direct_8x8
-    require(br.get(1) == 0, "h264: frame cropping outside this profile")
-    require(br.get(1) == 0, "h264: VUI outside this profile")
-    br.trailing()
+    require(br.read(1) == 1, "h264: interlaced (frame_mbs_only=0) outside this profile")
+    br.read(1) // direct_8x8
+    require(br.read(1) == 0, "h264: frame cropping outside this profile")
+    require(br.read(1) == 0, "h264: VUI outside this profile")
+    trailing(br)
     Sps(profile, level, wMbs, hMbs, lmfn, lmpoc)
   }
 
   private[operators] def parsePps(rbsp: Array[Byte]): Pps = {
-    val br = new BitReader(rbsp)
+    val br = rbspReader(rbsp)
     require(br.ue() == 0 && br.ue() == 0, "h264: multiple parameter sets outside this profile")
-    val cabac = br.get(1) == 1
-    br.get(1) // bottom_field_pic_order
+    val cabac = br.read(1) == 1
+    br.read(1) // bottom_field_pic_order
     require(br.ue() == 0, "h264: slice groups (FMO) outside this profile")
     br.ue(); br.ue() // ref idx defaults
-    val weighted = br.get(1) == 1 // weighted_pred_flag (P explicit WP)
-    require(br.get(2) == 0, "h264: weighted bi-prediction outside this profile")
+    val weighted = br.read(1) == 1 // weighted_pred_flag (P explicit WP)
+    require(br.read(2) == 0, "h264: weighted bi-prediction outside this profile")
     val qp = 26 + br.se()
     br.se() // pic_init_qs
     val chromaOff = br.se()
     require(chromaOff >= -12 && chromaOff <= 12, "h264: chroma_qp_index_offset out of range")
-    br.get(1); br.get(1); br.get(1)
-    br.trailing()
+    br.read(1); br.read(1); br.read(1)
+    trailing(br)
     Pps(cabac, qp, chromaOff, weighted)
   }
 
@@ -321,7 +263,7 @@ object H264Codec {
              uOf: (Int, Int) => Int, vOf: (Int, Int) => Int): Array[Byte] = {
     require(w > 0 && h > 0 && w % 16 == 0 && h % 16 == 0,
       "h264: this profile codes full-MB frames (no cropping)")
-    val bw = new BitWriter
+    val bw = new MsbWriter
     // slice header (IDR, slice_type 7 = I, all-picture slice)
     bw.ue(0) // first_mb_in_slice
     bw.ue(7) // slice_type: I (the 5..9 "all slices in picture" form)
@@ -343,14 +285,14 @@ object H264Codec {
       bw.ue(25) // mb_type: I_PCM
       bw.alignZero() // pcm_alignment_zero_bit*
       var i = 0
-      while (i < 256) { bw.putByte(yOf(mx + i % 16, my + i / 16)); i += 1 }
+      while (i < 256) { bw.put(yOf(mx + i % 16, my + i / 16) & 0xff, 8); i += 1 }
       i = 0
-      while (i < 64) { bw.putByte(uOf(mx / 2 + i % 8, my / 2 + i / 8)); i += 1 }
+      while (i < 64) { bw.put(uOf(mx / 2 + i % 8, my / 2 + i / 8) & 0xff, 8); i += 1 }
       i = 0
-      while (i < 64) { bw.putByte(vOf(mx / 2 + i % 8, my / 2 + i / 8)); i += 1 }
+      while (i < 64) { bw.put(vOf(mx / 2 + i % 8, my / 2 + i / 8) & 0xff, 8); i += 1 }
       mb += 1
     }
-    bw.trailing()
+    trailing(bw)
     val out = new java.io.ByteArrayOutputStream()
     Seq(nal(3, 7, writeSps(w, h)), nal(3, 8, writePps()),
       nal(3, 5, bw.bytes())).foreach(n => out.write(n, 0, n.length))
@@ -419,7 +361,7 @@ object H264Codec {
     val recU = new Array[Byte](cw * ch)
     val recV = new Array[Byte](cw * ch)
     val modeG = new ModeGrid(mbW * 4, mbH * 4)
-    val bw = new BitWriter
+    val bw = new MsbWriter
     bw.ue(0) // first_mb_in_slice
     bw.ue(7) // slice_type: I
     bw.ue(0) // pps id
@@ -1135,7 +1077,7 @@ object H264Codec {
     val recU = new Array[Byte](cw * (h / 2))
     val recV = new Array[Byte](cw * (h / 2))
     val mg = new MotionGrid(mbW, mbH)
-    val bw = new BitWriter
+    val bw = new MsbWriter
     bw.ue(0) // first_mb_in_slice
     bw.ue(5) // slice_type: P
     bw.ue(0) // pps id
@@ -1500,7 +1442,7 @@ object H264Codec {
     val qp = 28
     val ws = p.wspec
     val mbW = w / 16; val mbH = h / 16; val nMb = mbW * mbH
-    val bw = new BitWriter
+    val bw = new MsbWriter
     bw.ue(0) // first_mb_in_slice
     bw.ue(5) // slice_type: P
     bw.ue(0) // pps id
@@ -1574,7 +1516,7 @@ object H264Codec {
                         shiftUnits: Int): Array[Byte] = {
     val mbW = w / 16; val mbH = h / 16; val nMb = mbW * mbH
     val colv = w > h
-    val bw = new BitWriter
+    val bw = new MsbWriter
     bw.ue(0) // first_mb_in_slice
     bw.ue(5) // slice_type: P
     bw.ue(0) // pps id
@@ -1636,7 +1578,7 @@ object H264Codec {
                             ltModify: Boolean = false): Array[Byte] = {
     val qp = 28
     val mbW = w / 16; val mbH = h / 16; val nMb = mbW * mbH
-    val bw = new BitWriter
+    val bw = new MsbWriter
     bw.ue(0) // first_mb_in_slice
     bw.ue(5) // slice_type: P
     bw.ue(0) // pps id
@@ -1788,7 +1730,7 @@ object H264Codec {
     val qpc = chromaQp(qp - 6)
     val mbW = w / 16; val mbH = h / 16; val nMb = mbW * mbH
     val cw = w / 2
-    val bw = new BitWriter
+    val bw = new MsbWriter
     bw.ue(0) // first_mb_in_slice
     bw.ue(6) // slice_type: B
     bw.ue(0) // pps id
@@ -2267,7 +2209,7 @@ object H264Codec {
 
   private def lumaCtx(nC: Int): Int = if (nC < 2) 0 else if (nC < 4) 1 else 2
 
-  private def writeCoeffToken(bw: BitWriter, nC: Int, t1: Int, tc: Int): Unit = {
+  private def writeCoeffToken(bw: MsbWriter, nC: Int, t1: Int, tc: Int): Unit = {
     if (nC == -1) bw.ue(chromaDcTokenRank((t1, tc)))
     else if (nC >= 8) {
       // spec 6-bit FLC: (totalCoeff-1)<<2 | trailingOnes, with the
@@ -2277,13 +2219,13 @@ object H264Codec {
     } else bw.ue(lumaTokenRank(lumaCtx(nC))((t1, tc)))
   }
 
-  private def readCoeffToken(br: BitReader, nC: Int): (Int, Int) = {
+  private def readCoeffToken(br: MsbReader, nC: Int): (Int, Int) = {
     if (nC == -1) {
       val r = br.ue()
       require(r < chromaDcTokenSyms.length, "h264: coeff_token out of range (chroma DC)")
       chromaDcTokenSyms(r)
     } else if (nC >= 8) {
-      val v = br.get(6)
+      val v = br.read(6)
       if (v == 3) (0, 0)
       else {
         val tc = (v >> 2) + 1; val t1 = v & 3
@@ -2301,7 +2243,7 @@ object H264Codec {
   /** Write one level's prefix/suffix given the current suffixLength;
     * `code` is the spec levelCode (offsets already applied).
     */
-  private def writeLevelCode(bw: BitWriter, code: Int, sl: Int): Unit = {
+  private def writeLevelCode(bw: MsbWriter, code: Int, sl: Int): Unit = {
     def unary(p: Int): Unit = { bw.put(0, p); bw.put(1, 1) }
     if (sl == 0) {
       if (code < 14) unary(code)
@@ -2334,7 +2276,7 @@ object H264Codec {
   /** CAVLC-encode one residual block (`coef` in scan order; n = 16 luma
     * DC / 15 AC / 4 chroma DC). Returns TotalCoeff for the nC grids.
     */
-  private def writeBlock(bw: BitWriter, coef: Array[Int], nC: Int): Int = {
+  private def writeBlock(bw: MsbWriter, coef: Array[Int], nC: Int): Int = {
     val n = coef.length
     val pos = (0 until n).filter(coef(_) != 0).toArray
     val tc = pos.length
@@ -2374,25 +2316,25 @@ object H264Codec {
   }
 
   /** CAVLC-decode one residual block into scan order. */
-  private def readBlock(br: BitReader, n: Int, nC: Int): Array[Int] = {
+  private def readBlock(br: MsbReader, n: Int, nC: Int): Array[Int] = {
     val (t1, tc) = readCoeffToken(br, nC)
     require(tc <= n, "h264: TotalCoeff exceeds block size")
     val out = new Array[Int](n)
     if (tc == 0) return out
     val levels = new Array[Int](tc) // index 0 = highest frequency
     var i = 0
-    while (i < t1) { levels(i) = if (br.get(1) == 1) -1 else 1; i += 1 }
+    while (i < t1) { levels(i) = if (br.read(1) == 1) -1 else 1; i += 1 }
     var sl = if (tc > 10 && t1 < 3) 1 else 0
     while (i < tc) {
       var prefix = 0
-      while (br.get(1) == 0) {
+      while (br.read(1) == 0) {
         prefix += 1
         require(prefix <= 31, "h264: level_prefix too long")
       }
       val size = if (prefix >= 15) prefix - 3
         else if (prefix == 14 && sl == 0) 4
         else sl
-      var code = (math.min(15, prefix) << sl) + (if (size > 0) br.get(size) else 0)
+      var code = (math.min(15, prefix) << sl) + (if (size > 0) br.read(size) else 0)
       if (prefix >= 15 && sl == 0) code += 15
       if (prefix >= 16) code += (1 << (prefix - 3)) - 4096
       if (i == t1 && t1 < 3) code += 2
@@ -2430,12 +2372,12 @@ object H264Codec {
     * given nC context.
     */
   private[operators] def cavlcRoundtrip(coef: Array[Int], nC: Int): Array[Int] = {
-    val bw = new BitWriter
+    val bw = new MsbWriter
     writeBlock(bw, coef, nC)
-    bw.trailing()
-    val br = new BitReader(bw.bytes())
+    trailing(bw)
+    val br = rbspReader(bw.bytes())
     val out = readBlock(br, coef.length, nC)
-    br.trailing()
+    trailing(br)
     out
   }
 
@@ -2489,7 +2431,7 @@ object H264Codec {
     def finish(): Unit
   }
 
-  private final class CavlcSink(bw: BitWriter, mbW: Int, mbH: Int) extends IntraSink {
+  private final class CavlcSink(bw: MsbWriter, mbW: Int, mbH: Int) extends IntraSink {
     private val tcY = new TcGrid(mbW * 4, mbH * 4)
     private val tcCb = new TcGrid(mbW * 2, mbH * 2)
     private val tcCr = new TcGrid(mbW * 2, mbH * 2)
@@ -2513,9 +2455,9 @@ object H264Codec {
     def mbTypeI(t: Int, mb: Int): Unit = bw.ue(t)
     def pcm(ys: Array[Int], us: Array[Int], vs: Array[Int], mb: Int): Unit = {
       bw.alignZero()
-      ys.foreach(bw.putByte)
-      us.foreach(bw.putByte)
-      vs.foreach(bw.putByte)
+      ys.foreach(x => bw.put(x & 0xff, 8))
+      us.foreach(x => bw.put(x & 0xff, 8))
+      vs.foreach(x => bw.put(x & 0xff, 8))
       val r = mb / mbW; val c = mb % mbW
       var b = 0
       while (b < 16) { tcY.set(c * 4 + blkX(b) / 4, r * 4 + blkY(b) / 4, 16); b += 1 }
@@ -2547,11 +2489,11 @@ object H264Codec {
     def endMb(last: Boolean): Unit = ()
     def finish(): Unit = {
       if (skipRun > 0) bw.ue(skipRun)
-      bw.trailing()
+      trailing(bw)
     }
   }
 
-  private final class CavlcSource(br: BitReader, mbW: Int, mbH: Int) extends IntraSource {
+  private final class CavlcSource(br: MsbReader, mbW: Int, mbH: Int) extends IntraSource {
     private val tcY = new TcGrid(mbW * 4, mbH * 4)
     private val tcCb = new TcGrid(mbW * 2, mbH * 2)
     private val tcCr = new TcGrid(mbW * 2, mbH * 2)
@@ -2566,13 +2508,13 @@ object H264Codec {
     def subMbType8(): Int = br.ue()
     def subMbTypeB(): Int = br.ue()
     def mvd(cx: Int, cy: Int, wC: Int, hC: Int): (Int, Int) = (br.se(), br.se())
-    def refIdx(cx: Int, cy: Int, wC: Int, hC: Int): Int = 1 - br.get(1)
+    def refIdx(cx: Int, cy: Int, wC: Int, hC: Int): Int = 1 - br.read(1)
     def mbTypeI(mb: Int): Int = br.ue()
     def pcm(mb: Int): (Array[Int], Array[Int], Array[Int]) = {
-      br.alignByte()
-      val ys = Array.fill(256)(br.readByte())
-      val us = Array.fill(64)(br.readByte())
-      val vs = Array.fill(64)(br.readByte())
+      require(br.alignByte() == 0, "h264: nonzero pcm alignment bit")
+      val ys = Array.fill(256)(br.read(8))
+      val us = Array.fill(64)(br.read(8))
+      val vs = Array.fill(64)(br.read(8))
       val r = mb / mbW; val c = mb % mbW
       var b = 0
       while (b < 16) { tcY.set(c * 4 + blkX(b) / 4, r * 4 + blkY(b) / 4, 16); b += 1 }
@@ -2585,9 +2527,9 @@ object H264Codec {
       (ys, us, vs)
     }
     def i4Mode(mpm: Int): Int =
-      if (br.get(1) == 1) mpm
+      if (br.read(1) == 1) mpm
       else {
-        val rem = br.get(3)
+        val rem = br.read(3)
         if (rem < mpm) rem else rem + 1
       }
     def chromaMode(mb: Int): Int = {
@@ -2618,7 +2560,7 @@ object H264Codec {
           coefs
       }
     def endMb(last: Boolean): Unit = ()
-    def finish(): Unit = br.trailing()
+    def finish(): Unit = trailing(br)
   }
 
   // CABAC context allocation (pinned numbering, documented): see the
@@ -2669,7 +2611,7 @@ object H264Codec {
     }
   }
 
-  private final class CabacSink(bw: BitWriter, mbW: Int, mbH: Int,
+  private final class CabacSink(bw: MsbWriter, mbW: Int, mbH: Int,
                                 initIdc: Int = 0) extends IntraSink {
     bw.alignOnes() // cabac_alignment_one_bit
     private val st = new Array[Int](2 * NumCtx)
@@ -2835,9 +2777,9 @@ object H264Codec {
       // the terminate(1) inside mbTypeI flushed the engine; align and
       // emit raw samples, then re-initialize (9.3.1.2)
       bw.alignZero()
-      ys.foreach(bw.putByte)
-      us.foreach(bw.putByte)
-      vs.foreach(bw.putByte)
+      ys.foreach(x => bw.put(x & 0xff, 8))
+      us.foreach(x => bw.put(x & 0xff, 8))
+      vs.foreach(x => bw.put(x & 0xff, 8))
       eng.reinit()
       val r = mb / mbW; val c = mb % mbW
       var b = 0
@@ -2987,12 +2929,15 @@ object H264Codec {
     def finish(): Unit = bw.alignZero()
   }
 
-  private final class CabacSource(br: BitReader, mbW: Int, mbH: Int,
+  private final class CabacSource(br: MsbReader, mbW: Int, mbH: Int,
                                   initIdc: Int = 0) extends IntraSource {
-    br.alignOnesCheck() // cabac_alignment_one_bit
+    locally { // cabac_alignment_one_bit
+      val k = (-br.pos & 7).toInt
+      require(br.alignByte() == (1 << k) - 1, "h264: cabac alignment bit not one")
+    }
     private val st = new Array[Int](2 * NumCtx)
     cabacInitStates(st, initIdc)
-    private val eng = new H264Cabac.Dec(() => br.bitOrZero())
+    private val eng = new H264Cabac.Dec(() => bitOrZero(br))
     private val mbT = Array.fill(mbW * mbH)(-1)
     private val cmodeG = new Array[Int](mbW * mbH)
     private val cbpLG = new Array[Int](mbW * mbH)
@@ -3136,10 +3081,10 @@ object H264Codec {
       v
     }
     def pcm(mb: Int): (Array[Int], Array[Int], Array[Int]) = {
-      br.alignByte0() // discard to the byte boundary after the flush
-      val ys = Array.fill(256)(br.readByte())
-      val us = Array.fill(64)(br.readByte())
-      val vs = Array.fill(64)(br.readByte())
+      br.alignByte() // discard to the byte boundary after the flush
+      val ys = Array.fill(256)(br.read(8))
+      val us = Array.fill(64)(br.read(8))
+      val vs = Array.fill(64)(br.read(8))
       eng.reinit()
       val r = mb / mbW; val c = mb % mbW
       var b = 0
@@ -3794,7 +3739,7 @@ object H264Codec {
     val y = new Array[Byte](w * h)
     val u = new Array[Byte](cw * ch)
     val v = new Array[Byte](cw * ch)
-    val br = new BitReader(rbsp)
+    val br = rbspReader(rbsp)
     require(br.ue() == 0, "h264: slices not starting at MB 0 outside this profile")
     val sliceType = br.ue()
     val isP = sliceType == 0 || sliceType == 5
@@ -3806,10 +3751,10 @@ object H264Codec {
     if (isB) require(!refA.longTerm && !refB.longTerm,
       "h264: B slice over long-term references outside this profile")
     require(br.ue() == 0, "h264: unknown PPS id")
-    val frameNum = br.get(sps.log2MaxFrameNum)
+    val frameNum = br.read(sps.log2MaxFrameNum)
     if (isIdr) br.ue() // idr_pic_id
-    val pocCur = br.get(sps.log2MaxPoc) // poc lsb (type 0, no wrap here)
-    val temporalDirect = isB && br.get(1) == 0 // direct_spatial_mv_pred_flag
+    val pocCur = br.read(sps.log2MaxPoc) // poc lsb (type 0, no wrap here)
+    val temporalDirect = isB && br.read(1) == 0 // direct_spatial_mv_pred_flag
     // B reference lists (8.2.4.2.3 defaults over the two-picture DPB)
     // are ordered by POC, independent of the direct prediction mode: a B
     // that displays AFTER both references keeps list0 = newest / list1 =
@@ -3854,13 +3799,13 @@ object H264Codec {
       require(buf.nonEmpty, "h264: empty modification list")
     }
     if (isP || isB) {
-      if (br.get(1) == 1) { // num_ref_idx_active_override_flag
+      if (br.read(1) == 1) { // num_ref_idx_active_override_flag
         require(isP, "h264: B num_ref_idx override outside this profile")
         numRef0 = br.ue() + 1
         require(numRef0 <= 2, "h264: more than two list-0 references outside this profile")
       }
-      if (br.get(1) == 1) readMods(l0Mods) // ref_pic_list_modification_flag_l0
-      if (isB && br.get(1) == 1) readMods(l1Mods) // ..._flag_l1
+      if (br.read(1) == 1) readMods(l0Mods) // ref_pic_list_modification_flag_l0
+      if (isB && br.read(1) == 1) readMods(l1Mods) // ..._flag_l1
     }
     if (temporalDirect) require(l1Mods.isEmpty,
       "h264: temporal direct over a modified list 1 outside this profile")
@@ -3931,9 +3876,9 @@ object H264Codec {
       wpDC = br.ue(); require(wpDC <= 7, "h264: chroma weight denom out of range")
       var ri = 0
       while (ri < numRef0) {
-        if (br.get(1) == 1) wpLuma(ri) = (br.se(), br.se())
+        if (br.read(1) == 1) wpLuma(ri) = (br.se(), br.se())
         else wpLuma(ri) = (1 << wpDL, 0)
-        if (br.get(1) == 1) {
+        if (br.read(1) == 1) {
           wpCb(ri) = (br.se(), br.se())
           wpCr(ri) = (br.se(), br.se())
         } else {
@@ -3951,9 +3896,9 @@ object H264Codec {
     // long_term_frame_idx in `b`. Application happens in
     // [[decodeSequence]] (8.2.5.4) in coded order.
     val mmcoOps = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
-    if (isIdr) { br.get(1); br.get(1) } // dec_ref_pic_marking (IDR form)
+    if (isIdr) { br.read(1); br.read(1) } // dec_ref_pic_marking (IDR form)
     else if (refIdc != 0) {
-      if (br.get(1) == 1) { // adaptive_ref_pic_marking_mode_flag (7.4.3.3)
+      if (br.read(1) == 1) { // adaptive_ref_pic_marking_mode_flag (7.4.3.3)
         var op = br.ue()
         var n = 0
         while (op != 0) {

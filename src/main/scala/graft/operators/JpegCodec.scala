@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.operators.Bits.{MsbReader, MsbWriter}
+
 import graft.operators.ImageCodec.DecodedImage
 
 /** Baseline JPEG codec with zero non-JDK dependencies — the PNG precedent
@@ -94,46 +96,62 @@ object JpegCodec {
       }
       require(k == vals.length, s"jpeg: DHT declares $k codes, carries ${vals.length} values")
     }
-    def decode(br: BitReader): Int = {
+    /** The shortest code the next bits complete; only its bits are
+      * consumed, and a stream that ends inside the code fails as such.
+      */
+    def decode(br: MsbReader): Int = {
+      val bits = br.peek(16)
       var l = 1
-      var code = br.nextBit()
-      while (l < 16 && (maxCode(l) < 0 || code > maxCode(l))) {
-        code = (code << 1) | br.nextBit(); l += 1
+      while (l <= 16) {
+        val code = bits >>> (16 - l)
+        if (maxCode(l) >= 0 && code <= maxCode(l)) {
+          br.skip(l)
+          return vals(valPtr(l) + code - minCode(l)) & 0xff
+        }
+        l += 1
       }
-      require(maxCode(l) >= 0 && code <= maxCode(l), "jpeg: invalid Huffman code in entropy stream")
-      vals(valPtr(l) + code - minCode(l)) & 0xff
+      br.skip(16)
+      throw new IllegalArgumentException("jpeg: invalid Huffman code in entropy stream")
     }
   }
 
-  /** Entropy-stream bit reader with FF00 byte unstuffing. A bare marker
-    * (FF xx, xx ≠ 00) inside coefficient data means the stream lies about
-    * its block count — reject. Restart markers are consumed OUTSIDE the
-    * reader, at byte-aligned restart boundaries.
+  /** One restart interval of entropy-coded data from blob offset `from`:
+    * the bytes up to the next marker (FF xx, xx ≠ 00) or the blob's end,
+    * FF00 unstuffed, behind the shared MSB-first reader. Reading past
+    * them fails with why they end — a bare marker inside coefficient data
+    * means the stream lies about its block count. Restart markers are
+    * consumed outside the reader, at byte-aligned restart boundaries.
     */
-  private final class BitReader(b: Array[Byte], var pos: Int) {
-    private var cnt = 0
-    private var cur = 0
-    def nextBit(): Int = {
-      if (cnt == 0) {
-        require(pos < b.length, "jpeg: entropy stream truncated")
-        cur = b(pos) & 0xff; pos += 1
-        if (cur == 0xff) {
-          require(pos < b.length, "jpeg: entropy stream truncated after FF")
-          val m = b(pos) & 0xff
-          require(m == 0x00, f"jpeg: unexpected marker FF$m%02X inside entropy data")
-          pos += 1 // stuffed zero byte
-        }
-        cnt = 8
+  private final class Interval(b: Array[Byte], from: Int) {
+    private var stop = from // blob offset where the data ends
+    private var stuffed = 0 // FF 00 pairs in [from, stop)
+    locally {
+      var marker = false
+      while (!marker && stop < b.length) {
+        if (b(stop) != -1) stop += 1
+        else if (stop + 1 < b.length && b(stop + 1) == 0) { stop += 2; stuffed += 1 }
+        else marker = true
       }
-      cnt -= 1
-      (cur >> cnt) & 1
     }
-    def receive(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { v = (v << 1) | nextBit(); i += 1 }
-      v
+    private def why: String =
+      if (stop >= b.length) "entropy stream truncated"
+      else if (stop + 1 >= b.length) "entropy stream truncated after FF"
+      else f"unexpected marker FF${b(stop + 1) & 0xff}%02X inside entropy data"
+    private val data = new Array[Byte](stop - from - stuffed)
+    locally {
+      var p = from
+      var i = 0
+      while (p < stop) { data(i) = b(p); i += 1; p += (if (b(p) == -1) 2 else 1) }
     }
-    def align(): Unit = cnt = 0
+    val br: MsbReader = new MsbReader(data, "jpeg", why)
+    /** Blob offset just past the consumed bytes (each FF came from FF 00). */
+    def blobPos: Int = {
+      val k = br.bytePos
+      var p = from + k
+      var i = 0
+      while (i < k) { if (data(i) == -1) p += 1; i += 1 }
+      p
+    }
   }
 
   /** T.81 F.2.2.1 EXTEND: map the n received magnitude bits to the signed
@@ -315,7 +333,8 @@ object JpegCodec {
     val planeH = comps.map(c => mcusY * c.v * 8)
     val planes = Array.tabulate(nc)(i => new Array[Byte](planeW(i) * planeH(i)))
     val pred = new Array[Int](nc)
-    val br = new BitReader(b, start)
+    var interval = new Interval(b, start)
+    var br = interval.br
     val coef = new Array[Double](64)
     val block = new Array[Int](64)
 
@@ -324,12 +343,14 @@ object JpegCodec {
     while (mcu < nMcus) {
       if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
         // byte-align, consume RSTn (n cycles 0..7), reset DC predictors
-        br.align()
-        require(br.pos + 2 <= b.length, "jpeg: truncated at restart marker")
+        br.alignByte()
+        val at = interval.blobPos
+        require(at + 2 <= b.length, "jpeg: truncated at restart marker")
         val expected = 0xd0 + ((mcu / restartInterval - 1) % 8)
-        require((b(br.pos) & 0xff) == 0xff && (b(br.pos + 1) & 0xff) == expected,
-          f"jpeg: expected RST${expected - 0xd0} at offset ${br.pos}")
-        br.pos += 2
+        require((b(at) & 0xff) == 0xff && (b(at + 1) & 0xff) == expected,
+          f"jpeg: expected RST${expected - 0xd0} at offset $at")
+        interval = new Interval(b, at + 2)
+        br = interval.br
         java.util.Arrays.fill(pred, 0)
       }
       val my = mcu / mcusX
@@ -347,7 +368,7 @@ object JpegCodec {
             java.util.Arrays.fill(block, 0)
             val t = scanDc(s).decode(br)
             require(t <= 11, s"jpeg: DC category $t out of baseline range")
-            pred(ci) += extend(br.receive(t), t)
+            pred(ci) += extend(br.read(t), t)
             block(0) = pred(ci) * q(0)
             var k = 1
             while (k < 64) {
@@ -360,7 +381,7 @@ object JpegCodec {
                 k += r
                 require(k < 64, "jpeg: AC run past end of block")
                 val nat = Zigzag(k)
-                block(nat) = extend(br.receive(sz), sz) * q(nat)
+                block(nat) = extend(br.read(sz), sz) * q(nat)
                 k += 1
               }
             }
@@ -451,24 +472,18 @@ object JpegCodec {
   /** Flat quantization table (all `q`) in natural order. */
   def flatQ(q: Int): Array[Int] = Array.fill(64)(q)
 
-  private final class BitWriter(out: java.io.ByteArrayOutputStream) {
-    private var cur = 0
-    private var cnt = 0
-    def put(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        cnt += 1
-        if (cnt == 8) {
-          out.write(cur)
-          if (cur == 0xff) out.write(0x00) // byte stuffing (B.1.1.5)
-          cur = 0; cnt = 0
-        }
-        i -= 1
-      }
+  /** Flush one restart interval's entropy-coded bits: pad the last byte
+    * with 1-bits and stuff a 00 after every FF (B.1.1.5).
+    */
+  private def flushStuffed(bw: MsbWriter, out: java.io.ByteArrayOutputStream): Unit = {
+    bw.alignOnes()
+    val bytes = bw.bytes()
+    var i = 0
+    while (i < bytes.length) {
+      out.write(bytes(i))
+      if (bytes(i) == -1) out.write(0x00)
+      i += 1
     }
-    /** Pad the last partial byte with 1-bits (B.1.1.5) and flush. */
-    def flush(): Unit = if (cnt > 0) put((1 << (8 - cnt)) - 1, 8 - cnt)
   }
 
   /** Canonical single-length Huffman table over the symbols actually used:
@@ -488,7 +503,7 @@ object JpegCodec {
     private val codeOf = new Array[Int](256)
     java.util.Arrays.fill(codeOf, -1)
     symbols.zipWithIndex.foreach { case (s, i) => codeOf(s) = i }
-    def put(bw: BitWriter, sym: Int): Unit = {
+    def put(bw: MsbWriter, sym: Int): Unit = {
       val c = codeOf(sym)
       require(c >= 0, s"jpeg encode: symbol $sym not in table")
       bw.put(c, len)
@@ -751,14 +766,14 @@ object JpegCodec {
     sos.write(0); sos.write(63); sos.write(0) // Ss/Se/AhAl
     segment(0xda, sos.toByteArray)
     // entropy-coded data
-    var bw = new BitWriter(out)
+    var bw = new MsbWriter
     java.util.Arrays.fill(predC, 0)
     bi = 0
     while (bi < quantBlocks.length) {
       if (restartInterval > 0 && bi > 0 && bi % (blocksPerMcu * restartInterval) == 0) {
-        bw.flush()
+        flushStuffed(bw, out)
         marker(0xd0 + ((bi / (blocksPerMcu * restartInterval) - 1) % 8))
-        bw = new BitWriter(out)
+        bw = new MsbWriter
         java.util.Arrays.fill(predC, 0)
       }
       val c = blockComp(bi); val ti = if (c == 0) 0 else 1
@@ -783,7 +798,7 @@ object JpegCodec {
       if (run > 0) acHuff(ti).put(bw, 0x00)
       bi += 1
     }
-    bw.flush()
+    flushStuffed(bw, out)
     marker(0xd9) // EOI
     out.toByteArray
   }

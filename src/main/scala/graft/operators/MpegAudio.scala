@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.operators.Bits.{MsbReader, MsbWriter}
+
 /** MPEG-1 Audio Layer I/II/III decoder (ISO/IEC 11172-3) in pure JDK —
   * the PERCEPTUAL rungs of the lossy-audio ladder: the waveform rungs
   * (G.711, IMA/MS ADPCM) code the time-domain signal directly, while web
@@ -341,19 +343,24 @@ object MpegAudio {
     (depth, codes)
   }
 
-  /** Shared canonical-code decode state over [[canonicalCode]] output:
-    * codes of one length are consecutive in increasing symbol order, so a
-    * (len, code) hit is a range check + array index — no per-bit tuple
-    * allocation or hash probe. Used by the AAC spectral/scalefactor
-    * readers; [[HuffTable]] keeps an inlined copy on its own BitReader.
+  /** Canonical-code decode state over [[canonicalCode]] output, shared by
+    * [[HuffTable]] and the AAC spectral/scalefactor books: codes of one
+    * length are consecutive in increasing symbol order, so a (len, code)
+    * hit is a range check + array index — no per-bit tuple allocation or
+    * hash probe. (Prefix-freeness means a longer code's prefix can never
+    * fall inside a shorter length's occupied range.)
     */
   private[operators] final class CanonicalReader(lens: Array[Int],
                                                  codes: Array[Int]) {
-    val maxLen: Int = {
+    /** Longest code, computed once: a per-read rescan of `lens` was once
+      * the single hottest frame of the whole MP3 decode.
+      */
+    private val maxLen: Int = {
       var m = 0; var i = 0
       while (i < lens.length) { if (lens(i) > m) m = lens(i); i += 1 }
       m
     }
+    require(maxLen <= 32, s"canonical code of length $maxLen exceeds 32 bits")
     private val symsInOrder: Array[Int] =
       lens.indices.sortBy(s => (lens(s), s)).toArray
     private val minCodeAt = new Array[Int](maxLen + 1)
@@ -369,16 +376,22 @@ object MpegAudio {
         i += 1
       }
     }
-    /** Symbol for the next code on the bit source, or throws `what`. */
-    def read(get: Int => Int, what: String): Int = {
-      var code = 0
-      var len = 0
-      while (len < maxLen) {
-        code = (code << 1) | get(1)
+    /** Symbol for the next code on `br`, or throws `what`. Only the code's
+      * own bits are consumed; a stream that ends inside the code fails as
+      * truncated.
+      */
+    def read(br: MsbReader, what: String): Int = {
+      val bits = br.peek(maxLen)
+      var len = 1
+      while (len <= maxLen) {
+        val d = (bits >>> (maxLen - len)) - minCodeAt(len)
+        if (d >= 0 && d < countAt(len)) {
+          br.skip(len)
+          return symsInOrder(baseAt(len) + d)
+        }
         len += 1
-        val d = code - minCodeAt(len)
-        if (d >= 0 && d < countAt(len)) return symsInOrder(baseAt(len) + d)
       }
+      br.skip(maxLen)
       throw new IllegalArgumentException(what)
     }
   }
@@ -386,50 +399,11 @@ object MpegAudio {
   private[operators] final class HuffTable(val dims: Int, val linbits: Int,
                                            weights: Array[Long]) {
     private val (lens, codes) = canonicalCode(weights)
-    /** Longest code, computed ONCE. This was a `def` re-scanning `lens`
-      * with a boxed Ordering on every read() — jstack-measured as the
-      * single hottest frame of the whole MP3 decode (~70% of busy
-      * executor samples on q_mp3_swstereo).
-      */
-    val maxLen: Int = {
-      var m = 0; var i = 0
-      while (i < lens.length) { if (lens(i) > m) m = lens(i); i += 1 }
-      m
-    }
-    // Canonical decode state: canonicalCode assigns codes of one length
-    // consecutively in increasing symbol order, so a (len, code) hit is a
-    // range check + array index. (Prefix-freeness means a longer code's
-    // prefix can never fall inside a shorter length's occupied range, so
-    // this accepts exactly the pairs the old per-BIT tuple-map probe did.)
-    private val symsInOrder: Array[Int] =
-      (0 until lens.length).sortBy(s => (lens(s), s)).toArray
-    private val minCodeAt = new Array[Int](maxLen + 1)
-    private val countAt = new Array[Int](maxLen + 1)
-    private val baseAt = new Array[Int](maxLen + 1)
-    locally {
-      var i = 0
-      while (i < symsInOrder.length) {
-        val s = symsInOrder(i)
-        val l = lens(s)
-        if (countAt(l) == 0) { minCodeAt(l) = codes(s); baseAt(l) = i }
-        countAt(l) += 1
-        i += 1
-      }
-    }
+    private val reader = new CanonicalReader(lens, codes)
     def codeLen(sym: Int): Int = lens(sym)
     def write(put: (Long, Int) => Unit, sym: Int): Unit =
       put(codes(sym).toLong, lens(sym))
-    def read(br: BitReader): Int = {
-      var code = 0
-      var len = 0
-      while (len < maxLen) {
-        code = (code << 1) | br.get(1)
-        len += 1
-        val d = code - minCodeAt(len)
-        if (d >= 0 && d < countAt(len)) return symsInOrder(baseAt(len) + d)
-      }
-      throw new IllegalArgumentException("mpeg audio: invalid Huffman code")
-    }
+    def read(br: MsbReader): Int = reader.read(br, "mpeg audio: invalid Huffman code")
   }
 
   /** The pinned big-value table family: (0,0) is heavily weighted (so
@@ -452,55 +426,6 @@ object MpegAudio {
   private[operators] lazy val l3Count1Table: HuffTable = {
     val w = Array.tabulate(16)(s => if (s == 0) 100L else 1L + ((5L * s + 3) % 11))
     new HuffTable(16, 0, w)
-  }
-
-  // ---- bit I/O (MSB-first) --------------------------------------------------
-
-  private[operators] final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var acc = 0L
-    private var nAcc = 0
-    def put(v: Long, bits: Int): Unit = {
-      require(bits >= 0 && bits <= 32 && v >= 0 && (bits == 32 || v < (1L << bits)),
-        s"BitWriter: $v does not fit $bits bits")
-      acc = (acc << bits) | v
-      nAcc += bits
-      while (nAcc >= 8) {
-        out.write(((acc >> (nAcc - 8)) & 0xff).toInt)
-        nAcc -= 8
-      }
-      (): Unit
-    }
-    def padToByte(): Unit = if (nAcc > 0) put(0, 8 - nAcc)
-    def bytes(): Array[Byte] = { padToByte(); out.toByteArray }
-  }
-
-  private[operators] final class BitReader(buf: Array[Byte], var pos: Int) {
-    private var bit = 0
-    def get(bits: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < bits) {
-        require(pos < buf.length, "mpeg audio: bitstream truncated")
-        v = (v << 1) | ((buf(pos) >> (7 - bit)) & 1)
-        bit += 1
-        if (bit == 8) { bit = 0; pos += 1 }
-        i += 1
-      }
-      v
-    }
-    def alignByte(): Unit = if (bit != 0) { bit = 0; pos += 1 }
-    def atEnd: Boolean = pos >= buf.length
-    /** Absolute bit offset — Layer III granules are sized in bits
-      * (part2_3_length) and the count1 region is bounded by it.
-      */
-    def bitPos: Long = pos.toLong * 8 + bit
-    def seekBits(target: Long): Unit = {
-      require(target >= 0 && target <= buf.length.toLong * 8,
-        "mpeg audio: seek outside the bitstream")
-      pos = (target / 8).toInt
-      bit = (target % 8).toInt
-    }
   }
 
   // ---- synthesis filterbank -------------------------------------------------
@@ -559,7 +484,7 @@ object MpegAudio {
                            sf: Array[Array[Int]], raw: Array[Array[Int]])
 
   private def header(layer: Int, channels: Int = 1,
-                     jointExt: Int = -1): (BitWriter => Unit) = bw => {
+                     jointExt: Int = -1): (MsbWriter => Unit) = bw => {
     bw.put(0x7ff, 11) // sync
     bw.put(3, 2) // MPEG-1
     bw.put(if (layer == 1) 3 else 2, 2) // layer bits: 11 = I, 10 = II
@@ -586,7 +511,7 @@ object MpegAudio {
                     raw: (Int, Int, Int) => Int): Array[Byte] = {
     require(ext >= 0 && ext < 4)
     val bound = 4 + 4 * ext
-    val bw = new BitWriter
+    val bw = new MsbWriter
     header(1, 2, jointExt = ext)(bw)
     var sb = 0
     while (sb < 32) {
@@ -640,7 +565,7 @@ object MpegAudio {
                     raw: (Int, Int, Int) => Int): Array[Byte] = {
     require(ext >= 0 && ext < 4)
     val bound = 4 + 4 * ext
-    val bw = new BitWriter
+    val bw = new MsbWriter
     header(2, 2, jointExt = ext)(bw)
     var sb = 0
     while (sb < L2SbLimit) {
@@ -716,7 +641,7 @@ object MpegAudio {
 
   def encodeL1Stereo(alloc: (Int, Int) => Int, sf: (Int, Int) => Int,
                      raw: (Int, Int, Int) => Int): Array[Byte] = {
-    val bw = new BitWriter
+    val bw = new MsbWriter
     header(1, 2)(bw)
     var sb = 0
     while (sb < 32) {
@@ -761,7 +686,7 @@ object MpegAudio {
   def encodeL2Stereo(alloc: (Int, Int) => Int, scfsi: (Int, Int) => Int,
                      sf: (Int, Int, Int) => Int,
                      raw: (Int, Int, Int) => Int): Array[Byte] = {
-    val bw = new BitWriter
+    val bw = new MsbWriter
     header(2, 2)(bw)
     var sb = 0
     while (sb < L2SbLimit) {
@@ -831,7 +756,7 @@ object MpegAudio {
 
   def encodeL1Frame(f: L1Frame): Array[Byte] = {
     require(f.alloc.length == 32 && f.sf.length == 32 && f.raw.length == 12)
-    val bw = new BitWriter
+    val bw = new MsbWriter
     header(1)(bw)
     var sb = 0
     while (sb < 32) { bw.put(f.alloc(sb).toLong, 4); sb += 1 }
@@ -859,7 +784,7 @@ object MpegAudio {
 
   def encodeL2Frame(f: L2Frame): Array[Byte] = {
     require(f.alloc.length == L2SbLimit && f.raw.length == 36)
-    val bw = new BitWriter
+    val bw = new MsbWriter
     header(2)(bw)
     var sb = 0
     while (sb < L2SbLimit) { bw.put(f.alloc(sb).toLong, l2AllocBits(sb)); sb += 1 }
@@ -932,29 +857,13 @@ object MpegAudio {
                              // long scalefacs for bands 0..1 ride `scalefac`
                              mixed: Boolean = false)
 
-  /** Bit-level scratch buffer: Layer III granules are sized in bits
-    * (part2_3_length is written BEFORE the main data), so granule bodies
-    * are assembled first and concatenated bit-exactly.
-    */
-  private final class BitBuf {
-    private val bits = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def put(v: Long, n: Int): Unit = {
-      require(n >= 0 && n <= 32 && v >= 0 && (n == 32 || v < (1L << n)),
-        s"BitBuf: $v does not fit $n bits")
-      var i = n - 1
-      while (i >= 0) { bits += ((v >> i) & 1L).toInt; i -= 1 }
-    }
-    def length: Int = bits.length
-    def drainTo(bw: BitWriter): Unit = bits.foreach(b => bw.put(b.toLong, 1))
-  }
-
   /** One Layer III MONO frame: 4-bit scfsi (band-group scalefactor reuse
     * between the frame's two granules) and two granules. Free-format
     * framing, main_data_begin = 0 (no bit reservoir in this profile).
     */
   /** Main-data bits of one granule-channel (scalefactors + Huffman). */
-  private def l3GranuleBits(g: L3Granule, scfsi: Int, gi: Int): BitBuf = {
-      val bb = new BitBuf
+  private def l3GranuleBits(g: L3Granule, scfsi: Int, gi: Int): MsbWriter = {
+      val bb = new MsbWriter
       val slen1 = l3Slen1(g.scalefacCompress)
       val slen2 = l3Slen2(g.scalefacCompress)
       if (g.blockType == 2) {
@@ -1063,7 +972,7 @@ object MpegAudio {
   }
 
   /** The 59-bit per-(granule, channel) side-info block. */
-  private def l3WriteSide(bw: BitWriter, g: L3Granule, bodyLen: Int): Unit = {
+  private def l3WriteSide(bw: MsbWriter, g: L3Granule, bodyLen: Int): Unit = {
     require(bodyLen < 4096, "layer3: part2_3_length overflow")
     bw.put(bodyLen.toLong, 12) // part2_3_length
     val bigValues = if (g.lines.isEmpty) 0 else g.lines.map(_._1).max / 2 + 1
@@ -1106,7 +1015,7 @@ object MpegAudio {
 
   /** The 4-byte MPEG-1 Layer III frame header (44100; free format by
     * default, or a fixed-rate index for reservoir streams). */
-  private def l3WriteHeader(bw: BitWriter, mode: Int, modeExt: Int,
+  private def l3WriteHeader(bw: MsbWriter, mode: Int, modeExt: Int,
                             brIdx: Int = 0, crc: Boolean = false,
                             padding: Int = 0): Unit = {
     require(brIdx >= 0 && brIdx <= 14, "layer3: bitrate index is 0..14")
@@ -1128,10 +1037,10 @@ object MpegAudio {
     require(scfsi == 0 || gr.forall(_.blockType != 2),
       "layer3: scfsi reuse is a long-block mechanism (spec: zero when short blocks appear)")
     val bodies = Array(l3GranuleBits(gr(0), scfsi, 0), l3GranuleBits(gr(1), scfsi, 1))
-    val hw = new BitWriter
+    val hw = new MsbWriter
     l3WriteHeader(hw, mode = 3, modeExt = 0, crc = crc)
     val hdr = hw.bytes() // 4 bytes
-    val sw = new BitWriter
+    val sw = new MsbWriter
     sw.put(0, 9) // main_data_begin: no reservoir in this profile
     sw.put(0, 5) // private bits
     sw.put(scfsi.toLong, 4)
@@ -1147,8 +1056,8 @@ object MpegAudio {
       out.write(c >> 8); out.write(c & 0xff)
     }
     out.write(side, 0, side.length)
-    val mw = new BitWriter
-    bodies.foreach(_.drainTo(mw))
+    val mw = new MsbWriter
+    bodies.foreach(mw.append)
     val main = mw.bytes()
     out.write(main, 0, main.length)
     out.toByteArray
@@ -1200,13 +1109,13 @@ object MpegAudio {
       require(surplus <= 511, "layer3 fixture: reservoir surplus beyond 511 bytes")
       m
     }
-    val logicalBw = new BitWriter
-    bodies.foreach { case (a, b) => a.drainTo(logicalBw); b.drainTo(logicalBw) }
+    val logicalBw = new MsbWriter
+    bodies.foreach { case (a, b) => logicalBw.append(a); logicalBw.append(b) }
     val logical = logicalBw.bytes()
     val out = new java.io.ByteArrayOutputStream()
     var consumed = 0
     grans.indices.foreach { n =>
-      val bw = new BitWriter
+      val bw = new MsbWriter
       l3WriteHeader(bw, mode = 3, modeExt = 0, brIdx = brIdx,
         padding = padding(n))
       bw.put(mdbs(n).toLong, 9) // main_data_begin
@@ -1247,7 +1156,7 @@ object MpegAudio {
       "layer3: intensity stereo over window-switching granules outside this profile")
     val bodies = Array.tabulate(2, 2)((gi, ch) =>
       l3GranuleBits(gr(gi)(ch), scfsi(ch), gi))
-    val bw = new BitWriter
+    val bw = new MsbWriter
     l3WriteHeader(bw, mode = if (joint) 1 else 0, modeExt = modeExt)
     // side info (stereo: 32 bytes)
     bw.put(0, 9) // main_data_begin
@@ -1256,7 +1165,7 @@ object MpegAudio {
     bw.put(scfsi(1).toLong, 4)
     for (gi <- 0 to 1; ch <- 0 to 1)
       l3WriteSide(bw, gr(gi)(ch), bodies(gi)(ch).length)
-    for (gi <- 0 to 1; ch <- 0 to 1) bodies(gi)(ch).drainTo(bw)
+    for (gi <- 0 to 1; ch <- 0 to 1) bw.append(bodies(gi)(ch))
     bw.bytes()
   }
 
@@ -1270,7 +1179,7 @@ object MpegAudio {
                            pcm: Array[Long])
 
   def decode(bytes: Array[Byte]): MpegPcm = {
-    val br = new BitReader(bytes, 0)
+    val br = new MsbReader(bytes, "mpeg audio", "bitstream truncated")
     var synths: Array[Synth] = null
     var l3Overlap: Array[Array[Array[Long]]] = null // per-channel IMDCT overlap, frame-crossing
     val pcmOut = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -1279,10 +1188,10 @@ object MpegAudio {
     var nFrames = 0
     val reservoir = scala.collection.mutable.ArrayBuffer.empty[Byte]
     while (!br.atEnd) {
-      val frameStartBits = br.bitPos
-      require(br.get(11) == 0x7ff, "mpeg audio: lost sync")
-      require(br.get(2) == 3, "mpeg audio: not MPEG-1")
-      val layerBits = br.get(2)
+      val frameStartBits = br.pos
+      require(br.read(11) == 0x7ff, "mpeg audio: lost sync")
+      require(br.read(2) == 3, "mpeg audio: not MPEG-1")
+      val layerBits = br.read(2)
       val thisLayer = layerBits match {
         case 3 => 1
         case 2 => 2
@@ -1291,15 +1200,15 @@ object MpegAudio {
       }
       require(layer == 0 || layer == thisLayer, "mpeg audio: mixed layers in one stream")
       layer = thisLayer
-      val crcProtected = br.get(1) == 0 // protection bit: 0 = CRC present
-      val brIdx = br.get(4)
+      val crcProtected = br.read(1) == 0 // protection bit: 0 = CRC present
+      val brIdx = br.read(4)
       require(brIdx == 0 || thisLayer == 3,
         "mpeg audio: fixed-rate framing is a Layer III feature in this profile")
       require(brIdx < 15, "mpeg audio: forbidden bitrate index")
-      require(br.get(2) == 0, "mpeg audio: fixture sample-rate index must be 0")
-      val padding = br.get(1)
-      br.get(1) // private
-      val mode = br.get(2)
+      require(br.read(2) == 0, "mpeg audio: fixture sample-rate index must be 0")
+      val padding = br.read(1)
+      br.read(1) // private
+      val mode = br.read(2)
       val nCh = mode match {
         case 3 => 1
         case 0 => 2 // independent stereo
@@ -1311,14 +1220,14 @@ object MpegAudio {
         "mpeg audio: mixed channel modes in one stream")
       channels = nCh
       if (synths == null) synths = Array.fill(nCh)(new Synth)
-      val modeExt = br.get(2)
-      br.get(1); br.get(1); br.get(2) // (c), original, emphasis
+      val modeExt = br.read(2)
+      br.read(1); br.read(1); br.read(2) // (c), original, emphasis
 
       if (crcProtected) {
         // error_check (2.4.3.1): the 16-bit CRC sits right after the
         // header and covers header bits 16..31 plus the side info
         require(layer == 3, "mpeg audio: CRC frames outside Layer III in this profile")
-        val crcField = br.get(16)
+        val crcField = br.read(16)
         val fs = (frameStartBits / 8).toInt
         val sideBytes = if (nCh == 1) 17 else 32
         require(fs + 6 + sideBytes <= bytes.length,
@@ -1348,8 +1257,8 @@ object MpegAudio {
           val frameBytes = 144 * l3BitrateKbps(brIdx) * 1000 / 44100 + padding
           val frameEndBits = frameStartBits + frameBytes.toLong * 8
           decodeL3Frame(br, mdb => {
-            require(br.bitPos % 8 == 0, "mpeg audio: side info must be byte aligned")
-            val segStart = (br.bitPos / 8).toInt
+            require(br.pos % 8 == 0, "mpeg audio: side info must be byte aligned")
+            val segStart = (br.pos / 8).toInt
             val segEnd = (frameEndBits / 8).toInt
             require(segEnd >= segStart && segEnd <= bytes.length,
               "mpeg audio: frame extends past the stream")
@@ -1360,12 +1269,12 @@ object MpegAudio {
             require(mdb <= before,
               "mpeg audio: main_data_begin reaches before the reservoir")
             reservoir ++= bytes.view.slice(segStart, segEnd)
-            val r = new BitReader(reservoir.toArray, 0)
-            r.seekBits((before - mdb).toLong * 8)
+            val r = new MsbReader(reservoir.toArray, "mpeg audio", "bitstream truncated")
+            r.seek((before - mdb).toLong * 8)
             r
           }, synths, l3Overlap, pcmOut, nCh,
             joint = mode == 1, modeExt = modeExt)
-          br.seekBits(frameEndBits)
+          br.seek(frameEndBits)
         }
         nFrames += 1
       } else {
@@ -1384,11 +1293,11 @@ object MpegAudio {
         var sb = 0
         while (sb < 32) {
           if (nCh == 2 && sb >= jointBound) {
-            val a = br.get(4)
+            val a = br.read(4)
             alloc(0)(sb) = a; alloc(1)(sb) = a
           } else {
             var ch = 0
-            while (ch < nCh) { alloc(ch)(sb) = br.get(4); ch += 1 }
+            while (ch < nCh) { alloc(ch)(sb) = br.read(4); ch += 1 }
           }
           sb += 1
         }
@@ -1397,7 +1306,7 @@ object MpegAudio {
         while (sb < 32) {
           var ch = 0
           while (ch < nCh) {
-            if (alloc(ch)(sb) > 0) sf(ch)(sb) = br.get(6)
+            if (alloc(ch)(sb) > 0) sf(ch)(sb) = br.read(6)
             ch += 1
           }
           sb += 1
@@ -1410,7 +1319,7 @@ object MpegAudio {
               if (alloc(0)(sb) > 0) {
                 val nb = alloc(0)(sb) + 1
                 val n = (1 << nb) - 1
-                val raw = br.get(nb)
+                val raw = br.read(nb)
                 require(raw < n, "mpeg audio: code outside the mid-tread domain")
                 samples(0)(g)(sb) = dequant(raw, n) * sfTab(sf(0)(sb))
                 samples(1)(g)(sb) = dequant(raw, n) * sfTab(sf(1)(sb))
@@ -1421,7 +1330,7 @@ object MpegAudio {
               if (alloc(ch)(sb) > 0) {
                 val nb = alloc(ch)(sb) + 1
                 val n = (1 << nb) - 1
-                val raw = br.get(nb)
+                val raw = br.read(nb)
                 require(raw < n, "mpeg audio: code outside the mid-tread domain")
                 samples(ch)(g)(sb) = dequant(raw, n) * sfTab(sf(ch)(sb))
               }
@@ -1437,11 +1346,11 @@ object MpegAudio {
         var sb = 0
         while (sb < L2SbLimit) {
           if (nCh == 2 && sb >= jointBound) {
-            val a = br.get(l2AllocBits(sb))
+            val a = br.read(l2AllocBits(sb))
             alloc(0)(sb) = a; alloc(1)(sb) = a
           } else {
             var ch = 0
-            while (ch < nCh) { alloc(ch)(sb) = br.get(l2AllocBits(sb)); ch += 1 }
+            while (ch < nCh) { alloc(ch)(sb) = br.read(l2AllocBits(sb)); ch += 1 }
           }
           sb += 1
         }
@@ -1450,7 +1359,7 @@ object MpegAudio {
         while (sb < L2SbLimit) {
           var ch = 0
           while (ch < nCh) {
-            if (alloc(ch)(sb) > 0) scfsi(ch)(sb) = br.get(2)
+            if (alloc(ch)(sb) > 0) scfsi(ch)(sb) = br.read(2)
             ch += 1
           }
           sb += 1
@@ -1462,16 +1371,16 @@ object MpegAudio {
           while (ch < nCh) {
             if (alloc(ch)(sb) > 0) scfsi(ch)(sb) match {
               case 0 =>
-                sf(ch)(sb)(0) = br.get(6); sf(ch)(sb)(1) = br.get(6)
-                sf(ch)(sb)(2) = br.get(6)
+                sf(ch)(sb)(0) = br.read(6); sf(ch)(sb)(1) = br.read(6)
+                sf(ch)(sb)(2) = br.read(6)
               case 1 =>
-                val a = br.get(6); val b = br.get(6)
+                val a = br.read(6); val b = br.read(6)
                 sf(ch)(sb)(0) = a; sf(ch)(sb)(1) = a; sf(ch)(sb)(2) = b
               case 2 =>
-                val a = br.get(6)
+                val a = br.read(6)
                 sf(ch)(sb)(0) = a; sf(ch)(sb)(1) = a; sf(ch)(sb)(2) = a
               case _ =>
-                val a = br.get(6); val b = br.get(6)
+                val a = br.read(6); val b = br.read(6)
                 sf(ch)(sb)(0) = a; sf(ch)(sb)(1) = b; sf(ch)(sb)(2) = b
             }
             ch += 1
@@ -1495,7 +1404,7 @@ object MpegAudio {
                     samples(1)(3 * t + i)(sb) = q * sfTab(sf(1)(sb)(part))
                 }
                 if (grouped) {
-                  var c = br.get(bits)
+                  var c = br.read(bits)
                   require(c < n * n * n, "mpeg audio: grouped code out of domain")
                   var i = 0
                   while (i < 3) {
@@ -1506,7 +1415,7 @@ object MpegAudio {
                 } else {
                   var i = 0
                   while (i < 3) {
-                    val raw = br.get(bits)
+                    val raw = br.read(bits)
                     require(raw < n, "mpeg audio: code outside the mid-tread domain")
                     put(i, dequant(raw, n))
                     i += 1
@@ -1558,39 +1467,39 @@ object MpegAudio {
     * overlap-add, frequency inversion, and 18 polyphase steps per
     * granule appended to pcmOut.
     */
-  private def decodeL3Frame(br: BitReader, mainOf: Int => BitReader,
+  private def decodeL3Frame(br: MsbReader, mainOf: Int => MsbReader,
                             synths: Array[Synth],
                             overlap: Array[Array[Array[Long]]],
                             pcmOut: scala.collection.mutable.ArrayBuffer[Long],
                             nCh: Int, joint: Boolean, modeExt: Int): Unit = {
-    val mainDataBegin = br.get(9) // resolved by the caller's framing mode
-    br.get(if (nCh == 1) 5 else 3) // private bits
-    val scfsi = Array.fill(nCh)(br.get(4))
+    val mainDataBegin = br.read(9) // resolved by the caller's framing mode
+    br.read(if (nCh == 1) 5 else 3) // private bits
+    val scfsi = Array.fill(nCh)(br.read(4))
     case class Side(part23: Int, bigValues: Int, globalGain: Int, sc: Int,
                     tsel: Array[Int], r0: Int, r1: Int, pre: Int,
                     sfScale: Int, c1t: Int, bt: Int, sbg: Array[Int],
                     mixed: Boolean = false)
     val sides = Array.tabulate(2, nCh) { (_, _) =>
-      val part23 = br.get(12)
-      val bv = br.get(9)
+      val part23 = br.read(12)
+      val bv = br.read(9)
       require(bv <= 288, "mpeg audio: big_values beyond the spectrum")
-      val gg = br.get(8)
-      val sc = br.get(4)
-      if (br.get(1) == 1) {
+      val gg = br.read(8)
+      val sc = br.read(4)
+      if (br.read(1) == 1) {
         // window switching: block_type, mixed flag, TWO table selects,
         // three subblock gains; region counts are implicit (pinned)
-        val bt = br.get(2)
+        val bt = br.read(2)
         require(bt != 0, "mpeg audio: reserved block_type 0 under window switching")
-        val mixed = br.get(1) == 1 // mixed_block_flag
+        val mixed = br.read(1) == 1 // mixed_block_flag
         require(!mixed || bt == 2, "mpeg audio: mixed_block_flag needs short blocks")
-        val ts = Array(br.get(5), br.get(5), 0)
-        val sbg = Array(br.get(3), br.get(3), br.get(3))
-        Side(part23, bv, gg, sc, ts, 0, 0, br.get(1), br.get(1), br.get(1), bt, sbg,
+        val ts = Array(br.read(5), br.read(5), 0)
+        val sbg = Array(br.read(3), br.read(3), br.read(3))
+        Side(part23, bv, gg, sc, ts, 0, 0, br.read(1), br.read(1), br.read(1), bt, sbg,
           mixed = mixed)
       } else {
-        val ts = Array.fill(3)(br.get(5))
-        Side(part23, bv, gg, sc, ts, br.get(4), br.get(3),
-          br.get(1), br.get(1), br.get(1), 0, Array(0, 0, 0))
+        val ts = Array.fill(3)(br.read(5))
+        Side(part23, bv, gg, sc, ts, br.read(4), br.read(3),
+          br.read(1), br.read(1), br.read(1), 0, Array(0, 0, 0))
       }
     }
     // MS operates per unreordered spectral slot, so it composes with any
@@ -1617,7 +1526,7 @@ object MpegAudio {
       var ch = 0
       while (ch < nCh) {
       val s = sides(gi)(ch)
-      val start = mbr.bitPos
+      val start = mbr.pos
       val limit = start + s.part23
       // part 2: scalefactors (scfsi shares granule 0's decoded values,
       // per channel); short granules carry 12 bands x 3 windows instead
@@ -1628,7 +1537,7 @@ object MpegAudio {
         if (s.mixed) { // long part's scalefactors (pinned bands 0..1, slen1)
           var b = 0
           while (b <= 1) {
-            sf(ch)(b) = if (slen1 > 0) mbr.get(slen1) else 0
+            sf(ch)(b) = if (slen1 > 0) mbr.read(slen1) else 0
             b += 1
           }
         }
@@ -1637,7 +1546,7 @@ object MpegAudio {
           val slen = if (sb0 <= 5) slen1 else slen2
           var w = 0
           while (w < 3) {
-            sfS(w)(sb0) = if (slen > 0) mbr.get(slen) else 0
+            sfS(w)(sb0) = if (slen > 0) mbr.read(slen) else 0
             w += 1
           }
           sb0 += 1
@@ -1648,7 +1557,7 @@ object MpegAudio {
         val slen = if (band <= 10) slen1 else slen2
         if (gi == 1 && ((scfsi(ch) >> l3ScfsiGroup(band)) & 1) == 1)
           () // keep the granule-0 value
-        else sf(ch)(band) = if (slen > 0) mbr.get(slen) else 0
+        else sf(ch)(band) = if (slen > 0) mbr.read(slen) else 0
         band += 1
       }
       }
@@ -1664,33 +1573,33 @@ object MpegAudio {
         val sym = tab.read(mbr)
         def finish(c: Int): Int = {
           var v = c
-          if (c == 15 && tab.linbits > 0) v += mbr.get(tab.linbits)
-          if (v != 0 && mbr.get(1) == 1) -v else v
+          if (c == 15 && tab.linbits > 0) v += mbr.read(tab.linbits)
+          if (v != 0 && mbr.read(1) == 1) -v else v
         }
         raw(pos) = finish(sym / tab.dims)
         raw(pos + 1) = finish(sym % tab.dims)
         pos += 2
         pair += 1
       }
-      require(mbr.bitPos <= limit, "mpeg audio: big values overran part2_3_length")
+      require(mbr.pos <= limit, "mpeg audio: big values overran part2_3_length")
       // count1: quadruples until part2_3_length runs out; an attempt that
       // overruns the boundary (or the stream tail) is discarded — the
       // spec's overshoot rule — and stuffing bits are skipped
       var done = false
-      while (!done && mbr.bitPos < limit && pos + 4 <= 576) {
+      while (!done && mbr.pos < limit && pos + 4 <= 576) {
         val attempt = scala.util.Try {
-          val quad = if (s.c1t == 1) mbr.get(4) else l3Count1Table.read(mbr)
+          val quad = if (s.c1t == 1) mbr.read(4) else l3Count1Table.read(mbr)
           val vals = new Array[Int](4)
           var j = 0
           while (j < 4) {
             if (((quad >> (3 - j)) & 1) == 1)
-              vals(j) = if (mbr.get(1) == 1) -1 else 1
+              vals(j) = if (mbr.read(1) == 1) -1 else 1
             j += 1
           }
           vals
         }
         attempt match {
-          case scala.util.Success(vals) if mbr.bitPos <= limit =>
+          case scala.util.Success(vals) if mbr.pos <= limit =>
             var k = 0
             while (k < 4) { raw(pos + k) = vals(k); k += 1 }
             pos += 4
@@ -1698,7 +1607,7 @@ object MpegAudio {
         }
       }
       zeroBound(ch) = pos
-      mbr.seekBits(limit) // stuffing / discarded overrun
+      mbr.seek(limit) // stuffing / discarded overrun
       // requantize (pinned integer curves; band 21 has no scalefactor).
       // Short granules also UNREORDER here: transmitted band-major
       // triplet order -> the window-interleaved subband layout the

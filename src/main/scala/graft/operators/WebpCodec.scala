@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.operators.Bits.{LsbReader, LsbWriter}
+
 import graft.operators.ImageCodec.DecodedImage
 
 /** REAL WebP-lossless (VP8L) codec in pure JDK — no codec library.
@@ -46,48 +48,11 @@ object WebpCodec {
       b(12) == 'V' && b(13) == 'P' && b(14) == '8' && b(15) == 'L' &&
       (b(20) & 0xff) == 0x2f // VP8L signature byte
 
-  // ---- bit IO (LSB-first within bytes, per spec §4) ------------------------
+  // ---- bit IO: the shared LSB-first core (spec §4) ------------------------
 
-  private final class BitReader(b: Array[Byte], var bytePos: Int, val end: Int) {
-    private var bitPos = 0
-    def bit(): Int = {
-      require(bytePos < end, "vp8l: bitstream overrun")
-      val r = (b(bytePos) >> bitPos) & 1
-      bitPos += 1
-      if (bitPos == 8) { bitPos = 0; bytePos += 1 }
-      r
-    }
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v |= bit() << i; i += 1 }
-      v
-    }
-  }
-
-  private final class BitWriter {
-    private val buf = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nbits = 0
-    def writeBits(v: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) {
-        cur |= ((v >> i) & 1) << nbits
-        nbits += 1
-        if (nbits == 8) { buf.write(cur); cur = 0; nbits = 0 }
-        i += 1
-      }
-    }
-    /** Huffman code bits go MSB-of-code first (canonical DEFLATE order). */
-    def writeCode(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { writeBits((code >> i) & 1, 1); i -= 1 }
-    }
-    def toBytes: Array[Byte] = {
-      if (nbits > 0) { buf.write(cur); cur = 0; nbits = 0 }
-      buf.toByteArray
-    }
-  }
+  /** Prefix-code bits go MSB-of-code first (canonical DEFLATE order). */
+  private def putCode(bw: LsbWriter, code: Int, len: Int): Unit =
+    if (len > 0) bw.put(Integer.reverse(code) >>> (32 - len), len)
 
   // ---- canonical prefix codes (spec §6.2) ----------------------------------
 
@@ -151,13 +116,13 @@ object WebpCodec {
         out
       } else Array.empty
     }
-    def read(r: BitReader): Int = {
-      if (explicit1Bit != null) return explicit1Bit(r.bit())
+    def read(r: LsbReader): Int = {
+      if (explicit1Bit != null) return explicit1Bit(r.read(1))
       if (singleSymbol >= 0) return singleSymbol
       var code = 0
       var len = 0
       while (len < maxLen) {
-        code = (code << 1) | r.bit()
+        code = (code << 1) | r.read(1)
         len += 1
         val idx = code - firstCode(len)
         if (idx >= 0 && offset(len) + idx < (if (len < maxLen) offset(len + 1) else sorted.length))
@@ -241,31 +206,31 @@ object WebpCodec {
   private val ClOrder = Array(17, 18, 0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
 
   /** Read one prefix code in either spec form (§6.2.1/6.2.2). */
-  private def readPrefixCode(r: BitReader, alphabetSize: Int): Huff = {
-    val simple = r.bits(1)
+  private def readPrefixCode(r: LsbReader, alphabetSize: Int): Huff = {
+    val simple = r.read(1)
     val lengths = new Array[Int](alphabetSize)
     if (simple == 1) {
-      val numSymbols = r.bits(1) + 1
-      val firstIs8Bit = r.bits(1)
-      val sym0 = if (firstIs8Bit == 1) r.bits(8) else r.bits(1)
+      val numSymbols = r.read(1) + 1
+      val firstIs8Bit = r.read(1)
+      val sym0 = if (firstIs8Bit == 1) r.read(8) else r.read(1)
       require(sym0 < alphabetSize, s"vp8l: simple-code symbol $sym0 out of alphabet $alphabetSize")
       if (numSymbols == 1) lengths(sym0) = 1 // marker; read() short-circuits to 0 bits
       else {
-        val sym1 = r.bits(8)
+        val sym1 = r.read(8)
         require(sym1 < alphabetSize && sym1 != sym0, s"vp8l: bad simple-code symbols $sym0,$sym1")
         return Huff.simple2(sym0, sym1) // code 0/1 in TRANSMISSION order
       }
     } else {
-      val numCl = 4 + r.bits(4)
+      val numCl = 4 + r.read(4)
       val clLengths = new Array[Int](19)
       var i = 0
-      while (i < numCl) { clLengths(ClOrder(i)) = r.bits(3); i += 1 }
+      while (i < numCl) { clLengths(ClOrder(i)) = r.read(3); i += 1 }
       val clHuff = new Huff(clLengths)
       // optional cap on the number of transmitted symbols (spec §6.2.2)
       var maxSymbol =
-        if (r.bits(1) == 1) {
-          val nbits = 2 + 2 * r.bits(3)
-          2 + r.bits(nbits)
+        if (r.read(1) == 1) {
+          val nbits = 2 + 2 * r.read(3)
+          2 + r.read(nbits)
         } else alphabetSize
       var sym = 0
       var prevLen = 8
@@ -277,13 +242,13 @@ object WebpCodec {
             lengths(sym) = c; sym += 1
             if (c != 0) prevLen = c
           case 16 =>
-            val rep = 3 + r.bits(2)
+            val rep = 3 + r.read(2)
             var k = 0
             while (k < rep && sym < alphabetSize) { lengths(sym) = prevLen; sym += 1; k += 1 }
           case 17 =>
-            sym += 3 + r.bits(3)
+            sym += 3 + r.read(3)
           case 18 =>
-            sym += 11 + r.bits(7)
+            sym += 11 + r.read(7)
         }
       }
       require(sym <= alphabetSize, "vp8l: code lengths overrun the alphabet")
@@ -294,12 +259,12 @@ object WebpCodec {
   /** Inverse of the length/distance prefix coding (§5.2.2): symbol + extra
     * bits → value ≥ 1.
     */
-  private def readPrefixedValue(r: BitReader, sym: Int): Int =
+  private def readPrefixedValue(r: LsbReader, sym: Int): Int =
     if (sym < 4) sym + 1
     else {
       val extra = (sym - 2) >> 1
       val offset = (2 + (sym & 1)) << extra
-      offset + r.bits(extra) + 1
+      offset + r.read(extra) + 1
     }
 
   /** value ≥ 1 → (symbol, extraBits, extraCount) — encoder inverse. */
@@ -332,11 +297,11 @@ object WebpCodec {
     val chunkSize = Riff.le32(b, 16)
     require(chunkSize >= 5 && 20L + chunkSize <= b.length,
       s"vp8l: chunk size $chunkSize inconsistent with ${b.length}-byte blob")
-    val r = new BitReader(b, 21, 20 + chunkSize) // past the 0x2f signature
-    val w = r.bits(14) + 1
-    val h = r.bits(14) + 1
-    r.bits(1) // alpha hint — informational
-    val version = r.bits(3)
+    val r = new LsbReader(b, 21, 20 + chunkSize, "vp8l", "bitstream overrun") // past the 0x2f signature
+    val w = r.read(14) + 1
+    val h = r.read(14) + 1
+    r.read(1) // alpha hint — informational
+    val version = r.read(3)
     require(version == 0, s"vp8l: version $version, spec requires 0")
     require(w.toLong * h * 4 <= MaxRawBytes,
       s"vp8l: declared raster ${w}x$h exceeds the $MaxRawBytes-byte bound")
@@ -344,8 +309,8 @@ object WebpCodec {
     // transforms (§7): at most one of each; only subtract-green has a
     // decode path here — the others are rejected loudly, never guessed at
     var subtractGreen = false
-    while (r.bits(1) == 1) {
-      r.bits(2) match {
+    while (r.read(1) == 1) {
+      r.read(2) match {
         case 2 => require(!subtractGreen, "vp8l: duplicate subtract-green transform")
           subtractGreen = true
         case 0 => throw new IllegalArgumentException(
@@ -358,13 +323,13 @@ object WebpCodec {
     }
 
     // spatially-coded image (§5, §6)
-    val cacheBits = if (r.bits(1) == 1) {
-      val cb = r.bits(4)
+    val cacheBits = if (r.read(1) == 1) {
+      val cb = r.read(4)
       require(cb >= 1 && cb <= 11, s"vp8l: color cache bits $cb out of 1..11")
       cb
     } else 0
     val cache = if (cacheBits > 0) new Array[Int](1 << cacheBits) else null
-    require(r.bits(1) == 0,
+    require(r.read(1) == 0,
       "vp8l: meta prefix groups unsupported (bounded gap — one code group)")
     val greenAlphabet = 256 + 24 + (if (cacheBits > 0) 1 << cacheBits else 0)
     val greenH = readPrefixCode(r, greenAlphabet)
@@ -527,41 +492,41 @@ object WebpCodec {
     val lD = huffLengths(fD, 15); val cD = canonicalCodes(lD)
 
     // ---- emit --------------------------------------------------------------
-    val bw = new BitWriter
-    bw.writeBits(w - 1, 14)
-    bw.writeBits(h - 1, 14)
-    bw.writeBits(if (anyAlpha) 1 else 0, 1)
-    bw.writeBits(0, 3) // version
+    val bw = new LsbWriter
+    bw.put(w - 1, 14)
+    bw.put(h - 1, 14)
+    bw.put(if (anyAlpha) 1 else 0, 1)
+    bw.put(0, 3) // version
     if (variant == Variant.SubtractGreen) {
-      bw.writeBits(1, 1) // transform present
-      bw.writeBits(2, 2) // SUBTRACT_GREEN
+      bw.put(1, 1) // transform present
+      bw.put(2, 2) // SUBTRACT_GREEN
     }
-    bw.writeBits(0, 1) // end of transforms
-    if (cacheBits > 0) { bw.writeBits(1, 1); bw.writeBits(cacheBits, 4) }
-    else bw.writeBits(0, 1)
-    bw.writeBits(0, 1) // no meta prefix groups
+    bw.put(0, 1) // end of transforms
+    if (cacheBits > 0) { bw.put(1, 1); bw.put(cacheBits, 4) }
+    else bw.put(0, 1)
+    bw.put(0, 1) // no meta prefix groups
 
     def writePrefixCode(lengths: Array[Int]): Unit = {
       val used = lengths.indices.filter(lengths(_) > 0)
       if (used.isEmpty) {
         // an unread code (no backrefs → distance tree) must still be
         // present: a 1-symbol simple code costs 4 bits total
-        bw.writeBits(1, 1); bw.writeBits(0, 1); bw.writeBits(0, 1); bw.writeBits(0, 1)
+        bw.put(1, 1); bw.put(0, 1); bw.put(0, 1); bw.put(0, 1)
       } else if (used.size <= 2 && used.forall(_ < 256)) {
         // simple form (symbols must fit 8 bits; ascending order keeps
         // transmission order == canonical order)
-        bw.writeBits(1, 1)
-        bw.writeBits(used.size - 1, 1)
+        bw.put(1, 1)
+        bw.put(used.size - 1, 1)
         if (used.head < 2 && used.size == 1) {
-          bw.writeBits(0, 1) // 1-bit first symbol
-          bw.writeBits(used.head, 1)
+          bw.put(0, 1) // 1-bit first symbol
+          bw.put(used.head, 1)
         } else {
-          bw.writeBits(1, 1) // 8-bit first symbol
-          bw.writeBits(used.head, 8)
+          bw.put(1, 1) // 8-bit first symbol
+          bw.put(used.head, 8)
         }
-        if (used.size == 2) bw.writeBits(used(1), 8)
+        if (used.size == 2) bw.put(used(1), 8)
       } else {
-        bw.writeBits(0, 1)
+        bw.put(0, 1)
         // code-length code over the length multiset (zeros emitted
         // literally — no 16/17/18 run coding; spec-legal and simple)
         val clFreq = new Array[Long](19)
@@ -569,13 +534,13 @@ object WebpCodec {
         val clLen = huffLengths(clFreq, 7)
         val clCode = canonicalCodes(clLen)
         // transmit ALL 19 slots in ClOrder (num_code_lengths = 19)
-        bw.writeBits(19 - 4, 4)
-        ClOrder.foreach(s => bw.writeBits(clLen(s), 3))
-        bw.writeBits(0, 1) // no max_symbol cap
+        bw.put(19 - 4, 4)
+        ClOrder.foreach(s => bw.put(clLen(s), 3))
+        bw.put(0, 1) // no max_symbol cap
         // a single DISTINCT length (uniform complete code) reads back as
         // a zero-bit CL code — emit nothing, matching the decoder
         if (clFreq.count(_ > 0) > 1)
-          lengths.foreach(l => bw.writeCode(clCode(l), clLen(l)))
+          lengths.foreach(l => putCode(bw, clCode(l), clLen(l)))
       }
     }
     writePrefixCode(lG)
@@ -587,7 +552,7 @@ object WebpCodec {
     def writeSym(lengths: Array[Int], codes: Array[Int], s: Int): Unit = {
       val used = lengths.count(_ > 0)
       if (used == 1) () // zero-bit single-symbol code
-      else bw.writeCode(codes(s), lengths(s))
+      else putCode(bw, codes(s), lengths(s))
     }
     ops.foreach {
       case (0, px, _) =>
@@ -599,13 +564,13 @@ object WebpCodec {
       case (2, len, dist) =>
         val (ls, lx, ln) = prefixEncode(len)
         writeSym(lG, cG, 256 + ls)
-        if (ln > 0) bw.writeBits(lx, ln)
+        if (ln > 0) bw.put(lx, ln)
         val (ds, dx, dn) = prefixEncode(dist + 120)
         writeSym(lD, cD, ds)
-        if (dn > 0) bw.writeBits(dx, dn)
+        if (dn > 0) bw.put(dx, dn)
     }
 
-    val payload = bw.toBytes
+    val payload = bw.bytes()
     val chunkSize = payload.length + 1 // + signature byte
     val padded = chunkSize + (chunkSize & 1)
     val out = new Array[Byte](20 + 1 + payload.length + (chunkSize & 1))

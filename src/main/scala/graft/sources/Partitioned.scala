@@ -27,5 +27,5 @@ object Partitioned {
       .write.mode("overwrite").partitionBy(partitionCol).parquet(path)
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
 }

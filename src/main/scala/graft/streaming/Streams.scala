@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 
 import graft.reddit.PostsTable
+import graft.sources.Tables
 
 /** Structured-Streaming surface (README.md:108 "future enhancements" made
   * real): the batch operators re-used under `readStream`.
@@ -433,7 +434,7 @@ object Streams {
           .groupBy("g", "tkn").agg(count(lit(1)).as("c"))
         val merged = (versionBelow(s"$root/counts", epochId) match {
           case Some(v) =>
-            spark.read.parquet(s"$root/counts/v$v").unionByName(bc)
+            Tables.parquet(spark, s"$root/counts/v$v").unionByName(bc)
               .groupBy("g", "tkn").agg(sum(col("c")).as("c"))
           case None => bc
         }).persist()
@@ -457,7 +458,7 @@ object Streams {
   def readDriftLedger(spark: SparkSession, root: String): DataFrame = {
     val vs = listVersions(s"$root/ledger")
     require(vs.nonEmpty, s"no drift ledger at $root")
-    vs.map(v => spark.read.parquet(s"$root/ledger/v$v"))
+    vs.map(v => Tables.parquet(spark, s"$root/ledger/v$v"))
       .reduce(_.unionByName(_))
   }
 

@@ -88,6 +88,24 @@ class JpegCodecSpec extends SparkTestBase {
     assert(plain.pixels.toSeq == restarted.pixels.toSeq)
   }
 
+  test("JPEG: a stuffed FF00 in entropy data decodes; a bare marker there is rejected") {
+    val q1 = JpegCodec.flatQ(1)
+    // the first noise image whose entropy-coded data holds a stuffed FF
+    val (gray, blob, at) = Iterator.from(1).map { seed =>
+      val px = Array.tabulate(16 * 16)(i => ((i * 2654435761L + seed * 40503L) >>> 7).toByte)
+      val b = JpegCodec.encodeJpeg(16, 16, 1, px(_), lumaQ = q1, chromaQ = q1)
+      val sos = b.indexOfSlice(Array(0xff.toByte, 0xda.toByte))
+      val data = sos + 2 + (((b(sos + 2) & 0xff) << 8) | (b(sos + 3) & 0xff))
+      (px, b, b.indexOfSlice(Array(0xff.toByte, 0.toByte), data))
+    }.find(_._3 >= 0).get
+    val img = JpegCodec.decodeJpeg(blob)
+    val err = img.pixels.indices.map(i => math.abs((img.pixels(i) & 0xff) - (gray(i) & 0xff))).max
+    assert(err <= 4, s"stuffed-byte stream max err $err")
+    val bare = blob.clone(); bare(at + 1) = 0xd0.toByte
+    assert(intercept[IllegalArgumentException](JpegCodec.decodeJpeg(bare)).getMessage ==
+      "jpeg: unexpected marker FFD0 inside entropy data")
+  }
+
   test("JPEG: 4:2:0 subsampling box-averages chroma; constant-chroma content survives exactly") {
     // red-tinted gray: R = v+20, G = B = v (all blocks flat) — chroma is
     // CONSTANT across the image, so 2×2 box-average is the identity and

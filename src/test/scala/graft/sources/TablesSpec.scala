@@ -73,6 +73,18 @@ class TablesSpec extends SparkTestBase {
     assert(Tables.parquet(spark, parted).schema("ts").dataType == TimestampNTZType)
   }
 
+  test("a written output reads back through Tables.parquet without a Spark job") {
+    val out = Files.createTempDirectory("tables_readback").resolve("by_month").toString
+    Partitioned.write(spark.sql("""select * from values
+        (1L, 'a', '2024-01'), (2L, 'b', '2024-02'), (3L, 'c', '2024-01') as t(id, s, month)"""),
+      "month", out)
+    val (back, jobs) = jobsDuring(Partitioned.read(spark, out))
+    assert(jobs == 0, s"the read-back ran $jobs Spark jobs")
+    val inferred = spark.read.parquet(out)
+    assert(back.schema == inferred.schema)
+    assert(back.collect().toSet == inferred.collect().toSet)
+  }
+
   test("legacy TIMESTAMP(NANOS) events still load as TimestampType") {
     import org.apache.hadoop.conf.Configuration
     import org.apache.hadoop.fs.{Path => HPath}
