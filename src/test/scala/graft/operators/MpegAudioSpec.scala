@@ -2,7 +2,7 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** MPEG-1 Layer I/II: framing, scfsi semantics, grouped codes,
+/** MPEG-1 Layer I/II: bit I/O, framing, scfsi semantics, grouped codes,
   * filterbank structure (FIFO continuity across frames), and the
   * malformed-input surface.
   */
@@ -17,6 +17,15 @@ class MpegAudioSpec extends AnyFunSuite {
     val raw = Array.tabulate(12, 32)((gg, sb) =>
       if (sb == k0) ((5 * d + 7 * (12 * f + gg) + 3) % n).toInt else 0)
     MpegAudio.L1Frame(alloc, sf, raw)
+  }
+
+  test("bit I/O: writer and reader are inverses across byte boundaries") {
+    val bw = new Bits.MsbWriter
+    val vals = Seq((0x7ffL, 11), (3L, 2), (0L, 1), (0x3fL, 6), (1L, 1), (1023L, 10), (0L, 5))
+    vals.foreach { case (v, b) => bw.put(v, b) }
+    val bytes = bw.bytes()
+    val br = new Bits.MsbReader(bytes, "mpeg audio", "bitstream truncated")
+    vals.foreach { case (v, b) => assert(br.read(b).toLong == v, s"$v/$b") }
   }
 
   test("layer I: a decoded frame's PCM matches the closed-form filterbank sum") {
