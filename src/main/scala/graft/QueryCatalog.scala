@@ -1391,7 +1391,7 @@ object QueryCatalog {
         val nt = TextAnalysis.tokenCount(col("text")).cast("long")
         val docs = t(s, d, "documents")
           .select(col("doc_id"), col("source"), nt.as("nt"))
-          .localCheckpoint(false)
+          .localCheckpoint(eager = false)
         val approx = docs.groupBy("source").agg(
           count(lit(1)).as("n_docs"),
           expr("percentile(nt, 0.5d)").as("_p50e"),
@@ -3219,12 +3219,11 @@ object QueryCatalog {
         val queries = emb.filter(col("vec_id") % 37 === 0)
         // materialized like fromDisk: the folded lifecycle check below
         // reads it twice (both exceptAll directions in one plan)
-        val direct = operators.Materialize.once(Similarity.ivfSearch(
+        val direct = Similarity.ivfSearch(
           Similarity.assignCells(emb, "vec_id", "embedding", cents), queries,
-          cents, "vec_id", "embedding", nprobe = 4, k = 5), reliable = false)
-        val fromDisk = operators.Materialize.once(
-          Similarity.ivfSearchIndexPersisted(s, path, queries,
-            "vec_id", "embedding", nprobe = 4, k = 5), reliable = false)
+          cents, "vec_id", "embedding", nprobe = 4, k = 5).localCheckpoint(eager = false)
+        val fromDisk = Similarity.ivfSearchIndexPersisted(s, path, queries,
+          "vec_id", "embedding", nprobe = 4, k = 5).localCheckpoint(eager = false)
         // one action, not two sequential counts (sum of the two exceptAll
         // counts == count of their unionAll; the scheduler overlaps the
         // independent subtrees inside the single job)
@@ -3291,8 +3290,7 @@ object QueryCatalog {
         // without the checkpoint each action replays the join + synthesis.
         // Spread first (16-byte rows across the exchange) so every
         // consumer is parallel instead of riding the one-split scan.
-        val corpus = operators.Materialize.once(
-          Par.spread(emb
+        val corpus = Par.spread(emb
             .select(col("vec_id"),
               graft.functions.integral_divide(col("vec_id"), lit(block)).as("blk")))
           .join(broadcast(bases), Seq("blk"))
@@ -3301,7 +3299,8 @@ object QueryCatalog {
               zip_with(col("base"), sequence(lit(0), lit(63)),
                 (b, j) => (b.cast("double")
                   + ((col("vec_id") * 31 + j) % 11).cast("double") * lit(0.003))
-                  .cast("float"))).as("vec")), reliable = false)
+                  .cast("float"))).as("vec"))
+          .localCheckpoint(eager = false)
         val queries = corpus.filter(col("vec_id") % block === block / 2)
         val cb = Similarity.pqTrain(corpus, "vec_id", "vec", m = 8, k = 256)
         val codes = corpus.select(col("vec_id"),
@@ -3374,12 +3373,10 @@ object QueryCatalog {
         Similarity.ivfAppendIndexQuantized(b, "vec_id", "embedding", path)
         Similarity.ivfCompactIndex(s, path)
         val queries = emb.filter(col("vec_id") % 37 === 0)
-        val direct = operators.Materialize.once(
-          Similarity.ivfSearchQuantized(emb, queries, cents,
-            "vec_id", "embedding", nprobe = 4, k = 5), reliable = false)
-        val fromDisk = operators.Materialize.once(
-          Similarity.ivfSearchIndexQuantized(s, path, queries,
-            "vec_id", "embedding", nprobe = 4, k = 5), reliable = false)
+        val direct = Similarity.ivfSearchQuantized(emb, queries, cents,
+          "vec_id", "embedding", nprobe = 4, k = 5).localCheckpoint(eager = false)
+        val fromDisk = Similarity.ivfSearchIndexQuantized(s, path, queries,
+          "vec_id", "embedding", nprobe = 4, k = 5).localCheckpoint(eager = false)
         // lifecycle + fidelity laws enforced loudly, not self-asserted:
         // persisted ≡ direct (both int8), and every returned int8 cosine
         // within 0.02 of the f32 cosine for the same pair. Both checks in
@@ -3478,7 +3475,7 @@ object QueryCatalog {
         // query runs ~60 small jobs over the checkpoint, and a 32-wide
         // corpus made each of them schedule 32 tasks (6.5 s -> 6.8 s);
         // the per-vector PQ work at fixture scale doesn't cover that.
-        val corpus = operators.Materialize.once(emb
+        val corpus = emb
           .select(col("vec_id"),
             graft.functions.integral_divide(col("vec_id"), lit(block)).as("blk"))
           .join(broadcast(bases), Seq("blk"))
@@ -3487,7 +3484,8 @@ object QueryCatalog {
               zip_with(col("base"), sequence(lit(0), lit(63)),
                 (b, j) => (b.cast("double")
                   + ((col("vec_id") * 31 + j) % 11).cast("double") * lit(0.003))
-                  .cast("float"))).as("vec")), reliable = false)
+                  .cast("float"))).as("vec"))
+          .localCheckpoint(eager = false)
         val half = n / 2
         val a = corpus.filter(col("vec_id") < half)
         val b = corpus.filter(col("vec_id") >= half)
@@ -3498,12 +3496,10 @@ object QueryCatalog {
         Similarity.ivfPqAppendIndex(b, "vec_id", "vec", path)
         Similarity.ivfCompactIndex(s, path)
         val queries = corpus.filter(col("vec_id") % block === block / 2)
-        val fromDisk = operators.Materialize.once(
-          Similarity.ivfPqSearchIndex(s, path, corpus, queries,
-            "vec_id", "vec", nprobe = 4, k = 10, shortlist = 30), reliable = false)
-        val direct = operators.Materialize.once(
-          Similarity.ivfPqSearch(corpus, queries, cents, cb,
-            "vec_id", "vec", nprobe = 4, k = 10, shortlist = 30), reliable = false)
+        val fromDisk = Similarity.ivfPqSearchIndex(s, path, corpus, queries,
+          "vec_id", "vec", nprobe = 4, k = 10, shortlist = 30).localCheckpoint(eager = false)
+        val direct = Similarity.ivfPqSearch(corpus, queries, cents, cb,
+          "vec_id", "vec", nprobe = 4, k = 10, shortlist = 30).localCheckpoint(eager = false)
         // ALL validation aggregates in ONE action (they are independent
         // single-row subtrees — lifecycle diff, recall, query count, byte
         // audits — and the scheduler overlaps their stages inside the one
@@ -3573,7 +3569,7 @@ object QueryCatalog {
         // planted corpus — materialize the synthesis once (measured NOT
         // spread in r20: wall flat, the many small downstream jobs just
         // scheduled 32x the tasks)
-        val corpus = operators.Materialize.once(emb
+        val corpus = emb
           .select(col("vec_id"),
             graft.functions.integral_divide(col("vec_id"), lit(block)).as("blk"))
           .join(broadcast(bases), Seq("blk"))
@@ -3581,23 +3577,20 @@ object QueryCatalog {
             zip_with(col("base"), sequence(lit(0), lit(63)),
               (b, j) => (b.cast("double")
                 + ((col("vec_id") * 31 + j) % 11).cast("double") * lit(0.003))
-                .cast("float")).as("vec")), reliable = false)
+                .cast("float")).as("vec"))
+          .localCheckpoint(eager = false)
         val queries = corpus.filter(col("vec_id") % block === block / 2)
-        val graph = operators.Materialize.once(
-          GraphAnn.buildGraph(corpus, "vec_id", "vec",
-            shards = 4, m = 8, efConstruction = 32), reliable = false)
-        val cands = operators.Materialize.once(
-          GraphAnn.searchShards(graph, queries, "vec_id", "vec",
-            k = 10, ef = 16), reliable = false)
-        val direct = operators.Materialize.once(
-          GraphAnn.mergeShardResults(cands, 10), reliable = false)
+        val graph = GraphAnn.buildGraph(corpus, "vec_id", "vec",
+          shards = 4, m = 8, efConstruction = 32).localCheckpoint(eager = false)
+        val cands = GraphAnn.searchShards(graph, queries, "vec_id", "vec",
+          k = 10, ef = 16).localCheckpoint(eager = false)
+        val direct = GraphAnn.mergeShardResults(cands, 10).localCheckpoint(eager = false)
         val truth = Similarity.bruteForceTopK(corpus, queries, "vec_id", "vec", 10)
           .select("query_id", "neighbor_id")
         val path = scratchDir("graph_ann")
         GraphAnn.graphWriteIndex(graph, path)
-        val fromDisk = operators.Materialize.once(
-          GraphAnn.searchGraph(GraphAnn.graphReadIndex(s, path), queries,
-            "vec_id", "vec", k = 10, ef = 16), reliable = false)
+        val fromDisk = GraphAnn.searchGraph(GraphAnn.graphReadIndex(s, path), queries,
+          "vec_id", "vec", k = 10, ef = 16).localCheckpoint(eager = false)
         // all four verdict aggregates in ONE action (independent
         // single-row subtrees, stages overlapped by the scheduler;
         // previously 4 sequential driver actions) — values unchanged
@@ -4111,9 +4104,8 @@ object QueryCatalog {
         // hashes materialized ONCE: ph and its shifted self are two
         // consumers, and without this the decode+DCT chain runs twice
         // (the tfidfTopTerms lesson)
-        val ph = graft.operators.Materialize.once(
-          Multimodal.perceptualHash(
-            Multimodal.withPixelMedia(t(s, d, "documents"))), reliable = false)
+        val ph = Multimodal.perceptualHash(
+          Multimodal.withPixelMedia(t(s, d, "documents"))).localCheckpoint(eager = false)
         val prev = ph.select((col("doc_id") + 1).as("doc_id"),
           col("phash_hi").as("p_hi"), col("phash_lo").as("p_lo"))
         ph.join(prev, Seq("doc_id"), "left")
@@ -12370,7 +12362,7 @@ object QueryCatalog {
           .unionAll(clones(docs.filter(col("doc_id") >= 300 && col("doc_id") < 350), 30000L))
         val caught = Dedup.nearDupAgainstIndex(batch2, "doc_id", "text",
             "graft_lsh_index", docs.filter(col("doc_id") < 400), threshold = 1.0)
-          .select("batch_id").distinct().localCheckpoint(true)
+          .select("batch_id").distinct().localCheckpoint(eager = true)
         val nCorpusClones = caught
           .filter(col("batch_id") >= 20000L && col("batch_id") < 30000L).count()
         val nBatch1Clones = caught.filter(col("batch_id") >= 30000L).count()
@@ -13341,8 +13333,7 @@ object QueryCatalog {
         val corpus = docs.unionByName(docs.select(
           (col("doc_id") + 1000000L).as("doc_id"),
           concat(lit("PATCH v2: "), col("text")).as("text")))
-        val ch = Materialize.once(
-          Dedup.cdcChunks(corpus, "doc_id", "text"), reliable = false)
+        val ch = Dedup.cdcChunks(corpus, "doc_id", "text").localCheckpoint(eager = false)
         val tot = ch.agg(count(lit(1)).as("n_chunks_total"),
           count_distinct(col("chunk_md5")).as("n_distinct_chunks"),
           sum(col("len")).cast("long").as("total_bytes"))

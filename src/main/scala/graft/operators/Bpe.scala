@@ -97,7 +97,7 @@ object Bpe {
     // rounds the driver OOMs just STRINGIFYING the tree (measured). The
     // checkpoint truncates lineage to the computed blocks; superseded
     // rounds are reclaimed by the ContextCleaner when unreferenced
-    // (see Materialize's scaladoc for why they must not be unpersisted).
+    // (README, "Materialization", says why they must not be unpersisted).
     var words: Dataset[(List[String], Long)] = docs
       .select(explode(TextAnalysis.tokens(col(text))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))

@@ -383,7 +383,7 @@ object Curation {
     * seeds) with the same plan shape.
     */
   def contamination(train: DataFrame, eval: DataFrame, id: String, text: String,
-                    k: Int = 8, reliable: Boolean = false): DataFrame = {
+                    k: Int = 8): DataFrame = {
     val trainHashes = train
       .select(explode(graft.functions.word_shingles(col(text), k)).as("s"))
       .select(xxhash64(col("s")).as("h"))
@@ -391,10 +391,11 @@ object Curation {
     // materialized once (longs only — tiny vs the text): the totals and
     // the train-join branches would otherwise each re-scan + re-shingle
     // the eval corpus
-    val evalShingles = Materialize.once(eval
+    val evalShingles = eval
       .select(col(id).as("doc_id"),
         explode(graft.functions.word_shingles(col(text), k)).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("h")), reliable)
+      .select(col("doc_id"), xxhash64(col("s")).as("h"))
+      .localCheckpoint(eager = false)
     val totals = evalShingles.groupBy("doc_id")
       .agg(count(lit(1)).as("n_shingles"))
     val contaminated = evalShingles.join(trainHashes, Seq("h"))
@@ -743,18 +744,13 @@ object Curation {
     *
     * Composes the individually-graded operators; each stage keeps its own
     * scale shape (in-row gate, two-phase agg dedup, ids-only LSH exchange,
-    * in-row split). Each stage output is materialized once
-    * ([[Materialize.once]]): the stage count, the next stage, and the
-    * caller's action on the returned frame all read the blocks — no stage
-    * is ever recomputed. The ContextCleaner frees the blocks when the
-    * returned frame is dropped. The staged relations are corpus-sized
-    * (text included), so on a long cluster run pass `reliable = true` —
-    * see [[Materialize]] for the executor-loss tradeoff it selects.
+    * in-row split). Each stage output is materialized once: the stage
+    * count, the next stage, and the caller's action on the returned frame
+    * all read the blocks — no stage is ever recomputed.
     */
   def curate(docs: DataFrame, id: String, text: String,
              minTokens: Long = 1L, maxTokens: Long = 1000000L,
-             nearDupThreshold: Double = 0.9,
-             reliable: Boolean = false): (DataFrame, CurationReport) = {
+             nearDupThreshold: Double = 0.9): (DataFrame, CurationReport) = {
     val nInput = docs.count()
 
     // each stage is materialized before its count so the stage runs
@@ -764,21 +760,21 @@ object Curation {
     // three counts plus the perSplit collect plus the caller's action
     // re-ran the whole upstream pipeline ~5×)
     val nt = TextAnalysis.tokenCount(col(text)).cast("long")
-    val quality = Materialize.once(
-      docs.filter(nt.between(minTokens, maxTokens)), reliable)
+    val quality = docs.filter(nt.between(minTokens, maxTokens))
+      .localCheckpoint(eager = false)
     val nQuality = quality.count()
 
     val keepExact = Dedup.exact(quality, id, text).select(col("keep_id").as(id))
-    val exactDeduped = Materialize.once(
-      quality.join(keepExact, Seq(id), "left_semi"), reliable)
+    val exactDeduped = quality.join(keepExact, Seq(id), "left_semi")
+      .localCheckpoint(eager = false)
     val nExact = exactDeduped.count()
 
     val pairs = Dedup.minhashLsh(exactDeduped, id, text, threshold = nearDupThreshold)
     val reps = Dedup.clusterCorpus(exactDeduped, id, pairs)
       .filter(col("doc_id") === col("cluster"))
       .select(col("doc_id").as(id))
-    val nearDeduped = Materialize.once(
-      exactDeduped.join(reps, Seq(id), "left_semi"), reliable)
+    val nearDeduped = exactDeduped.join(reps, Seq(id), "left_semi")
+      .localCheckpoint(eager = false)
     val nNear = nearDeduped.count()
 
     val curated = splitAssign(nearDeduped, id)
@@ -796,22 +792,19 @@ object Curation {
     * Ranking compares `round(score, 6)` then the term, so the order is
     * reproducible across engines whose `ln` differs in the last ulp.
     */
-  def tfidfTopTerms(docs: DataFrame, id: String, text: String, k: Int = 3,
-                    reliable: Boolean = false): DataFrame = {
+  def tfidfTopTerms(docs: DataFrame, id: String, text: String, k: Int = 3): DataFrame = {
     val toks = docs
       .select(col(id).as("doc_id"),
         explode(TextAnalysis.tokens(col(text))).as("term"))
-    // tf is materialized once (Materialize.once; `reliable` picks the
-    // mode) and every later relation — df, the corpus size, the join left
-    // side — derives from it: without this the df/N branches are
-    // separately-pruned subplans that defeat exchange reuse and re-scan +
-    // re-tokenize the corpus (3 parquet scans measured; `.cache()` doesn't
-    // help — the self-join attribute dedup defeats the cache lookup). With
+    // tf is materialized once and every later relation — df, the corpus
+    // size, the join left side — derives from it: without this the df/N
+    // branches are separately-pruned subplans that defeat exchange reuse
+    // and re-scan + re-tokenize the corpus (3 parquet scans measured; why a
+    // local checkpoint and not `.cache()`: README, "Materialization"). With
     // the materialization the corpus is scanned exactly once and the
-    // reused relation is token-level, far smaller than the text; the
-    // ContextCleaner frees the blocks once the frame is unreferenced.
-    val tf = Materialize.once(
-      toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")), reliable)
+    // reused relation is token-level, far smaller than the text.
+    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+      .localCheckpoint(eager = false)
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     // corpus size (docs with ≥1 token) as a lazy 1-row aggregate broadcast
     // by the cross join — not a driver-side count()
@@ -892,7 +885,7 @@ object Curation {
     */
   def dsirSelect(docs: DataFrame, id: String, text: String,
                  targetPred: Column, buckets: Int = 64,
-                 selectNth: Int = 4, reliable: Boolean = false): DataFrame = {
+                 selectNth: Int = 4): DataFrame = {
     require(buckets > 0 && selectNth > 0,
       s"dsirSelect: bad buckets=$buckets selectNth=$selectNth")
     val base = docs.select(col(id).cast("long").as("doc_id"),
@@ -909,9 +902,8 @@ object Curation {
     // re-scan and re-tokenize the corpus (the tfidfTopTerms lesson).
     // is_target is constant within a doc so carrying it in the grouping
     // adds no keys.
-    val docBuckets = Materialize.once(
-      tok.groupBy("doc_id", "is_target", "b").agg(count(lit(1)).as("c")),
-      reliable)
+    val docBuckets = tok.groupBy("doc_id", "is_target", "b").agg(count(lit(1)).as("c"))
+      .localCheckpoint(eager = false)
     val dom = docs.sparkSession.range(buckets).select(col("id").as("b"))
     val tCnt = docBuckets.filter(col("is_target")).groupBy("b")
       .agg(sum("c").as("tb"))

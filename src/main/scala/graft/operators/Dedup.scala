@@ -159,8 +159,7 @@ object Dedup {
     */
   def prefixJaccardPairs(docs: DataFrame, id: String, text: String,
                          tauNum: Int = 9, tauDen: Int = 10,
-                         maxId: Long = 1000000L,
-                         reliable: Boolean = false): DataFrame = {
+                         maxId: Long = 1000000L): DataFrame = {
     require(tauNum > 0 && tauNum <= tauDen,
       s"prefixJaccardPairs: bad threshold $tauNum/$tauDen")
     // tokenized ONCE: candidate generation and both verify joins are
@@ -173,12 +172,12 @@ object Dedup {
     // — inherits the parallelism through the checkpoint's 1:1 lineage
     // (measured at sf0.1: the whole pipeline ran as two ~2.4 s single-task
     // stages off the one-split fixture scan)
-    val toks = Materialize.once(
-      Par.spread(docs.filter(col(id) < maxId)
+    val toks = Par.spread(docs.filter(col(id) < maxId)
           .select(col(id).cast("long").as("doc_id"), col(text).as("_t")))
         .select(col("doc_id"),
           array_distinct(graft.operators.TextAnalysis.tokens(col("_t"))).as("toks"))
-        .filter(size(col("toks")) > 0), reliable)
+        .filter(size(col("toks")) > 0)
+        .localCheckpoint(eager = false)
     val cand = prefixCandidates(toks, tauNum, tauDen)
     cand
       .join(toks.select(col("doc_id").as("a_id"), col("toks").as("a_toks")), Seq("a_id"))
@@ -332,18 +331,15 @@ object Dedup {
     * maxHamming ≤ 3). Buckets are size-capped like [[minhashLsh]]'s: a hot
     * chunk key (e.g. every near-empty doc hashing to the same signature)
     * is dropped instead of exploding into O(n²) pairs on one reducer.
-    * `reliable` picks the [[Materialize]] persistence mode for the
-    * signature relation (executor-loss tradeoff documented there).
     */
   def simhashPairs(docs: DataFrame, id: String, text: String,
-                   maxHamming: Int = 3, maxBucketSize: Int = 1000,
-                   reliable: Boolean = false): DataFrame = {
+                   maxHamming: Int = 3, maxBucketSize: Int = 1000): DataFrame = {
     import graft.functions.{simhash64, popcount64}
     // signatures materialized once (16 bytes/doc — corpus-text-free): the
     // chunk explode and both verification joins would otherwise each
     // re-tokenize and re-hash the full corpus
-    val sigs = Materialize.once(docs.select(col(id).as("doc_id"),
-      simhash64(TextAnalysis.tokens(col(text))).as("sig")), reliable)
+    val sigs = docs.select(col(id).as("doc_id"),
+      simhash64(TextAnalysis.tokens(col(text))).as("sig")).localCheckpoint(eager = false)
     // chunk shift amounts unrolled Scala-side: shiftright needs an Int literal
     val chunks = sigs.select(col("doc_id"),
       posexplode(array((0 until 4).map(c =>
@@ -394,9 +390,8 @@ object Dedup {
     * diameter) ≪ `maxRounds`; the loop stops at the fixpoint (no label
     * changed). Output: (doc_id, cluster) for every node of `pairs`.
     */
-  def nearDupClusters(pairs: DataFrame, maxRounds: Int = 20,
-                      reliable: Boolean = false): DataFrame =
-    nearDupClustersResult(pairs, maxRounds, reliable).labels
+  def nearDupClusters(pairs: DataFrame, maxRounds: Int = 20): DataFrame =
+    nearDupClustersResult(pairs, maxRounds).labels
 
   /** [[nearDupClustersResult]] outcome: the labeling plus whether the
     * propagation actually reached its fixpoint within `maxRounds` and how
@@ -410,52 +405,31 @@ object Dedup {
 
   /** [[nearDupClusters]] with the convergence outcome surfaced. Logs a
     * warning when `maxRounds` is exhausted instead of failing silently.
-    * Per-round materialization goes through [[Materialize.once]] — the
-    * `reliable` knob picks executor-local checkpoint blocks vs replicated
-    * persist (tradeoff documented there); an iterative job is exactly
-    * where a long cluster run wants the replicated option.
     */
-  def nearDupClustersResult(pairs: DataFrame, maxRounds: Int = 20,
-                            reliable: Boolean = false): ClusterResult = {
-    val edges = Materialize.once(
-      pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst"))),
-      reliable, eager = true)
-    var labels = Materialize.once(
-      edges.select(col("src").as("doc_id")).distinct()
-        .withColumn("cluster", col("doc_id")),
-      reliable, eager = true)
+  def nearDupClustersResult(pairs: DataFrame, maxRounds: Int = 20): ClusterResult = {
+    val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
+      .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
+      .localCheckpoint(eager = true)
+    var labels = edges.select(col("src").as("doc_id")).distinct()
+      .withColumn("cluster", col("doc_id"))
+      .localCheckpoint(eager = true)
     var round = 0
     var changed = 1L
-    // Handle to the round frame whose blocks are currently pinned: on the
-    // reliable path persist entries are NOT freed by the ContextCleaner
-    // (CacheManager pins them), so each superseded round must be released
-    // explicitly or replicated storage grows by one label table per round.
-    var pinned = labels
     while (round < maxRounds && changed > 0) {
       val neighbourMin = edges
         .join(labels.withColumnRenamed("doc_id", "dst"), Seq("dst"))
         .groupBy(col("src").as("doc_id"))
         .agg(min(col("cluster")).as("nmin"))
-      val updated = Materialize.once(
-        labels
-          .join(neighbourMin, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("new_cluster"),
-            col("cluster")),
-        reliable, eager = true)
+      val updated = labels
+        .join(neighbourMin, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("new_cluster"),
+          col("cluster"))
+        .localCheckpoint(eager = true)
       changed = updated.filter(col("new_cluster") < col("cluster")).count()
-      // `updated` is fully materialized (eager + the count above), so the
-      // previous round's blocks are no longer read — release them now.
-      Materialize.release(pinned, reliable)
-      pinned = updated
       labels = updated.select(col("doc_id"), col("new_cluster").as("cluster"))
       round += 1
     }
-    // The final round's frame stays pinned — the caller owns the returned
-    // labels — but the edge relation is no longer needed once the labels
-    // are materialized (a block loss recomputes through source lineage).
-    Materialize.release(edges, reliable)
     val converged = changed == 0L
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -468,9 +442,8 @@ object Dedup {
   /** [[nearDupClusters]] extended over a full corpus: documents in no pair
     * become singleton clusters of themselves.
     */
-  def clusterCorpus(docs: DataFrame, id: String, pairs: DataFrame,
-                    reliable: Boolean = false): DataFrame = {
-    val labels = nearDupClusters(pairs, reliable = reliable)
+  def clusterCorpus(docs: DataFrame, id: String, pairs: DataFrame): DataFrame = {
+    val labels = nearDupClusters(pairs)
     docs.select(col(id).as("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("cluster"))
@@ -485,21 +458,19 @@ object Dedup {
     *
     * Scale shape: shingles hash to 64-bit in-row before anything shuffles
     * — the exchange carries (doc_id, hash) longs, never shingle text. The
-    * shingle relation is materialized once ([[Materialize.once]] — the
-    * `reliable` knob picks localCheckpoint vs replicated persist, tradeoff
-    * documented there) and feeds both the per-shingle doc-frequency
-    * aggregate and the per-doc totals; both aggregates are plain two-phase
-    * hash aggs. No join ever
+    * shingle relation is materialized once and feeds both the per-shingle
+    * doc-frequency aggregate and the per-doc totals; both aggregates are
+    * plain two-phase hash aggs. No join ever
     * explodes: the doc-frequency side is (distinct-shingle)-sized and the
     * equi-join back is on the hash key.
     */
   def duplicateSpans(docs: DataFrame, id: String, text: String,
-                     k: Int = 8, minDocs: Int = 2,
-                     reliable: Boolean = false): DataFrame = {
+                     k: Int = 8, minDocs: Int = 2): DataFrame = {
     require(minDocs >= 2, s"duplicateSpans: minDocs must be >= 2, got $minDocs")
-    val sh = Materialize.once(docs.select(col(id).as("doc_id"),
+    val sh = docs.select(col(id).as("doc_id"),
         explode(graft.functions.word_shingles(col(text), k)).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("h")), reliable)
+      .select(col("doc_id"), xxhash64(col("s")).as("h"))
+      .localCheckpoint(eager = false)
     // rows are (doc, shingle)-distinct (kernel dedups within a doc), so a
     // plain count per hash IS the shingle's document frequency
     val docFreq = sh.groupBy("h").agg(count(lit(1)).as("nd"))
@@ -542,15 +513,11 @@ object Dedup {
     *    doc that is nearly all duplicated spans, still memory-bounded by
     *    the row.
     *
-    * Fault-tolerance: the span relation computes once and feeds both the
-    * doc-frequency aggregate and the start-set join; it is corpus-sized
-    * (~tokens-per-doc rows/doc at 12 bytes + overhead), so the `reliable`
-    * knob matters here — see [[Materialize.once]] for the
-    * localCheckpoint-vs-replicated-persist tradeoff it selects.
+    * The span relation computes once and feeds both the doc-frequency
+    * aggregate and the start-set join.
     */
   def removeDuplicateSpans(docs: DataFrame, id: String, text: String,
-                           k: Int = 6, minDocs: Int = 2,
-                           reliable: Boolean = false): DataFrame = {
+                           k: Int = 6, minDocs: Int = 2): DataFrame = {
     require(k >= 2, s"removeDuplicateSpans: k must be >= 2, got $k")
     require(minDocs >= 2, s"removeDuplicateSpans: minDocs must be >= 2, got $minDocs")
     val base = docs.select(col(id).as("doc_id"),
@@ -561,7 +528,7 @@ object Dedup {
       .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(0, size(tk) - $k), i -> xxhash64(array_join(slice(tk, i + 1, $k), ' ')))")))
       .toDF("doc_id", "pos", "h")
-    val sh = Materialize.once(shPlan, reliable)
+    val sh = shPlan.localCheckpoint(eager = false)
     val dupH = sh.groupBy("h")
       .agg(count_distinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= minDocs)
@@ -878,18 +845,17 @@ object Dedup {
     * xxhash64 (8-byte exchanges, identical shape).
     */
   def lineDedup(docs: DataFrame, id: String, text: String,
-                minCount: Int, reliable: Boolean = false): DataFrame = {
+                minCount: Int): DataFrame = {
     require(minCount >= 2, s"lineDedup: minCount must be >= 2, got $minCount")
     val base = docs.select(col(id).cast("long").as("doc_id"),
       col(text).as("_text"))
     // census AND verdict both read the line relation — materialized once
     // so the corpus isn't re-split per consumer (the duplicateSpans
     // discipline)
-    val lines = Materialize.once(
-      base.select(col("doc_id"),
-          posexplode(split(col("_text"), "\n")).as(Seq("pos", "line")))
-        .select(col("doc_id"), col("pos"), md5(trim(col("line"))).as("k")),
-      reliable)
+    val lines = base.select(col("doc_id"),
+        posexplode(split(col("_text"), "\n")).as(Seq("pos", "line")))
+      .select(col("doc_id"), col("pos"), md5(trim(col("line"))).as("k"))
+      .localCheckpoint(eager = false)
     val census = lines.groupBy("k").agg(
       count(lit(1)).as("n"),
       min(struct(col("doc_id"), col("pos"))).as("keeper"))

@@ -53,40 +53,34 @@ object Graph {
     * `(id, rank_micro)` with the caller's id column name preserved.
     */
   def pageRank(nodes: DataFrame, edges: DataFrame, id: String,
-               iters: Int = 5, reliable: Boolean = false): DataFrame = {
+               iters: Int = 5): DataFrame = {
     require(iters >= 1 && iters <= 100, s"pageRank: iters must be 1..100, got $iters")
     val nodeIds = nodes.select(col(id).cast("long").as("v"))
     // out-degree rides the edge row so iterations never re-aggregate it
     val deg = edges.select(col("src").cast("long").as("src"))
       .groupBy("src").agg(count(lit(1)).as("deg"))
-    // lazy on the default path (each round is consumed exactly once, so the
-    // checkpoint materializes inside the consuming job — no per-iteration
-    // driver round-trips); eager under `reliable` so a superseded round is
-    // never released before its successor's blocks exist
-    val withDeg = Materialize.once(
-      edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-        .join(deg, Seq("src")), reliable, eager = reliable)
+    // lazy: each round is consumed exactly once, and an eager checkpoint
+    // would add one job per round
+    val withDeg = edges
+      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .join(deg, Seq("src"))
+      .localCheckpoint(eager = false)
 
-    var ranks = Materialize.once(
-      nodeIds.select(col("v"), lit(1000000L).as("r")), reliable, eager = reliable)
+    var ranks = nodeIds.select(col("v"), lit(1000000L).as("r")).localCheckpoint(eager = false)
     var it = 0
     while (it < iters) {
       val contribs = withDeg
         .join(ranks.withColumnRenamed("v", "src"), Seq("src"))
         .select(col("dst").as("v"), integral_divide(col("r"), col("deg")).as("c"))
         .groupBy("v").agg(sum(col("c")).as("acc"))
-      val next = Materialize.once(
-        nodeIds.join(contribs, Seq("v"), "left")
-          .select(col("v"),
-            (lit(150000L) + integral_divide(coalesce(col("acc"), lit(0L)) * 17L, lit(20L)))
-              .as("r")), reliable, eager = reliable)
-      Materialize.release(ranks, reliable)
-      ranks = next
+      ranks = nodeIds.join(contribs, Seq("v"), "left")
+        .select(col("v"),
+          (lit(150000L) + integral_divide(coalesce(col("acc"), lit(0L)) * 17L, lit(20L)))
+            .as("r"))
+        .localCheckpoint(eager = false)
       it += 1
     }
-    val out = ranks.select(col("v").as(id), col("r").as("rank_micro"))
-    Materialize.release(withDeg, reliable)
-    out
+    ranks.select(col("v").as(id), col("r").as("rank_micro"))
   }
 
   /** Deterministic multi-component test graph: within each `blockSize`
@@ -121,37 +115,31 @@ object Graph {
     * Scale shape (the PageRank discipline): the symmetrized edge relation
     * is materialized ONCE; each round is one join against the node-sized
     * label relation plus one `groupBy(dst) min` partial-agg exchange —
-    * min is fully combinable, so a hot hub reduces map-side. Superseded
-    * label rounds are released.
+    * min is fully combinable, so a hot hub reduces map-side.
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame, id: String,
-                          iters: Int, reliable: Boolean = false): DataFrame = {
+                          iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 100,
       s"connectedComponents: iters must be 1..100, got $iters")
-    val sym = Materialize.once(
-      edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-        .union(edges.select(col("dst").cast("long").as("src"), col("src").cast("long").as("dst")))
-        .distinct(), reliable, eager = reliable)
-    var labels = Materialize.once(
-      nodes.select(col(id).cast("long").as("v"), col(id).cast("long").as("label")),
-      reliable, eager = reliable)
+    val sym = edges
+      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .union(edges.select(col("dst").cast("long").as("src"), col("src").cast("long").as("dst")))
+      .distinct()
+      .localCheckpoint(eager = false)
+    var labels = nodes.select(col(id).cast("long").as("v"), col(id).cast("long").as("label"))
+      .localCheckpoint(eager = false)
     var it = 0
     while (it < iters) {
       val nbrMin = sym
         .join(labels.withColumnRenamed("v", "src"), Seq("src"))
         .groupBy(col("dst").as("v")).agg(min(col("label")).as("nl"))
-      val next = Materialize.once(
-        labels.join(nbrMin, Seq("v"), "left")
-          .select(col("v"),
-            least(col("label"), coalesce(col("nl"), col("label"))).as("label")),
-        reliable, eager = reliable)
-      Materialize.release(labels, reliable)
-      labels = next
+      labels = labels.join(nbrMin, Seq("v"), "left")
+        .select(col("v"),
+          least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
+        .localCheckpoint(eager = false)
       it += 1
     }
-    val out = labels.select(col("v").as(id), col("label").as("component"))
-    Materialize.release(sym, reliable)
-    out
+    labels.select(col("v").as(id), col("label").as("component"))
   }
 
   /** Exact per-node triangle counts via DEGREE-ORDERED edge orientation —
@@ -171,8 +159,7 @@ object Graph {
     * cross product; per-node counts are one exploded aggregate at the end.
     * Output: `(node, n_triangles)` for nodes in at least one triangle.
     */
-  def triangleCounts(edges: DataFrame, src: String, dst: String,
-                     reliable: Boolean = false): DataFrame = {
+  def triangleCounts(edges: DataFrame, src: String, dst: String): DataFrame = {
     val und = edges
       .select(least(col(src), col(dst)).cast("long").as("a"),
         greatest(col(src), col(dst)).cast("long").as("b"))
@@ -186,16 +173,15 @@ object Graph {
       .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
     // three downstream consumers (both wedge legs + closure probe) —
     // materialized once so the dedup + degree joins don't run three times
-    val oriented = Materialize.once(
-      keyed.select(
+    val oriented = keyed.select(
         when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
           struct(col("a").as("u"), col("da").as("ku"), col("b").as("v"), col("db").as("kv")))
           .otherwise(
             struct(col("b").as("u"), col("db").as("ku"), col("a").as("v"), col("da").as("kv")))
           .as("e"))
-        .select(col("e.u").as("u"), col("e.ku").as("ku"),
-          col("e.v").as("v"), col("e.kv").as("kv")),
-      reliable)
+      .select(col("e.u").as("u"), col("e.ku").as("ku"),
+        col("e.v").as("v"), col("e.kv").as("kv"))
+      .localCheckpoint(eager = false)
     // wedges (u → x, u → y) with x before y in the total order; the closing
     // edge, if present, is oriented exactly x → y
     val e1 = oriented.select(col("u"), col("v").as("x"), col("kv").as("kx"))

@@ -62,9 +62,8 @@ object Retrieval {
     * `table__stats` sidecar). Overwrites an existing index of that name.
     */
   def writePostingsIndex(docs: DataFrame, id: String, text: String,
-                         table: String, buckets: Int = 64,
-                         reliable: Boolean = false): Unit = {
-    val post = Materialize.once(postings(docs, id, text), reliable)
+                         table: String, buckets: Int = 64): Unit = {
+    val post = postings(docs, id, text).localCheckpoint(eager = false)
     graft.sources.Bucketed.writeBucketed(post, table, "term", buckets)
     // same cross-session orphan-location reclaim as the postings table:
     // "overwrite" alone refuses a stale warehouse dir the catalog forgot
@@ -81,9 +80,9 @@ object Retrieval {
     * already establishes).
     */
   def appendPostingsIndex(batch: DataFrame, id: String, text: String,
-                          table: String, reliable: Boolean = false): Unit = {
+                          table: String): Unit = {
     val buckets = graft.sources.Bucketed.bucketCount(batch.sparkSession, table)
-    val post = Materialize.once(postings(batch, id, text), reliable)
+    val post = postings(batch, id, text).localCheckpoint(eager = false)
     post.repartition(buckets, col("term"))
       .write.mode("append").format("parquet")
       .bucketBy(buckets, "term").sortBy("term")
@@ -178,13 +177,12 @@ object Retrieval {
 
   def bm25Search(spark: SparkSession, table: String, queries: DataFrame,
                  queryId: String, queryText: String, k: Int = 10,
-                 k1: Double = 1.2, b: Double = 0.75,
-                 reliable: Boolean = false): DataFrame = {
+                 k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val qt = queries.select(col(queryId).as("query_id"),
         explode(TextAnalysis.tokens(col(queryText))).as("term"))
       .distinct()
-    val matchedM = Materialize.once(
-      probe(graft.sources.Bucketed.read(spark, table), qt), reliable)
+    val matchedM = probe(graft.sources.Bucketed.read(spark, table), qt)
+      .localCheckpoint(eager = false)
     // df(t) = corpus-wide posting count of t — exact from the pruned scan
     val dfreq = matchedM.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = spark.table(table + "__stats")

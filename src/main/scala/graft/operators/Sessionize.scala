@@ -195,7 +195,7 @@ object Sessionize {
       // Cost: one cogroup recompute per chunk when the final union is
       // consumed, against O(keys) checkpoint blocks held per chunk.
       carry = out.filter(col("_st")).select(col("_k"), col("_s"))
-        .localCheckpoint(true)
+        .localCheckpoint(eager = true)
       val data = out.filter(!col("_st"))
       acc = if (acc == null) data else acc.union(data)
     }

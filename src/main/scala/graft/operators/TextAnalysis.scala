@@ -442,10 +442,9 @@ object TextAnalysis {
     *
     * Plan: one corpus scan explodes bigram windows
     * ([[graft.functions.word_ngrams]], codegen'd); the relation is
-    * materialized once ([[Materialize.once]]; `reliable` picks the
-    * persistence mode, tradeoff documented there) and feeds the bigram
-    * counts, the context counts (an aggregate OVER the bigram aggregate —
-    * vocabulary-sized input, not corpus-sized), and the scoring join. The
+    * materialized once and feeds the bigram counts, the context counts
+    * (an aggregate OVER the bigram aggregate — vocabulary-sized input, not
+    * corpus-sized), and the scoring join. The
     * vocabulary size is a second, text-column-pruned scan: V cannot be
     * derived from the bigram relation (doc-final and single-token words
     * never open a bigram), and at 100 TB a second scan is cheaper than
@@ -454,10 +453,10 @@ object TextAnalysis {
     * count. Both joins are equi-joins on token keys; AQE broadcasts the
     * (vocabulary-bounded) count sides when they fit.
     */
-  def lmScore(docs: DataFrame, id: String, text: String,
-              reliable: Boolean = false): DataFrame = {
-    val bg = Materialize.once(docs.select(col(id).as("doc_id"),
-        explode(graft.functions.word_ngrams(col(text), 2)).as("bg")), reliable)
+  def lmScore(docs: DataFrame, id: String, text: String): DataFrame = {
+    val bg = docs.select(col(id).as("doc_id"),
+        explode(graft.functions.word_ngrams(col(text), 2)).as("bg"))
+      .localCheckpoint(eager = false)
     val bgCounts = bg.groupBy("bg").agg(count(lit(1)).as("c_bg"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
     // context count = occurrences of w1 as a bigram start — summed from the
@@ -487,12 +486,11 @@ object TextAnalysis {
     * per-group reduction — both standard two-phase hash aggs; nothing
     * wider than a token row crosses an exchange.
     */
-  def sourceEntropy(docs: DataFrame, grp: String, text: String,
-                    reliable: Boolean = false): DataFrame = {
+  def sourceEntropy(docs: DataFrame, grp: String, text: String): DataFrame = {
     val tok = docs.select(col(grp).cast("string").as("g"),
       explode(tokens(col(text))).as("tkn"))
-    val counts = Materialize.once(
-      tok.groupBy("g", "tkn").agg(count(lit(1)).as("c")), reliable)
+    val counts = tok.groupBy("g", "tkn").agg(count(lit(1)).as("c"))
+      .localCheckpoint(eager = false)
     entropyOfCounts(counts)
   }
 
@@ -619,12 +617,11 @@ object TextAnalysis {
     * relation, then one (pair, term) two-phase agg and one pair-level
     * reduction — O(S · vocab) exchanged rows, never corpus-sized.
     */
-  def jsDivergence(docs: DataFrame, grp: String, text: String,
-                   reliable: Boolean = false): DataFrame = {
+  def jsDivergence(docs: DataFrame, grp: String, text: String): DataFrame = {
     val tok = docs.select(col(grp).cast("string").as("g"),
       explode(tokens(col(text))).as("tkn"))
-    val counts = Materialize.once(
-      tok.groupBy("g", "tkn").agg(count(lit(1)).as("c")), reliable)
+    val counts = tok.groupBy("g", "tkn").agg(count(lit(1)).as("c"))
+      .localCheckpoint(eager = false)
     val totals = counts.groupBy("g").agg(sum(col("c")).as("n"))
     val dist = counts.join(broadcast(totals), Seq("g"))
     val srcs = totals.select(col("g").as("g2"), col("n").as("n2"))

@@ -174,23 +174,20 @@ object Streams {
     * instead — losing data on a crash between the two — so accept-first
     * is the safe order for a no-data-loss pipeline.
     * The index table must exist ([[graft.operators.Dedup.writeFingerprintIndex]]).
-    * The per-batch survivor materialization goes through
-    * [[graft.operators.Materialize.once]] (`reliable` picks executor-local
-    * blocks vs replicated persist — tradeoff documented there); eager, so
-    * `accept` and the index append read the same computed blocks.
+    * The per-batch survivors are checkpointed eagerly, so `accept` and the
+    * index append read the same computed blocks.
     */
   def ingestDedup(stream: DataFrame, id: String, text: String,
                   indexTable: String, checkpoint: String,
-                  buckets: Int = 64, reliable: Boolean = false)
+                  buckets: Int = 64)
                  (accept: DataFrame => Unit): DataStreamWriter[Row] =
     stream.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val fresh = graft.operators.Materialize.once(
-          graft.operators.Dedup.dedupAgainstIndex(batch, id, text, indexTable),
-          reliable, eager = true)
+        val fresh = graft.operators.Dedup.dedupAgainstIndex(batch, id, text, indexTable)
+          .localCheckpoint(eager = true)
         accept(fresh)
         graft.operators.Dedup.appendFingerprintIndex(fresh, id, text, indexTable, buckets)
       }

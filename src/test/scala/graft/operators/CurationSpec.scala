@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -184,49 +185,54 @@ class CurationSpec extends SparkTestBase {
     assert(Curation.exportJsonlSized(split, "split", "doc_id", Long.MaxValue, dir1) == 1)
   }
 
+  // The name predates the removal of the `reliable` option: every site is
+  // one local checkpoint now, and this checks each for input-width invariance.
   test("reliable=true (replicated persist) is result-identical at every Materialize site") {
     val docs = spark.read.parquet(sfDir + "/documents.parquet")
       .select("doc_id", "text").limit(120)
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    def rows(df: DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
-    assert(rows(Curation.tfidfTopTerms(docs, "doc_id", "text", reliable = true)) ==
-      rows(Curation.tfidfTopTerms(docs, "doc_id", "text")))
-    assert(rows(Curation.contamination(docs.limit(40), docs, "doc_id", "text", reliable = true)) ==
-      rows(Curation.contamination(docs.limit(40), docs, "doc_id", "text")))
-    assert(rows(TextAnalysis.lmScore(docs, "doc_id", "text", reliable = true)) ==
-      rows(TextAnalysis.lmScore(docs, "doc_id", "text")))
-    assert(rows(Dedup.duplicateSpans(docs, "doc_id", "text", reliable = true)) ==
-      rows(Dedup.duplicateSpans(docs, "doc_id", "text")))
-    assert(rows(Dedup.simhashPairs(docs, "doc_id", "text", reliable = true)) ==
-      rows(Dedup.simhashPairs(docs, "doc_id", "text")))
-    assert(rows(Dedup.removeDuplicateSpans(docs, "doc_id", "text", reliable = true)) ==
-      rows(Dedup.removeDuplicateSpans(docs, "doc_id", "text")))
+    // the same operator over the same rows, read one split vs seven
+    def widthInvariant(op: DataFrame => DataFrame, in: DataFrame = docs): Unit =
+      assert(rows(op(in.coalesce(1))) == rows(op(in.repartition(7))))
+    widthInvariant(Curation.tfidfTopTerms(_, "doc_id", "text"))
+    widthInvariant(d => Curation.contamination(d.orderBy("doc_id").limit(40), d, "doc_id", "text"))
+    widthInvariant(TextAnalysis.lmScore(_, "doc_id", "text"))
+    widthInvariant(Dedup.duplicateSpans(_, "doc_id", "text"))
+    widthInvariant(Dedup.simhashPairs(_, "doc_id", "text"))
+    widthInvariant(Dedup.removeDuplicateSpans(_, "doc_id", "text"))
     val chain = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a_id", "b_id")
-    // The iterative path must release each superseded round's persist
-    // entry (CacheManager pins them; the ContextCleaner never frees
-    // them) — after the run only the final round's frame may remain
-    // pinned beyond what was already cached before the call.
-    locally {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.sharedState.cacheManager.clearCache()
-      val before = spark.sparkContext.getPersistentRDDs.size
-      val res = Dedup.nearDupClustersResult(chain, reliable = true)
-      assert(res.converged)
-      val after = spark.sparkContext.getPersistentRDDs.size
-      assert(after - before <= 1,
-        s"reliable iterative run leaked persist entries: $before -> $after " +
-          "(only the final round's labels may stay pinned)")
-    }
-    assert(rows(Dedup.nearDupClusters(chain, reliable = true)) ==
-      rows(Dedup.nearDupClusters(chain)))
-    assert(rows(Dedup.clusterCorpus(docs, "doc_id", chain, reliable = true)) ==
-      rows(Dedup.clusterCorpus(docs, "doc_id", chain)))
-    val (cr, rep) = Curation.curate(docs, "doc_id", "text", reliable = true)
-    val (cf, repF) = Curation.curate(docs, "doc_id", "text")
-    assert(rows(cr) == rows(cf) && rep == repF)
-    // replicated persists must not linger after the frames are dropped —
-    // unpersist what this test pinned so later suites start clean
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    assert(Dedup.nearDupClustersResult(chain.coalesce(1)).converged)
+    assert(Dedup.nearDupClustersResult(chain.repartition(7)).converged)
+    widthInvariant(Dedup.nearDupClusters(_), chain)
+    widthInvariant(Dedup.clusterCorpus(_, "doc_id", chain))
+    val (c1, rep1) = Curation.curate(docs.coalesce(1), "doc_id", "text")
+    val (c7, rep7) = Curation.curate(docs.repartition(7), "doc_id", "text")
+    assert(rows(c1) == rows(c7) && rep1 == rep7)
+  }
+
+  test("checkpoint sites stay lazy: building each operator's frame runs a fixed number of jobs") {
+    val docs = spark.read.parquet(sfDir + "/documents.parquet")
+      .select("doc_id", "text").limit(120)
+    val nodes = spark.range(100).select(col("id").as("v"))
+    val edges = Graph.arithmeticEdges(nodes, "v", 100L)
+    // Building a frame over a lazy localCheckpoint still runs the shuffle
+    // stages below it (AQE executes them to plan the checkpointed RDD);
+    // these counts are those stages. An eager or bare `localCheckpoint()`
+    // adds one job per site, and per round in pageRank/connectedComponents.
+    val built = Seq(
+      "tfidfTopTerms" -> jobsDuring(Curation.tfidfTopTerms(docs, "doc_id", "text"))._2,
+      "contamination" -> jobsDuring(Curation.contamination(docs.limit(40), docs, "doc_id", "text"))._2,
+      "lmScore" -> jobsDuring(TextAnalysis.lmScore(docs, "doc_id", "text"))._2,
+      "duplicateSpans" -> jobsDuring(Dedup.duplicateSpans(docs, "doc_id", "text"))._2,
+      "simhashPairs" -> jobsDuring(Dedup.simhashPairs(docs, "doc_id", "text"))._2,
+      "lineDedup" -> jobsDuring(Dedup.lineDedup(docs, "doc_id", "text", minCount = 3))._2,
+      "pageRank" -> jobsDuring(Graph.pageRank(nodes, edges, "v", iters = 3))._2,
+      "connectedComponents" ->
+        jobsDuring(Graph.connectedComponents(nodes, edges, "v", iters = 3))._2)
+    assert(built == Seq("tfidfTopTerms" -> 1, "contamination" -> 1, "lmScore" -> 1,
+      "duplicateSpans" -> 1, "simhashPairs" -> 0, "lineDedup" -> 1, "pageRank" -> 12,
+      "connectedComponents" -> 12))
   }
 
   test("curate: end-to-end pipeline drops planted junk, exact dups, and near-dups") {

@@ -51,16 +51,16 @@ class GraphSpec extends SparkTestBase {
     assert(e.toSet == expected)
   }
 
+  // The name predates the removal of pageRank's `reliable` option; the
+  // rounds are local checkpoints now, so nothing at all stays pinned.
   test("pageRank reliable path leaves at most the final ranks pinned") {
     val nodes = spark.range(100).select(col("id").as("v"))
     val edges = Graph.arithmeticEdges(nodes, "v", 100L)
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val out = Graph.pageRank(nodes, edges, "v", iters = 3, reliable = true)
-    out.count()
-    // superseded rounds and the degree-augmented edges are released; only
-    // the final ranks frame may stay pinned
-    val leaked = spark.sparkContext.getPersistentRDDs.size - before
-    assert(leaked <= 1, s"$leaked persisted entries leaked from the iteration")
+    spark.sharedState.cacheManager.clearCache()
+    Graph.pageRank(nodes, edges, "v", iters = 3).count()
+    Graph.connectedComponents(nodes, edges, "v", iters = 3).count()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "an iterative graph operator left a cached relation behind")
   }
 
   test("connectedComponents: block graph converges to known membership; rounds are bounded") {

@@ -167,11 +167,8 @@ class StreamsSpec extends SparkTestBase {
       val mem = MemoryStream[(Long, String)]
       val accepted = scala.collection.mutable.ArrayBuffer.empty[Long]
       def run(): Unit = {
-        // reliable=true here: same contract, exercises the replicated-
-        // persist survivor materialization (Materialize.once) in streaming
         val w = Streams.ingestDedup(mem.toDF().toDF("doc_id", "text"),
-          "doc_id", "text", "ingest_idx_test", ckpt, buckets = 4,
-          reliable = true) { fresh =>
+          "doc_id", "text", "ingest_idx_test", ckpt, buckets = 4) { fresh =>
           accepted ++= fresh.select("doc_id").collect().map(_.getLong(0))
         }
         w.start().awaitTermination()
