@@ -304,12 +304,12 @@ object Dedup {
                     numHashes: Int = 64, bands: Int = 16,
                     maxBucketSize: Int = 1000): DataFrame = {
     val texts = docs.select(col(id).as("doc_id"), col(text).as("t"))
-    lshCandidates(docs, id, text, shingleK, numHashes, bands, maxBucketSize)
-      // the candidate relation is tiny in BYTES but every row carries an
-      // expensive verification — repartition by id so AQE's size-based
-      // coalescing can't serialize the verify onto one task (the exchange
-      // carries ids only; the text joins below broadcast and preserve it)
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("a_id"))
+    // the candidate relation is tiny in BYTES but every row carries an
+    // expensive verification — repartition by id so AQE's size-based
+    // coalescing can't serialize the verify onto one task (the exchange
+    // carries ids only; the text joins below broadcast and preserve it)
+    Par.byKey(lshCandidates(docs, id, text, shingleK, numHashes, bands, maxBucketSize),
+        col("a_id"))
       .join(texts.select(col("doc_id").as("a_id"), col("t").as("a_t")), Seq("a_id"))
       .join(texts.select(col("doc_id").as("b_id"), col("t").as("b_t")), Seq("b_id"))
       // BANDED Levenshtein kernel: O(maxDist·len) per pair. Both builtin

@@ -400,7 +400,6 @@ object MpegAudio {
                                            weights: Array[Long]) {
     private val (lens, codes) = canonicalCode(weights)
     private val reader = new CanonicalReader(lens, codes)
-    def codeLen(sym: Int): Int = lens(sym)
     def write(put: (Long, Int) => Unit, sym: Int): Unit =
       put(codes(sym).toLong, lens(sym))
     def read(br: MsbReader): Int = reader.read(br, "mpeg audio: invalid Huffman code")

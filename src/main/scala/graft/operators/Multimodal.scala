@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal-column support: image/audio/video payloads ride through the
   * engine as opaque `binary` columns with a typed metadata struct, the way a
@@ -27,10 +29,12 @@ import org.apache.spark.sql.types._
   * change with the same `Iterator`-batch signature a vectorized
   * (Arrow/pandas-style) UDF would have.
   *
-  * Scale shape: decode is embarrassingly parallel (`mapPartitions`, no
-  * shuffle); metadata extraction is pure column arithmetic inside
-  * whole-stage codegen; frame sampling never materializes more than the
-  * requested frames per row.
+  * Scale shape: every per-document codec stage is one of two helpers —
+  * [[perDoc]] builds a fixture blob from `(doc_id, n_chars)`,
+  * [[mapMedia]] decodes or transforms `(doc_id, media)` — each one typed
+  * `mapPartitions` that never shuffles the payload; metadata extraction
+  * is pure column arithmetic inside whole-stage codegen; frame sampling
+  * never materializes more than the requested frames per row.
   */
 object Multimodal {
 
@@ -45,23 +49,53 @@ object Multimodal {
 
   private def hex2(c: Column): Column = lpad(hex(c), 2, "0")
 
-  /** Scale-adaptive parallelism for the per-doc codec stages. The local
-    * fixture tables are single parquet row groups (one scan split), which
-    * would serialize every per-doc encode/decode onto one core of the
-    * session; at corpus scale the scan arrives in many splits and this
-    * exchange of the bare pre-encode ids is noise next to the per-doc
-    * codec work (the [[withMp3Media]] family proved the idiom). Sized
-    * from the scheduler's slot count — `local[N]` → N, a cluster → total
-    * executor cores — never a constant, so the stage uses whatever the
-    * session actually has. Round-robin, not hash-on-doc_id: the decode
-    * stage is compute-bound and exactly even row counts beat a hash
-    * multinomial whose tail task runs ~20% long (measured on the MP3
-    * family, the heaviest per-doc decode: hash cost 1.9 s → 2.5 s/query).
-    * Deterministic under retry: sortBeforeRepartition (default on) over
-    * the deterministic parquet scan.
+  /** The per-document generator stage every fixture `with*Media` shares:
+    * project `(doc_id, n_chars)` as longs, optionally spread them, and
+    * map each pair through `f` in one typed `mapPartitions`.
+    * [[perDocMedia]] is the media-blob form; the ADPCM report rows use
+    * this one directly.
+    *
+    * `spread` is a per-codec cost call with no default. True spreads the
+    * pre-encode ids ([[Par.spread]]): the fixture tables are single
+    * parquet row groups (one scan split), which would serialize a heavy
+    * per-doc encode onto one core — the H.264/VP8/MPEG/AAC/JPEG families
+    * gained 3-10x. False keeps a cheap encode (raw pixmaps, PNG, GIF, raw
+    * AVI, PCM/G.711/FLAC/ADPCM: ~w·h or a few hundred int ops per doc)
+    * where the scan put it, because the exchange's fixed cost exceeds the
+    * serial compute (measured: spreading took q_pixel_* from ~0.22 s to
+    * ~0.8 s and q_audio_* from ~0.25 s to ~0.55 s). Either way the
+    * payload is built after the exchange: media bytes never cross one.
     */
-  private def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+  private def perDoc[T <: Product : TypeTag](docs: DataFrame, spread: Boolean)
+                                           (f: (Long, Long) => T): Dataset[T] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val ids = docs.select(col("doc_id").cast("long").as("doc_id"),
+      col("n_chars").cast("long").as("nc"))
+    (if (spread) Par.spread(ids) else ids).as[(Long, Long)]
+      .mapPartitions(_.map(f.tupled))
+  }
+
+  /** [[perDoc]] for the media generators: `gen(doc_id, n_chars)` is the
+    * encoded blob of a `(doc_id, media)` frame.
+    */
+  private def perDocMedia(docs: DataFrame, spread: Boolean)
+                         (gen: (Long, Long) => Array[Byte]): DataFrame =
+    perDoc(docs, spread)((d, nc) => (d, gen(d, nc))).toDF("doc_id", "media")
+
+  /** The per-blob stage every decode/transform shares: one typed map over
+    * `(doc_id, media)`, batched per task (the Arrow-UDF execution shape)
+    * with zero shuffle — a pure scan → scan job at any scale.
+    * `mapPartitions` is the codec exception to the expression rule: the
+    * decoders are imperative byte walks.
+    */
+  private def mapMedia[T <: Product : TypeTag](media: DataFrame)
+                                             (f: (Long, Array[Byte]) => T): Dataset[T] = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    media.select("doc_id", "media").as[(Long, Array[Byte])]
+      .mapPartitions(_.map(f.tupled))
+  }
 
   /** Real container-header bytes for the synthetic fixture: a PNG
     * signature+IHDR / JFIF APP0+SOF0 / WebP VP8X prefix whose dimensions
@@ -107,11 +141,9 @@ object Multimodal {
     * ingest runs on crawled image bytes. The generator's arithmetic is what
     * lets the DuckDB oracle predict the parse output exactly.
     */
-  def withMedia(docs: DataFrame, id: String = "doc_id", text: String = "text",
-                nChars: String = "n_chars"): DataFrame =
+  def withMedia(docs: DataFrame): DataFrame =
     docs
-      .select(col(id).as("doc_id"),
-        mediaBytes(col(text), col(nChars)).as("media"))
+      .select(col("doc_id"), mediaBytes(col("text"), col("n_chars")).as("media"))
       .withColumn("_hdr", graft.functions.media_header(col("media")))
       .select(
         col("doc_id"),
@@ -168,9 +200,11 @@ object Multimodal {
     def decode(bytes: Array[Byte]): Array[Float] = fold(bytes)
   }
 
-  /** Decode every media blob to a feature vector. `mapPartitions` keeps the
-    * decode batched per task (the Arrow-UDF execution shape) with zero
-    * shuffle; at 100 TB this is a pure scan → scan job.
+  /** Decode every media blob to a feature vector ([[mapMedia]]: batched
+    * per task, zero shuffle). `media_bytes` and `format` come from the
+    * blob itself — its length, and the header parse behind
+    * [[graft.functions.media_header]] that [[withMedia]] also uses — so
+    * the input needs only `(doc_id, media)`.
     *
     * Routing: blobs whose container [[ImageCodec]] can genuinely decode
     * (BMP/PPM/PGM — pure arithmetic; PNG — JDK zlib; baseline JPEG —
@@ -181,26 +215,21 @@ object Multimodal {
     * stub over the raw bytes (identical fold, so the two paths differ
     * only by what byte stream feeds it).
     */
-  def decodeFeatures(media: DataFrame): Dataset[DecodedMedia] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("doc_id", "media", "media_bytes", "format")
-      .as[(Long, Array[Byte], Long, String)]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes, nBytes, fmt) =>
-          // a crawled-bytes pipeline must tolerate garbage: a blob whose
-          // magic sniffs as BMP/netpbm but whose body is corrupt falls
-          // back to the raw-bytes fold instead of aborting the job
-          val features = ImageCodec.sniff(bytes) match {
-            case Some(_) =>
-              try FakeCodec.fold(ImageCodec.decode(bytes).pixels)
-              catch { case _: IllegalArgumentException => FakeCodec.decode(bytes) }
-            case None => FakeCodec.decode(bytes)
-          }
-          DecodedMedia(id, nBytes, fmt, features)
-        }
+  def decodeFeatures(media: DataFrame): Dataset[DecodedMedia] =
+    mapMedia(media) { (id, bytes) =>
+      // a crawled-bytes pipeline must tolerate garbage: a blob whose
+      // magic sniffs as BMP/netpbm but whose body is corrupt falls
+      // back to the raw-bytes fold instead of aborting the job
+      val features = ImageCodec.sniff(bytes) match {
+        case Some(_) =>
+          try FakeCodec.fold(ImageCodec.decode(bytes).pixels)
+          catch { case _: IllegalArgumentException => FakeCodec.decode(bytes) }
+        case None => FakeCodec.decode(bytes)
       }
-  }
+      val hdr = graft.functions.HashUtil.mediaHeader(bytes)
+      val fmt = if (hdr == null) null else hdr.getUTF8String(0).toString
+      DecodedMedia(id, bytes.length.toLong, fmt, features)
+    }
 
   /** Deterministic pixel-value generator for the graded fixture: byte `i`
     * of doc `docId`'s logical pixel stream is `(31·docId + 7·i) mod 256` —
@@ -218,30 +247,16 @@ object Multimodal {
     * specs ([[ImageCodec]]); generation is test/fixture plumbing — the
     * graded operator is the DECODE path over these bytes.
     */
-  def withPixelMedia(docs: DataFrame, id: String = "doc_id",
-                     nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // deliberately NOT spread: the raw-pixmap encode is ~w*h integer ops
-    // per doc (w,h ≤ 16) — the exchange's fixed cost exceeds the entire
-    // serial compute (measured: spreading took the q_pixel_* family from
-    // ~0.22 s to ~0.8 s, over 2x their anchors; see perDocMedia)
-    docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc"))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (docId, nc) =>
-          val w = (4 + nc % 13).toInt
-          val h = (3 + nc % 11).toInt
-          val blob = (docId % 3) match {
-            case 0 => ImageCodec.encodeBmp24(w, h, pixGen(docId))
-            case 1 => ImageCodec.encodePpm(w, h, pixGen(docId))
-            case _ => ImageCodec.encodePgm(w, h, pixGen(docId))
-          }
-          (docId, blob)
-        }
+  def withPixelMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = false) { (docId, nc) =>
+      val w = (4 + nc % 13).toInt
+      val h = (3 + nc % 11).toInt
+      (docId % 3) match {
+        case 0 => ImageCodec.encodeBmp24(w, h, pixGen(docId))
+        case 1 => ImageCodec.encodePpm(w, h, pixGen(docId))
+        case _ => ImageCodec.encodePgm(w, h, pixGen(docId))
       }
-      .toDF("doc_id", "media")
-  }
+    }
 
   /** Attach a REAL PNG blob to `documents`: dims derive from `n_chars`,
     * channel count cycles 1 (grayscale) / 3 (RGB) / 4 (RGBA) by `doc_id`,
@@ -252,48 +267,15 @@ object Multimodal {
     * plumbing; the graded operator is the full [[PngCodec]] DECODE over
     * these bytes (q_png_decode).
     */
-  def withPngMedia(docs: DataFrame, id: String = "doc_id",
-                   nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // deliberately NOT spread: this encode is a few hundred ops per doc —
-    // the exchange's fixed cost exceeds the serial compute (see perDocMedia)
-    docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc"))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (docId, nc) =>
-          val w = (4 + nc % 13).toInt
-          val h = (3 + nc % 11).toInt
-          val c = (docId % 3) match { case 0 => 1; case 1 => 3; case _ => 4 }
-          (docId, PngCodec.encodePng(w, h, c, pixGen(docId),
-            r => ((docId + r) % 5).toInt))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withPngMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = false) { (docId, nc) =>
+      val w = (4 + nc % 13).toInt
+      val h = (3 + nc % 11).toInt
+      val c = (docId % 3) match { case 0 => 1; case 1 => 3; case _ => 4 }
+      PngCodec.encodePng(w, h, c, pixGen(docId),
+        r => ((docId + r) % 5).toInt)
+    }
 
-  /** Attach a REAL baseline JPEG blob to `documents`, built so decode is
-    * closed-form: content is BLOCK-CONSTANT gray — every pixel of 8×8
-    * block (bx,by) carries `(31·docId + 13·(by·⌈w/8⌉ + bx)) mod 256` on
-    * all channels — and the quant tables are flat 8s, so every block is
-    * DC-only with a DC that survives quantization exactly
-    * ([[JpegCodec]]'s object doc derives this). The coding shape cycles
-    * by `doc_id`: grayscale / 4:4:4 color / 4:2:0 subsampled color (gray
-    * content keeps chroma at 128, so even the subsampled path is exact).
-    * Generation is fixture plumbing; the graded operator is the full
-    * [[JpegCodec]] DECODE — Huffman, dequant, IDCT, upsampling, color
-    * matrix — over these bytes (q_jpeg_decode).
-    */
-  /** Attach a REAL lossless-WebP (VP8L) blob to `documents`: dimensions
-    * derive from `n_chars` (the [[withPngMedia]] grammar), content is
-    * always 4-channel RGBA from [[pixGen]] (VP8L pixels ARE argb), and the
-    * CODING features rotate by `doc_id % 4` so every decoder path is live
-    * in the graded scan — plain literal Huffman / subtract-green
-    * transform / color cache / an LZ77 backref (the generator's 4-byte
-    * pixels repeat every 64 pixels, so images past 64 px carry a real
-    * distance-64 copy). Content is identical across variants — only the
-    * bitstream differs — so ONE closed-form oracle grades all four.
-    */
   /** Attach a REAL lossy-WebP (VP8 key frame) blob to `documents`:
     * dimensions are multiples of 16 from `n_chars` (whole macroblocks),
     * per-MB planar-YUV targets are closed-form in (doc_id, mb), and the
@@ -306,21 +288,12 @@ object Multimodal {
     * ([[Vp8Codec]]'s scaladoc derivation), which is what lets one
     * closed-form oracle grade the whole arithmetic-coded pipeline.
     */
-  def withVp8Media(docs: DataFrame, id: String = "doc_id",
-                   nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (docId, nc) =>
-          val w = (16 * (1 + nc % 3)).toInt
-          val h = (16 * (1 + nc % 2)).toInt
-          (docId, Vp8Codec.wrapWebp(Vp8Codec.encodeFrame(vp8Plan(docId, w, h))))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withVp8Media(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (docId, nc) =>
+      val w = (16 * (1 + nc % 3)).toInt
+      val h = (16 * (1 + nc % 2)).toInt
+      Vp8Codec.wrapWebp(Vp8Codec.encodeFrame(vp8Plan(docId, w, h)))
+    }
 
   /** The rotating VP8 fixture plan (shared with the spec suite). */
   private[operators] def vp8Plan(docId: Long, w: Int, h: Int): Vp8Codec.Plan = {
@@ -376,21 +349,12 @@ object Multimodal {
     * total_zeros/run_before), the 4x4 inverse transform and both
     * Hadamard DC paths, and the chroma QP offset chain are all exact.
     */
-  def withH264IntraMedia(docs: DataFrame, id: String = "doc_id",
-                         nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (d, nc) =>
-          val w = (16 * (1 + nc % 3)).toInt
-          val h = (16 * (1 + nc % 2)).toInt
-          (d, H264Codec.encodeIntra(h264IntraPlan(d, w, h)))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264IntraMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, nc) =>
+      val w = (16 * (1 + nc % 3)).toInt
+      val h = (16 * (1 + nc % 2)).toInt
+      H264Codec.encodeIntra(h264IntraPlan(d, w, h))
+    }
 
   /** The [[h264IntraPlan]] fixture re-encoded through the CABAC entropy
     * backend (entropy_coding_mode_flag = 1): identical closed-form pixel
@@ -399,21 +363,12 @@ object Multimodal {
     * terminates, and the I_PCM engine flush/re-init all must be exact
     * for the same checksum to come back.
     */
-  def withH264CabacMedia(docs: DataFrame, id: String = "doc_id",
-                         nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (d, nc) =>
-          val w = (16 * (1 + nc % 3)).toInt
-          val h = (16 * (1 + nc % 2)).toInt
-          (d, H264Codec.encodeIntra(h264IntraPlan(d, w, h), cabac = true))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264CabacMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, nc) =>
+      val w = (16 * (1 + nc % 3)).toInt
+      val h = (16 * (1 + nc % 2)).toInt
+      H264Codec.encodeIntra(h264IntraPlan(d, w, h), cabac = true)
+    }
 
   /** The two-frame H.264 inter fixture plan (shared with the spec
     * suite): frame 1 is a steered all-DC IDR; frame 2 is a P slice whose
@@ -472,21 +427,12 @@ object Multimodal {
     * mixing on the last row), inter residual decoding, and intra-in-P
     * prediction are all exact.
     */
-  def withH264InterMedia(docs: DataFrame, id: String = "doc_id",
-                         nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (d, nc) =>
-          val w = (16 * (2 + nc % 2)).toInt
-          val h = 32
-          (d, H264Codec.encodeInter(h264InterPlan(d, w, h)))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264InterMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, nc) =>
+      val w = (16 * (2 + nc % 2)).toInt
+      val h = 32
+      H264Codec.encodeInter(h264InterPlan(d, w, h))
+    }
 
   /** The [[h264InterPlan]] two-frame fixture re-encoded through CABAC
     * (entropy_coding_mode_flag = 1): per-MB mb_skip_flag with
@@ -495,21 +441,12 @@ object Multimodal {
     * thresholds, and the shared residual/end_of_slice machinery — all
     * value-neutral, so the q_h264_inter oracle grades it unchanged.
     */
-  def withH264PCabacMedia(docs: DataFrame, id: String = "doc_id",
-                          nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (d, nc) =>
-          val w = (16 * (2 + nc % 2)).toInt
-          val h = 32
-          (d, H264Codec.encodeInter(h264InterPlan(d, w, h), cabac = true))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264PCabacMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, nc) =>
+      val w = (16 * (2 + nc % 2)).toInt
+      val h = 32
+      H264Codec.encodeInter(h264InterPlan(d, w, h), cabac = true)
+    }
 
   /** The sub-pel H.264 inter plan: frame 1 is an IDR of UNIFORM 2x2-MB
     * tiles (V/H intra modes keep every prediction uniform regardless of
@@ -632,62 +569,35 @@ object Multimodal {
     * P_8x8 sub-macroblock partitions with per-quadrant motion; graded
     * via the frame-weighted checksum.
     */
-  def withH264P8Media(docs: DataFrame, id: String = "doc_id",
-                      nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (d, nc) =>
-          val w = (32 * (1 + nc % 2)).toInt
-          val h = 64
-          (d, H264Codec.encodeInter(h264P8Plan(d, w, h)))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264P8Media(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, nc) =>
+      val w = (32 * (1 + nc % 2)).toInt
+      val h = 64
+      H264Codec.encodeInter(h264P8Plan(d, w, h))
+    }
 
   /** Each doc carries a two-frame H.264 stream from [[h264PartPlan]]:
     * sub-MB partitions with per-partition motion against the directional
     * predictors; graded via the frame-weighted checksum.
     */
-  def withH264PartMedia(docs: DataFrame, id: String = "doc_id",
-                        nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (d, nc) =>
-          val w = (32 * (1 + nc % 2)).toInt
-          val h = 64
-          (d, H264Codec.encodeInter(h264PartPlan(d, w, h)))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264PartMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, nc) =>
+      val w = (32 * (1 + nc % 2)).toInt
+      val h = 64
+      H264Codec.encodeInter(h264PartPlan(d, w, h))
+    }
 
   /** Each doc carries a two-frame H.264 stream from [[h264SubpelPlan]]:
     * quarter-pel luma (all 16 fractional positions rotating), eighth-pel
     * bilinear chroma, and clamped out-of-frame motion, all graded
     * through uniform-collapse closed forms.
     */
-  def withH264SubpelMedia(docs: DataFrame, id: String = "doc_id",
-                          nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (d, nc) =>
-          val w = (32 * (1 + nc % 2)).toInt
-          val h = 64
-          (d, H264Codec.encodeInter(h264SubpelPlan(d, w, h)))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264SubpelMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, nc) =>
+      val w = (32 * (1 + nc % 2)).toInt
+      val h = 64
+      H264Codec.encodeInter(h264SubpelPlan(d, w, h))
+    }
 
   /** The B-slice plan: frame 1 = uniform 2x2-MB tiles (IDR), frame 2 =
     * all zero-motion P MBs with steered residuals (so frame 2 differs
@@ -745,52 +655,26 @@ object Multimodal {
   /** Each doc carries the [[h264BModPlan]] stream: B reference lists
     * permuted per list by the modification syntax.
     */
-  def withH264BModMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          (d, H264Codec.encodeInter(h264BModPlan(d), cabac = d % 4 == 3))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264BModMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      H264Codec.encodeInter(h264BModPlan(d), cabac = d % 4 == 3)
+    }
 
   /** Each doc carries a three-frame H.264 stream from [[h264BPlan]]:
     * IDR + P + a non-reference B slice with two reference lists.
     */
-  def withH264BMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          (d, H264Codec.encodeInter(h264BPlan(d, 32, 64)))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264BMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => H264Codec.encodeInter(h264BPlan(d, 32, 64)))
 
   /** [[h264BPlan]] re-encoded through CABAC: the B mb_type tree, the
     * per-list UEG3 mvds, and the non-reference slice machinery under
     * the arithmetic coder; the q_h264_bslice oracle grades it
     * unchanged.
     */
-  def withH264BCabacMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          (d, H264Codec.encodeInter(h264BPlan(d, 32, 64), cabac = true))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264BCabacMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      H264Codec.encodeInter(h264BPlan(d, 32, 64), cabac = true)
+    }
 
   /** Deblocking fixture, intra variant: one IDR of five MB stripes along
     * one axis (`disable_deblocking_filter_idc = 0`), constants chosen so
@@ -861,23 +745,13 @@ object Multimodal {
     * uniform MBs — its with-effect case is graded sample-exact by
     * H264DeblockSpec's independent replay).
     */
-  def withH264DeblockMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          val v = (d % 4).toInt
-          val colv = v % 2 == 0
-          val bytes =
-            if (v < 2) H264Codec.encodeIntra(h264DeblockIntraPlan(d, colv), deblock = true)
-            else H264Codec.encodeInter(h264DeblockInterPlan(d, colv), deblockP = true)
-          (d, bytes)
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264DeblockMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      val v = (d % 4).toInt
+      val colv = v % 2 == 0
+      if (v < 2) H264Codec.encodeIntra(h264DeblockIntraPlan(d, colv), deblock = true)
+      else H264Codec.encodeInter(h264DeblockInterPlan(d, colv), deblockP = true)
+    }
 
   /** Three-frame weighted-prediction plan (shared with the spec): IDR
     * constants t1, an all-intra-in-P frame 2 with constants t2 (the two
@@ -921,31 +795,17 @@ object Multimodal {
     * explicit weighted prediction + two list-0 references, graded
     * frame-weighted and byte-exact.
     */
-  def withH264WeightedMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map(d => (d, H264Codec.encodeInter(h264WeightedPlan(d))))
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264WeightedMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => H264Codec.encodeInter(h264WeightedPlan(d)))
 
   /** [[h264WeightedPlan]] re-encoded through CABAC: ref_idx_l0 rides the
     * arithmetic coder's unary bins with neighbor contexts; the weighted
     * oracle grades it unchanged.
     */
-  def withH264WeightedCabacMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map(d => (d, H264Codec.encodeInter(h264WeightedPlan(d), cabac = true)))
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264WeightedCabacMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      H264Codec.encodeInter(h264WeightedPlan(d), cabac = true)
+    }
 
   /** Sub-8x8 partition plan (shared with the spec): frame 1 IDR per-MB
     * constants, frame 2 all P_8x8 MBs (after a leading skip) whose
@@ -978,19 +838,11 @@ object Multimodal {
     * and the entropy backend rotate by doc (the CABAC docs ride the
     * pinned sub_mb_type bin tree).
     */
-  def withH264P4x4Media(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          (d, H264Codec.encodeInter(h264P4x4Plan(d, colv = d % 2 == 0),
-            cabac = d % 4 == 1))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264P4x4Media(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      H264Codec.encodeInter(h264P4x4Plan(d, colv = d % 2 == 0),
+        cabac = d % 4 == 1)
+    }
 
   /** B_Skip / B_Direct plan (shared with the spec): IDR constants A(m),
     * an all-intra P frame B(m), then a B slice whose skip and direct
@@ -1042,19 +894,11 @@ object Multimodal {
     * CABAC: the B skip flags and the direct mb_type bins ride the
     * arithmetic coder).
     */
-  def withH264BDirectMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          (d, H264Codec.encodeInter(h264BDirectPlan(d, colv = d % 2 == 0),
-            cabac = d % 4 == 3))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264BDirectMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      H264Codec.encodeInter(h264BDirectPlan(d, colv = d % 2 == 0),
+        cabac = d % 4 == 3)
+    }
 
   /** TEMPORAL direct B plan (shared with the spec): IDR constants A(m)
     * at poc 0, a REFERENCE P frame at poc 2 whose macroblocks carry the
@@ -1118,19 +962,11 @@ object Multimodal {
     * direct mb_type bins cross the arithmetic coder with the temporal
     * flag set).
     */
-  def withH264TDirectMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          (d, H264Codec.encodeInter(h264TDirectPlan(d, colv = d % 2 == 0),
-            cabac = d % 4 == 3))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264TDirectMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      H264Codec.encodeInter(h264TDirectPlan(d, colv = d % 2 == 0),
+        cabac = d % 4 == 3)
+    }
 
   /** B sub-16x16 partition plan (shared with the spec): IDR constants
     * A(m), an all-intra reference P frame B(m), then a SPATIAL B slice
@@ -1222,19 +1058,11 @@ object Multimodal {
     * mb_type tree and the 4-bin sub_mb_type binarization cross the
     * arithmetic coder.
     */
-  def withH264BSubMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          (d, H264Codec.encodeInter(h264BSubPlan(d, colv = d % 2 == 0),
-            cabac = d % 4 == 3))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264BSubMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      H264Codec.encodeInter(h264BSubPlan(d, colv = d % 2 == 0),
+        cabac = d % 4 == 3)
+    }
 
   /** Multi-reference P sub-partition plan (shared with the spec): IDR
     * constants A(m), an all-intra reference P frame B(m), then a plain
@@ -1328,20 +1156,12 @@ object Multimodal {
     * bin. Pixel output is init-transparent (identical to the CAVLC
     * coding), which is exactly what the oracle grades.
     */
-  def withH264CabInitMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          val plan = h264BSubPlan(d, colv = d % 2 == 0)
-            .copy(cabacIdc = (1 + d % 2).toInt)
-          (d, H264Codec.encodeInter(plan, cabac = true))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264CabInitMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      val plan = h264BSubPlan(d, colv = d % 2 == 0)
+        .copy(cabacIdc = (1 + d % 2).toInt)
+      H264Codec.encodeInter(plan, cabac = true)
+    }
 
   /** Per-partition WEIGHTED multi-reference plan: the [[h264PMRefPlan]]
     * geometry under an explicit two-reference pred_weight_table —
@@ -1357,19 +1177,11 @@ object Multimodal {
   /** Each doc carries the [[h264WPartPlan]] stream: explicit weighted
     * prediction resolved per partition reference below 16x16.
     */
-  def withH264WPartMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          (d, H264Codec.encodeInter(h264WPartPlan(d, colv = d % 2 == 0),
-            cabac = d % 4 == 3))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264WPartMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      H264Codec.encodeInter(h264WPartPlan(d, colv = d % 2 == 0),
+        cabac = d % 4 == 3)
+    }
 
   /** Adaptive reference marking plan: the [[h264PMRefPlan]] geometry
     * behind an MMCO chain — a REFERENCE all-P_Skip frame (a pixel copy
@@ -1386,19 +1198,11 @@ object Multimodal {
     * syntax, the unmark-then-insert DPB update, and a reference
     * all-P_Skip slice whose reconstruction must feed later fetches.
     */
-  def withH264MmcoMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          (d, H264Codec.encodeInter(h264MmcoPlan(d, colv = d % 2 == 0),
-            cabac = d % 4 == 3))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264MmcoMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      H264Codec.encodeInter(h264MmcoPlan(d, colv = d % 2 == 0),
+        cabac = d % 4 == 3)
+    }
 
   /** Long-term reference plan (8.2.5.4 MMCO 2/3/4/6 + 7.3.3.1 idc 2):
     * the [[h264PMRefPlan]] geometry behind a long-term marking chain,
@@ -1416,19 +1220,11 @@ object Multimodal {
     * the short-then-long default list order, MaxLongTermFrameIdx
     * bookkeeping, and long-term naming in the modification syntax.
     */
-  def withH264LtRefMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          (d, H264Codec.encodeInter(h264LtRefPlan(d, colv = d % 2 == 0),
-            cabac = d % 4 == 3))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264LtRefMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      H264Codec.encodeInter(h264LtRefPlan(d, colv = d % 2 == 0),
+        cabac = d % 4 == 3)
+    }
 
   /** MMCO-5 splice plan: the [[h264PMRefPlan]] geometry behind a
     * frame_num/POC reset — see [[H264Codec.InterPlan.ltVariant]] = 4.
@@ -1440,19 +1236,11 @@ object Multimodal {
     * unmark-all + base reset, and a probe whose list order is only
     * right under the POST-RESET numbering.
     */
-  def withH264Mmco5Media(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          (d, H264Codec.encodeInter(h264Mmco5Plan(d, colv = d % 2 == 0),
-            cabac = d % 4 == 3))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264Mmco5Media(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      H264Codec.encodeInter(h264Mmco5Plan(d, colv = d % 2 == 0),
+        cabac = d % 4 == 3)
+    }
 
   /** Reference-list REORDERING plan: the [[h264PMRefPlan]] geometry with
     * ref_pic_list_modification_flag_l0 set — one idc-0 command names the
@@ -1469,38 +1257,22 @@ object Multimodal {
     * predictor seeded at CurrPicNum, front-insertion per command), and
     * per-partition references resolved through the permuted list.
     */
-  def withH264ReorderMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          (d, H264Codec.encodeInter(h264ReorderPlan(d, colv = d % 2 == 0),
-            cabac = d % 4 == 3))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264ReorderMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      H264Codec.encodeInter(h264ReorderPlan(d, colv = d % 2 == 0),
+        cabac = d % 4 == 3)
+    }
 
   /** Each doc carries the [[h264PMRefPlan]] stream; docs rotate stripe
     * orientation (swapping the 16x8/8x16 and 8x4/4x8 codes), and every
     * fourth doc rides CABAC — per-partition te() ref_idx crosses the
     * 9.3.3.1.1.6 unary bins with neighbor contexts.
     */
-  def withH264PMRefMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          (d, H264Codec.encodeInter(h264PMRefPlan(d, colv = d % 2 == 0),
-            cabac = d % 4 == 3))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264PMRefMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      H264Codec.encodeInter(h264PMRefPlan(d, colv = d % 2 == 0),
+        cabac = d % 4 == 3)
+    }
 
   /** B-slice deblocking plan (shared with the spec): IDR constants A(m)
     * and an all-intra P frame B(m), both raw (idc=1), then a DEBLOCKED
@@ -1552,19 +1324,11 @@ object Multimodal {
     * the B slice deblocked (`deblockB = true`); docs rotate stripe
     * orientation and the two strength-pattern variants.
     */
-  def withH264BDeblockMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          (d, H264Codec.encodeInter(h264BDeblockPlan(d, colv = d % 2 == 0),
-            deblockB = true))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264BDeblockMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      H264Codec.encodeInter(h264BDeblockPlan(d, colv = d % 2 == 0),
+        deblockB = true)
+    }
 
   case class H264VideoStats(doc_id: Long, width: Long, height: Long,
                             n_frames: Long, pix_checksum: Long)
@@ -1574,34 +1338,27 @@ object Multimodal {
     * compensation) and reduce to a frame-and-position-weighted checksum:
     * `Σ_f (f+1) · Σ_i yuv_f(i)·(i mod 97 + 1)`.
     */
-  def decodeH264VideoStats(media: DataFrame): Dataset[H264VideoStats] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val frames = H264Codec.decodeSequence(bytes)
-          var chk = 0L
-          var f = 0
-          while (f < frames.length) {
-            val fr = frames(f)
-            var off = 0
-            for (plane <- Seq(fr.y, fr.u, fr.v)) {
-              var j = 0
-              while (j < plane.length) {
-                chk += (plane(j) & 0xff).toLong * ((off + j) % 97 + 1) * (f + 1)
-                j += 1
-              }
-              off += plane.length
-            }
-            f += 1
+  def decodeH264VideoStats(media: DataFrame): Dataset[H264VideoStats] =
+    mapMedia(media) { (id, bytes) =>
+      val frames = H264Codec.decodeSequence(bytes)
+      var chk = 0L
+      var f = 0
+      while (f < frames.length) {
+        val fr = frames(f)
+        var off = 0
+        for (plane <- Seq(fr.y, fr.u, fr.v)) {
+          var j = 0
+          while (j < plane.length) {
+            chk += (plane(j) & 0xff).toLong * ((off + j) % 97 + 1) * (f + 1)
+            j += 1
           }
-          H264VideoStats(id, frames.head.width.toLong, frames.head.height.toLong,
-            frames.length.toLong, chk)
+          off += plane.length
         }
+        f += 1
       }
-  }
+      H264VideoStats(id, frames.head.width.toLong, frames.head.height.toLong,
+        frames.length.toLong, chk)
+    }
 
   /** Each doc carries a REAL H.264 Annex B stream (SPS + PPS + one IDR
     * slice of I_PCM macroblocks): per-pixel varying samples, with every
@@ -1610,39 +1367,29 @@ object Multimodal {
     * NAL split, EP-byte removal, exp-Golomb parameter-set walk, slice
     * header, pcm alignment and sample order are all exact.
     */
-  def withH264Media(docs: DataFrame, id: String = "doc_id",
-                    nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (d, nc) =>
-          val w = (16 * (1 + nc % 3)).toInt
-          val h = (16 * (1 + nc % 2)).toInt
-          val mbW = w / 16
-          def zeroMb(m: Int): Boolean = (m + d) % 5 == 0
-          val stream = H264Codec.encode(w, h,
-            (x, yy) => {
-              val m = (yy / 16) * mbW + x / 16
-              if (zeroMb(m)) 0
-              else ((31 * d + 13 * m + x % 16 + 17 * (yy % 16)) % 256).toInt
-            },
-            (x2, y2) => {
-              val m = (y2 / 8) * mbW + x2 / 8
-              if (zeroMb(m)) 0
-              else ((91 * d + 7 * m + 3 * (x2 % 8) + 5 * (y2 % 8)) % 256).toInt
-            },
-            (x2, y2) => {
-              val m = (y2 / 8) * mbW + x2 / 8
-              if (zeroMb(m)) 0
-              else ((53 * d + 11 * m + 7 * (x2 % 8) + 13 * (y2 % 8)) % 256).toInt
-            })
-          (d, stream)
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withH264Media(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, nc) =>
+      val w = (16 * (1 + nc % 3)).toInt
+      val h = (16 * (1 + nc % 2)).toInt
+      val mbW = w / 16
+      def zeroMb(m: Int): Boolean = (m + d) % 5 == 0
+      H264Codec.encode(w, h,
+        (x, yy) => {
+          val m = (yy / 16) * mbW + x / 16
+          if (zeroMb(m)) 0
+          else ((31 * d + 13 * m + x % 16 + 17 * (yy % 16)) % 256).toInt
+        },
+        (x2, y2) => {
+          val m = (y2 / 8) * mbW + x2 / 8
+          if (zeroMb(m)) 0
+          else ((91 * d + 7 * m + 3 * (x2 % 8) + 5 * (y2 % 8)) % 256).toInt
+        },
+        (x2, y2) => {
+          val m = (y2 / 8) * mbW + x2 / 8
+          if (zeroMb(m)) 0
+          else ((53 * d + 11 * m + 7 * (x2 % 8) + 13 * (y2 % 8)) % 256).toInt
+        })
+    }
 
   /** Each doc carries a loop-filtered VP8 key frame: per-MB uniform
     * targets STRIPED along one axis (so exactly one edge direction
@@ -1654,56 +1401,47 @@ object Multimodal {
     * drifts in limits, masks, clamps, taps or the 27/18/9 cascade)
     * moves the checksum.
     */
-  def withVp8LoopfilterMedia(docs: DataFrame, id: String = "doc_id",
-                             nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (d, nc) =>
-          // one MB thick along the INACTIVE axis: the RFC's processing
-          // order makes cross pixels see half-filtered neighbors (above
-          // row already side-filtered, current row not yet), so the two
-          // directions are graded separately; their composition order is
-          // pinned by the checkerboard spec replay
-          val v = (d % 4).toInt
-          val colStripe = v % 2 == 0
-          val simple = v < 2
-          val w = if (colStripe) (16 * (2 + nc % 2)).toInt else 16
-          val h = if (colStripe) 16 else (16 * (2 + nc % 2)).toInt
-          val mbW = w / 16
-          def idx(m: Int): Int = if (colStripe) m % mbW else m / mbW
-          // simple variants: free-ranging stripe values (interior edges
-          // never see MB-edge-modified pixels). Normal variants:
-          // alternating stripes with adjacent deltas ≤ 24, so the
-          // MB-edge cascade's a9 ≤ 3 and the dx=4 interior subblock
-          // filter that READS the cascade's outputs is an exact
-          // arithmetic no-op — the RFC composition stays closed-form.
-          def tOf(pl: Int, j: Int): Int =
-            if (simple) pl match {
-              case 0 => ((31 * d + 29 * j) % 256).toInt
-              case 1 => ((91 * d + 17 * j) % 256).toInt
-              case _ => ((53 * d + 23 * j) % 256).toInt
-            }
-            else pl match {
-              case 0 => (30 + (31 * d) % 170 + ((j + d) % 2) * (1 + d % 24)).toInt
-              case 1 => (25 + (91 * d) % 180 + ((j + d) % 2) * (1 + (d + 7) % 24)).toInt
-              case _ => (20 + (53 * d) % 190 + ((j + d) % 2) * (1 + (d + 13) % 24)).toInt
-            }
-          val plan = Vp8Codec.Plan(w, h, qi = 0, uvDcDelta = 0, yMode = 0,
-            tokenPartitions = 1, skipAll = false,
-            yTarget = m => tOf(0, idx(m)),
-            uTarget = m => tOf(1, idx(m)),
-            vTarget = m => tOf(2, idx(m)),
-            filterType = if (simple) 1 else 0,
-            filterLevel = (1 + d % 63).toInt,
-            sharpness = (d % 8).toInt)
-          (d, Vp8Codec.wrapWebp(Vp8Codec.encodeFrame(plan)))
+  def withVp8LoopfilterMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, nc) =>
+      // one MB thick along the INACTIVE axis: the RFC's processing
+      // order makes cross pixels see half-filtered neighbors (above
+      // row already side-filtered, current row not yet), so the two
+      // directions are graded separately; their composition order is
+      // pinned by the checkerboard spec replay
+      val v = (d % 4).toInt
+      val colStripe = v % 2 == 0
+      val simple = v < 2
+      val w = if (colStripe) (16 * (2 + nc % 2)).toInt else 16
+      val h = if (colStripe) 16 else (16 * (2 + nc % 2)).toInt
+      val mbW = w / 16
+      def idx(m: Int): Int = if (colStripe) m % mbW else m / mbW
+      // simple variants: free-ranging stripe values (interior edges
+      // never see MB-edge-modified pixels). Normal variants:
+      // alternating stripes with adjacent deltas ≤ 24, so the
+      // MB-edge cascade's a9 ≤ 3 and the dx=4 interior subblock
+      // filter that READS the cascade's outputs is an exact
+      // arithmetic no-op — the RFC composition stays closed-form.
+      def tOf(pl: Int, j: Int): Int =
+        if (simple) pl match {
+          case 0 => ((31 * d + 29 * j) % 256).toInt
+          case 1 => ((91 * d + 17 * j) % 256).toInt
+          case _ => ((53 * d + 23 * j) % 256).toInt
         }
-      }
-      .toDF("doc_id", "media")
-  }
+        else pl match {
+          case 0 => (30 + (31 * d) % 170 + ((j + d) % 2) * (1 + d % 24)).toInt
+          case 1 => (25 + (91 * d) % 180 + ((j + d) % 2) * (1 + (d + 7) % 24)).toInt
+          case _ => (20 + (53 * d) % 190 + ((j + d) % 2) * (1 + (d + 13) % 24)).toInt
+        }
+      val plan = Vp8Codec.Plan(w, h, qi = 0, uvDcDelta = 0, yMode = 0,
+        tokenPartitions = 1, skipAll = false,
+        yTarget = m => tOf(0, idx(m)),
+        uTarget = m => tOf(1, idx(m)),
+        vTarget = m => tOf(2, idx(m)),
+        filterType = if (simple) 1 else 0,
+        filterLevel = (1 + d % 63).toInt,
+        sharpness = (d % 8).toInt)
+      Vp8Codec.wrapWebp(Vp8Codec.encodeFrame(plan))
+    }
 
   /** One doc's 2-frame VP8 video with the IN-LOOP filter on an INTER
     * frame: an unfiltered single-constant key frame, then an inter frame
@@ -1749,20 +1487,11 @@ object Multimodal {
   }
 
   /** Each doc carries the [[vp8LfInterFrames]] video. */
-  def withVp8LfInterMedia(docs: DataFrame, id: String = "doc_id",
-                          nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (d, nc) =>
-          val (w, frames) = vp8LfInterFrames(d, nc)
-          (d, Vp8Codec.encodeIvf(w, 16, frames))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withVp8LfInterMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, nc) =>
+      val (w, frames) = vp8LfInterFrames(d, nc)
+      Vp8Codec.encodeIvf(w, 16, frames)
+    }
 
   /** Each doc carries a VP8 key frame with SEGMENTATION live on the
     * quantizer: the per-MB segment map (ids m % 4 through the coded
@@ -1804,15 +1533,8 @@ object Multimodal {
   }
 
   /** Each doc carries the [[vp8SegmentFrame]] key frame. */
-  def withVp8SegmentMedia(docs: DataFrame, id: String = "doc_id",
-                          nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions(_.map { case (d, nc) => (d, vp8SegmentFrame(d, nc)._2) })
-      .toDF("doc_id", "media")
-  }
+  def withVp8SegmentMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, nc) => vp8SegmentFrame(d, nc)._2)
 
   /** Each doc carries a VP8 key frame whose token residue rides FOUR or
     * EIGHT row-interleaved token partitions (RFC 6386 9.5: a 3-byte
@@ -1834,15 +1556,8 @@ object Multimodal {
   }
 
   /** Each doc carries the [[vp8PartsFrame]] key frame. */
-  def withVp8PartsMedia(docs: DataFrame, id: String = "doc_id",
-                        nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions(_.map { case (d, nc) => (d, vp8PartsFrame(d, nc)._3) })
-      .toDF("doc_id", "media")
-  }
+  def withVp8PartsMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, nc) => vp8PartsFrame(d, nc)._3)
 
   /** Each doc carries a loop-filtered VP8 key frame where the PER-MB
     * filter level comes from SEGMENTATION (alternating stripes in
@@ -1905,15 +1620,8 @@ object Multimodal {
   }
 
   /** Each doc carries the [[vp8SegLfFrame]] key frame. */
-  def withVp8SegLfMedia(docs: DataFrame, id: String = "doc_id",
-                        nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions(_.map { case (d, nc) => (d, vp8SegLfFrame(d, nc)._3) })
-      .toDF("doc_id", "media")
-  }
+  def withVp8SegLfMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, nc) => vp8SegLfFrame(d, nc)._3)
 
   /** One doc's 2-frame VP8 video with SEGMENTATION on the INTER frame:
     * an unfiltered single-constant key frame, then a terminal inter
@@ -1978,20 +1686,11 @@ object Multimodal {
   }
 
   /** Each doc carries the [[vp8SegInterFrames]] video. */
-  def withVp8SegInterMedia(docs: DataFrame, id: String = "doc_id",
-                           nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (d, nc) =>
-          val (w, frames) = vp8SegInterFrames(d, nc)
-          (d, Vp8Codec.encodeIvf(w, 16, frames))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withVp8SegInterMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, nc) =>
+      val (w, frames) = vp8SegInterFrames(d, nc)
+      Vp8Codec.encodeIvf(w, 16, frames)
+    }
 
   /** Each doc carries a VP8 key frame whose center MB is B_PRED hosting
     * ONE directional 4×4 sub-mode (VE/HE/RD/VR/HD/LD/VL/HU rotating by
@@ -2002,57 +1701,50 @@ object Multimodal {
     * closed-form; every other sub-block is DC-steered back to the MB
     * target, keeping the rest of the frame on the uniform grid.
     */
-  def withVp8BpredMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          def yT(m: Int) = ((31 * d + 13 * m) % 256).toInt
-          def uT(m: Int) = ((91 * d + 7 * m) % 256).toInt
-          def vT(m: Int) = ((53 * d + 11 * m) % 256).toInt
-          val v = (d % 8).toInt
-          val mode = Seq(2, 3, 5, 6, 8, 4, 7, 9)(v) // VE HE RD VR HD LD VL HU
-          val ta = ((31 * d + 97) % 256).toInt
-          val tb = ((31 * d + 181) % 256).toInt
-          val specialB = if (v == 5 || v == 6) 4 else 0
-          val plan = Vp8Codec.Plan(48, 32, qi = 0, uvDcDelta = 0, yMode = 0,
-            tokenPartitions = 1, skipAll = false, yT, uT, vT,
-            bModes = (mbI, b) =>
-              if (mbI != 4) 0
-              else if (v == 7) { if (b == 0) 3 else if (b == 1) 9 else 0 }
-              else if (b == specialB) mode else 0,
-            yModeOf = m => if (m == 4) 4 else 0,
-            bTargets =
-              if (v == 5 || v == 6)
-                (mbI, b) =>
-                  if (mbI == 4 && b == 0) ta
-                  else if (mbI == 4 && b == 1) tb
-                  else yT(mbI)
-              else null)
-          (d, Vp8Codec.wrapWebp(Vp8Codec.encodeFrame(plan)))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withVp8BpredMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      def yT(m: Int) = ((31 * d + 13 * m) % 256).toInt
+      def uT(m: Int) = ((91 * d + 7 * m) % 256).toInt
+      def vT(m: Int) = ((53 * d + 11 * m) % 256).toInt
+      val v = (d % 8).toInt
+      val mode = Seq(2, 3, 5, 6, 8, 4, 7, 9)(v) // VE HE RD VR HD LD VL HU
+      val ta = ((31 * d + 97) % 256).toInt
+      val tb = ((31 * d + 181) % 256).toInt
+      val specialB = if (v == 5 || v == 6) 4 else 0
+      val plan = Vp8Codec.Plan(48, 32, qi = 0, uvDcDelta = 0, yMode = 0,
+        tokenPartitions = 1, skipAll = false, yT, uT, vT,
+        bModes = (mbI, b) =>
+          if (mbI != 4) 0
+          else if (v == 7) { if (b == 0) 3 else if (b == 1) 9 else 0 }
+          else if (b == specialB) mode else 0,
+        yModeOf = m => if (m == 4) 4 else 0,
+        bTargets =
+          if (v == 5 || v == 6)
+            (mbI, b) =>
+              if (mbI == 4 && b == 0) ta
+              else if (mbI == 4 && b == 1) tb
+              else yT(mbI)
+          else null)
+      Vp8Codec.wrapWebp(Vp8Codec.encodeFrame(plan))
+    }
 
-  def withWebpMedia(docs: DataFrame, id: String = "doc_id",
-                    nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (docId, nc) =>
-          val w = (4 + nc % 13).toInt
-          val h = (3 + nc % 11).toInt
-          (docId, WebpCodec.encodeVp8l(w, h, 4, pixGen(docId),
-            variant = (docId % 4).toInt))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  /** Attach a REAL lossless-WebP (VP8L) blob to `documents`: dimensions
+    * derive from `n_chars` (the [[withPngMedia]] grammar), content is
+    * always 4-channel RGBA from [[pixGen]] (VP8L pixels ARE argb), and the
+    * CODING features rotate by `doc_id % 4` so every decoder path is live
+    * in the graded scan — plain literal Huffman / subtract-green
+    * transform / color cache / an LZ77 backref (the generator's 4-byte
+    * pixels repeat every 64 pixels, so images past 64 px carry a real
+    * distance-64 copy). Content is identical across variants — only the
+    * bitstream differs — so ONE closed-form oracle grades all four.
+    */
+  def withWebpMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (docId, nc) =>
+      val w = (4 + nc % 13).toInt
+      val h = (3 + nc % 11).toInt
+      WebpCodec.encodeVp8l(w, h, 4, pixGen(docId),
+        variant = (docId % 4).toInt)
+    }
 
   /** The GIF fixture palette: entry j = (j, (2j+1) mod 256, (5j+3) mod
     * 256). Deliberately NON-gray so a decoder that swaps palette channel
@@ -2081,33 +1773,22 @@ object Multimodal {
     * identical across variants — only the bitstream differs — so ONE
     * closed-form oracle grades all four.
     */
-  def withGifMedia(docs: DataFrame, id: String = "doc_id",
-                   nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // deliberately NOT spread: this encode is a few hundred ops per doc —
-    // the exchange's fixed cost exceeds the serial compute (see perDocMedia)
-    docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc"))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        val pal = gifPalette
-        batch.map { case (docId, nc) =>
-          val w = (4 + nc % 13).toInt
-          val h = (3 + nc % 11).toInt
-          val idx = new Array[Byte](w * h)
-          var p = 0
-          while (p < idx.length) { idx(p) = ((31L * docId + 7L * p) % 256L).toByte; p += 1 }
-          val bytes = (docId % 4) match {
-            case 0 => GifCodec.encodeGif(w, h, idx, pal, version89 = false)
-            case 1 => GifCodec.encodeGif(w, h, idx, pal, withGce = true)
-            case 2 => GifCodec.encodeGif(w, h, idx, pal, interlace = true)
-            case _ => GifCodec.encodeGif(w, h, idx, pal, localPalette = true,
-              clearEvery = 100)
-          }
-          (docId, bytes)
-        }
+  def withGifMedia(docs: DataFrame): DataFrame = {
+    val pal = gifPalette
+    perDocMedia(docs, spread = false) { (docId, nc) =>
+      val w = (4 + nc % 13).toInt
+      val h = (3 + nc % 11).toInt
+      val idx = new Array[Byte](w * h)
+      var p = 0
+      while (p < idx.length) { idx(p) = ((31L * docId + 7L * p) % 256L).toByte; p += 1 }
+      (docId % 4) match {
+        case 0 => GifCodec.encodeGif(w, h, idx, pal, version89 = false)
+        case 1 => GifCodec.encodeGif(w, h, idx, pal, withGce = true)
+        case 2 => GifCodec.encodeGif(w, h, idx, pal, interlace = true)
+        case _ => GifCodec.encodeGif(w, h, idx, pal, localPalette = true,
+          clearEvery = 100)
       }
-      .toDF("doc_id", "media")
+    }
   }
 
   /** Attach a REAL animated GIF to `documents`: `2 + docId mod 3`
@@ -2119,32 +1800,22 @@ object Multimodal {
     * overdraw history); the graded query drives the multi-frame walk and
     * per-frame LZW.
     */
-  def withGifAnimMedia(docs: DataFrame, id: String = "doc_id",
-                       nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // deliberately NOT spread: this encode is a few hundred ops per doc —
-    // the exchange's fixed cost exceeds the serial compute (see perDocMedia)
-    docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc"))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        val pal = gifPalette
-        batch.map { case (docId, nc) =>
-          val w = (4 + nc % 9).toInt
-          val h = (3 + nc % 7).toInt
-          val nf = (2 + docId % 3).toInt
-          val frames = (0 until nf).map { f =>
-            val idx = new Array[Byte](w * h)
-            var p = 0
-            while (p < idx.length) {
-              idx(p) = ((31L * docId + 7L * p + 11L * f) % 256L).toByte; p += 1
-            }
-            GifCodec.GifFrame(0, 0, w, h, idx)
-          }
-          (docId, GifCodec.encodeGifAnim(w, h, pal, frames, loop = true))
+  def withGifAnimMedia(docs: DataFrame): DataFrame = {
+    val pal = gifPalette
+    perDocMedia(docs, spread = false) { (docId, nc) =>
+      val w = (4 + nc % 9).toInt
+      val h = (3 + nc % 7).toInt
+      val nf = (2 + docId % 3).toInt
+      val frames = (0 until nf).map { f =>
+        val idx = new Array[Byte](w * h)
+        var p = 0
+        while (p < idx.length) {
+          idx(p) = ((31L * docId + 7L * p + 11L * f) % 256L).toByte; p += 1
         }
+        GifCodec.GifFrame(0, 0, w, h, idx)
       }
-      .toDF("doc_id", "media")
+      GifCodec.encodeGifAnim(w, h, pal, frames, loop = true)
+    }
   }
 
   /** Per-animation stats FROM THE DECODED FRAMES: canvas dims, frame
@@ -2160,30 +1831,23 @@ object Multimodal {
     * and reduce to [[GifAnimStats]]. Same zero-shuffle `mapPartitions`
     * scan shape as [[decodePixelStats]].
     */
-  def decodeGifAnimStats(media: DataFrame): Dataset[GifAnimStats] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val anim = GifCodec.decodeGifFrames(bytes)
-          var chk = 0L
-          var f = 0
-          while (f < anim.frames.length) {
-            val fr = anim.frames(f)
-            var i = 0
-            while (i < fr.length) {
-              chk += (fr(i) & 0xff).toLong * (i % 97 + 1) * (f + 1)
-              i += 1
-            }
-            f += 1
-          }
-          GifAnimStats(id, anim.width.toLong, anim.height.toLong,
-            anim.frames.length.toLong, chk)
+  def decodeGifAnimStats(media: DataFrame): Dataset[GifAnimStats] =
+    mapMedia(media) { (id, bytes) =>
+      val anim = GifCodec.decodeGifFrames(bytes)
+      var chk = 0L
+      var f = 0
+      while (f < anim.frames.length) {
+        val fr = anim.frames(f)
+        var i = 0
+        while (i < fr.length) {
+          chk += (fr(i) & 0xff).toLong * (i % 97 + 1) * (f + 1)
+          i += 1
         }
+        f += 1
       }
-  }
+      GifAnimStats(id, anim.width.toLong, anim.height.toLong,
+        anim.frames.length.toLong, chk)
+    }
 
   /** Each doc carries a REAL 3-frame VP8 video in an IVF container: a key
     * frame, an inter frame referencing LAST, and an inter frame mixing
@@ -2195,21 +1859,12 @@ object Multimodal {
     * reconstruct frame 1's values (not frame 2's), or the checksum
     * collapses.
     */
-  def withVp8VideoMedia(docs: DataFrame, id: String = "doc_id",
-                        nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (docId, nc) =>
-          val w = (16 * (1 + nc % 3)).toInt
-          val h = (16 * (1 + nc % 2)).toInt
-          (docId, Vp8Codec.encodeIvf(w, h, vp8VideoFrames(docId, w, h)))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withVp8VideoMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (docId, nc) =>
+      val w = (16 * (1 + nc % 3)).toInt
+      val h = (16 * (1 + nc % 2)).toInt
+      Vp8Codec.encodeIvf(w, h, vp8VideoFrames(docId, w, h))
+    }
 
   /** The rotating 3-frame VP8 fixture (shared with the spec suite and
     * replayed closed-form by the q_vp8_inter_decode oracle).
@@ -2276,46 +1931,37 @@ object Multimodal {
     * graded checksum. Remaining MBs alternate skip-copy and steered
     * ZEROMV residue.
     */
-  def withVp8SubpelMedia(docs: DataFrame, id: String = "doc_id",
-                         nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (d, nc) =>
-          val w = (16 * (2 + nc % 2)).toInt // 2 or 3 MBs wide
-          val h = 32 // 2 MBs tall: odd rows exist for every doc
-          val mbW = w / 16
-          def tile(m: Int): Int =
-            (m / mbW / 2) * ((mbW + 1) / 2) + (m % mbW) / 2
-          def y1(m: Int) = ((31 * d + 13 * tile(m)) % 256).toInt
-          def u1(m: Int) = ((91 * d + 7 * tile(m)) % 256).toInt
-          def v1(m: Int) = ((53 * d + 11 * tile(m)) % 256).toInt
-          def y2(m: Int) = ((47 * d + 17 * m) % 256).toInt
-          def u2(m: Int) = ((23 * d + 5 * m) % 256).toInt
-          def v2(m: Int) = ((67 * d + 3 * m) % 256).toInt
-          val (kf, g1) = Vp8Codec.encodeKeyFrame(Vp8Codec.Plan(w, h,
-            qi = (8 * (d % 2)).toInt, uvDcDelta = (-8 * (d % 2)).toInt,
-            yMode = 0, tokenPartitions = 1, skipAll = false, y1, u1, v1))
-          val p2 = Vp8Codec.InterPlan(w, h,
-            qi = (8 * (d % 2)).toInt, uvDcDelta = (-8 * (d % 2)).toInt,
-            tokenPartitions = 1, refreshLast = true, refreshGolden = false,
-            mb = { m =>
-              val r = m / mbW; val c = m % mbW
-              if (r % 2 == 1 && c % 2 == 1)
-                Vp8Codec.InterMbUnits(0, -60, -60, skip = true, 0, 0, 0)
-              else if ((m + d) % 2 == 0)
-                Vp8Codec.InterMb(0, 0, 0, 0, skip = true, 0, 0, 0)
-              else
-                Vp8Codec.InterMb(0, 0, 0, 0, skip = false, y2(m), u2(m), v2(m))
-            })
-          val (f2, _) = Vp8Codec.encodeInterFrame(p2, g1, g1)
-          (d, Vp8Codec.encodeIvf(w, h, Seq(kf, f2)))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withVp8SubpelMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, nc) =>
+      val w = (16 * (2 + nc % 2)).toInt // 2 or 3 MBs wide
+      val h = 32 // 2 MBs tall: odd rows exist for every doc
+      val mbW = w / 16
+      def tile(m: Int): Int =
+        (m / mbW / 2) * ((mbW + 1) / 2) + (m % mbW) / 2
+      def y1(m: Int) = ((31 * d + 13 * tile(m)) % 256).toInt
+      def u1(m: Int) = ((91 * d + 7 * tile(m)) % 256).toInt
+      def v1(m: Int) = ((53 * d + 11 * tile(m)) % 256).toInt
+      def y2(m: Int) = ((47 * d + 17 * m) % 256).toInt
+      def u2(m: Int) = ((23 * d + 5 * m) % 256).toInt
+      def v2(m: Int) = ((67 * d + 3 * m) % 256).toInt
+      val (kf, g1) = Vp8Codec.encodeKeyFrame(Vp8Codec.Plan(w, h,
+        qi = (8 * (d % 2)).toInt, uvDcDelta = (-8 * (d % 2)).toInt,
+        yMode = 0, tokenPartitions = 1, skipAll = false, y1, u1, v1))
+      val p2 = Vp8Codec.InterPlan(w, h,
+        qi = (8 * (d % 2)).toInt, uvDcDelta = (-8 * (d % 2)).toInt,
+        tokenPartitions = 1, refreshLast = true, refreshGolden = false,
+        mb = { m =>
+          val r = m / mbW; val c = m % mbW
+          if (r % 2 == 1 && c % 2 == 1)
+            Vp8Codec.InterMbUnits(0, -60, -60, skip = true, 0, 0, 0)
+          else if ((m + d) % 2 == 0)
+            Vp8Codec.InterMb(0, 0, 0, 0, skip = true, 0, 0, 0)
+          else
+            Vp8Codec.InterMb(0, 0, 0, 0, skip = false, y2(m), u2(m), v2(m))
+        })
+      val (f2, _) = Vp8Codec.encodeInterFrame(p2, g1, g1)
+      Vp8Codec.encodeIvf(w, h, Seq(kf, f2))
+    }
 
   /** One doc's 3-frame VP8 video exercising REFERENCE SIGN BIAS (RFC
     * 6386 9.7, plan shared with Vp8BiasSpec): a key frame (constants
@@ -2365,16 +2011,8 @@ object Multimodal {
     * the near-MV survey whenever the neighbor's reference sits on the
     * other side of the bias boundary.
     */
-  def withVp8BiasMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map(d => (d, Vp8Codec.encodeIvf(80, 16, vp8BiasFrames(d))))
-      }
-      .toDF("doc_id", "media")
-  }
+  def withVp8BiasMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => Vp8Codec.encodeIvf(80, 16, vp8BiasFrames(d)))
 
   /** Each doc carries a 5-frame VP8 video exercising the FULL reference
     * buffer machinery: refresh_last / refresh_alt, buffer-copy-to-alt
@@ -2386,69 +2024,60 @@ object Multimodal {
     * refresh/copy/reference mix-up surfaces the wrong family in the
     * hashed checksum.
     */
-  def withVp8BufferMedia(docs: DataFrame, id: String = "doc_id",
-                         nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (d, nc) =>
-          val w = (16 * (2 + nc % 2)).toInt
-          val h = 32
-          def aY(m: Int) = ((31 * d + 13 * m) % 256).toInt
-          def aU(m: Int) = ((91 * d + 7 * m) % 256).toInt
-          def aV(m: Int) = ((53 * d + 11 * m) % 256).toInt
-          def bY(m: Int) = ((47 * d + 17 * m) % 256).toInt
-          def bU(m: Int) = ((23 * d + 5 * m) % 256).toInt
-          def bV(m: Int) = ((67 * d + 3 * m) % 256).toInt
-          def cY(m: Int) = ((29 * d + 19 * m) % 256).toInt
-          def cU(m: Int) = ((41 * d + 13 * m) % 256).toInt
-          def cV(m: Int) = ((59 * d + 23 * m) % 256).toInt
-          val qi = (8 * (d % 2)).toInt
-          val uvD = (-8 * (d % 2)).toInt
-          val (f1, g1) = Vp8Codec.encodeKeyFrame(Vp8Codec.Plan(w, h, qi, uvD,
-            yMode = 0, tokenPartitions = 1, skipAll = false, aY, aU, aV))
-          // F2: steered ZEROMV to B; refresh LAST only
-          val p2 = Vp8Codec.InterPlan(w, h, qi, uvD, tokenPartitions = 1,
-            refreshLast = true, refreshGolden = false,
-            mb = m => Vp8Codec.InterMb(0, 0, 0, 0, skip = false, bY(m), bU(m), bV(m)))
-          val (f2, g2) = Vp8Codec.encodeInterFrame(p2, g1, g1, g1)
-          // F3: copy LAST(=B) into ALT; MBs probe the PRE-frame alt (=A)
-          // or steer to C against last
-          val p3 = Vp8Codec.InterPlan(w, h, qi, uvD, tokenPartitions = 1,
-            refreshLast = true, refreshGolden = false, copyToAlt = 1,
-            mb = m =>
-              if ((m + d) % 2 == 0)
-                Vp8Codec.InterMb(2, 0, 0, 0, skip = true, 0, 0, 0) // ALT = A
-              else
-                Vp8Codec.InterMb(0, 0, 0, 0, skip = false, cY(m), cU(m), cV(m)))
-          val (f3, g3) = Vp8Codec.encodeInterFrame(p3, g2, g1, g1)
-          // buffers now: last = F3, golden = A, alt = B
-          // F4: copy ALT(=B) into GOLDEN; all-skip probe of all three
-          val p4 = Vp8Codec.InterPlan(w, h, qi, uvD, tokenPartitions = 1,
-            refreshLast = true, refreshGolden = false, copyToGolden = 2,
-            mb = m => ((m + 2 * d) % 3).toInt match {
-              case 0 => Vp8Codec.InterMb(1, 0, 0, 0, skip = true, 0, 0, 0) // G = A
-              case 1 => Vp8Codec.InterMb(2, 0, 0, 0, skip = true, 0, 0, 0) // ALT = B
-              case _ => Vp8Codec.InterMb(0, 0, 0, 0, skip = true, 0, 0, 0) // LAST = F3
-            })
-          val (f4, g4) = Vp8Codec.encodeInterFrame(p4, g3, g1, g2)
-          // buffers now: last = F4, golden = B (copied from alt), alt = B
-          // F5: all-skip probe proving both copies landed
-          val p5 = Vp8Codec.InterPlan(w, h, qi, uvD, tokenPartitions = 1,
-            refreshLast = true, refreshGolden = false,
-            mb = m => ((m + d) % 3).toInt match {
-              case 0 => Vp8Codec.InterMb(1, 0, 0, 0, skip = true, 0, 0, 0) // G = B
-              case 1 => Vp8Codec.InterMb(2, 0, 0, 0, skip = true, 0, 0, 0) // ALT = B
-              case _ => Vp8Codec.InterMb(0, 0, 0, 0, skip = true, 0, 0, 0) // LAST = F4
-            })
-          val (f5, _) = Vp8Codec.encodeInterFrame(p5, g4, g2, g2)
-          (d, Vp8Codec.encodeIvf(w, h, Seq(f1, f2, f3, f4, f5)))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withVp8BufferMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, nc) =>
+      val w = (16 * (2 + nc % 2)).toInt
+      val h = 32
+      def aY(m: Int) = ((31 * d + 13 * m) % 256).toInt
+      def aU(m: Int) = ((91 * d + 7 * m) % 256).toInt
+      def aV(m: Int) = ((53 * d + 11 * m) % 256).toInt
+      def bY(m: Int) = ((47 * d + 17 * m) % 256).toInt
+      def bU(m: Int) = ((23 * d + 5 * m) % 256).toInt
+      def bV(m: Int) = ((67 * d + 3 * m) % 256).toInt
+      def cY(m: Int) = ((29 * d + 19 * m) % 256).toInt
+      def cU(m: Int) = ((41 * d + 13 * m) % 256).toInt
+      def cV(m: Int) = ((59 * d + 23 * m) % 256).toInt
+      val qi = (8 * (d % 2)).toInt
+      val uvD = (-8 * (d % 2)).toInt
+      val (f1, g1) = Vp8Codec.encodeKeyFrame(Vp8Codec.Plan(w, h, qi, uvD,
+        yMode = 0, tokenPartitions = 1, skipAll = false, aY, aU, aV))
+      // F2: steered ZEROMV to B; refresh LAST only
+      val p2 = Vp8Codec.InterPlan(w, h, qi, uvD, tokenPartitions = 1,
+        refreshLast = true, refreshGolden = false,
+        mb = m => Vp8Codec.InterMb(0, 0, 0, 0, skip = false, bY(m), bU(m), bV(m)))
+      val (f2, g2) = Vp8Codec.encodeInterFrame(p2, g1, g1, g1)
+      // F3: copy LAST(=B) into ALT; MBs probe the PRE-frame alt (=A)
+      // or steer to C against last
+      val p3 = Vp8Codec.InterPlan(w, h, qi, uvD, tokenPartitions = 1,
+        refreshLast = true, refreshGolden = false, copyToAlt = 1,
+        mb = m =>
+          if ((m + d) % 2 == 0)
+            Vp8Codec.InterMb(2, 0, 0, 0, skip = true, 0, 0, 0) // ALT = A
+          else
+            Vp8Codec.InterMb(0, 0, 0, 0, skip = false, cY(m), cU(m), cV(m)))
+      val (f3, g3) = Vp8Codec.encodeInterFrame(p3, g2, g1, g1)
+      // buffers now: last = F3, golden = A, alt = B
+      // F4: copy ALT(=B) into GOLDEN; all-skip probe of all three
+      val p4 = Vp8Codec.InterPlan(w, h, qi, uvD, tokenPartitions = 1,
+        refreshLast = true, refreshGolden = false, copyToGolden = 2,
+        mb = m => ((m + 2 * d) % 3).toInt match {
+          case 0 => Vp8Codec.InterMb(1, 0, 0, 0, skip = true, 0, 0, 0) // G = A
+          case 1 => Vp8Codec.InterMb(2, 0, 0, 0, skip = true, 0, 0, 0) // ALT = B
+          case _ => Vp8Codec.InterMb(0, 0, 0, 0, skip = true, 0, 0, 0) // LAST = F3
+        })
+      val (f4, g4) = Vp8Codec.encodeInterFrame(p4, g3, g1, g2)
+      // buffers now: last = F4, golden = B (copied from alt), alt = B
+      // F5: all-skip probe proving both copies landed
+      val p5 = Vp8Codec.InterPlan(w, h, qi, uvD, tokenPartitions = 1,
+        refreshLast = true, refreshGolden = false,
+        mb = m => ((m + d) % 3).toInt match {
+          case 0 => Vp8Codec.InterMb(1, 0, 0, 0, skip = true, 0, 0, 0) // G = B
+          case 1 => Vp8Codec.InterMb(2, 0, 0, 0, skip = true, 0, 0, 0) // ALT = B
+          case _ => Vp8Codec.InterMb(0, 0, 0, 0, skip = true, 0, 0, 0) // LAST = F4
+        })
+      val (f5, _) = Vp8Codec.encodeInterFrame(p5, g4, g2, g2)
+      Vp8Codec.encodeIvf(w, h, Seq(f1, f2, f3, f4, f5))
+    }
 
   /** Each doc carries a 2-frame VP8 video (key + inter) whose inter
     * frame is ALL-SPLITMV: partitionings rotate per MB (16x8 / 8x16 /
@@ -2459,54 +2088,45 @@ object Multimodal {
     * coded with residue (common MV, plane-3 luma blocks, no Y2) instead
     * of skip.
     */
-  def withVp8SplitmvMedia(docs: DataFrame, id: String = "doc_id",
-                          nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (d, nc) =>
-          val w = (16 * (3 + nc % 2)).toInt
-          val h = 32
-          val mbW = w / 16
-          def yT(m: Int) = ((31 * d + 13 * m) % 256).toInt
-          def uT(m: Int) = ((91 * d + 7 * m) % 256).toInt
-          def vT(m: Int) = ((53 * d + 11 * m) % 256).toInt
-          def ty2(m: Int) = ((77 + 31 * d + 13 * m) % 256).toInt
-          def tu2(m: Int) = ((59 + 91 * d + 7 * m) % 256).toInt
-          def tv2(m: Int) = ((43 + 53 * d + 11 * m) % 256).toInt
-          def groupIdx(p: Int, j: Int): Int =
-            if (p == 3) ((j / 4) / 2) * 2 + (j % 4) / 2 else j
-          def mvOf(m: Int, g: Int): (Int, Int) = {
-            val r = m / mbW; val c = m % mbW
-            ((g + m + d) % 3).toInt match {
-              case 1 => if (c > 0) (0, -128) else (0, 0)
-              case 2 => if (r > 0) (-128, 0) else (0, 0)
-              case _ => (0, 0)
-            }
-          }
-          val kp = Vp8Codec.Plan(w, h, qi = 0, uvDcDelta = 0, yMode = 0,
-            tokenPartitions = 1, skipAll = false, yT, uT, vT)
-          val (kf, kg) = Vp8Codec.encodeKeyFrame(kp)
-          val ip = Vp8Codec.InterPlan(w, h, qi = 0, uvDcDelta = 0,
-            tokenPartitions = 1, refreshLast = true, refreshGolden = false,
-            mb = m => {
-              val p = ((m + d) % 4).toInt
-              if ((m + d) % 5 == 0) {
-                val common = if (m % mbW > 0) (0, -128) else (0, 0)
-                Vp8Codec.SplitMb(0, p, _ => common, skip = false,
-                  ty2(m), tu2(m), tv2(m))
-              } else
-                Vp8Codec.SplitMb(0, p,
-                  j => mvOf(m, groupIdx(p, j)), skip = true, 0, 0, 0)
-            })
-          val (f2, _) = Vp8Codec.encodeInterFrame(ip, kg, kg)
-          (d, Vp8Codec.encodeIvf(w, h, Seq(kf, f2)))
+  def withVp8SplitmvMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, nc) =>
+      val w = (16 * (3 + nc % 2)).toInt
+      val h = 32
+      val mbW = w / 16
+      def yT(m: Int) = ((31 * d + 13 * m) % 256).toInt
+      def uT(m: Int) = ((91 * d + 7 * m) % 256).toInt
+      def vT(m: Int) = ((53 * d + 11 * m) % 256).toInt
+      def ty2(m: Int) = ((77 + 31 * d + 13 * m) % 256).toInt
+      def tu2(m: Int) = ((59 + 91 * d + 7 * m) % 256).toInt
+      def tv2(m: Int) = ((43 + 53 * d + 11 * m) % 256).toInt
+      def groupIdx(p: Int, j: Int): Int =
+        if (p == 3) ((j / 4) / 2) * 2 + (j % 4) / 2 else j
+      def mvOf(m: Int, g: Int): (Int, Int) = {
+        val r = m / mbW; val c = m % mbW
+        ((g + m + d) % 3).toInt match {
+          case 1 => if (c > 0) (0, -128) else (0, 0)
+          case 2 => if (r > 0) (-128, 0) else (0, 0)
+          case _ => (0, 0)
         }
       }
-      .toDF("doc_id", "media")
-  }
+      val kp = Vp8Codec.Plan(w, h, qi = 0, uvDcDelta = 0, yMode = 0,
+        tokenPartitions = 1, skipAll = false, yT, uT, vT)
+      val (kf, kg) = Vp8Codec.encodeKeyFrame(kp)
+      val ip = Vp8Codec.InterPlan(w, h, qi = 0, uvDcDelta = 0,
+        tokenPartitions = 1, refreshLast = true, refreshGolden = false,
+        mb = m => {
+          val p = ((m + d) % 4).toInt
+          if ((m + d) % 5 == 0) {
+            val common = if (m % mbW > 0) (0, -128) else (0, 0)
+            Vp8Codec.SplitMb(0, p, _ => common, skip = false,
+              ty2(m), tu2(m), tv2(m))
+          } else
+            Vp8Codec.SplitMb(0, p,
+              j => mvOf(m, groupIdx(p, j)), skip = true, 0, 0, 0)
+        })
+      val (f2, _) = Vp8Codec.encodeInterFrame(ip, kg, kg)
+      Vp8Codec.encodeIvf(w, h, Seq(kf, f2))
+    }
 
   case class Vp8VideoStats(doc_id: Long, width: Long, height: Long,
                            n_frames: Long, pix_checksum: Long)
@@ -2516,38 +2136,31 @@ object Multimodal {
     * frame-and-position-weighted checksum over the planar YUV bytes:
     * `Σ_f (f+1) · Σ_i yuv_f(i)·(i mod 97 + 1)`.
     */
-  def decodeVp8VideoStats(media: DataFrame): Dataset[Vp8VideoStats] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val frames = Vp8Codec.decodeIvf(bytes)
-          var chk = 0L
-          var f = 0
-          while (f < frames.length) {
-            val fr = frames(f)
-            var i = 0
-            def add(plane: Array[Byte], off: Int): Int = {
-              var j = 0
-              while (j < plane.length) {
-                chk += (plane(j) & 0xff).toLong * ((off + j) % 97 + 1) * (f + 1)
-                j += 1
-              }
-              off + plane.length
-            }
-            i = add(fr.y, 0)
-            i = add(fr.u, i)
-            i = add(fr.v, i)
-            locally { val _ = i }
-            f += 1
+  def decodeVp8VideoStats(media: DataFrame): Dataset[Vp8VideoStats] =
+    mapMedia(media) { (id, bytes) =>
+      val frames = Vp8Codec.decodeIvf(bytes)
+      var chk = 0L
+      var f = 0
+      while (f < frames.length) {
+        val fr = frames(f)
+        var i = 0
+        def add(plane: Array[Byte], off: Int): Int = {
+          var j = 0
+          while (j < plane.length) {
+            chk += (plane(j) & 0xff).toLong * ((off + j) % 97 + 1) * (f + 1)
+            j += 1
           }
-          Vp8VideoStats(id, frames.head.width.toLong, frames.head.height.toLong,
-            frames.length.toLong, chk)
+          off + plane.length
         }
+        i = add(fr.y, 0)
+        i = add(fr.u, i)
+        i = add(fr.v, i)
+        locally { val _ = i }
+        f += 1
       }
-  }
+      Vp8VideoStats(id, frames.head.width.toLong, frames.head.height.toLong,
+        frames.length.toLong, chk)
+    }
 
   /** Each doc carries a REAL MPEG-1 audio stream: Layer I (two frames —
     * cross-frame filterbank continuity) for even doc_ids, Layer II (one
@@ -2557,77 +2170,69 @@ object Multimodal {
     * a closed-form formula the oracle replays through the pinned integer
     * filterbank ([[MpegAudio]]'s constants discipline).
     */
-  def withMpegAudioMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          // one formula family, channel-offset: mono IS channel 0
-          def l1K0(f: Int, ch: Int) = ((d + 5 * f + 11 * ch) % 32).toInt
-          def l1AllocN(f: Int, ch: Int) = (1 + ((d + f + 2 * ch) % 13)).toInt
-          def l1Sf(f: Int, ch: Int) = ((d + 7 * f + 13 * ch) % 64).toInt
-          def rawOf(g: Int, ch: Int, n: Int) =
-            ((5 * d + 7 * g + 3 + 17 * ch) % n).toInt
-          def l2K0(ch: Int) = ((d + 3 * ch) % 11).toInt
-          def l2Alloc(ch: Int) = (1 + ((d + 5 * ch) % 15)).toInt
-          def l2Scfsi(ch: Int) = ((d + ch) % 4).toInt
-          def l2Sf(ch: Int, i: Int) = ((3 * d + 17 * i + 29 * ch) % 64).toInt
-          val bos = new java.io.ByteArrayOutputStream()
-          (d % 4) match {
-            case 0 => // Layer I mono, two frames (FIFO continuity)
-              var f = 0
-              while (f < 2) {
-                val k0 = l1K0(f, 0)
-                val n = (1 << (l1AllocN(f, 0) + 1)) - 1
-                val alloc = Array.fill(32)(0); alloc(k0) = l1AllocN(f, 0)
-                val sfArr = Array.fill(32)(0); sfArr(k0) = l1Sf(f, 0)
-                val raw = Array.tabulate(12, 32)((gg, sb) =>
-                  if (sb == k0) rawOf(12 * f + gg, 0, n) else 0)
-                val fr = MpegAudio.encodeL1Frame(MpegAudio.L1Frame(alloc, sfArr, raw))
-                bos.write(fr, 0, fr.length)
-                f += 1
-              }
-            case 1 => // Layer II mono
-              val k0 = l2K0(0)
-              val (n, _, _) = MpegAudio.l2Class(l2Alloc(0))
-              val alloc = Array.fill(MpegAudio.L2SbLimit)(0); alloc(k0) = l2Alloc(0)
-              val scfsi = Array.fill(MpegAudio.L2SbLimit)(0); scfsi(k0) = l2Scfsi(0)
-              val sf = Array.fill(MpegAudio.L2SbLimit, 3)(0)
-              var i = 0
-              while (i < 3) { sf(k0)(i) = l2Sf(0, i); i += 1 }
-              val raw = Array.tabulate(36, MpegAudio.L2SbLimit)((g, sb) =>
-                if (sb == k0) rawOf(g, 0, n) else 0)
-              val fr = MpegAudio.encodeL2Frame(MpegAudio.L2Frame(alloc, scfsi, sf, raw))
-              bos.write(fr, 0, fr.length)
-            case 2 => // Layer I STEREO, two frames
-              var f = 0
-              while (f < 2) {
-                val ff = f
-                def nOf(ch: Int) = (1 << (l1AllocN(ff, ch) + 1)) - 1
-                val fr = MpegAudio.encodeL1Stereo(
-                  (ch, sb) => if (sb == l1K0(ff, ch)) l1AllocN(ff, ch) else 0,
-                  (ch, sb) => if (sb == l1K0(ff, ch)) l1Sf(ff, ch) else 0,
-                  (gg, ch, sb) =>
-                    if (sb == l1K0(ff, ch)) rawOf(12 * ff + gg, ch, nOf(ch)) else 0)
-                bos.write(fr, 0, fr.length)
-                f += 1
-              }
-            case _ => // Layer II STEREO
-              def nOf(ch: Int) = MpegAudio.l2Class(l2Alloc(ch))._1
-              val fr = MpegAudio.encodeL2Stereo(
-                (ch, sb) => if (sb == l2K0(ch)) l2Alloc(ch) else 0,
-                (ch, sb) => if (sb == l2K0(ch)) l2Scfsi(ch) else 0,
-                (ch, sb, i) => if (sb == l2K0(ch)) l2Sf(ch, i) else 0,
-                (g, ch, sb) => if (sb == l2K0(ch)) rawOf(g, ch, nOf(ch)) else 0)
-              bos.write(fr, 0, fr.length)
+  def withMpegAudioMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      // one formula family, channel-offset: mono IS channel 0
+      def l1K0(f: Int, ch: Int) = ((d + 5 * f + 11 * ch) % 32).toInt
+      def l1AllocN(f: Int, ch: Int) = (1 + ((d + f + 2 * ch) % 13)).toInt
+      def l1Sf(f: Int, ch: Int) = ((d + 7 * f + 13 * ch) % 64).toInt
+      def rawOf(g: Int, ch: Int, n: Int) =
+        ((5 * d + 7 * g + 3 + 17 * ch) % n).toInt
+      def l2K0(ch: Int) = ((d + 3 * ch) % 11).toInt
+      def l2Alloc(ch: Int) = (1 + ((d + 5 * ch) % 15)).toInt
+      def l2Scfsi(ch: Int) = ((d + ch) % 4).toInt
+      def l2Sf(ch: Int, i: Int) = ((3 * d + 17 * i + 29 * ch) % 64).toInt
+      val bos = new java.io.ByteArrayOutputStream()
+      (d % 4) match {
+        case 0 => // Layer I mono, two frames (FIFO continuity)
+          var f = 0
+          while (f < 2) {
+            val k0 = l1K0(f, 0)
+            val n = (1 << (l1AllocN(f, 0) + 1)) - 1
+            val alloc = Array.fill(32)(0); alloc(k0) = l1AllocN(f, 0)
+            val sfArr = Array.fill(32)(0); sfArr(k0) = l1Sf(f, 0)
+            val raw = Array.tabulate(12, 32)((gg, sb) =>
+              if (sb == k0) rawOf(12 * f + gg, 0, n) else 0)
+            val fr = MpegAudio.encodeL1Frame(MpegAudio.L1Frame(alloc, sfArr, raw))
+            bos.write(fr, 0, fr.length)
+            f += 1
           }
-          (d, bos.toByteArray)
-        }
+        case 1 => // Layer II mono
+          val k0 = l2K0(0)
+          val (n, _, _) = MpegAudio.l2Class(l2Alloc(0))
+          val alloc = Array.fill(MpegAudio.L2SbLimit)(0); alloc(k0) = l2Alloc(0)
+          val scfsi = Array.fill(MpegAudio.L2SbLimit)(0); scfsi(k0) = l2Scfsi(0)
+          val sf = Array.fill(MpegAudio.L2SbLimit, 3)(0)
+          var i = 0
+          while (i < 3) { sf(k0)(i) = l2Sf(0, i); i += 1 }
+          val raw = Array.tabulate(36, MpegAudio.L2SbLimit)((g, sb) =>
+            if (sb == k0) rawOf(g, 0, n) else 0)
+          val fr = MpegAudio.encodeL2Frame(MpegAudio.L2Frame(alloc, scfsi, sf, raw))
+          bos.write(fr, 0, fr.length)
+        case 2 => // Layer I STEREO, two frames
+          var f = 0
+          while (f < 2) {
+            val ff = f
+            def nOf(ch: Int) = (1 << (l1AllocN(ff, ch) + 1)) - 1
+            val fr = MpegAudio.encodeL1Stereo(
+              (ch, sb) => if (sb == l1K0(ff, ch)) l1AllocN(ff, ch) else 0,
+              (ch, sb) => if (sb == l1K0(ff, ch)) l1Sf(ff, ch) else 0,
+              (gg, ch, sb) =>
+                if (sb == l1K0(ff, ch)) rawOf(12 * ff + gg, ch, nOf(ch)) else 0)
+            bos.write(fr, 0, fr.length)
+            f += 1
+          }
+        case _ => // Layer II STEREO
+          def nOf(ch: Int) = MpegAudio.l2Class(l2Alloc(ch))._1
+          val fr = MpegAudio.encodeL2Stereo(
+            (ch, sb) => if (sb == l2K0(ch)) l2Alloc(ch) else 0,
+            (ch, sb) => if (sb == l2K0(ch)) l2Scfsi(ch) else 0,
+            (ch, sb, i) => if (sb == l2K0(ch)) l2Sf(ch, i) else 0,
+            (g, ch, sb) => if (sb == l2K0(ch)) rawOf(g, ch, nOf(ch)) else 0)
+          bos.write(fr, 0, fr.length)
       }
-      .toDF("doc_id", "media")
-  }
+      bos.toByteArray
+    }
 
   /** Each doc carries a REAL MPEG-1 Layer III (MP3) mono stream — one or
     * two frames, one nonzero spectral line per granule with ESC/linbits
@@ -2641,55 +2246,47 @@ object Multimodal {
     * chain closed-form by linearity ([[MpegAudio]]'s constants
     * discipline).
     */
-  def withMp3Media(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          def gran(gi: Int): MpegAudio.L3Granule = {
-            val pos = ((17 + 37 * d + 101 * gi) % 576).toInt
-            val esc = (d + gi) % 3 == 0
-            val v = if (esc) (15 + (d % 2)).toInt else (1 + ((d + 3 * gi) % 13)).toInt
-            val signed = if ((d + 5 * gi) % 2 == 1) -v else v
-            val sc = ((d + gi) % 16).toInt
-            val tsel =
-              if (esc) Array((16 + d % 16).toInt, (16 + (d + 1) % 16).toInt,
-                (16 + (d + 2) % 16).toInt)
-              else Array((12 + d % 3).toInt, (12 + (d + 1) % 3).toInt,
-                (12 + (d + 2) % 3).toInt)
-            val bigValues = pos / 2 + 1
-            MpegAudio.L3Granule(
-              lines = Seq((pos, signed)),
-              globalGain = ((29 * d + 7 * gi) % 256).toInt,
-              scalefacCompress = sc,
-              tableSelect = tsel,
-              region0Count = (d % 6).toInt, region1Count = (d % 4).toInt,
-              preflag = ((d / 2 + gi) % 2).toInt,
-              scalefacScale = ((d / 4 + gi) % 2).toInt,
-              count1Table = (d % 2).toInt,
-              count1Quads = math.min((d % 5).toInt, (576 - 2 * bigValues) / 4),
-              stuffBits = (3 * ((d + gi) % 2)).toInt,
-              scalefac = band => {
-                val slen = if (band <= 10) sc >> 2 else sc & 3
-                ((3 * d + band + gi) % (1L << slen)).toInt
-              })
-          }
-          val nf = 1 + (d % 2).toInt
-          val bos = new java.io.ByteArrayOutputStream()
-          var f = 0
-          while (f < nf) {
-            val fr = MpegAudio.encodeL3Frame((d % 16).toInt,
-              Array(gran(2 * f), gran(2 * f + 1)))
-            bos.write(fr, 0, fr.length)
-            f += 1
-          }
-          (d, bos.toByteArray)
-        }
+  def withMp3Media(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      def gran(gi: Int): MpegAudio.L3Granule = {
+        val pos = ((17 + 37 * d + 101 * gi) % 576).toInt
+        val esc = (d + gi) % 3 == 0
+        val v = if (esc) (15 + (d % 2)).toInt else (1 + ((d + 3 * gi) % 13)).toInt
+        val signed = if ((d + 5 * gi) % 2 == 1) -v else v
+        val sc = ((d + gi) % 16).toInt
+        val tsel =
+          if (esc) Array((16 + d % 16).toInt, (16 + (d + 1) % 16).toInt,
+            (16 + (d + 2) % 16).toInt)
+          else Array((12 + d % 3).toInt, (12 + (d + 1) % 3).toInt,
+            (12 + (d + 2) % 3).toInt)
+        val bigValues = pos / 2 + 1
+        MpegAudio.L3Granule(
+          lines = Seq((pos, signed)),
+          globalGain = ((29 * d + 7 * gi) % 256).toInt,
+          scalefacCompress = sc,
+          tableSelect = tsel,
+          region0Count = (d % 6).toInt, region1Count = (d % 4).toInt,
+          preflag = ((d / 2 + gi) % 2).toInt,
+          scalefacScale = ((d / 4 + gi) % 2).toInt,
+          count1Table = (d % 2).toInt,
+          count1Quads = math.min((d % 5).toInt, (576 - 2 * bigValues) / 4),
+          stuffBits = (3 * ((d + gi) % 2)).toInt,
+          scalefac = band => {
+            val slen = if (band <= 10) sc >> 2 else sc & 3
+            ((3 * d + band + gi) % (1L << slen)).toInt
+          })
       }
-      .toDF("doc_id", "media")
-  }
+      val nf = 1 + (d % 2).toInt
+      val bos = new java.io.ByteArrayOutputStream()
+      var f = 0
+      while (f < nf) {
+        val fr = MpegAudio.encodeL3Frame((d % 16).toInt,
+          Array(gran(2 * f), gran(2 * f + 1)))
+        bos.write(fr, 0, fr.length)
+        f += 1
+      }
+      bos.toByteArray
+    }
 
   /** One doc's Layer III STEREO stream (plan shared with Mp3StereoSpec's
     * replay): one frame, one coded line per (granule, channel), the
@@ -2776,14 +2373,8 @@ object Multimodal {
   }
 
   /** Each doc carries the [[mpegJointStream]] joint-stereo frame. */
-  def withMpegJointMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, mpegJointStream(d))))
-      .toDF("doc_id", "media")
-  }
+  def withMpegJointMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => mpegJointStream(d))
 
   /** One doc's Layer III WINDOW-SWITCHING stream (plan shared with
     * Mp3ShortSpec's replay): two mono frames whose four granules walk
@@ -2892,14 +2483,8 @@ object Multimodal {
     * bands with subblock gains above), the long-long-only alias
     * boundary, and the per-subband long/short filterbank dispatch.
     */
-  def withMp3MixedMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, mp3MixedStream(d))))
-      .toDF("doc_id", "media")
-  }
+  def withMp3MixedMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => mp3MixedStream(d))
 
   /** One doc's CRC-PROTECTED Layer III stream: the q_mp3_decode granule
     * walk with the header protection bit set and the real ISO 11172-3
@@ -2949,14 +2534,8 @@ object Multimodal {
   }
 
   /** Each doc carries the [[mp3CrcStream]] protected frames. */
-  def withMp3CrcMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, mp3CrcStream(d))))
-      .toDF("doc_id", "media")
-  }
+  def withMp3CrcMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => mp3CrcStream(d))
 
   /** One doc's Layer III BIT-RESERVOIR stream (plan shared with
     * Mp3ResvSpec's replay): four mono frames under FIXED-RATE framing
@@ -2998,14 +2577,8 @@ object Multimodal {
     * main_data_begin backward seek, and the segment-boundary skip — the
     * framing every real MP3 uses.
     */
-  def withMp3ResvMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, mp3ResvStream(d))))
-      .toDF("doc_id", "media")
-  }
+  def withMp3ResvMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => mp3ResvStream(d))
 
   /** One doc's PADDED fixed-rate Layer III stream: the bit-reservoir
     * granule walk with the header padding bit alternating per frame —
@@ -3041,14 +2614,8 @@ object Multimodal {
   }
 
   /** Each doc carries the [[mp3PadStream]] padded fixed-rate frames. */
-  def withMp3PadMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, mp3PadStream(d))))
-      .toDF("doc_id", "media")
-  }
+  def withMp3PadMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => mp3PadStream(d))
 
   /** One doc's Layer III STEREO WINDOW-SWITCHING stream (plan shared
     * with Mp3SwStereoSpec's replay): one frame, one coded line per
@@ -3106,14 +2673,8 @@ object Multimodal {
     * frame: per-channel block types in one frame, MS across mismatched
     * block types, and the transition windows under independent stereo.
     */
-  def withMp3SwStereoMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, mp3SwStereoStream(d))))
-      .toDF("doc_id", "media")
-  }
+  def withMp3SwStereoMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => mp3SwStereoStream(d))
 
   /** Each doc carries the [[mp3SwitchStream]] long/START/SHORT/STOP
     * walk: short-block scalefactors, subblock gains, the transmitted-
@@ -3121,14 +2682,8 @@ object Multimodal {
     * window overlap, and the transition window shapes — all graded by
     * the flat linearity replay.
     */
-  def withMp3SwitchMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, mp3SwitchStream(d))))
-      .toDF("doc_id", "media")
-  }
+  def withMp3SwitchMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => mp3SwitchStream(d))
 
   /** Each doc carries a REAL MPEG-1 Layer III STEREO stream from
     * [[mp3StereoStream]] — all four stereo shapes graded: independent
@@ -3140,14 +2695,8 @@ object Multimodal {
     * sets through the same linearity algebra as `q_mp3_decode`, with
     * the sample-major L/R interleave in the checksum weights.
     */
-  def withMp3StereoMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, mp3StereoStream(d))))
-      .toDF("doc_id", "media")
-  }
+  def withMp3StereoMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => mp3StereoStream(d))
 
   /** One doc's AAC-LC PULSE stream (plan shared with AacPulseSpec's
     * replay): mono long-window ADTS frames whose single coded band
@@ -3188,14 +2737,8 @@ object Multimodal {
     * chaining, and the quantized-domain amplitude adds (sign-matched on
     * the coded line, negative on zero lines) before requantization.
     */
-  def withAacPulseMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, aacPulseStream(d))))
-      .toDF("doc_id", "media")
-  }
+  def withAacPulseMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => aacPulseStream(d))
 
   /** One doc's CRC-PROTECTED ADTS stream: the q_aac_decode frame walk
     * with protection_absent = 0 — a 16-bit crc_check (the real ISO
@@ -3222,14 +2765,8 @@ object Multimodal {
   }
 
   /** Each doc carries the [[aacCrcStream]] protected ADTS frames. */
-  def withAacCrcMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, aacCrcStream(d))))
-      .toDF("doc_id", "media")
-  }
+  def withAacCrcMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => aacCrcStream(d))
 
   /** One doc's AAC stream with MULTIPLE raw_data_blocks per ADTS frame
     * (plan shared with AacMultiSpec): 3 or 4 one-line blocks grouped as
@@ -3261,14 +2798,8 @@ object Multimodal {
   }
 
   /** Each doc carries the [[aacMultiStream]] grouped ADTS frames. */
-  def withAacMultiMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, aacMultiStream(d))))
-      .toDF("doc_id", "media")
-  }
+  def withAacMultiMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => aacMultiStream(d))
 
   /** Each doc carries a REAL AAC-LC ADTS stream (one or two frames): one
     * nonzero spectral line per frame with the codebook rotating through
@@ -3277,31 +2808,23 @@ object Multimodal {
     * whole Huffman/IMDCT chain stays linear so the oracle replays it
     * closed-form ([[AacCodec]]'s pinned-constants discipline).
     */
-  def withAacMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          def frameOf(f: Int): AacCodec.AacFrame = {
-            val pos = ((37 * d + 911 * f) % 1024).toInt
-            val cb = (1 + (d + f) % 11).toInt
-            val mag =
-              if (cb == 11) (16 + d % 40).toInt
-              else (1 + (d + f) % AacCodec.cbLav(cb)).toInt
-            val v = if ((d + f) % 2 == 1) -mag else mag
-            AacCodec.AacFrame(
-              globalGain = (20 + (29 * d + 7 * f) % 200).toInt,
-              lines = Seq((pos, v, cb)),
-              sfDelta = ((d + 3 * f) % 41 - 20).toInt)
-          }
-          val nf = 1 + (d % 2).toInt
-          (d, AacCodec.encode((0 until nf).map(frameOf)))
-        }
+  def withAacMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      def frameOf(f: Int): AacCodec.AacFrame = {
+        val pos = ((37 * d + 911 * f) % 1024).toInt
+        val cb = (1 + (d + f) % 11).toInt
+        val mag =
+          if (cb == 11) (16 + d % 40).toInt
+          else (1 + (d + f) % AacCodec.cbLav(cb)).toInt
+        val v = if ((d + f) % 2 == 1) -mag else mag
+        AacCodec.AacFrame(
+          globalGain = (20 + (29 * d + 7 * f) % 200).toInt,
+          lines = Seq((pos, v, cb)),
+          sfDelta = ((d + 3 * f) % 41 - 20).toInt)
       }
-      .toDF("doc_id", "media")
-  }
+      val nf = 1 + (d % 2).toInt
+      AacCodec.encode((0 until nf).map(frameOf))
+    }
 
   /** Each doc carries a mono ADTS stream of EIGHT_SHORT_SEQUENCE frames:
     * one spectral line per frame at a rotating (window, line) position,
@@ -3311,33 +2834,25 @@ object Multimodal {
     * group-interleaved spectral order are what the closed-form oracle
     * grades.
     */
-  def withAacShortMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          def frameOf(f: Int): AacCodec.AacFrame = {
-            val pos = ((37 * d + 911 * f) % 1024).toInt
-            val cb = (1 + (d + f) % 11).toInt
-            val mag =
-              if (cb == 11) (16 + d % 40).toInt
-              else (1 + (d + f) % AacCodec.cbLav(cb)).toInt
-            val v = if ((d + f) % 2 == 1) -mag else mag
-            AacCodec.AacFrame(
-              globalGain = (20 + (29 * d + 7 * f) % 200).toInt,
-              lines = Seq((pos, v, cb)),
-              sfDelta = ((d + 3 * f) % 41 - 20).toInt,
-              shortSeq = true,
-              grouping = ((d + 5 * f) % 128).toInt)
-          }
-          val nf = 1 + (d % 2).toInt
-          (d, AacCodec.encode((0 until nf).map(frameOf)))
-        }
+  def withAacShortMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      def frameOf(f: Int): AacCodec.AacFrame = {
+        val pos = ((37 * d + 911 * f) % 1024).toInt
+        val cb = (1 + (d + f) % 11).toInt
+        val mag =
+          if (cb == 11) (16 + d % 40).toInt
+          else (1 + (d + f) % AacCodec.cbLav(cb)).toInt
+        val v = if ((d + f) % 2 == 1) -mag else mag
+        AacCodec.AacFrame(
+          globalGain = (20 + (29 * d + 7 * f) % 200).toInt,
+          lines = Seq((pos, v, cb)),
+          sfDelta = ((d + 3 * f) % 41 - 20).toInt,
+          shortSeq = true,
+          grouping = ((d + 5 * f) % 128).toInt)
       }
-      .toDF("doc_id", "media")
-  }
+      val nf = 1 + (d % 2).toInt
+      AacCodec.encode((0 until nf).map(frameOf))
+    }
 
   /** Each doc carries a mono ADTS stream of FOUR frames walking the full
     * window-sequence family — ONLY_LONG, LONG_START, EIGHT_SHORT,
@@ -3346,34 +2861,26 @@ object Multimodal {
     * value-visible: energy in a sample the oracle expects silent (or
     * missing from one it expects lit) breaks the checksum.
     */
-  def withAacTransMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions { batch =>
-        batch.map { d =>
-          def frameOf(f: Int): AacCodec.AacFrame = {
-            val pos = ((37 * d + 911 * f) % 1024).toInt
-            val cb = (1 + (d + f) % 11).toInt
-            val mag =
-              if (cb == 11) (16 + d % 40).toInt
-              else (1 + (d + f) % AacCodec.cbLav(cb)).toInt
-            val v = if ((d + f) % 2 == 1) -mag else mag
-            val ws = f // 0 long, 1 start, 2 short, 3 stop
-            AacCodec.AacFrame(
-              globalGain = (20 + (29 * d + 7 * f) % 200).toInt,
-              lines = Seq((pos, v, cb)),
-              sfDelta = ((d + 3 * f) % 41 - 20).toInt,
-              shortSeq = ws == 2,
-              grouping = if (ws == 2) ((d + 5 * f) % 128).toInt else 0,
-              windowSeq = ws)
-          }
-          (d, AacCodec.encode((0 until 4).map(frameOf)))
-        }
+  def withAacTransMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (d, _) =>
+      def frameOf(f: Int): AacCodec.AacFrame = {
+        val pos = ((37 * d + 911 * f) % 1024).toInt
+        val cb = (1 + (d + f) % 11).toInt
+        val mag =
+          if (cb == 11) (16 + d % 40).toInt
+          else (1 + (d + f) % AacCodec.cbLav(cb)).toInt
+        val v = if ((d + f) % 2 == 1) -mag else mag
+        val ws = f // 0 long, 1 start, 2 short, 3 stop
+        AacCodec.AacFrame(
+          globalGain = (20 + (29 * d + 7 * f) % 200).toInt,
+          lines = Seq((pos, v, cb)),
+          sfDelta = ((d + 3 * f) % 41 - 20).toInt,
+          shortSeq = ws == 2,
+          grouping = if (ws == 2) ((d + 5 * f) % 128).toInt else 0,
+          windowSeq = ws)
       }
-      .toDF("doc_id", "media")
-  }
+      AacCodec.encode((0 until 4).map(frameOf))
+    }
 
   /** Each doc carries ONE long-window ADTS frame with a live TNS filter
     * (`tns_data_present = 1`) over the top two scalefactor bands (lines
@@ -3386,14 +2893,8 @@ object Multimodal {
     * honored). The oracle factors the IMDCT into a doc-independent
     * per-line basis and replays the five spectral shapes exactly.
     */
-  def withAacTnsMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, withAacTnsMediaBytes(d))))
-      .toDF("doc_id", "media")
-  }
+  def withAacTnsMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => withAacTnsMediaBytes(d))
 
   /** One doc's TNS stream (plan shared with AacTnsSpec's replay). */
   private[operators] def withAacTnsMediaBytes(d: Long): Array[Byte] = {
@@ -3453,14 +2954,8 @@ object Multimodal {
     * reconstruction, graded sample-exact with the L/R interleave in the
     * checksum weights.
     */
-  def withAacCpeMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, aacCpeStream(d))))
-      .toDF("doc_id", "media")
-  }
+  def withAacCpeMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => aacCpeStream(d))
 
   /** One doc's PNS frame (4.6.13): a mono SCE whose single coded band
     * is a NOISE band (codebook 13, no spectral data) — the decoder
@@ -3478,14 +2973,8 @@ object Multimodal {
   /** Each doc carries the [[aacPnsStream]] frame, graded sample-exact
     * against the pinned noise map.
     */
-  def withAacPnsMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, aacPnsStream(d))))
-      .toDF("doc_id", "media")
-  }
+  def withAacPnsMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => aacPnsStream(d))
 
   /** One doc's intensity-stereo CPE frame: the left channel codes one
     * line; the right channel is a single INTENSITY band over the same
@@ -3515,14 +3004,8 @@ object Multimodal {
   /** Each doc carries the [[aacIntensityStream]] CPE frame, graded
     * sample-exact with the pinned is_pos gain replayed by the oracle.
     */
-  def withAacIntensityMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, aacIntensityStream(d))))
-      .toDF("doc_id", "media")
-  }
+  def withAacIntensityMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => aacIntensityStream(d))
 
   /** One doc's SHORT-window TNS stream: one EIGHT_SHORT frame whose
     * coded window (rotating 0..3) carries a live per-window TNS filter
@@ -3554,14 +3037,8 @@ object Multimodal {
   /** Each doc carries the [[aacTnsShortStreamBytes]] short-window TNS
     * frame, graded by the basis-factorized closed-form oracle.
     */
-  def withAacTnsShortMedia(docs: DataFrame, id: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id")))
-      .as[Long]
-      .mapPartitions(batch => batch.map(d => (d, aacTnsShortStreamBytes(d))))
-      .toDF("doc_id", "media")
-  }
+  def withAacTnsShortMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true)((d, _) => aacTnsShortStreamBytes(d))
 
   case class AacStats(doc_id: Long, n_frames: Long, n_samples: Long,
                       pcm_checksum: Long)
@@ -3569,24 +3046,17 @@ object Multimodal {
   /** Decode each doc's ADTS stream through the full AAC-LC pipeline and
     * reduce the fixed-point PCM to the position-weighted checksum.
     */
-  def decodeAacStats(media: DataFrame): Dataset[AacStats] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val out = AacCodec.decode(bytes)
-          var chk = 0L
-          var t = 0
-          while (t < out.pcm.length) {
-            chk += out.pcm(t) * (t % 97 + 1)
-            t += 1
-          }
-          AacStats(id, out.nFrames.toLong, out.pcm.length.toLong, chk)
-        }
+  def decodeAacStats(media: DataFrame): Dataset[AacStats] =
+    mapMedia(media) { (id, bytes) =>
+      val out = AacCodec.decode(bytes)
+      var chk = 0L
+      var t = 0
+      while (t < out.pcm.length) {
+        chk += out.pcm(t) * (t % 97 + 1)
+        t += 1
       }
-  }
+      AacStats(id, out.nFrames.toLong, out.pcm.length.toLong, chk)
+    }
 
   case class MpegAudioStats(doc_id: Long, layer: Long, n_channels: Long,
                             n_frames: Long, n_samples: Long, pcm_checksum: Long)
@@ -3596,49 +3066,45 @@ object Multimodal {
     * synthesis) and reduce the fixed-point PCM to a position-weighted
     * checksum `Σ_t pcm(t)·(t mod 97 + 1)`.
     */
-  def decodeMpegAudioStats(media: DataFrame): Dataset[MpegAudioStats] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val out = MpegAudio.decode(bytes)
-          var chk = 0L
-          var t = 0
-          while (t < out.pcm.length) {
-            chk += out.pcm(t) * (t % 97 + 1)
-            t += 1
-          }
-          MpegAudioStats(id, out.layer.toLong, out.channels.toLong,
-            out.nFrames.toLong, out.pcm.length.toLong, chk)
-        }
+  def decodeMpegAudioStats(media: DataFrame): Dataset[MpegAudioStats] =
+    mapMedia(media) { (id, bytes) =>
+      val out = MpegAudio.decode(bytes)
+      var chk = 0L
+      var t = 0
+      while (t < out.pcm.length) {
+        chk += out.pcm(t) * (t % 97 + 1)
+        t += 1
       }
-  }
+      MpegAudioStats(id, out.layer.toLong, out.channels.toLong,
+        out.nFrames.toLong, out.pcm.length.toLong, chk)
+    }
 
-  def withJpegMedia(docs: DataFrame, id: String = "doc_id",
-                    nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (docId, nc) =>
-          val w = (8 + nc % 25).toInt
-          val h = (8 + nc % 17).toInt
-          val bw = (w + 7) / 8
-          val c = if (docId % 3 == 0) 1 else 3
-          def pix(i: Int): Byte = {
-            val x = (i / c) % w
-            val y = i / (c * w)
-            ((31L * docId + 13L * ((y / 8) * bw + x / 8)) % 256L).toByte
-          }
-          (docId, JpegCodec.encodeJpeg(w, h, c, pix,
-            subsample = docId % 3 == 2))
-        }
+  /** Attach a REAL baseline JPEG blob to `documents`, built so decode is
+    * closed-form: content is BLOCK-CONSTANT gray — every pixel of 8×8
+    * block (bx,by) carries `(31·docId + 13·(by·⌈w/8⌉ + bx)) mod 256` on
+    * all channels — and the quant tables are flat 8s, so every block is
+    * DC-only with a DC that survives quantization exactly
+    * ([[JpegCodec]]'s object doc derives this). The coding shape cycles
+    * by `doc_id`: grayscale / 4:4:4 color / 4:2:0 subsampled color (gray
+    * content keeps chroma at 128, so even the subsampled path is exact).
+    * Generation is fixture plumbing; the graded operator is the full
+    * [[JpegCodec]] DECODE — Huffman, dequant, IDCT, upsampling, color
+    * matrix — over these bytes (q_jpeg_decode).
+    */
+  def withJpegMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (docId, nc) =>
+      val w = (8 + nc % 25).toInt
+      val h = (8 + nc % 17).toInt
+      val bw = (w + 7) / 8
+      val c = if (docId % 3 == 0) 1 else 3
+      def pix(i: Int): Byte = {
+        val x = (i / c) % w
+        val y = i / (c * w)
+        ((31L * docId + 13L * ((y / 8) * bw + x / 8)) % 256L).toByte
       }
-      .toDF("doc_id", "media")
-  }
+      JpegCodec.encodeJpeg(w, h, c, pix,
+        subsample = docId % 3 == 2)
+    }
 
   /** Deterministic audio fixture: doc `docId`'s i-th signed 16-bit sample
     * is `((31·docId + 7·i) mod 65536) − 32768` — the audio analog of
@@ -3647,33 +3113,13 @@ object Multimodal {
   private def sampleGen(docId: Long)(i: Int): Short =
     (((31L * docId + 7L * i) % 65536L) - 32768L).toShort
 
-  /** The shared fixture frame every audio/media generator uses: project
-    * (doc_id, n_chars) and map each pair through a per-row byte
-    * generator, zero shuffle. One implementation instead of a copy per
-    * codec — a null-handling or schema fix lands once.
-    */
-  private def perDocMedia(docs: DataFrame, id: String, nChars: String)
-                         (gen: (Long, Long) => Array[Byte]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // deliberately NOT spread: the PCM/G.711/FLAC-class encodes here are
-    // a few hundred int ops per doc — the exchange's fixed cost exceeds
-    // the serial compute (measured: spreading took q_audio_* from
-    // ~0.25 s to ~0.55 s while the heavy codecs gained 3-10x)
-    docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc"))
-      .as[(Long, Long)]
-      .mapPartitions(batch => batch.map { case (docId, nc) => (docId, gen(docId, nc)) })
-      .toDF("doc_id", "media")
-  }
-
   /** Attach a REAL RIFF/WAVE PCM clip to `documents`: sample count and
     * rate derive from `n_chars`, samples from [[sampleGen]]. Generation is
     * fixture plumbing; the graded operator is [[decodeAudioStats]] over
     * these bytes.
     */
-  def withAudioMedia(docs: DataFrame, id: String = "doc_id",
-                     nChars: String = "n_chars"): DataFrame =
-    perDocMedia(docs, id, nChars) { (docId, nc) =>
+  def withAudioMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = false) { (docId, nc) =>
       val n = (64 + nc % 200).toInt
       val rate = (8000 + (nc % 3) * 4000).toInt
       WavCodec.encodePcm16(rate, n, sampleGen(docId))
@@ -3685,29 +3131,17 @@ object Multimodal {
     * the DuckDB oracle can replay the ENTIRE lossy round trip per sample
     * (encode∘decode is a pure segmented-integer function).
     */
-  def withUlawMedia(docs: DataFrame, id: String = "doc_id",
-                    nChars: String = "n_chars"): DataFrame =
-    perDocMedia(docs, id, nChars) { (docId, nc) =>
+  def withUlawMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = false) { (docId, nc) =>
       G711Codec.encodeWavUlaw(8000, (64 + nc % 200).toInt, sampleGen(docId))
     }
 
   /** A-law sibling of [[withUlawMedia]] — G.711's other law, format 6. */
-  def withAlawMedia(docs: DataFrame, id: String = "doc_id",
-                    nChars: String = "n_chars"): DataFrame =
-    perDocMedia(docs, id, nChars) { (docId, nc) =>
+  def withAlawMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = false) { (docId, nc) =>
       G711Codec.encodeWavAlaw(8000, (64 + nc % 200).toInt, sampleGen(docId))
     }
 
-  /** IMA ADPCM lossy round-trip report, one scan: per doc, synthesize the
-    * slope-bounded triangle the codec's tracking contract covers
-    * (amplitude 4000–12000 from `n_chars`, slope 50–550 from `doc_id` —
-    * the exact grid `AdpcmCodecSpec` pins bounds for), encode (4-bit
-    * adaptive), decode, and grade what each side CAN grade: container
-    * size and sample count are closed-form block arithmetic (the SQL
-    * oracle checks them hash-exact), while tracking error — whose
-    * stateful recurrence SQL cannot replay — is reported against the
-    * spec-pinned bounds as booleans.
-    */
   /** The IMA-ADPCM chain graded SAMPLE-EXACT — the upgrade past
     * [[adpcmReport]]'s tolerance booleans: every decoded sample of the
     * full encode→decode round trip is folded into a position-weighted
@@ -3721,38 +3155,9 @@ object Multimodal {
     * while every stateful path — including cross-block index carry —
     * stays live.
     */
-  def adpcmExact(docs: DataFrame, id: String = "doc_id",
-                 nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // not spread: ADPCM encode is ~n int ops per doc (n <= 340) — the
-    // exchange's fixed cost exceeds the serial compute (see perDocMedia)
-    docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc"))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (docId, nc) =>
-          val n = (140 + nc % 200).toInt
-          val a = (4000 + nc % 5 * 2000).toInt
-          val slope = (50 + docId % 6 * 100).toInt
-          val period = 4 * a
-          def f(i: Int): Short =
-            (math.abs((i.toLong * slope % period).toInt - 2 * a) - a).toShort
-          val wav = AdpcmCodec.encodeWavIma(8000, n, f, blockAlign = 64)
-          val dec = AdpcmCodec.decodeWavIma(wav)
-          require(dec.samples.length == n,
-            s"adpcmExact: decoded ${dec.samples.length} of $n samples")
-          var chk = 0L; var merr = 0L; var i = 0
-          while (i < n) {
-            chk += (dec.samples(i).toLong + 32768L) * (i % 97 + 1)
-            val e = math.abs(dec.samples(i) - f(i)).toLong
-            if (e > merr) merr = e
-            i += 1
-          }
-          (docId, n.toLong, chk, merr)
-        }
-      }
-      .toDF("doc_id", "n_samples", "dec_checksum", "max_err")
-  }
+  def adpcmExact(docs: DataFrame): DataFrame =
+    adpcmExactRows(docs, "adpcmExact", (n, f) =>
+      AdpcmCodec.decodeWavIma(AdpcmCodec.encodeWavIma(8000, n, f, blockAlign = 64)).samples)
 
   /** [[adpcmExact]]'s MS-ADPCM sibling: the two-tap-predictor flavor
     * graded SAMPLE-EXACT. With the fixture's predictor 0 the 2-tap
@@ -3763,93 +3168,80 @@ object Multimodal {
     * (mean |prediction error| over the early window — itself closed
     * form), and the verbatim two-sample block headers.
     */
-  def msAdpcmExact(docs: DataFrame, id: String = "doc_id",
-                   nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // not spread: ADPCM encode is ~n int ops per doc (n <= 340) — the
-    // exchange's fixed cost exceeds the serial compute (see perDocMedia)
-    docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc"))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (docId, nc) =>
-          val n = (140 + nc % 200).toInt
-          val a = (4000 + nc % 5 * 2000).toInt
-          val slope = (50 + docId % 6 * 100).toInt
-          val period = 4 * a
-          def f(i: Int): Short =
-            (math.abs((i.toLong * slope % period).toInt - 2 * a) - a).toShort
-          val wav = MsAdpcmCodec.encodeWavMs(8000, n, f, blockAlign = 64)
-          val dec = MsAdpcmCodec.decodeWavMs(wav)
-          require(dec.samples.length == n,
-            s"msAdpcmExact: decoded ${dec.samples.length} of $n samples")
-          var chk = 0L; var merr = 0L; var i = 0
-          while (i < n) {
-            chk += (dec.samples(i).toLong + 32768L) * (i % 97 + 1)
-            val e = math.abs(dec.samples(i) - f(i)).toLong
-            if (e > merr) merr = e
-            i += 1
-          }
-          (docId, n.toLong, chk, merr)
-        }
-      }
-      .toDF("doc_id", "n_samples", "dec_checksum", "max_err")
+  def msAdpcmExact(docs: DataFrame): DataFrame =
+    adpcmExactRows(docs, "msAdpcmExact", (n, f) =>
+      MsAdpcmCodec.decodeWavMs(MsAdpcmCodec.encodeWavMs(8000, n, f, blockAlign = 64)).samples)
+
+  /** The slope-bounded triangle every ADPCM row encodes: amplitude
+    * 4000–12000 from `n_chars`, slope 50–550 from `doc_id` — the exact
+    * grid `AdpcmCodecSpec` pins bounds for.
+    */
+  private def adpcmTriangle(docId: Long, nc: Long): Int => Short = {
+    val a = (4000 + nc % 5 * 2000).toInt
+    val slope = (50 + docId % 6 * 100).toInt
+    val period = 4 * a
+    i => (math.abs((i.toLong * slope % period).toInt - 2 * a) - a).toShort
   }
 
-  def adpcmReport(docs: DataFrame, id: String = "doc_id",
-                  nChars: String = "n_chars",
-                  flavor: String = "ima"): DataFrame = {
+  /** The shared body of [[adpcmExact]] and [[msAdpcmExact]]: a short
+    * triangle clip through `roundTrip` (encode then decode), folded into
+    * the position-weighted checksum and the exact max error.
+    */
+  private def adpcmExactRows(docs: DataFrame, name: String,
+                             roundTrip: (Int, Int => Short) => Array[Short]): DataFrame =
+    perDoc(docs, spread = false) { (docId, nc) =>
+      val n = (140 + nc % 200).toInt
+      val f = adpcmTriangle(docId, nc)
+      val dec = roundTrip(n, f)
+      require(dec.length == n, s"$name: decoded ${dec.length} of $n samples")
+      var chk = 0L; var merr = 0L; var i = 0
+      while (i < n) {
+        chk += (dec(i).toLong + 32768L) * (i % 97 + 1)
+        val e = math.abs(dec(i) - f(i)).toLong
+        if (e > merr) merr = e
+        i += 1
+      }
+      (docId, n.toLong, chk, merr)
+    }.toDF("doc_id", "n_samples", "dec_checksum", "max_err")
+
+  /** IMA ADPCM lossy round-trip report, one scan: per doc, synthesize the
+    * slope-bounded triangle the codec's tracking contract covers
+    * ([[adpcmTriangle]]), encode (4-bit
+    * adaptive), decode, and grade what each side CAN grade: container
+    * size and sample count are closed-form block arithmetic (the SQL
+    * oracle checks them hash-exact), while tracking error — whose
+    * stateful recurrence SQL cannot replay — is reported against the
+    * spec-pinned bounds as booleans.
+    */
+  def adpcmReport(docs: DataFrame, flavor: String = "ima"): DataFrame = {
     require(flavor == "ima" || flavor == "ms",
       s"adpcmReport: unknown ADPCM flavor '$flavor' (ima | ms)")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // not spread: ADPCM encode is a few hundred int ops per doc — the
-    // exchange's fixed cost exceeds the serial compute (see perDocMedia)
-    docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc"))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (docId, nc) =>
-          val n = (600 + nc % 1000).toInt
-          val a = (4000 + nc % 5 * 2000).toInt
-          val slope = (50 + docId % 6 * 100).toInt
-          val period = 4 * a
-          def f(i: Int): Short =
-            (math.abs((i.toLong * slope % period).toInt - 2 * a) - a).toShort
-          val wav =
-            if (flavor == "ima") AdpcmCodec.encodeWavIma(8000, n, f)
-            else MsAdpcmCodec.encodeWavMs(8000, n, f)
-          val dec =
-            if (flavor == "ima") AdpcmCodec.decodeWavIma(wav)
-            else MsAdpcmCodec.decodeWavMs(wav)
-          var maxErr = 0L; var se = 0L; var i = 0
-          while (i < n) {
-            val e = math.abs(dec.samples(i) - f(i)).toLong
-            if (e > maxErr) maxErr = e
-            se += e * e
-            i += 1
-          }
-          // per-flavor error bounds, each pinned by its codec spec on the
-          // same grid — a shared loose bound would let an IMA regression
-          // into the 2561-4096 range pass silently
-          val errBound = if (flavor == "ima") 2560L else 4096L
-          (docId, wav.length.toLong, dec.samples.length.toLong, 2L * n,
-            maxErr <= errBound, se / n <= 65536L)
-        }
+    perDoc(docs, spread = false) { (docId, nc) =>
+      val n = (600 + nc % 1000).toInt
+      val f = adpcmTriangle(docId, nc)
+      val wav =
+        if (flavor == "ima") AdpcmCodec.encodeWavIma(8000, n, f)
+        else MsAdpcmCodec.encodeWavMs(8000, n, f)
+      val dec =
+        if (flavor == "ima") AdpcmCodec.decodeWavIma(wav)
+        else MsAdpcmCodec.decodeWavMs(wav)
+      var maxErr = 0L; var se = 0L; var i = 0
+      while (i < n) {
+        val e = math.abs(dec.samples(i) - f(i)).toLong
+        if (e > maxErr) maxErr = e
+        se += e * e
+        i += 1
       }
-      .toDF("doc_id", "media_bytes", "n_samples", "pcm_bytes",
-        "err_bounded", "mse_bounded")
+      // per-flavor error bounds, each pinned by its codec spec on the
+      // same grid — a shared loose bound would let an IMA regression
+      // into the 2561-4096 range pass silently
+      val errBound = if (flavor == "ima") 2560L else 4096L
+      (docId, wav.length.toLong, dec.samples.length.toLong, 2L * n,
+        maxErr <= errBound, se / n <= 65536L)
+    }.toDF("doc_id", "media_bytes", "n_samples", "pcm_bytes",
+      "err_bounded", "mse_bounded")
   }
 
-  /** REAL audio resample for PCM WAV: decode → nearest-neighbor sample-rate
-    * conversion in exact integer arithmetic (`outN = n·outRate/inRate`,
-    * source index `j·inRate/outRate` — the time-preserving map) →
-    * re-encode at the target rate. A clip already at `outRate` passes
-    * through sample-identical. The audio analog of [[resizeMedia]]; same
-    * zero-shuffle scan shape; graded byte-exact in q_audio_resample.
-    * (Real production resampling would filter+interpolate; nearest is the
-    * honest no-DSP baseline, and the SHAPE — decode, index map, re-encode
-    * — is what a windowed-sinc kernel would drop into.)
-    */
   /** Deterministic audio augmentation: integer gain `num/den` with int16
     * saturation — the loudness-perturbation rung of audio data prep
     * (the flip-augmentation analog for the audio modality). Sample
@@ -3864,22 +3256,15 @@ object Multimodal {
     */
   def gainAudio(media: DataFrame, num: Int, den: Int): DataFrame = {
     require(den > 0 && num >= 0, s"gainAudio: bad gain $num/$den")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val a = WavCodec.decodePcm16(bytes)
-          val out = WavCodec.encodePcm16Ch(a.sampleRate, a.channels,
-            a.samples.length, { j =>
-              val v = a.samples(j).toLong * num / den
-              math.max(-32768L, math.min(32767L, v)).toShort
-            })
-          (id, out)
-        }
-      }
-      .toDF("doc_id", "media")
+    mapMedia(media) { (id, bytes) =>
+      val a = WavCodec.decodePcm16(bytes)
+      val out = WavCodec.encodePcm16Ch(a.sampleRate, a.channels,
+        a.samples.length, { j =>
+          val v = a.samples(j).toLong * num / den
+          math.max(-32768L, math.min(32767L, v)).toShort
+        })
+      (id, out)
+    }.toDF("doc_id", "media")
   }
 
   /** Leading/trailing silence trim: drop samples before the first and
@@ -3896,63 +3281,59 @@ object Multimodal {
   def trimSilence(media: DataFrame, threshold: Int): DataFrame = {
     require(threshold > 0 && threshold <= 32768,
       s"trimSilence: threshold must be in (0, 32768], got $threshold")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val a = WavCodec.decodePcm16(bytes)
-          val ch = a.channels
-          val frames = a.samples.length / ch
-          def loud(f: Int): Boolean = {
-            var c = 0
-            var hit = false
-            while (c < ch && !hit) {
-              if (math.abs(a.samples(f * ch + c).toInt) >= threshold) hit = true
-              c += 1
-            }
-            hit
-          }
-          var first = 0
-          while (first < frames && !loud(first)) first += 1
-          var last = frames - 1
-          while (last >= first && !loud(last)) last -= 1
-          val keptF = if (first > last) 0 else last - first + 1
-          val out = WavCodec.encodePcm16Ch(a.sampleRate, ch, keptF * ch,
-            j => a.samples(first * ch + j))
-          (id, out)
+    mapMedia(media) { (id, bytes) =>
+      val a = WavCodec.decodePcm16(bytes)
+      val ch = a.channels
+      val frames = a.samples.length / ch
+      def loud(f: Int): Boolean = {
+        var c = 0
+        var hit = false
+        while (c < ch && !hit) {
+          if (math.abs(a.samples(f * ch + c).toInt) >= threshold) hit = true
+          c += 1
         }
+        hit
       }
-      .toDF("doc_id", "media")
+      var first = 0
+      while (first < frames && !loud(first)) first += 1
+      var last = frames - 1
+      while (last >= first && !loud(last)) last -= 1
+      val keptF = if (first > last) 0 else last - first + 1
+      val out = WavCodec.encodePcm16Ch(a.sampleRate, ch, keptF * ch,
+        j => a.samples(first * ch + j))
+      (id, out)
+    }.toDF("doc_id", "media")
   }
 
+  /** REAL audio resample for PCM WAV: decode → nearest-neighbor sample-rate
+    * conversion in exact integer arithmetic (`outN = n·outRate/inRate`,
+    * source index `j·inRate/outRate` — the time-preserving map) →
+    * re-encode at the target rate. A clip already at `outRate` passes
+    * through sample-identical. The audio analog of [[resizeMedia]]; same
+    * zero-shuffle scan shape; graded byte-exact in q_audio_resample.
+    * (Real production resampling would filter+interpolate; nearest is the
+    * honest no-DSP baseline, and the SHAPE — decode, index map, re-encode
+    * — is what a windowed-sinc kernel would drop into.)
+    */
   def resampleAudio(media: DataFrame, outRate: Int): DataFrame = {
     require(outRate > 0, s"resampleAudio: outRate must be > 0, got $outRate")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val a = decodeAnyAudio(bytes)
-          val ch = a.channels
-          // the index map runs over FRAMES so interleaved channels stay
-          // aligned: output frame j samples source frame j·inRate/outRate
-          // on every channel
-          val frames = a.samples.length / ch
-          // Long until bounds-checked: a large clip at a high upsample
-          // ratio could wrap .toInt into a small positive wrong count
-          val outFL = frames.toLong * outRate / a.sampleRate
-          require(outFL * ch <= (Int.MaxValue - 44) / 2,
-            s"resampleAudio: output clip of ${outFL * ch} samples exceeds the WAV container bound")
-          val outF = outFL.toInt
-          val out = WavCodec.encodePcm16Ch(outRate, ch, outF * ch,
-            j => a.samples(((j / ch).toLong * a.sampleRate / outRate).toInt * ch + j % ch))
-          (id, out)
-        }
-      }
-      .toDF("doc_id", "media")
+    mapMedia(media) { (id, bytes) =>
+      val a = decodeAnyAudio(bytes)
+      val ch = a.channels
+      // the index map runs over FRAMES so interleaved channels stay
+      // aligned: output frame j samples source frame j·inRate/outRate
+      // on every channel
+      val frames = a.samples.length / ch
+      // Long until bounds-checked: a large clip at a high upsample
+      // ratio could wrap .toInt into a small positive wrong count
+      val outFL = frames.toLong * outRate / a.sampleRate
+      require(outFL * ch <= (Int.MaxValue - 44) / 2,
+        s"resampleAudio: output clip of ${outFL * ch} samples exceeds the WAV container bound")
+      val outF = outFL.toInt
+      val out = WavCodec.encodePcm16Ch(outRate, ch, outF * ch,
+        j => a.samples(((j / ch).toLong * a.sampleRate / outRate).toInt * ch + j % ch))
+      (id, out)
+    }.toDF("doc_id", "media")
   }
 
   /** Per-clip stats computed FROM THE DECODED SAMPLES: rate and count as
@@ -3965,10 +3346,6 @@ object Multimodal {
                         n_samples: Long, sample_sum: Long,
                         sample_checksum: Long, peak_abs: Long)
 
-  /** Decode every WAV blob through [[WavCodec]] and reduce to
-    * [[AudioStats]]. Same zero-shuffle `mapPartitions` scan shape as
-    * [[decodePixelStats]].
-    */
   /** Container-sniffing audio decode: RIFF/WAVE dispatched on the format
     * tag (1 = PCM → [[WavCodec]], 7 = μ-law → [[G711Codec]], 0x11 = IMA
     * ADPCM → [[AdpcmCodec]]), `fLaC` → [[FlacCodec]]; anything else is a
@@ -3987,26 +3364,23 @@ object Multimodal {
     else throw new IllegalArgumentException(
       "audio: unrecognized container (need RIFF/WAVE or fLaC magic)")
 
-  def decodeAudioStats(media: DataFrame): Dataset[AudioStats] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val a = decodeAnyAudio(bytes)
-          var sum = 0L; var chk = 0L; var peak = 0L; var i = 0
-          while (i < a.samples.length) {
-            val v = a.samples(i).toLong
-            sum += v; chk += v * (i % 97 + 1)
-            if (math.abs(v) > peak) peak = math.abs(v)
-            i += 1
-          }
-          AudioStats(id, bytes.length.toLong, a.sampleRate.toLong,
-            a.samples.length.toLong, sum, chk, peak)
-        }
+  /** Decode every WAV blob through [[WavCodec]] and reduce to
+    * [[AudioStats]]. Same zero-shuffle `mapPartitions` scan shape as
+    * [[decodePixelStats]].
+    */
+  def decodeAudioStats(media: DataFrame): Dataset[AudioStats] =
+    mapMedia(media) { (id, bytes) =>
+      val a = decodeAnyAudio(bytes)
+      var sum = 0L; var chk = 0L; var peak = 0L; var i = 0
+      while (i < a.samples.length) {
+        val v = a.samples(i).toLong
+        sum += v; chk += v * (i % 97 + 1)
+        if (math.abs(v) > peak) peak = math.abs(v)
+        i += 1
       }
-  }
+      AudioStats(id, bytes.length.toLong, a.sampleRate.toLong,
+        a.samples.length.toLong, sum, chk, peak)
+    }
 
   /** Attach a REAL FLAC clip to `documents` — the compressed-audio analog
     * of [[withAudioMedia]]. Interleaved sample `i` replays the
@@ -4020,9 +3394,8 @@ object Multimodal {
     * every 7th doc, and a 64-sample block size so clips span multiple
     * frames with a partial last block.
     */
-  def withFlacMedia(docs: DataFrame, id: String = "doc_id",
-                    nChars: String = "n_chars"): DataFrame =
-    perDocMedia(docs, id, nChars) { (docId, nc) =>
+  def withFlacMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = false) { (docId, nc) =>
       val channels = 1 + (docId % 2).toInt
       val frames = (48 + nc % 120).toInt
       val quant = if (docId % 11 == 0) 4L else 1L
@@ -4053,32 +3426,25 @@ object Multimodal {
   def transcodeAudio(media: DataFrame, target: String): DataFrame = {
     require(Set("wav", "flac", "ulaw", "alaw").contains(target),
       s"transcodeAudio: unsupported target '$target' (wav | flac | ulaw | alaw)")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val a = decodeAnyAudio(bytes)
-          val out = target match {
-            case "wav" =>
-              WavCodec.encodePcm16Ch(a.sampleRate, a.channels, a.samples.length,
-                a.samples(_))
-            case "flac" => FlacCodec.encodeFlac(a.sampleRate, a.channels, a.samples)
-            case law =>
-              // G.711 interop leg (telephony trunks re-compand at law
-              // boundaries): lossy-to-lossy, mono by the law's nature
-              require(a.channels == 1,
-                s"transcodeAudio: G.711 $law is mono-only, got ${a.channels} channels")
-              if (law == "ulaw")
-                G711Codec.encodeWavUlaw(a.sampleRate, a.samples.length, a.samples(_))
-              else
-                G711Codec.encodeWavAlaw(a.sampleRate, a.samples.length, a.samples(_))
-          }
-          (id, out)
-        }
+    mapMedia(media) { (id, bytes) =>
+      val a = decodeAnyAudio(bytes)
+      val out = target match {
+        case "wav" =>
+          WavCodec.encodePcm16Ch(a.sampleRate, a.channels, a.samples.length,
+            a.samples(_))
+        case "flac" => FlacCodec.encodeFlac(a.sampleRate, a.channels, a.samples)
+        case law =>
+          // G.711 interop leg (telephony trunks re-compand at law
+          // boundaries): lossy-to-lossy, mono by the law's nature
+          require(a.channels == 1,
+            s"transcodeAudio: G.711 $law is mono-only, got ${a.channels} channels")
+          if (law == "ulaw")
+            G711Codec.encodeWavUlaw(a.sampleRate, a.samples.length, a.samples(_))
+          else
+            G711Codec.encodeWavAlaw(a.sampleRate, a.samples.length, a.samples(_))
       }
-      .toDF("doc_id", "media")
+      (id, out)
+    }.toDF("doc_id", "media")
   }
 
   /** Deterministic video fixture: byte `i` of frame `f` of doc `docId` is
@@ -4091,24 +3457,13 @@ object Multimodal {
   /** Attach a REAL uncompressed AVI clip to `documents`: dims from
     * `n_chars`, frame count from `doc_id`, pixels from [[frameGen]].
     */
-  def withVideoMedia(docs: DataFrame, id: String = "doc_id",
-                     nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // deliberately NOT spread: this encode is a few hundred ops per doc —
-    // the exchange's fixed cost exceeds the serial compute (see perDocMedia)
-    docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc"))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (docId, nc) =>
-          val w = (4 + nc % 9).toInt
-          val h = (3 + nc % 7).toInt
-          val nf = (2 + docId % 4).toInt
-          (docId, AviCodec.encodeAvi24(w, h, nf, fps = 10, frameGen(docId)))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def withVideoMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = false) { (docId, nc) =>
+      val w = (4 + nc % 9).toInt
+      val h = (3 + nc % 7).toInt
+      val nf = (2 + docId % 4).toInt
+      AviCodec.encodeAvi24(w, h, nf, fps = 10, frameGen(docId))
+    }
 
   /** Cross-container VIDEO transcode: animated GIF in → full multi-frame
     * decode through the compositing model → uncompressed AVI out, one
@@ -4117,20 +3472,12 @@ object Multimodal {
     * regardless of what the crawl delivered, and both codecs must be
     * bit-faithful for a sampled-frame checksum to survive the chain.
     */
-  def transcodeGifToAvi(media: DataFrame, fps: Int = 10): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val anim = GifCodec.decodeGifFrames(bytes)
-          (id, AviCodec.encodeAvi24(anim.width, anim.height,
-            anim.frames.length, fps, (f, i) => anim.frames(f)(i)))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def transcodeGifToAvi(media: DataFrame, fps: Int = 10): DataFrame =
+    mapMedia(media) { (id, bytes) =>
+      val anim = GifCodec.decodeGifFrames(bytes)
+      (id, AviCodec.encodeAvi24(anim.width, anim.height,
+        anim.frames.length, fps, (f, i) => anim.frames(f)(i)))
+    }.toDF("doc_id", "media")
 
   /** Attach a REAL Motion-JPEG clip to `documents`: every frame is a
     * genuine baseline JPEG (forward DCT + quantization + Huffman per
@@ -4141,30 +3488,21 @@ object Multimodal {
     * bit-exact (see [[JpegCodec]]'s object doc) — the q_jpeg_decode
     * grading idea extended along the time axis.
     */
-  def withMjpegMedia(docs: DataFrame, id: String = "doc_id",
-                     nChars: String = "n_chars"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spread(docs.select(col(id).cast("long").as("doc_id"), col(nChars).cast("long").as("nc")))
-      .as[(Long, Long)]
-      .mapPartitions { batch =>
-        batch.map { case (docId, nc) =>
-          val w = (8 + nc % 17).toInt
-          val h = (8 + nc % 9).toInt
-          val nf = (2 + docId % 3).toInt
-          val bw = (w + 7) / 8
-          val frames = Array.tabulate(nf) { f =>
-            def pix(i: Int): Byte = {
-              val x = i % w; val y = i / w
-              ((31L * docId + 13L * ((y / 8) * bw + x / 8) + 11L * f) % 256L).toByte
-            }
-            JpegCodec.encodeJpeg(w, h, 1, pix)
-          }
-          (docId, AviCodec.encodeAviMjpeg(w, h, fps = 10, frames))
+  def withMjpegMedia(docs: DataFrame): DataFrame =
+    perDocMedia(docs, spread = true) { (docId, nc) =>
+      val w = (8 + nc % 17).toInt
+      val h = (8 + nc % 9).toInt
+      val nf = (2 + docId % 3).toInt
+      val bw = (w + 7) / 8
+      val frames = Array.tabulate(nf) { f =>
+        def pix(i: Int): Byte = {
+          val x = i % w; val y = i / w
+          ((31L * docId + 13L * ((y / 8) * bw + x / 8) + 11L * f) % 256L).toByte
         }
+        JpegCodec.encodeJpeg(w, h, 1, pix)
       }
-      .toDF("doc_id", "media")
-  }
+      AviCodec.encodeAviMjpeg(w, h, fps = 10, frames)
+    }
 
   /** Per-clip stats from REAL frame sampling: decode the AVI, pick `n`
     * evenly spaced frames (`f_j = j·nFrames/n`, exact integer arithmetic),
@@ -4181,30 +3519,24 @@ object Multimodal {
     */
   def sampleVideoFrames(media: DataFrame, n: Int): Dataset[VideoFrameStats] = {
     require(n > 0, s"sampleVideoFrames: n must be > 0, got $n")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          // decodeAviVideo routes on strf: raw-DIB clips take the exact
-          // old path, MJPG clips decode each frame through JpegCodec
-          val v = AviCodec.decodeAviVideo(bytes)
-          var chk = 0L
-          var j = 0
-          while (j < n) {
-            val frame = v.frames(j * v.frames.length / n)
-            var i = 0
-            while (i < frame.length) {
-              chk += (frame(i) & 0xff).toLong * (i % 97 + 1) * (j + 1)
-              i += 1
-            }
-            j += 1
-          }
-          VideoFrameStats(id, bytes.length.toLong, v.width.toLong,
-            v.height.toLong, v.frames.length.toLong, n.toLong, chk)
+    mapMedia(media) { (id, bytes) =>
+      // decodeAviVideo routes on strf: raw-DIB clips take the exact
+      // old path, MJPG clips decode each frame through JpegCodec
+      val v = AviCodec.decodeAviVideo(bytes)
+      var chk = 0L
+      var j = 0
+      while (j < n) {
+        val frame = v.frames(j * v.frames.length / n)
+        var i = 0
+        while (i < frame.length) {
+          chk += (frame(i) & 0xff).toLong * (i % 97 + 1) * (j + 1)
+          i += 1
         }
+        j += 1
       }
+      VideoFrameStats(id, bytes.length.toLong, v.width.toLong,
+        v.height.toLong, v.frames.length.toLong, n.toLong, chk)
+    }
   }
 
   /** Per-image stats computed FROM THE DECODED PIXELS (not from the
@@ -4223,25 +3555,18 @@ object Multimodal {
     * [[PixelStats]]. Same zero-shuffle `mapPartitions` scan shape as
     * [[decodeFeatures]].
     */
-  def decodePixelStats(media: DataFrame): Dataset[PixelStats] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val img = ImageCodec.decode(bytes)
-          var sum = 0L; var chk = 0L; var i = 0
-          while (i < img.pixels.length) {
-            val v = img.pixels(i) & 0xff
-            sum += v; chk += v.toLong * (i % 97 + 1); i += 1
-          }
-          PixelStats(id, img.format, bytes.length.toLong, img.width.toLong,
-            img.height.toLong, img.channels.toLong, img.pixels.length.toLong,
-            sum, chk)
-        }
+  def decodePixelStats(media: DataFrame): Dataset[PixelStats] =
+    mapMedia(media) { (id, bytes) =>
+      val img = ImageCodec.decode(bytes)
+      var sum = 0L; var chk = 0L; var i = 0
+      while (i < img.pixels.length) {
+        val v = img.pixels(i) & 0xff
+        sum += v; chk += v.toLong * (i % 97 + 1); i += 1
       }
-  }
+      PixelStats(id, img.format, bytes.length.toLong, img.width.toLong,
+        img.height.toLong, img.channels.toLong, img.pixels.length.toLong,
+        sum, chk)
+    }
 
   /** Per-image luminance histogram: decode → ITU-R BT.601 integer luma
     * ((299·R + 587·G + 114·B) div 1000; grayscale passes through) →
@@ -4252,40 +3577,32 @@ object Multimodal {
     * Scale shape: zero-shuffle mapPartitions decode, O(one image) per
     * row — the [[decodePixelStats]] cost class.
     */
-  def luminanceHistogram(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val img = ImageCodec.decode(bytes)
-          val bins = new Array[Long](8)
-          var lumSum = 0L
-          val c = img.channels
-          // stride by the DECODED channel count: an RGBA-class container
-          // must fail loudly here, never silently read misaligned bytes
-          require(c == 1 || c == 3,
-            s"luminanceHistogram: unsupported channel count $c")
-          val nPx = img.pixels.length / c
-          var p = 0
-          while (p < nPx) {
-            val lum =
-              if (c == 1) img.pixels(p) & 0xff
-              else ((img.pixels(c * p) & 0xff) * 299
-                + (img.pixels(c * p + 1) & 0xff) * 587
-                + (img.pixels(c * p + 2) & 0xff) * 114) / 1000
-            bins(lum >> 5) += 1L
-            lumSum += lum
-            p += 1
-          }
-          (id, nPx.toLong, lumSum, bins(0), bins(1), bins(2), bins(3),
-            bins(4), bins(5), bins(6), bins(7))
-        }
+  def luminanceHistogram(media: DataFrame): DataFrame =
+    mapMedia(media) { (id, bytes) =>
+      val img = ImageCodec.decode(bytes)
+      val bins = new Array[Long](8)
+      var lumSum = 0L
+      val c = img.channels
+      // stride by the DECODED channel count: an RGBA-class container
+      // must fail loudly here, never silently read misaligned bytes
+      require(c == 1 || c == 3,
+        s"luminanceHistogram: unsupported channel count $c")
+      val nPx = img.pixels.length / c
+      var p = 0
+      while (p < nPx) {
+        val lum =
+          if (c == 1) img.pixels(p) & 0xff
+          else ((img.pixels(c * p) & 0xff) * 299
+            + (img.pixels(c * p + 1) & 0xff) * 587
+            + (img.pixels(c * p + 2) & 0xff) * 114) / 1000
+        bins(lum >> 5) += 1L
+        lumSum += lum
+        p += 1
       }
-      .toDF("doc_id", "n_px", "lum_sum", "bin0", "bin1", "bin2", "bin3",
-        "bin4", "bin5", "bin6", "bin7")
-  }
+      (id, nPx.toLong, lumSum, bins(0), bins(1), bins(2), bins(3),
+        bins(4), bins(5), bins(6), bins(7))
+    }.toDF("doc_id", "n_px", "lum_sum", "bin0", "bin1", "bin2", "bin3",
+      "bin4", "bin5", "bin6", "bin7")
 
   /** REAL resize for raw-pixel containers: decode → aspect-preserving
     * box fit ([[ImageCodec.fitBox]], exact integer arithmetic) →
@@ -4294,21 +3611,13 @@ object Multimodal {
     * shape as [[decodeFeatures]]; graded byte-exact in q_pixel_resize
     * (the oracle replays the integer index map closed-form).
     */
-  def resizeMedia(media: DataFrame, maxW: Int, maxH: Int): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val img = ImageCodec.decode(bytes)
-          val (ow, oh) = ImageCodec.fitBox(img.width, img.height, maxW, maxH)
-          val out = ImageCodec.resizeNearest(img, ow, oh)
-          (id, ImageCodec.encode(out))
-        }
-      }
-      .toDF("doc_id", "media")
-  }
+  def resizeMedia(media: DataFrame, maxW: Int, maxH: Int): DataFrame =
+    mapMedia(media) { (id, bytes) =>
+      val img = ImageCodec.decode(bytes)
+      val (ow, oh) = ImageCodec.fitBox(img.width, img.height, maxW, maxH)
+      val out = ImageCodec.resizeNearest(img, ow, oh)
+      (id, ImageCodec.encode(out))
+    }.toDF("doc_id", "media")
 
   /** Per-channel histogram equalization — the contrast-normalizing
     * augmentation: each channel plane remaps value v to
@@ -4321,47 +3630,39 @@ object Multimodal {
     * stats of the remapped image, which the oracle replays by building
     * the same per-(doc, channel, value) CDF closed-form.
     */
-  def equalizeMedia(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val img = ImageCodec.decode(bytes)
-          val c = img.channels
-          val nPx = img.pixels.length / c
-          val out = new Array[Byte](img.pixels.length)
-          var ch = 0
-          while (ch < c) {
-            val hist = new Array[Int](256)
-            var p = 0
-            while (p < nPx) {
-              hist(img.pixels(p * c + ch) & 0xff) += 1; p += 1
-            }
-            val cdf = new Array[Int](256)
-            var acc = 0
-            var v = 0
-            while (v < 256) { acc += hist(v); cdf(v) = acc; v += 1 }
-            var cdfMin = 0
-            v = 0
-            while (v < 256 && cdfMin == 0) { if (hist(v) > 0) cdfMin = cdf(v); v += 1 }
-            p = 0
-            while (p < nPx) {
-              val old = img.pixels(p * c + ch) & 0xff
-              val nv =
-                if (nPx == cdfMin) 0
-                else ((cdf(old) - cdfMin).toLong * 255 / (nPx - cdfMin)).toInt
-              out(p * c + ch) = nv.toByte
-              p += 1
-            }
-            ch += 1
-          }
-          (id, ImageCodec.encode(img.copy(pixels = out)))
+  def equalizeMedia(media: DataFrame): DataFrame =
+    mapMedia(media) { (id, bytes) =>
+      val img = ImageCodec.decode(bytes)
+      val c = img.channels
+      val nPx = img.pixels.length / c
+      val out = new Array[Byte](img.pixels.length)
+      var ch = 0
+      while (ch < c) {
+        val hist = new Array[Int](256)
+        var p = 0
+        while (p < nPx) {
+          hist(img.pixels(p * c + ch) & 0xff) += 1; p += 1
         }
+        val cdf = new Array[Int](256)
+        var acc = 0
+        var v = 0
+        while (v < 256) { acc += hist(v); cdf(v) = acc; v += 1 }
+        var cdfMin = 0
+        v = 0
+        while (v < 256 && cdfMin == 0) { if (hist(v) > 0) cdfMin = cdf(v); v += 1 }
+        p = 0
+        while (p < nPx) {
+          val old = img.pixels(p * c + ch) & 0xff
+          val nv =
+            if (nPx == cdfMin) 0
+            else ((cdf(old) - cdfMin).toLong * 255 / (nPx - cdfMin)).toInt
+          out(p * c + ch) = nv.toByte
+          p += 1
+        }
+        ch += 1
       }
-      .toDF("doc_id", "media")
-  }
+      (id, ImageCodec.encode(img.copy(pixels = out)))
+    }.toDF("doc_id", "media")
 
   /** Deterministic training-time augmentation: horizontal mirror — decode,
     * reverse each raster row pixel-wise (channels stay interleaved), and
@@ -4374,33 +3675,25 @@ object Multimodal {
     * mirrored index arithmetic closed-form (the position-weighted checksum
     * moves under the permutation; the plain pixel sum must NOT).
     */
-  def flipMedia(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val img = ImageCodec.decode(bytes)
-          val c = img.channels
-          val out = new Array[Byte](img.pixels.length)
-          var y = 0
-          while (y < img.height) {
-            var x = 0
-            while (x < img.width) {
-              val src = (y * img.width + (img.width - 1 - x)) * c
-              val dst = (y * img.width + x) * c
-              var ch = 0
-              while (ch < c) { out(dst + ch) = img.pixels(src + ch); ch += 1 }
-              x += 1
-            }
-            y += 1
-          }
-          (id, ImageCodec.encode(img.copy(pixels = out)))
+  def flipMedia(media: DataFrame): DataFrame =
+    mapMedia(media) { (id, bytes) =>
+      val img = ImageCodec.decode(bytes)
+      val c = img.channels
+      val out = new Array[Byte](img.pixels.length)
+      var y = 0
+      while (y < img.height) {
+        var x = 0
+        while (x < img.width) {
+          val src = (y * img.width + (img.width - 1 - x)) * c
+          val dst = (y * img.width + x) * c
+          var ch = 0
+          while (ch < c) { out(dst + ch) = img.pixels(src + ch); ch += 1 }
+          x += 1
         }
+        y += 1
       }
-      .toDF("doc_id", "media")
-  }
+      (id, ImageCodec.encode(img.copy(pixels = out)))
+    }.toDF("doc_id", "media")
 
   /** REAL container transcode: decode → re-encode into `toFormat` — the
     * "normalize a crawled mixed-container corpus to ONE format" step a
@@ -4417,37 +3710,30 @@ object Multimodal {
   def transcodeMedia(media: DataFrame, toFormat: String): DataFrame = {
     require(Set("bmp", "ppm", "pgm", "png", "jpeg", "gif").contains(toFormat),
       s"transcodeMedia: unsupported target '$toFormat'")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val img = ImageCodec.decode(bytes)
-          val adapted = (img.channels, toFormat) match {
-            case (c, "png") if c >= 1 && c <= 4 => img
-            case (1, "pgm") | (3, "bmp") | (3, "ppm") | (1, "jpeg") | (3, "jpeg") => img
-            // gif: ImageCodec's exact-palette encode (gray identity
-            // palette, or ≤256 unique RGB colors — else a loud reject)
-            case (1, "gif") | (3, "gif") => img
-            case (1, "bmp") | (1, "ppm") =>
-              // gray → RGB replication for 3-channel-only containers
-              val rgb = new Array[Byte](img.width * img.height * 3)
-              var i = 0
-              while (i < img.pixels.length) {
-                rgb(i * 3) = img.pixels(i); rgb(i * 3 + 1) = img.pixels(i)
-                rgb(i * 3 + 2) = img.pixels(i)
-                i += 1
-              }
-              img.copy(channels = 3, pixels = rgb)
-            case (c, f) => throw new IllegalArgumentException(
-              s"transcodeMedia: cannot carry $c-channel pixels into '$f' " +
-                "(color/alpha would be silently dropped)")
+    mapMedia(media) { (id, bytes) =>
+      val img = ImageCodec.decode(bytes)
+      val adapted = (img.channels, toFormat) match {
+        case (c, "png") if c >= 1 && c <= 4 => img
+        case (1, "pgm") | (3, "bmp") | (3, "ppm") | (1, "jpeg") | (3, "jpeg") => img
+        // gif: ImageCodec's exact-palette encode (gray identity
+        // palette, or ≤256 unique RGB colors — else a loud reject)
+        case (1, "gif") | (3, "gif") => img
+        case (1, "bmp") | (1, "ppm") =>
+          // gray → RGB replication for 3-channel-only containers
+          val rgb = new Array[Byte](img.width * img.height * 3)
+          var i = 0
+          while (i < img.pixels.length) {
+            rgb(i * 3) = img.pixels(i); rgb(i * 3 + 1) = img.pixels(i)
+            rgb(i * 3 + 2) = img.pixels(i)
+            i += 1
           }
-          (id, ImageCodec.encode(adapted.copy(format = toFormat)))
-        }
+          img.copy(channels = 3, pixels = rgb)
+        case (c, f) => throw new IllegalArgumentException(
+          s"transcodeMedia: cannot carry $c-channel pixels into '$f' " +
+            "(color/alpha would be silently dropped)")
       }
-      .toDF("doc_id", "media")
+      (id, ImageCodec.encode(adapted.copy(format = toFormat)))
+    }.toDF("doc_id", "media")
   }
 
   // The former byte-truncation `resize` stub is RETIRED: with BMP/netpbm/
@@ -4561,21 +3847,10 @@ object Multimodal {
     * bridge between the codec family and the dedup family — at 100 TB
     * the 8-byte hash is what crosses exchanges and feeds banded/bucketed
     * near-dup joins ([[graft.operators.Dedup]]), never pixels.
-    * mapPartitions is the codec-decode exception to the expression rule
-    * (the decoders are imperative byte walks).
     */
-  def perceptualHash(media: DataFrame, id: String = "doc_id",
-                     mediaCol: String = "media"): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(id).cast("long").as("doc_id"), col(mediaCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (docId, blob) =>
-          val (hi, lo) = phash64(ImageCodec.decode(blob))
-          (docId, hi, lo)
-        }
-      }
-      .toDF("doc_id", "phash_hi", "phash_lo")
-  }
+  def perceptualHash(media: DataFrame): DataFrame =
+    mapMedia(media) { (docId, blob) =>
+      val (hi, lo) = phash64(ImageCodec.decode(blob))
+      (docId, hi, lo)
+    }.toDF("doc_id", "phash_hi", "phash_lo")
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.DataFrame
 /** Scale-adaptive parallelism for compute-dense narrow relations.
   *
   * [[spread]] is the round-robin repartition idiom proven on the codec
-  * families (r19 C1, Multimodal.spread): a relation whose downstream
+  * families (r19 C1; the heavy per-document encodes of [[Multimodal]]
+  * spread their pre-encode ids through it): a relation whose downstream
   * per-row compute dwarfs its own bytes (regexp batteries, md5/xxhash
   * grids, token explosions, per-pair array intersections) must not ride
   * a single scan split or an AQE-coalesced single post-shuffle partition.
@@ -24,7 +25,8 @@ import org.apache.spark.sql.DataFrame
   * pixel lesson: the exchange costs more than the compute it spreads).
   *
   * Round-robin keeps task row counts exactly even (compute-bound stages
-  * prefer that to a hash multinomial's long tail); determinism under
+  * prefer that to a hash multinomial's long tail: hashing on doc_id took
+  * the MP3 decode family from 1.9 s to 2.5 s a query); determinism under
   * retry comes from sortBeforeRepartition (default on) over deterministic
   * inputs.
   */

@@ -405,25 +405,32 @@ object Similarity {
   def ivfWriteIndexWithCentroids(indexed: DataFrame,
                                  cents: Seq[(Long, Seq[Float])],
                                  path: String): Unit = {
-    val spark = indexed.sparkSession
-    import spark.implicits._
     ivfWriteIndex(indexed, path)
+    ivfWriteCentroids(indexed.sparkSession, cents, path)
+  }
+
+  /** The centroid-table sidecar directory under an index root. */
+  private val CentroidsDir = "_centroids"
+
+  private def ivfWriteCentroids(spark: SparkSession, cents: Seq[(Long, Seq[Float])],
+                                path: String): Unit = {
+    import spark.implicits._
     cents.toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/$CentroidsDir")
   }
 
   /** Read back the persisted centroid table (bounded: ≤ cells rows — the
     * same broadcast-class size the driver Lloyd loop already holds).
     */
   def ivfReadCentroids(spark: SparkSession, path: String): Seq[(Long, Seq[Float])] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_centroids")
+    val dir = new org.apache.hadoop.fs.Path(s"$path/$CentroidsDir")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(dir),
-      s"ivfReadCentroids: no _centroids table under $path — the index was " +
+      s"ivfReadCentroids: no $CentroidsDir table under $path — the index was " +
         "written without ivfWriteIndexWithCentroids, so appends/searches " +
         "cannot prove they use the build's centroid table. Rebuild with " +
-        "ivfWriteIndexWithCentroids (or write _centroids explicitly).")
-    Tables.parquet(spark, s"$path/_centroids")
+        s"ivfWriteIndexWithCentroids (or write $CentroidsDir explicitly).")
+    Tables.parquet(spark, dir.toString)
       .select(col("cell").cast("long"), col("centroid"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1))
@@ -477,7 +484,6 @@ object Similarity {
   def ivfCompactIndex(spark: SparkSession, path: String): Unit = {
     ivfRecoverCompact(spark, path)
     val cents = ivfReadCentroids(spark, path) // validates the index shape
-    import spark.implicits._
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(path + "__compact")
@@ -488,8 +494,7 @@ object Similarity {
       .withColumn("cell", col("cell").cast("long"))
       .repartition(math.max(cents.size, 1), col("cell"))
       .write.partitionBy("cell").parquet(tmp.toString)
-    cents.toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/_centroids")
+    ivfWriteCentroids(spark, cents, tmp.toString)
     // an IVF-PQ index also carries its codebook sidecar — identity state
     // must survive the rewrite or every post-compact search decodes with
     // the wrong codebook (garbage distances, silently)
@@ -982,12 +987,9 @@ object Similarity {
     */
   def ivfWriteIndexQuantized(corpus: DataFrame, id: String, vec: String,
                              cents: Seq[(Long, Seq[Float])], path: String): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     assignCellsQuantized(corpus, id, vec, cents)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
-    cents.toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
+    ivfWriteCentroids(corpus.sparkSession, cents, path)
   }
 
   /** Incremental append to a quantized index: assignment runs against the
@@ -1151,11 +1153,9 @@ object Similarity {
                       cents: Seq[(Long, Seq[Float])], cb: PqCodebook,
                       path: String): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     assignCellsPq(corpus, id, vec, cents, cb)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
-    cents.toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
+    ivfWriteCentroids(spark, cents, path)
     ivfPqWriteCodebook(spark, cb, path)
   }
 

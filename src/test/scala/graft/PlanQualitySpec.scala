@@ -53,12 +53,78 @@ class PlanQualitySpec extends SparkTestBase {
     val docs = spark.range(20).selectExpr("id AS doc_id", "id + 48 AS n_chars")
     val media = Multimodal.withPixelMedia(docs)
     val png = Multimodal.withPngMedia(docs)
+    // every per-document generator's own frame. The nine cheap encodes
+    // stay where the scan put the rows (0 exchanges); the heavy codecs
+    // spread their pre-encode ids first (exactly 1). A flipped spread
+    // choice changes no result, so only this count can catch one.
+    val unspread = Seq(
+      "pixel" -> Multimodal.withPixelMedia(docs), "png" -> Multimodal.withPngMedia(docs),
+      "gif" -> Multimodal.withGifMedia(docs), "gifAnim" -> Multimodal.withGifAnimMedia(docs),
+      "audio" -> Multimodal.withAudioMedia(docs), "ulaw" -> Multimodal.withUlawMedia(docs),
+      "alaw" -> Multimodal.withAlawMedia(docs), "flac" -> Multimodal.withFlacMedia(docs),
+      "video" -> Multimodal.withVideoMedia(docs))
+    val spread = Seq(
+      "vp8" -> Multimodal.withVp8Media(docs), "h264Intra" -> Multimodal.withH264IntraMedia(docs),
+      "h264Cabac" -> Multimodal.withH264CabacMedia(docs),
+      "h264Inter" -> Multimodal.withH264InterMedia(docs),
+      "h264PCabac" -> Multimodal.withH264PCabacMedia(docs),
+      "h264P8" -> Multimodal.withH264P8Media(docs),
+      "h264Part" -> Multimodal.withH264PartMedia(docs),
+      "h264Subpel" -> Multimodal.withH264SubpelMedia(docs),
+      "h264BMod" -> Multimodal.withH264BModMedia(docs), "h264B" -> Multimodal.withH264BMedia(docs),
+      "h264BCabac" -> Multimodal.withH264BCabacMedia(docs),
+      "h264Deblock" -> Multimodal.withH264DeblockMedia(docs),
+      "h264Weighted" -> Multimodal.withH264WeightedMedia(docs),
+      "h264WeightedCabac" -> Multimodal.withH264WeightedCabacMedia(docs),
+      "h264P4x4" -> Multimodal.withH264P4x4Media(docs),
+      "h264BDirect" -> Multimodal.withH264BDirectMedia(docs),
+      "h264TDirect" -> Multimodal.withH264TDirectMedia(docs),
+      "h264BSub" -> Multimodal.withH264BSubMedia(docs),
+      "h264CabInit" -> Multimodal.withH264CabInitMedia(docs),
+      "h264WPart" -> Multimodal.withH264WPartMedia(docs),
+      "h264Mmco" -> Multimodal.withH264MmcoMedia(docs),
+      "h264LtRef" -> Multimodal.withH264LtRefMedia(docs),
+      "h264Mmco5" -> Multimodal.withH264Mmco5Media(docs),
+      "h264Reorder" -> Multimodal.withH264ReorderMedia(docs),
+      "h264PMRef" -> Multimodal.withH264PMRefMedia(docs),
+      "h264BDeblock" -> Multimodal.withH264BDeblockMedia(docs),
+      "h264" -> Multimodal.withH264Media(docs),
+      "vp8Loopfilter" -> Multimodal.withVp8LoopfilterMedia(docs),
+      "vp8LfInter" -> Multimodal.withVp8LfInterMedia(docs),
+      "vp8Segment" -> Multimodal.withVp8SegmentMedia(docs),
+      "vp8Parts" -> Multimodal.withVp8PartsMedia(docs),
+      "vp8SegLf" -> Multimodal.withVp8SegLfMedia(docs),
+      "vp8SegInter" -> Multimodal.withVp8SegInterMedia(docs),
+      "vp8Bpred" -> Multimodal.withVp8BpredMedia(docs), "webp" -> Multimodal.withWebpMedia(docs),
+      "vp8Video" -> Multimodal.withVp8VideoMedia(docs),
+      "vp8Subpel" -> Multimodal.withVp8SubpelMedia(docs),
+      "vp8Bias" -> Multimodal.withVp8BiasMedia(docs),
+      "vp8Buffer" -> Multimodal.withVp8BufferMedia(docs),
+      "vp8Splitmv" -> Multimodal.withVp8SplitmvMedia(docs),
+      "mpegAudio" -> Multimodal.withMpegAudioMedia(docs), "mp3" -> Multimodal.withMp3Media(docs),
+      "mpegJoint" -> Multimodal.withMpegJointMedia(docs),
+      "mp3Mixed" -> Multimodal.withMp3MixedMedia(docs),
+      "mp3Crc" -> Multimodal.withMp3CrcMedia(docs), "mp3Resv" -> Multimodal.withMp3ResvMedia(docs),
+      "mp3Pad" -> Multimodal.withMp3PadMedia(docs),
+      "mp3SwStereo" -> Multimodal.withMp3SwStereoMedia(docs),
+      "mp3Switch" -> Multimodal.withMp3SwitchMedia(docs),
+      "mp3Stereo" -> Multimodal.withMp3StereoMedia(docs),
+      "aacPulse" -> Multimodal.withAacPulseMedia(docs),
+      "aacCrc" -> Multimodal.withAacCrcMedia(docs),
+      "aacMulti" -> Multimodal.withAacMultiMedia(docs), "aac" -> Multimodal.withAacMedia(docs),
+      "aacShort" -> Multimodal.withAacShortMedia(docs),
+      "aacTrans" -> Multimodal.withAacTransMedia(docs),
+      "aacTns" -> Multimodal.withAacTnsMedia(docs), "aacCpe" -> Multimodal.withAacCpeMedia(docs),
+      "aacPns" -> Multimodal.withAacPnsMedia(docs),
+      "aacIntensity" -> Multimodal.withAacIntensityMedia(docs),
+      "aacTnsShort" -> Multimodal.withAacTnsShortMedia(docs),
+      "jpeg" -> Multimodal.withJpegMedia(docs), "mjpeg" -> Multimodal.withMjpegMedia(docs))
     // AQE wraps the tree in AdaptiveSparkPlanExec (opaque to collect) —
     // disable it for the structural assertion only (restore the PRIOR
     // value, not a literal, so a suite configured with AQE off stays off)
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try Seq(
+    try (Seq(
       // the raw-pixmap builder is NOT spread (trivial per-doc encode):
       // decode/resize stay pure zero-exchange scan jobs
       ("decode", 0) -> Multimodal.decodePixelStats(media).toDF(),
@@ -73,7 +139,8 @@ class PlanQualitySpec extends SparkTestBase {
       // spread ids, never a payload exchange
       ("jpeg-decode", 1) -> Multimodal.decodePixelStats(
         Multimodal.withJpegMedia(docs)).toDF()
-    ).foreach { case ((name, nExpected), df) =>
+    ) ++ unspread.map { case (name, df) => (name, 0) -> df } ++
+      spread.map { case (name, df) => (name, 1) -> df }).foreach { case ((name, nExpected), df) =>
       // the invariant that matters at 100 TB: media payload bytes never
       // cross an exchange — the only allowed exchange is the narrow
       // pre-encode id spread
